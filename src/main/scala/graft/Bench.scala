@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.core.Graft
 
 /** Benchmark main: runs every registry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":...,"queries":{...}}.
@@ -17,28 +18,25 @@ object Bench {
     "q_k_core", "q_graph_profile", "q_modularity")
 
   def main(args: Array[String]): Unit = {
+    val spark = Graft.session("bench")
+    // stop in finally, THEN print: the compact summary must be the last
+    // stdout line of the process even when the run fails part-way — a
+    // bench runner parses the tail of stdout as JSON (build.sbt strips
+    // sbt's "[info] " run prefix and "[success]" footer)
+    val summary = try run(spark) finally spark.stop()
+    println(summary)
+  }
+
+  /** Times every selected query; prints the full line and returns the
+    * compact summary. */
+  private def run(spark: SparkSession): String = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // default 3: first pass warms codegen/JIT (a 67-query session floods the
     // C2 compiler; cold first executions measure compiler queueing, not the
     // operator), min is reported; a third repeat shields the min from a GC
     // pause landing on the single warm repeat
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "3").toInt
-    // SPARK_GRAFT_PARTS decouples shuffle width from core count for
-    // scale probes: the fixed-32-partitions decade factors understate
-    // what a real cluster does (it raises partitions with data volume)
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // Per-repeat diagnostics (r11, VERDICT r10 item 1): the r10 driver run
     // showed q_clustering_coeff at 44.9 s in-suite vs 6.4 s solo on the
     // SAME commit — unexplainable from wall times alone. Three deltas per
@@ -92,7 +90,7 @@ object Bench {
     //   shuffle_s   a fixed spark shuffle (range→repartition→agg)
     // tools/bench_ratio.py prints the new/old ratio of each field next to
     // the total ratio, so "the box was 1.3x slower" is machine-readable.
-    val boxHealth = BoxHealth.probe(spark, cpus.toInt)
+    val boxHealth = BoxHealth.probe(spark, spark.sparkContext.defaultParallelism)
     System.err.println(s"[bench] box_health $boxHealth")
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // per query: one [core_s, cpu_s, gc_ms, spill_mb] tuple per repeat
@@ -226,8 +224,9 @@ object Bench {
     // A FILTERED run (SPARK_GRAFT_ONLY) must NOT clobber the full map with
     // its subset — solo profiling once overwrote the 232-query artifact
     // with a 1-query one; filtered runs write only when explicitly routed.
-    val outFile = sys.env.get("SPARK_GRAFT_BENCH_OUT")
-      .orElse(if (only.isEmpty) Some("BENCH_FULL.json") else None)
+    val benchOut = sys.env.get("SPARK_GRAFT_BENCH_OUT")
+    val fullRun = only.isEmpty && benchOut.isEmpty
+    val outFile = benchOut.orElse(if (fullRun) Some("BENCH_FULL.json") else None)
     def writeFile(f: String, s: String): Unit =
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(f), s + "\n")
       catch { case e: Throwable =>
@@ -236,13 +235,10 @@ object Bench {
     outFile.foreach(writeFile(_, line))
     // fixed side file with the compact summary (VERDICT r16 item 1): the
     // driver's JSON parse of stdout failed two rounds running to log
-    // decoration; a file can't be eaten by a logger. Unfiltered runs only,
-    // same clobber guard as BENCH_FULL.json.
-    if (only.isEmpty) writeFile("BENCH_SUMMARY.json", summary)
-    spark.stop()
-    // printed AFTER spark.stop() so the compact summary is the last stdout
-    // line of the process — the driver parses the tail of stdout as JSON
-    // (build.sbt strips sbt's "[info] " run prefix and "[success]" footer)
-    println(summary)
+    // decoration; a file can't be eaten by a logger. Written only beside
+    // the default BENCH_FULL.json, so a routed or filtered run never
+    // leaves a summary that disagrees with the full map.
+    if (fullRun) writeFile("BENCH_SUMMARY.json", summary)
+    summary
   }
 }

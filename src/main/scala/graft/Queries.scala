@@ -49,6 +49,27 @@ object Queries {
     finally s.conf.set("spark.sql.shuffle.partitions", saved)
   }
 
+  /** Run one streaming gate's query to completion: start `writer` with a
+    * single AvailableNow trigger under a pinned state width of 4
+    * ([[pinnedParts]]) and wait for it. */
+  private def runAvailableNow(s: SparkSession,
+      writer: => org.apache.spark.sql.streaming.DataStreamWriter[_])
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val q = pinnedParts(s, 4)(writer
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start())
+    q.awaitTermination()
+    q
+  }
+
+  /** [[runAvailableNow]] into the in-memory sink `name`; returns its table. */
+  private def runToMemory(s: SparkSession, df: DataFrame, name: String,
+      outputMode: String): DataFrame = {
+    runAvailableNow(s, df.writeStream.format("memory").queryName(name)
+      .outputMode(outputMode))
+    s.table(name)
+  }
+
   /** The events table's `ts` physical type varies across driver data
     * generations: TIMESTAMP(NANOS) (readable only as a raw long under
     * nanosAsLong) vs plain timestamp[us] (arrives as TIMESTAMP_NTZ). True
@@ -2022,13 +2043,7 @@ object Queries {
         .withColumn("value_dec", col("value").cast("decimal(18,6)"))
       val agg = graft.streaming.StreamOps.windowedAgg(
         stream, "event_time", "event_type", "value_dec", "1 hour", "1 hour")
-      val q = pinnedParts(s, 4)(agg.writeStream
-        .format("memory").queryName("graft_stream_tumbling")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start())
-      q.awaitTermination()
-      s.table("graft_stream_tumbling")
+      runToMemory(s, agg, "graft_stream_tumbling", "complete")
         .select(
           date_format(col("window_start"), "yyyy-MM-dd HH:00:00").as("hour"),
           col("event_type"), col("cnt"),
@@ -2056,12 +2071,9 @@ object Queries {
           .withWatermark("event_time", "1 hour")
           .groupBy(window(col("event_time"), "1 hour"), col("user_id"))
           .agg(count(lit(1)).as("cnt"))
-        val q = pinnedParts(s, 4)(agg.writeStream
+        val q = runAvailableNow(s, agg.writeStream
           .format("memory").queryName("graft_stream_rocksdb")
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start())
-        q.awaitTermination()
+          .outputMode("complete"))
         require(q.lastProgress != null && q.lastProgress.json.contains("rocksdb"),
           "RocksDB state store did not engage")
       }
@@ -2151,13 +2163,7 @@ object Queries {
         .as[graft.streaming.StreamOps.SessionEvent]
       val closed = graft.streaming.StreamOps.closedSessions(
         events, gapMicros = 1800000000L, watermarkDelay = "36500 days")
-      val q = pinnedParts(s, 4)(closed.toDF().writeStream
-        .format("memory").queryName("graft_stream_sessions")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start())
-      q.awaitTermination()
-      s.table("graft_stream_sessions")
+      runToMemory(s, closed.toDF(), "graft_stream_sessions", "append")
         .select(col("userId").as("user_id"), col("startMicros").as("start_us"),
           col("endMicros").as("end_us"), col("nEvents").as("n_events"))
         .orderBy("user_id", "start_us")
@@ -2433,16 +2439,13 @@ object Queries {
         java.nio.file.Files.createSymbolicLink(
           link, java.nio.file.Paths.get(s"$dir/events.parquet"))
       val out = s"/tmp/graft_stream_etl_$sfName"
-      val q = pinnedParts(s, 4)(s.readStream.schema(schema)
+      runAvailableNow(s, s.readStream.schema(schema)
         .parquet(streamDir.toString)
         .select(col("event_id"), col("event_type"), col("value"))
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", s"$out.ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start())
-      q.awaitTermination()
+        .outputMode("append"))
       s.read.parquet(out)
         .groupBy("event_type")
         .agg(count(lit(1)).as("cnt"), sumExact(col("value")).as("sum_value"))
@@ -2879,13 +2882,7 @@ object Queries {
         .select(md5(col("text")).as("content_hash"), col("doc_id"))
         .groupBy("content_hash")
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
-      val q = pinnedParts(s, 4)(agg.writeStream
-        .format("memory").queryName("graft_stream_dedup")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start())
-      q.awaitTermination()
-      s.table("graft_stream_dedup").orderBy("content_hash")
+      runToMemory(s, agg, "graft_stream_dedup", "complete").orderBy("content_hash")
     },
     Some("""SELECT md5(text) AS content_hash, MIN(doc_id) AS keep_id,
       COUNT(*) AS n_copies FROM documents GROUP BY 1 ORDER BY content_hash"""))
@@ -3567,7 +3564,7 @@ object Queries {
       props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
       val feed = s.readStream.schema(schema).parquet(streamDir.toString)
         .select(col("event_type"), col("value"))
-      val q = pinnedParts(s, 4)(feed.writeStream
+      runAvailableNow(s, feed.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           val agg = batch.groupBy("event_type")
             .agg(count(lit(1)).as("cnt"), sumExact(col("value")).as("sum_value"))
@@ -3575,10 +3572,7 @@ object Queries {
             mode = "overwrite", props = props)
           ()
         }
-        .option("checkpointLocation", s"/tmp/graft_stream_jdbc_$sfName.ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start())
-      q.awaitTermination()
+        .option("checkpointLocation", s"/tmp/graft_stream_jdbc_$sfName.ckpt"))
       graft.sources.Jdbc.readOne(s, url, "stream_agg", props)
         .orderBy("event_type")
     },
@@ -3707,13 +3701,7 @@ object Queries {
         .join(broadcast(dim), Seq("event_type"))
       val agg = stream.groupBy("category")
         .agg(count(lit(1)).as("cnt"), sum(col("value_dec")).as("sum_dec"))
-      val q = pinnedParts(s, 4)(agg.writeStream
-        .format("memory").queryName("graft_stream_static")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start())
-      q.awaitTermination()
-      s.table("graft_stream_static")
+      runToMemory(s, agg, "graft_stream_static", "complete")
         .select(col("category"), col("cnt"),
           col("sum_dec").cast("double").as("sum_value"))
         .orderBy("category")
@@ -3754,15 +3742,10 @@ object Queries {
       // side; at this feed size the state machinery dominates, so pin the
       // query to few state partitions (saved/restored — the setting is baked
       // into the query at start, batch queries after restore are unaffected)
-      val q = pinnedParts(s, 4)(joined
+      val pairs = joined
         .select(col("click_id"), col("purchase_id"), col("cu").as("user_id"))
-        .writeStream
-        .format("memory").queryName("graft_stream_stream")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start())
-      q.awaitTermination()
-      s.table("graft_stream_stream").orderBy("click_id", "purchase_id")
+      runToMemory(s, pairs, "graft_stream_stream", "append")
+        .orderBy("click_id", "purchase_id")
     },
     Some("""SELECT c.event_id AS click_id, p.event_id AS purchase_id,
         c.user_id
@@ -4946,16 +4929,10 @@ object Queries {
       // dominates a 2-micro-batch query; a production feed pins higher).
       // The sentinel max-ts probe is memoized per dataset (fixture prep,
       // not the measured stream).
-      val q = pinnedParts(s, 4)(joined
-        .select(col("click_id"), col("purchase_id"), col("cu").as("user_id"))
-        .writeStream
-        .format("memory").queryName("graft_stream_outer")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start())
-      q.awaitTermination()
       // sentinel exclusion happens HERE, on the sink table (see above)
-      s.table("graft_stream_outer")
+      val pairs = joined
+        .select(col("click_id"), col("purchase_id"), col("cu").as("user_id"))
+      runToMemory(s, pairs, "graft_stream_outer", "append")
         .filter(col("user_id") >= 0)
         .orderBy("click_id", "purchase_id")
     },
@@ -8369,7 +8346,7 @@ object Queries {
         val feed = s.readStream
           .schema("event_id BIGINT, event_type STRING, value DOUBLE")
           .parquet(srcDir.toString)
-        val q = pinnedParts(s, 4)(feed.writeStream
+        runAvailableNow(s, feed.writeStream
           .foreachBatch {
             (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
              id: Long) =>
@@ -8378,10 +8355,7 @@ object Queries {
                   TxLog.latestVersion(tbl) + 1}")))
               ()
           }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start())
-        q.awaitTermination()
+          .option("checkpointLocation", ckpt))
       }
       stage(0); stage(1)
       runPass()
@@ -9199,7 +9173,7 @@ object Queries {
       val b = TextFunctions.portableBucket(col("event_id"), 3)
       val delivered = new java.util.concurrent.atomic.AtomicInteger(0)
       def runPass(): Unit = {
-        val q = pinnedParts(s, 4)(s.readStream.format("graft")
+        runAvailableNow(s, s.readStream.format("graft")
           .option("maxVersionsPerBatch", "1")
           .load(root)
           .writeStream
@@ -9217,10 +9191,7 @@ object Queries {
               } finally graft.core.Checkpoints.release(pinned)
               ()
           }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start())
-        q.awaitTermination()
+          .option("checkpointLocation", ckpt))
       }
       // §2.6 overlap (VERDICT r16 item 7): the two fixture batches' data
       // files are independent writes — only the COMMITS are ordered (b0 =
@@ -9294,15 +9265,12 @@ object Queries {
         .select(col("event_id"), col("event_type"), col("value"))
       val b = TextFunctions.portableBucket(col("event_id"), 3)
       def replicate(): Unit = {
-        val q = pinnedParts(s, 4)(s.readStream.format("graft")
+        runAvailableNow(s, s.readStream.format("graft")
           .option("maxVersionsPerBatch", "1").load(src)
           .select(col("event_id"), col("event_type"), col("value"))
           .writeStream.format("graft")
           .option("path", dst)
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start())
-        q.awaitTermination()
+          .option("checkpointLocation", ckpt))
       }
       TxLog.commit(src, Seq(TxLog.writeBatch(ev.filter(b === 0), src, "b0")))
       TxLog.commit(src, Seq(TxLog.writeBatch(ev.filter(b === 1), src, "b1")))
@@ -9498,7 +9466,7 @@ object Queries {
       val feed = s.readStream
         .schema("event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE")
         .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-      val q = pinnedParts(s, 4)(feed.writeStream
+      runAvailableNow(s, feed.writeStream
         .foreachBatch {
           (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
            id: Long) =>
@@ -9511,10 +9479,7 @@ object Queries {
             TxLog.merge(s, tbl, s"m$id", latest, Seq("user_id"))
             ()
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start())
-      q.awaitTermination()
+        .option("checkpointLocation", ckpt))
       require(TxLog.latestVersion(tbl) == 4,
         "history must be seed + one merge commit per micro-batch = 4")
       TxLog.read(s, tbl)
@@ -9582,7 +9547,7 @@ object Queries {
       val before = TxLog.liveFiles(tbl)
       val feed = s.readStream.schema("user_id BIGINT")
         .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-      val q = pinnedParts(s, 4)(feed.writeStream
+      runAvailableNow(s, feed.writeStream
         .foreachBatch {
           (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
            id: Long) =>
@@ -9597,10 +9562,7 @@ object Queries {
               ()
             }
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start())
-      q.awaitTermination()
+        .option("checkpointLocation", ckpt))
       require(TxLog.liveFiles(tbl) == before,
         "the whole forget queue must drain with ZERO data-file churn")
       require(TxLog.latestVersion(tbl) == 5,
@@ -11234,7 +11196,7 @@ object Queries {
       val feed = s.readStream
         .schema("event_type STRING, value DOUBLE, sign INT")
         .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-      val q = pinnedParts(s, 4)(feed.writeStream
+      runAvailableNow(s, feed.writeStream
         .foreachBatch {
           (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
            id: Long) =>
@@ -11246,10 +11208,7 @@ object Queries {
               .parquet(s"$stateDir/state_$id")
             ()
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start())
-      q.awaitTermination()
+        .option("checkpointLocation", ckpt))
       val n = new java.io.File(stateDir).listFiles()
         .count(_.getName.matches("state_\\d+")).toLong
       s.read.parquet(s"$stateDir/state_${n - 1}")
@@ -11309,7 +11268,7 @@ object Queries {
       Seq(stateDir, ckpt).foreach(rmTreeQ)
       val feed = s.readStream.schema("event_type STRING, value DOUBLE")
         .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-      val q = pinnedParts(s, 4)(feed.writeStream
+      runAvailableNow(s, feed.writeStream
         .foreachBatch {
           (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
            id: Long) =>
@@ -11318,10 +11277,7 @@ object Queries {
               .parquet(s"$stateDir/batch_$id")
             ()
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start())
-      q.awaitTermination()
+        .option("checkpointLocation", ckpt))
       val stateDirs = new java.io.File(stateDir).listFiles()
         .filter(_.getName.startsWith("batch_")).map(_.toString).toSeq.sorted
       val merged = AggOps.mergeStats(stateDirs.map(s.read.parquet(_)))
@@ -11400,7 +11356,7 @@ object Queries {
               org.apache.spark.sql.types.StringType)))))
       val feed = s.readStream.schema("doc_id BIGINT, text STRING")
         .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-      val q = pinnedParts(s, 4)(feed.writeStream
+      runAvailableNow(s, feed.writeStream
         .foreachBatch {
           (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
            id: Long) =>
@@ -11430,10 +11386,7 @@ object Queries {
             if (id == 1) TxLog.optimize(s, sigStore, s"opt_$id", 1)
             ()
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start())
-      q.awaitTermination()
+        .option("checkpointLocation", ckpt))
       require(TxLog.latestVersion(sigStore) == 4,
         "store history must be b0, b1, mid-stream optimize, b2 = 4 versions")
       require(TxLog.liveFiles(sigStore).size == 2,
@@ -12910,7 +12863,7 @@ object Queries {
         .as[graft.streaming.StreamOps.AnomEvent]
       val updates = graft.streaming.StreamOps.anomalyCounts(feed,
         minPrior = 20L, threshold = 3L)
-      val q = pinnedParts(s, 4)(updates.toDF().writeStream
+      runAvailableNow(s, updates.toDF().writeStream
         .foreachBatch {
           (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
            id: Long) =>
@@ -12919,10 +12872,7 @@ object Queries {
             ()
         }
         .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start())
-      q.awaitTermination()
+        .option("checkpointLocation", ckpt))
       val batchDirs = new java.io.File(outDir).listFiles()
         .filter(_.getName.startsWith("batch_")).map(_.toString).sorted.toSeq
       // per key: the LAST cumulative state (max events-seen row)

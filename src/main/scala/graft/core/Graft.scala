@@ -9,32 +9,41 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * .../lib/output/TextOutputFormat.java:44). Spark-first: `spark.read`/`df.write`
   * carry splits, codecs, committers, small-file packing natively.
   *
-  * Scale notes: AQE on (skew joins, dynamic coalesce); shuffle partitions sized
-  * for local[32] here but overridable — on a real cluster set ~2-3x total cores.
+  * Scale notes: AQE on (skew joins, dynamic coalesce); shuffle partitions
+  * default to the core count — on a real cluster set ~2-3x total cores.
   */
 object Graft {
 
+  /** The one session every main and test builds (the reference's
+    * ToolRunner/GenericOptionsParser role): the oracle grades exactly the
+    * configuration the benchmark times. `cpus` defaults to
+    * `$SPARK_GRAFT_CPUS`, else the JVM's available processors; a
+    * non-positive `shufflePartitions` means `$SPARK_GRAFT_PARTS`, else
+    * `cpus` (a wider shuffle for scale probes, where data volume outgrows
+    * the core count). */
   def session(
       appName: String = "graft",
-      master: String = "local[32]",
-      shufflePartitions: Int = 32): SparkSession = {
+      cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+        .getOrElse(Runtime.getRuntime.availableProcessors),
+      shufflePartitions: Int = 0): SparkSession = {
+    val parts =
+      if (shufflePartitions > 0) shufflePartitions
+      else sys.env.get("SPARK_GRAFT_PARTS").map(_.toInt).getOrElse(cpus)
     val spark = SparkSession
       .builder()
-      .master(master)
+      .master(s"local[$cpus]")
       .appName(appName)
       // the library's own extensions are part of its session contract:
       // native functions, the range-join rule, the TopK strategy, and
       // the SQL surface (catalog relation rewrites + maintenance
-      // statements) all ride spark.sql.extensions — a session without
-      // them sees a different analyzer than Verify/Bench do
+      // statements) all ride spark.sql.extensions
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.shuffle.partitions", parts.toString)
+      .config("spark.sql.adaptive.enabled", "true")
       // Always-on from construction (not per-query) so results cannot become
       // order-dependent within a session: the driver's events.parquet stores
       // TIMESTAMP(NANOS), which needs this legacy flag to read at all.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -115,7 +124,9 @@ object Graft {
     * back-fill each other. The cap stays small on purpose (enough to fill
     * the tail, not enough to fight for executors); at cluster scale the
     * same bound applies unchanged. Failures propagate after the pool
-    * drains (the first cause, unwrapped). Single action short-circuits. */
+    * drains (the first cause, unwrapped). An interrupted caller cancels
+    * the outstanding jobs and rethrows with its interrupt flag restored.
+    * Single action short-circuits. */
   def overlapJobs[T](work: Seq[() => T], threads: Int = 4): Seq[T] =
     if (work.sizeIs <= 1) work.map(_())
     else {
@@ -135,6 +146,10 @@ object Graft {
           catch {
             case e: java.util.concurrent.ExecutionException =>
               Left(Option(e.getCause).getOrElse(e))
+            case e: InterruptedException =>
+              futs.foreach(_.cancel(true))
+              Thread.currentThread().interrupt()
+              throw e
             case e: Throwable => Left(e)
           }
         }

@@ -894,7 +894,7 @@ object GraphOps {
     // per-task — at 10× the decade probe measured 18 GB of map-side
     // spill at a fixed 32-way width, and shuffle.partitions is exactly
     // the knob a cluster raises with data volume to keep per-task state
-    // in memory (same contract as Bench's SPARK_GRAFT_PARTS).
+    // in memory (the session factory's SPARK_GRAFT_PARTS).
     val buckets = ctr.groupBy(col("w"), col("dg"))
       .agg(sort_array(collect_list(col("n"))).as("ns"))
       .repartition(

@@ -623,17 +623,12 @@ object StatsOps {
       .filter(col("_x").isNotNull && col("_w") > 0)
     val gNames = keyed.columns.dropRight(2)
     val g = gNames.map(col)
-    // collapse to the (group, value) grain BEFORE the range sort (the
-    // [[ksTest]] shape): within a tie block the running sum only differs
-    // mid-block, and if any mid-block row crosses the threshold its
-    // block-end row (same x) crosses too, so the min-x over crossing
-    // rows — and the released quantile — is invariant under summing the
-    // block's weights into one row. The pinned sort then holds one row
-    // per distinct value instead of one per input row (§2.3).
+    // per-ROW grain is safe here (unlike [[ksTest]]): within a tie block
+    // the running sum only differs mid-block, and if any mid-block row
+    // crosses the threshold its block-end row (same x) crosses too, so
+    // the min-x over crossing rows is invariant — no collapse needed
     val rows = keyed
       .withColumn("_wv_e6", (col("_w") * lit(1000000)).cast("long"))
-      .groupBy(g :+ col("_x"): _*)
-      .agg(sum(col("_wv_e6")).as("_wv_e6"))
     val cum = SortOps.globalCumSum(rows, g :+ col("_x"),
       col("_wv_e6"), "_gcw")
     // weights are strictly positive, so the global cumsum is increasing

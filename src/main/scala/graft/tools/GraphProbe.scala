@@ -15,12 +15,10 @@ import org.apache.spark.sql.functions._
   */
 object GraphProbe {
   def main(args: Array[String]): Unit = {
-    // SPARK_GRAFT_PARTS widens shuffle partitions for the decade points —
-    // fixed 32 understates a real cluster, which raises width with volume
-    // (the Bench contract); per-task aggregate state then stays in memory
-    val spark = graft.core.Graft.session("graph-probe",
-      shufflePartitions =
-        sys.env.getOrElse("SPARK_GRAFT_PARTS", "32").toInt)
+    // SPARK_GRAFT_PARTS (read by the session factory) widens shuffle
+    // partitions for the decade points, as a real cluster raises width
+    // with volume; per-task aggregate state then stays in memory
+    val spark = graft.core.Graft.session("graph-probe")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = args.headOption.map(_.toInt).getOrElse(3)
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Long, Long, Long, Long)]()

@@ -3,19 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (multiple SparkContexts in one
-  * JVM are not supported; Test/fork gives the suite JVM its own). */
+  * JVM are not supported; Test/fork gives the suite JVM its own), built by
+  * the same factory as every main, pinned to 4 cores and 4 partitions. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
+    // a private warehouse per suite JVM: SparkConf picks up spark.* system
+    // properties
+    System.setProperty("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+    val s = graft.core.Graft.session("graft-test", cpus = 4, shufflePartitions = 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -82,6 +82,48 @@ class ScaleSpec extends AnyFunSuite {
     assert(out eq wide)
   }
 
+  test("overlapJobs returns results in input order") {
+    // later jobs finish first
+    val work = Seq.tabulate(6)(i => () => { Thread.sleep((6 - i) * 20L); i })
+    assert(graft.core.Graft.overlapJobs(work) == (0 until 6))
+  }
+
+  test("overlapJobs rethrows the first failure only after every job drains") {
+    val finished = new java.util.concurrent.atomic.AtomicInteger
+    val slow = () => { Thread.sleep(150); finished.incrementAndGet() }
+    val work = Seq[() => Int](
+      () => throw new IllegalStateException("first"),
+      () => throw new IllegalArgumentException("second"),
+      slow, slow, slow)
+    val e = intercept[IllegalStateException](graft.core.Graft.overlapJobs(work))
+    assert(e.getMessage == "first")
+    assert(finished.get == 3)
+  }
+
+  test("overlapJobs: an interrupted caller cancels the jobs and keeps its interrupt flag") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val started = new CountDownLatch(2)
+    val cancelled = new CountDownLatch(2)
+    val job = () => {
+      started.countDown()
+      try { new CountDownLatch(1).await(); 0 }
+      catch { case e: InterruptedException => cancelled.countDown(); throw e }
+    }
+    @volatile var caught: Throwable = null
+    @volatile var flagSet = false
+    val caller = new Thread(() => {
+      try { graft.core.Graft.overlapJobs(Seq(job, job)); () }
+      catch { case e: Throwable => caught = e; flagSet = Thread.currentThread().isInterrupted }
+    })
+    caller.start()
+    assert(started.await(10, TimeUnit.SECONDS))
+    caller.interrupt()
+    caller.join(10000)
+    assert(caught.isInstanceOf[InterruptedException])
+    assert(flagSet)
+    assert(cancelled.await(10, TimeUnit.SECONDS), "outstanding jobs were not cancelled")
+  }
+
   test("BPE pair statistics cost exactly two partial/final aggregations") {
     val docs = Seq("low low lower", "newest widest").toDF("text")
     val plan = BpeOps.corpusPairCounts(docs, col("text"))
