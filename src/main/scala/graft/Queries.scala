@@ -70,10 +70,6 @@ object Queries {
     s.table(name)
   }
 
-  /** The events table's `ts` physical type varies across driver data
-    * generations: TIMESTAMP(NANOS) (readable only as a raw long under
-    * nanosAsLong) vs plain timestamp[us] (arrives as TIMESTAMP_NTZ). True
-    * when this dataset is the raw-nanos generation. */
   // per-dataset fixture probes are memoized for the life of the process:
   // the test tables are immutable within a session, and these probes
   // (schema generation sniff, sentinel max-ts scan) are fixture prep that
@@ -137,12 +133,15 @@ object Queries {
       build(put)
     }
 
-  private def eventsTsIsRawNanos(s: SparkSession, dir: String): Boolean = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  /** The events table's `ts` physical type varies across test-data
+    * generations: TIMESTAMP(NANOS) (readable only as a raw long under
+    * nanosAsLong, which [[graft.core.Graft.session]] sets) vs plain
+    * timestamp[us] (arrives as TIMESTAMP_NTZ). True when this dataset is
+    * the raw-nanos generation. */
+  private def eventsTsIsRawNanos(s: SparkSession, dir: String): Boolean =
     tsGenMemo.computeIfAbsent(dir, _ =>
       s.read.parquet(s"$dir/events.parquet").schema("ts")
         .dataType == org.apache.spark.sql.types.LongType)
-  }
 
   /** File-stream source over the events table, generation-robust: the
     * streaming gates all read events through this ONE builder so the ts
@@ -10773,7 +10772,7 @@ object Queries {
       ORDER BY 1"""))
 
   /** OPTIMIZE on a PARTITIONED table
-    * ([[graft.sources.TxLog.optimizePartitioned]] via the SQL
+    * ([[graft.sources.TxLog.optimizePartitionedCols]] via the SQL
     * statement): two INSERT commits give every bucket two leaves; a
     * row-level DELETE then rewrites touched leaves into un-grained
     * residue — the failure mode this verb exists for — and one SQL
@@ -11145,7 +11144,11 @@ object Queries {
     * from three hash-disjoint batches and UNIONED — must land within the
     * sketch's error bound of the exact count AND equal the single-pass
     * sketch exactly (merge transparency: unioning partial sketches is the
-    * same sketch as one pass, the property that makes the state usable). */
+    * same sketch as one pass, the property that makes the state usable).
+    * Both sides read through a union: a lone sketch reports DataSketches'
+    * order-dependent HIP estimate while any union of two or more reports
+    * the composite estimate, so the one-pass side is the self-union of
+    * the one-pass state (a single-sketch union keeps the HIP figure). */
   private val qHllMerge = QuerySpec(
     "q_hll_merge",
     (s, dir) => {
@@ -11155,8 +11158,10 @@ object Queries {
       val merged = AggOps.hllEstimate(AggOps.hllMerge(batches.map(b =>
         AggOps.hllState(b, Seq(col("event_type")), col("user_id")))))
         .withColumnRenamed("est_ndv", "est_merged")
+      val onePassState =
+        AggOps.hllState(ev, Seq(col("event_type")), col("user_id"))
       val onePass = AggOps.hllEstimate(
-        AggOps.hllState(ev, Seq(col("event_type")), col("user_id")))
+        AggOps.hllMerge(Seq(onePassState, onePassState)))
         .withColumnRenamed("est_ndv", "est_onepass")
       val exact = ev.groupBy("event_type")
         .agg(countDistinct(col("user_id")).as("exact_ndv"))

@@ -58,14 +58,13 @@ object Graft {
     * whole query surface (unix_micros arithmetic, event-time streaming,
     * window functions) sees ONE type:
     *  - TIMESTAMP(NANOS): Spark's vectorized reader rejects it; read as raw
-    *    nanos (spark.sql.legacy.parquet.nanosAsLong) and convert with
-    *    integer division — a double division would lose precision above
-    *    2^53 ns.
+    *    nanos (spark.sql.legacy.parquet.nanosAsLong, set by [[session]])
+    *    and convert with integer division — a double division would lose
+    *    precision above 2^53 ns.
     *  - timestamp[us] without timezone: arrives as TIMESTAMP_NTZ; cast to
     *    TIMESTAMP, which interprets the wall-clock in the session zone
     *    (pinned UTC by every entrypoint) — the same instant DuckDB reads. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = spark.read.parquet(s"$dir/$name.parquet")
     if (name != "events") df
     else df.schema.find(_.name == "ts").map(_.dataType) match {

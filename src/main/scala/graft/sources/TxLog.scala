@@ -81,7 +81,7 @@ object TxLog {
     * under the old `sleep(min(5·attempt, 100))`); the jitter
     * decorrelates wake times so every writer lands within a few
     * attempts (the standard randomized-backoff result). */
-  private def raceBackoff(attempt: Int): Unit = {
+  private[graft] def raceBackoff(attempt: Int): Unit = {
     // randomized EXPONENTIAL backoff (r16): the r15 linear cap
     // (5·attempt, ≤100 ms) kept every contender re-arriving inside one
     // ~100 ms window, and the r16 N=16 probe measured 7/800 appends
@@ -103,6 +103,38 @@ object TxLog {
     * at 64 with jittered exponential backoff the worst case is under a
     * minute of waiting, far preferable to failing a correct write. */
   private val MaxCommitAttempts = 64
+
+  /** A commit's claim lost its version slot to a concurrent writer —
+    * the ONE retryable commit failure. Thrown only by the claim step of
+    * [[commitWithStats]]; everything else (a conflict, a failed
+    * `require`, an I/O error) is a different exception. */
+  final class LostRace(msg: String) extends IllegalStateException(msg)
+
+  /** The optimistic-commit loop every multi-writer verb runs: calls
+    * `attempt` with the 1-based attempt number until it returns the
+    * committed version. Each attempt re-reads and re-pins whatever its
+    * commit depends on. Only a [[LostRace]] retries, after
+    * [[raceBackoff]]; any other failure propagates at once, because
+    * retry is only ever the answer to "someone else took my version
+    * number". After `maxAttempts` lost races it gives up with an
+    * `IllegalStateException` whose cause is the last [[LostRace]]. */
+  private def retryOnLostRace(dir: String,
+      maxAttempts: Int = MaxCommitAttempts)(attempt: Int => Int): Int = {
+    require(maxAttempts >= 1, s"maxAttempts must be >= 1: $maxAttempts")
+    @annotation.tailrec
+    def go(n: Int): Int =
+      (try Right(attempt(n)) catch { case e: LostRace => Left(e) }) match {
+        case Right(v) => v
+        case Left(e) if n >= maxAttempts =>
+          throw new IllegalStateException(
+            s"txlog: still losing the version race after $maxAttempts " +
+              s"attempts on $dir — writer contention needs backpressure", e)
+        case Left(_) =>
+          raceBackoff(n)
+          go(n + 1)
+      }
+    go(1)
+  }
 
   private def manifest(dir: String, v: Int) =
     new Path(logDir(dir), f"v$v%08d.json")
@@ -256,54 +288,21 @@ object TxLog {
       target: Path): Boolean = claim(fs, tmp, target)
 
   /** Atomically commit a set of file additions/removals; returns the new
-    * version. Fails (IllegalStateException) if another writer won the
+    * version. Fails with [[LostRace]] if another writer won the
     * version — retry with a fresh read of [[latestVersion]]. */
-  def commit(dir: String, add: Seq[String], remove: Seq[String] = Nil): Int = {
-    val ld = logDir(dir)
-    val fs = fsOf(ld)
-    fs.mkdirs(ld)
-    val v = latestVersion(dir) + 1
-    val target = manifest(dir, v)
-    val tmp = new Path(ld, s".v$v.tmp${System.nanoTime()}")
-    val body = metaHeader() +
-      (add.map(p => s"add\t$p") ++ remove.map(p => s"remove\t$p"))
-        .mkString("", "\n", "\n")
-    val out = fs.create(tmp, false)
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    if (!claim(fs, tmp, target))
-      throw new IllegalStateException(
-        s"txlog: lost the race for version $v of $dir — re-read and retry")
-    v
-  }
+  def commit(dir: String, add: Seq[String], remove: Seq[String] = Nil): Int =
+    commitWithStats(dir, add.map(_ -> None), remove)
 
   /** [[commit]] under optimistic-concurrency retry: on a lost version
     * race, re-reads the log and tries the NEXT version, up to
-    * `maxAttempts` total claims, with a small linear backoff so two
-    * bursty writers interleave instead of thrashing. Any other failure
-    * (missing manifest, I/O error) propagates immediately — retry is
-    * only ever the answer to "someone else took my version number".
-    * This is the helper every multi-writer caller was hand-rolling;
-    * single-writer paths can keep calling [[commit]] directly. */
+    * `maxAttempts` total claims, with randomized exponential backoff
+    * ([[raceBackoff]]) so bursty writers interleave instead of
+    * thrashing. Any other failure (missing manifest, I/O error)
+    * propagates immediately. Single-writer paths can keep calling
+    * [[commit]] directly. */
   def commitWithRetry(dir: String, add: Seq[String],
-      remove: Seq[String] = Nil, maxAttempts: Int = MaxCommitAttempts): Int = {
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1: $maxAttempts")
-    var attempt = 0
-    var out = -1
-    while (out < 0) {
-      attempt += 1
-      try out = commit(dir, add, remove)
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.contains("lost the race") =>
-          if (attempt >= maxAttempts)
-            throw new IllegalStateException(
-              s"txlog: still losing the version race after $maxAttempts " +
-                s"attempts on $dir — writer contention needs backpressure", e)
-          raceBackoff(attempt)
-      }
-    }
-    out
-  }
+      remove: Seq[String] = Nil, maxAttempts: Int = MaxCommitAttempts): Int =
+    retryOnLostRace(dir, maxAttempts)(_ => commit(dir, add, remove))
 
   /** Commit for REWRITE transactions (optimize / zorder) — optimistic
     * retry WITH logical conflict detection, the piece [[commitWithRetry]]
@@ -327,17 +326,13 @@ object TxLog {
     * in `remove`) and cost one retry — the same conflict matrix the
     * Delta protocol documents for compaction vs append. */
   def commitRewrite(dir: String, add: Seq[(String, Option[String])],
-      remove: Seq[String], maxAttempts: Int = MaxCommitAttempts,
+      remove: Seq[String],
       dvSets: Seq[(String, Option[String])] = Nil,
       basedOnDvs: Option[Map[String, String]] = None,
       colMap: Option[Seq[(String, String)]] = None,
       colTypes: Seq[(String, Option[String])] = Nil,
-      checkSets: Seq[(String, Option[String])] = Nil): Int = {
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1: $maxAttempts")
-    var attempt = 0
-    var out = -1
-    while (out < 0) {
-      attempt += 1
+      checkSets: Seq[(String, Option[String])] = Nil): Int =
+    retryOnLostRace(dir) { _ =>
       // pin the version the whole conflict check resolves against, and
       // claim EXACTLY checkV+1 below (ADVICE r11): re-reading
       // latestVersion inside commitWithStats opened a TOCTOU window
@@ -379,21 +374,10 @@ object TxLog {
               s"file(s) this verb masks changed under it (first: " +
               s"${stale.head}); re-run against the current snapshot")
       }
-      try out = commitWithStats(dir, add, remove, dvSets,
+      commitWithStats(dir, add, remove, dvSets,
         atVersion = checkV + 1, colMap = colMap, colTypes = colTypes,
         checkSets = checkSets)
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.contains("lost the race") =>
-          if (attempt >= maxAttempts)
-            throw new IllegalStateException(
-              s"txlog: still losing the version race after $maxAttempts " +
-                s"attempts on $dir — writer contention needs backpressure", e)
-          raceBackoff(attempt)
-      }
     }
-    out
-  }
 
   private def readLogFile(dir: String, p: Path, what: String): String = {
     val fs = fsOf(p)
@@ -646,7 +630,7 @@ object TxLog {
     val out = fs.create(tmp, false)
     try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
     if (!claim(fs, tmp, target))
-      throw new IllegalStateException(
+      throw new LostRace(
         s"txlog: lost the race for version $v of $dir — re-read and retry")
     v
   }
@@ -1090,28 +1074,17 @@ object TxLog {
     specs.map(s => parsePartSpec(s).source)
 
   def setPartitionSpec(dir: String, specs: Seq[String]): Int = {
-    specs.foreach(parsePartSpec) // validate each spec's grammar
-    require(specs.map(s => parsePartSpec(s).spec).distinct.size ==
-      specs.size, s"txlog: duplicate partition specs: $specs")
+    // parsing validates each spec's grammar
+    val canonical = specs.map(s => parsePartSpec(s).spec)
+    require(canonical.distinct.size == specs.size,
+      s"txlog: duplicate partition specs: $specs")
     require(columnMapping(dir).isEmpty,
       "txlog: partition-spec evolution is not supported on a " +
         "column-mapped table — the partitioned ingest writes storage " +
         "under declared names")
-    var attempt = 0
-    var out = -1
-    while (out < 0) {
-      attempt += 1
-      try out = commitWithStats(dir, Nil,
-        partSpecSet = Some(specs.map(s => parsePartSpec(s).spec)))
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null &&
-              e.getMessage.contains("lost the race") =>
-          if (attempt >= MaxCommitAttempts) throw e
-          raceBackoff(attempt)
-      }
-    }
-    cachePartSpec(dir, out, Some(specs.map(s => parsePartSpec(s).spec)))
+    val out = retryOnLostRace(dir)(_ =>
+      commitWithStats(dir, Nil, partSpecSet = Some(canonical)))
+    cachePartSpec(dir, out, Some(canonical))
     out
   }
 
@@ -1211,23 +1184,11 @@ object TxLog {
     * loudly instead of last-wins. */
   private def commitColMap(dir: String,
       mutate: Seq[(String, String)] => Seq[(String, String)],
-      bootstrap: () => Seq[(String, String)],
-      maxAttempts: Int = MaxCommitAttempts): Int = {
-    var attempt = 0
-    var out = -1
-    while (out < 0) {
-      attempt += 1
+      bootstrap: () => Seq[(String, String)]): Int =
+    retryOnLostRace(dir) { _ =>
       val base = columnMapping(dir).getOrElse(bootstrap())
-      try out = commitWithStats(dir, add = Nil, colMap = Some(mutate(base)))
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.contains("lost the race") =>
-          if (attempt >= maxAttempts) throw e
-          raceBackoff(attempt)
-      }
+      commitWithStats(dir, add = Nil, colMap = Some(mutate(base)))
     }
-    out
-  }
 
   /** RENAME COLUMN as a METADATA-ONLY commit (public precedent: Delta's
     * column mapping, name mode): the manifest gains a logical↔physical
@@ -1298,11 +1259,8 @@ object TxLog {
     // validate the DDL up front: a bad type must fail THIS verb, not
     // every future read of the table
     val dt = org.apache.spark.sql.types.DataType.fromDDL(typeDdl)
-    var attempt = 0
-    var out = -1
-    while (out < 0) {
-      attempt += 1
-      try out = columnMapping(dir) match {
+    retryOnLostRace(dir) { _ =>
+      columnMapping(dir) match {
         case None =>
           val fileCols = identityMappingFromFiles(spark, dir).map(_._2)
           val registered = resolveFull(dir, -1)._3.types.keys.toSeq
@@ -1321,15 +1279,7 @@ object TxLog {
             colMap = Some(base :+ (phys -> name)),
             colTypes = Seq(phys -> Some(dt.catalogString)))
       }
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null &&
-              e.getMessage.contains("lost the race") =>
-          if (attempt >= MaxCommitAttempts) throw e
-          raceBackoff(attempt)
-      }
     }
-    out
   }
 
   /** The persistent CHECK constraints in force at `asOf` (latest when
@@ -1409,10 +1359,7 @@ object TxLog {
     require(name.nonEmpty && exprSql.nonEmpty,
       "addConstraint needs a name and a CHECK expression")
     val c = expr(exprSql) // malformed SQL fails HERE, not on every write
-    var attempt = 0
-    var out = -1
-    while (out < 0) {
-      attempt += 1
+    retryOnLostRace(dir) { _ =>
       // pin the claim to the version the existing-data scan validated
       // (the analyze() discipline, ADVICE r13): a write that commits
       // between the scan and this commit takes the claimed slot, so WE
@@ -1432,17 +1379,9 @@ object TxLog {
           s"txlog: cannot add constraint '$name' CHECK ($exprSql) — " +
             s"$bad existing row(s) violate it; fix the data first")
       }
-      try out = commitWithStats(dir, add = Nil,
+      commitWithStats(dir, add = Nil,
         checkSets = Seq(name -> Some(exprSql)), atVersion = checkV + 1)
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null &&
-              e.getMessage.contains("lost the race") =>
-          if (attempt >= MaxCommitAttempts) throw e
-          raceBackoff(attempt)
-      }
     }
-    out
   }
 
   /** DROP CONSTRAINT — the rule leaves the table as a metadata-only
@@ -1479,6 +1418,28 @@ object TxLog {
         s"${violated.mkString("; ")}; nothing committed")
   }
 
+  /** The pinned-claim discipline of the batch-writing verbs: validates
+    * `rows` against the table's constraints at the current version and
+    * returns the re-pin step. Each call of it reads the latest version,
+    * re-runs [[enforceChecks]] iff the log moved past the last
+    * validated version (a lost race, or a commit during the batch
+    * write), and returns that version — the caller claims exactly it
+    * + 1, so any interleaving commit forces a lost race and a
+    * re-validation instead of an unvalidated landing. */
+  private def checkPin(spark: SparkSession, dir: String, rows: DataFrame,
+      verb: String): () => Int = {
+    var validatedV = latestVersion(dir)
+    enforceChecks(spark, dir, rows, verb)
+    () => {
+      val v = latestVersion(dir)
+      if (v != validatedV) {
+        enforceChecks(spark, dir, rows, verb)
+        validatedV = v
+      }
+      v
+    }
+  }
+
   /** DROP COLUMN as a METADATA-ONLY commit: the column leaves the
     * logical schema (readers stop projecting its physical storage);
     * bytes stay in place until files naturally rewrite, and time travel
@@ -1511,45 +1472,18 @@ object TxLog {
     // append whose BATCH WRITE overlaps a constraint commit computes
     // latestVersion AFTER that commit, claims the NEXT free slot
     // without ever losing a race, and lands unvalidated. Claiming
-    // exactly validatedV+1 makes any interleaving commit force this
-    // writer through a lost race and a re-validation.)
-    var validatedV = latestVersion(dir)
-    enforceChecks(spark, dir, df, "append") // logical rows, pre-rename
+    // exactly the pinned version + 1 makes any interleaving commit force
+    // this writer through a lost race and a re-validation.)
+    val repin = checkPin(spark, dir, df, "append") // logical rows, pre-rename
     def autoStats(path: String): Option[String] =
       autoStatsFor(spark, path, autoStatsCols)
-    // re-validate iff the log moved past the pinned version (covers
-    // both the lost-race retry and the batch-write window)
-    def revalidate(verb: String): Int = {
-      val v = latestVersion(dir)
-      if (v != validatedV) {
-        enforceChecks(spark, dir, df, verb)
-        validatedV = v
-      }
-      v
-    }
-    def commitOne(path: String): Int = {
-      var attempt = 0
-      var out = -1
-      val st = autoStats(path)
-      while (out < 0) {
-        attempt += 1
-        val v = revalidate("append")
-        try out = commitWithStats(dir, Seq(path -> st), txn = txn,
-          atVersion = v + 1)
-        catch {
-          case e: IllegalStateException
-              if e.getMessage != null &&
-                e.getMessage.contains("lost the race") =>
-            if (attempt >= MaxCommitAttempts) throw e
-            raceBackoff(attempt)
-        }
-      }
-      out
-    }
     columnMapping(dir) match {
       case None =>
         // unmapped table: physical == logical, plain append
-        commitOne(writeBatch(df, dir, name))
+        val path = writeBatch(df, dir, name)
+        val st = autoStats(path)
+        retryOnLostRace(dir)(_ => commitWithStats(dir, Seq(path -> st),
+          txn = txn, atVersion = repin() + 1))
       case Some(_) =>
         // the mapping is re-read on EVERY attempt (ADVICE r12): a lost
         // race means another commit landed — if it was a schema verb,
@@ -1558,13 +1492,10 @@ object TxLog {
         // demands different physical names, and the commit omits the
         // colmap line entirely when the batch introduces no new logical
         // columns — a pure append then can't clobber anyone's mapping.
-        var attempt = 0
-        var out = -1
         var written: Option[(Seq[String], String)] = None // (phys names, path)
         var writtenStats: Option[String] = None
-        while (out < 0) {
-          attempt += 1
-          val v = revalidate("append") // pin: see commitOne
+        retryOnLostRace(dir) { attempt =>
+          val v = repin()
           val m = columnMapping(dir, v).getOrElse(
             identityMappingFromFiles(spark, dir))
           val nextV = v + 1
@@ -1586,17 +1517,9 @@ object TxLog {
           val colMap =
             if (fresh.isEmpty) None
             else Some(m ++ fresh.map { case (l, p) => (p, l) })
-          try out = commitWithStats(dir, Seq(path -> writtenStats),
+          commitWithStats(dir, Seq(path -> writtenStats),
             colMap = colMap, txn = txn, atVersion = nextV)
-          catch {
-            case e: IllegalStateException
-                if e.getMessage != null &&
-                  e.getMessage.contains("lost the race") =>
-              if (attempt >= MaxCommitAttempts) throw e
-              raceBackoff(attempt) // loop head re-validates + re-pins
-          }
         }
-        out
     }
   }
 
@@ -1633,34 +1556,16 @@ object TxLog {
     * travel to the replaced content. Returns the commit version. */
   def overwriteAll(spark: SparkSession, dir: String, df: DataFrame,
       name: String, autoStatsCols: Int = 0): Int = {
-    // pinned-claim discipline (see appendMapped): validate at a version,
-    // claim exactly that version + 1, re-validate whenever the log moved
-    var validatedV = latestVersion(dir)
-    enforceChecks(spark, dir, df, "overwrite")
+    val repin = checkPin(spark, dir, df, "overwrite")
     val path = writeBatch(df, dir, name)
     val st = autoStatsFor(spark, path, autoStatsCols)
-    var attempt = 0
-    var out = -1
-    while (out < 0) {
-      attempt += 1
-      val v = latestVersion(dir)
-      if (v != validatedV) {
-        enforceChecks(spark, dir, df, "overwrite")
-        validatedV = v
-      }
-      try out = commitWithStats(dir, Seq(path -> st),
+    retryOnLostRace(dir) { _ =>
+      val v = repin()
+      commitWithStats(dir, Seq(path -> st),
         remove = liveFiles(dir, v),
         colMap = if (columnMapping(dir, v).isDefined) Some(Nil) else None,
         atVersion = v + 1)
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null &&
-              e.getMessage.contains("lost the race") =>
-          if (attempt >= MaxCommitAttempts) throw e
-          raceBackoff(attempt) // loop head re-validates + re-pins
-      }
     }
-    out
   }
 
   /** DESCRIBE HISTORY — one row per still-resolvable commit (public
@@ -3726,81 +3631,37 @@ object TxLog {
       df: DataFrame, partCols: Seq[String], bloomBits: Int = 1024,
       extraStatsCols: Seq[String] = Nil,
       txn: Option[(String, Long)] = None): Int = {
-    // pinned-claim discipline (see appendMapped): validate at a version,
-    // claim exactly that version + 1 — the leaves are already written,
-    // only the manifest line retries
-    var validatedV = latestVersion(dir)
-    enforceChecks(spark, dir, df, "partitioned append")
+    // the leaves are written once; only the manifest line retries
+    val repin = checkPin(spark, dir, df, "partitioned append")
     val adds = writePartitionLeaves(spark, dir, name, df,
       partCols, bloomBits, extraStatsCols)
-    var attempt = 0
-    var out = -1
-    while (out < 0) {
-      attempt += 1
-      val v = latestVersion(dir)
-      if (v != validatedV) {
-        enforceChecks(spark, dir, df, "partitioned append")
-        validatedV = v
-      }
-      try out = commitWithStats(dir, adds, txn = txn, atVersion = v + 1)
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null &&
-              e.getMessage.contains("lost the race") =>
-          if (attempt >= MaxCommitAttempts) throw e
-          raceBackoff(attempt) // loop head re-validates + re-pins
-      }
-    }
-    out
+    retryOnLostRace(dir)(_ =>
+      commitWithStats(dir, adds, txn = txn, atVersion = repin() + 1))
   }
 
   /** Atomic partitioned full REPLACE — [[overwriteAll]]'s semantics at
-    * the [[commitPartitioned]] value grain: one commit lands `df`'s
+    * the [[commitPartitionedCols]] value grain: one commit lands `df`'s
     * per-value leaves as the table's entire content and removes every
     * live file (DV bindings die with them), so the INSERT OVERWRITE of
     * a PARTITIONED catalog table keeps exact per-value stats instead of
     * collapsing to one unprunable batch. Time travel to the replaced
     * content is untouched. Returns the commit version. */
-  def overwritePartitioned(spark: SparkSession, dir: String, name: String,
-      df: DataFrame, partCol: String, bloomBits: Int = 1024,
-      extraStatsCols: Seq[String] = Nil): Int =
-    overwritePartitionedCols(spark, dir, name, df, Seq(partCol), bloomBits,
-      extraStatsCols)
-
-  /** [[overwritePartitioned]] over a composite partition spec. */
   def overwritePartitionedCols(spark: SparkSession, dir: String,
       name: String, df: DataFrame, partCols: Seq[String],
       bloomBits: Int = 1024, extraStatsCols: Seq[String] = Nil): Int = {
-    // pinned-claim discipline (see appendMapped)
-    var validatedV = latestVersion(dir)
-    enforceChecks(spark, dir, df, "partitioned overwrite")
+    val repin = checkPin(spark, dir, df, "partitioned overwrite")
     val adds = writePartitionLeaves(spark, dir, name, df, partCols,
       bloomBits, extraStatsCols)
-    var attempt = 0
-    var out = -1
-    while (out < 0) {
-      attempt += 1
-      val v = latestVersion(dir)
-      if (v != validatedV) {
-        enforceChecks(spark, dir, df, "partitioned overwrite")
-        validatedV = v
-      }
+    retryOnLostRace(dir) { _ =>
+      val v = repin()
       // like overwriteAll: a full replace on a MAPPED table restates the
       // colmap to identity (Some(Nil)) — the new leaves carry logical
       // names, and a stale mapping left in force would project wrong or
       // missing columns on every subsequent read (ADVICE r13)
-      try out = commitWithStats(dir, adds, remove = liveFiles(dir, v),
+      commitWithStats(dir, adds, remove = liveFiles(dir, v),
         colMap = if (columnMapping(dir, v).isDefined) Some(Nil) else None,
         atVersion = v + 1)
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null &&
-              e.getMessage.contains("lost the race") =>
-          if (attempt >= MaxCommitAttempts) throw e
-          raceBackoff(attempt) // loop head re-validates + re-pins
-      }
     }
-    out
   }
 
   /** TRUNCATE — one adds-empty remove-all commit: the table becomes
@@ -3812,23 +3673,10 @@ object TxLog {
     * write, so the leaf writer can't express it — ADVICE r13). Returns
     * the commit version; a no-op (already empty, no mapping) still
     * commits so the verb is always visible in history. */
-  def truncate(dir: String): Int = {
-    var attempt = 0
-    var out = -1
-    while (out < 0) {
-      attempt += 1
-      try out = commitWithStats(dir, add = Nil, remove = liveFiles(dir),
-        colMap = if (columnMapping(dir).isDefined) Some(Nil) else None)
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null &&
-              e.getMessage.contains("lost the race") =>
-          if (attempt >= MaxCommitAttempts) throw e
-          raceBackoff(attempt)
-      }
-    }
-    out
-  }
+  def truncate(dir: String): Int =
+    retryOnLostRace(dir)(_ =>
+      commitWithStats(dir, add = Nil, remove = liveFiles(dir),
+        colMap = if (columnMapping(dir).isDefined) Some(Nil) else None))
 
   /** The internal partition-copy column name for level `i` of a
     * partitioned ingest: `__pv` for the first (the historical
@@ -3959,8 +3807,8 @@ object TxLog {
     Some(vals.toSeq)
   }
 
-  /** The shared leaf writer of [[commitPartitioned]] and
-    * [[overwritePartitioned]]: one `partitionBy` write on internal
+  /** The shared leaf writer of [[commitPartitionedCols]] and
+    * [[overwritePartitionedCols]]: one `partitionBy` write on internal
     * string copies of the partition columns (the columns themselves
     * stay IN the data files), then one manifest add per value-leaf dir
     * with exact min=max range stats (numeric values) plus a one-value
@@ -4115,15 +3963,10 @@ object TxLog {
     * [[commitRewrite]] swap. Untouched single-leaf values never
     * rewrite. Returns the commit version, or 0 when the table is
     * already in pure value grain — the [[optimize]] idempotence
-    * contract, so a scheduled loop converges. */
-  def optimizePartitioned(spark: SparkSession, dir: String, name: String,
-      partCol: String, bloomBits: Int = 1024): Int =
-    optimizePartitionedCols(spark, dir, name, Seq(partCol), bloomBits)
-
-  /** [[optimizePartitioned]] over a composite partition spec: the value
-    * grain is the TUPLE of partition values, so residue re-clusters
-    * into nested leaves and untouched single-leaf tuples never
-    * rewrite. */
+    * contract, so a scheduled loop converges. Over a composite spec the
+    * value grain is the TUPLE of partition values, so residue
+    * re-clusters into nested leaves and untouched single-leaf tuples
+    * never rewrite. */
   def optimizePartitionedCols(spark: SparkSession, dir: String,
       name: String, partCols: Seq[String], bloomBits: Int = 1024): Int = {
     val entries = liveEntries(dir)
@@ -4198,10 +4041,7 @@ object TxLog {
       columns0: Seq[String]): Int = {
     import org.apache.spark.sql.functions._
     require(columns0.nonEmpty, "analyze needs at least one column")
-    var attempt = 0
-    var out = -1
-    while (out < 0) {
-      attempt += 1
+    retryOnLostRace(dir) { _ =>
       val checkV = latestVersion(dir)
       val (entries, dvM, cmb) = resolveFull(dir, checkV)
       require(entries.nonEmpty, s"txlog: analyze of empty table $dir")
@@ -4240,22 +4080,12 @@ object TxLog {
         val all = segs ++ kept
         p -> (if (all.isEmpty) None else Some(all.mkString(",")))
       }
-      try out = commitWithStats(dir, adds,
+      commitWithStats(dir, adds,
         dvSets = dvM.toMap.toSeq.map { case (p, d) => p -> Some(d) },
         atVersion = checkV + 1)
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null &&
-              e.getMessage.contains("lost the race") =>
-          if (attempt >= MaxCommitAttempts) throw e
-          raceBackoff(attempt)
-      }
     }
-    out
   }
 
-  /** Drop the whole table — data files and log. (Test/rebuild helper;
-    * production tables are append-only and never need it.) */
   /** SHALLOW CLONE — a zero-copy fork of `src`'s current snapshot into a
     * NEW table at `dst` (public precedent: Delta's SHALLOW CLONE): one
     * commit whose adds reference `src`'s live data files in place, stats
@@ -4301,6 +4131,8 @@ object TxLog {
       checkSets = cmb.checks.toSeq.map { case (n, e) => (n, Some(e)) })
   }
 
+  /** Drop the whole table — data files and log. (Test/rebuild helper;
+    * production tables are append-only and never need it.) */
   def destroy(dir: String): Unit = {
     val p = new Path(dir)
     val fs = fsOf(p)

@@ -13,9 +13,10 @@ import graft.sources.TxLog
   * each land `SPARK_GRAFT_COMMITS` commits against ONE table while a
   * maintenance thread runs a compaction-shaped loop (remove-4-add-1
   * rewrite commits pinned at a resolved version + periodic checkpoint —
-  * the OPTIMIZE pattern) until the appenders finish. Appends and the
-  * compactor both use the production retry discipline (retry on "lost
-  * the race", randomized exponential backoff capped at 1.6 s — an A/B against a 0.8 s cap at N=32 zero-think-time contention measured 4/1600 exhaustions at 0.8 s vs zero at 1.6 s: the wider window thins straggler arrival rate more than it costs in parking). Commits are log-only
+  * the OPTIMIZE pattern) until the appenders finish. Appends use the
+  * production retry discipline (retry on [[TxLog.LostRace]] after
+  * [[TxLog.raceBackoff]], 64-attempt bound); the compactor retries
+  * after a fixed 5 ms. Commits are log-only
   * (synthetic batch paths): data-file writes land in DISTINCT dirs and
   * never contend — the claim file is the only shared resource, so the
   * log is the honest surface of the contract being measured.
@@ -77,11 +78,11 @@ object MultiWriterProbe {
       val failed = new AtomicLong
 
       /** The production retry discipline around one claim attempt
-        * (mirrors TxLog.raceBackoff / MaxCommitAttempts: randomized
-        * exponential backoff, 64-attempt bound — the first probe run
+        * (TxLog.raceBackoff, 64-attempt bound — the first probe run
         * showed the OLD deterministic 16-attempt discipline exhausting
-        * at N=4, which is what motivated the production change). */
-      def retrying(what: String)(attemptOnce: () => Unit): Unit = {
+        * at N=4, which is what motivated the production change), but
+        * counting lost races and exhaustions instead of throwing. */
+      def retrying(attemptOnce: () => Unit): Unit = {
         var attempt = 0
         var done = false
         var ok = false
@@ -90,20 +91,10 @@ object MultiWriterProbe {
           attempt += 1
           try { attemptOnce(); done = true; ok = true }
           catch {
-            case e: IllegalStateException
-                if e.getMessage != null &&
-                  e.getMessage.contains("lost the race") =>
+            case _: TxLog.LostRace =>
               retries.incrementAndGet()
               if (attempt >= 64) { failed.incrementAndGet(); done = true }
-              else {
-                // mirrors production raceBackoff: randomized
-                // exponential, window doubling to a 1.6 s cap (the r16
-                // straggler-starvation fix this probe's own N=16 run
-                // motivated — 7/800 exhaustions under the linear cap)
-                val cap = math.min(5L << math.min(attempt, 9), 1600L)
-                Thread.sleep(java.util.concurrent.ThreadLocalRandom
-                  .current().nextLong(1, cap + 1))
-              }
+              else TxLog.raceBackoff(attempt)
           }
         }
         // success latencies only: an exhausted commit's duration is a
@@ -115,7 +106,7 @@ object MultiWriterProbe {
       val writers = (0 until n).map { w =>
         new Thread(() => {
           (0 until commitsPer).foreach { i =>
-            retrying(s"append w$w/$i")(() =>
+            retrying(() =>
               TxLog.commitWithStats(root,
                 Seq(s"$root/data/w${w}_b$i" -> Some(s"v;$i.0;$i.0"))))
           }
@@ -146,9 +137,7 @@ object MultiWriterProbe {
               done = true
               compactRounds.incrementAndGet()
             } catch {
-              case e: IllegalStateException
-                  if e.getMessage != null &&
-                    e.getMessage.contains("lost the race") =>
+              case _: TxLog.LostRace =>
                 retries.incrementAndGet()
                 Thread.sleep(5)
             }

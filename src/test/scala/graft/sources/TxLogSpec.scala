@@ -1397,9 +1397,9 @@ class TxLogSpec extends AnyFunSuite {
     // the partitioned full replace writes LOGICAL-named leaves; leaving
     // the stale mapping in force would project the renamed column away
     // from the new files (ADVICE r13)
-    TxLog.overwritePartitioned(spark, dir, "ow",
+    TxLog.overwritePartitionedCols(spark, dir, "ow",
       Seq((2L, 20.0, "b"), (3L, 30.0, "c")).toDF("id", "quality", "part"),
-      partCol = "part")
+      Seq("part"))
     assert(TxLog.columnMapping(dir).isEmpty,
       "a full replace must clear the mapping to identity")
     assert(TxLog.read(spark, dir).orderBy("id")
@@ -2163,4 +2163,159 @@ class TxLogSpec extends AnyFunSuite {
     TxLog.destroy(d2)
     TxLog.destroy(dir)
   }
+
+  /** Runs `body` with the claim store `store` installed. */
+  private def withClaim[T](store: Class[_ <: TxLog.ClaimStore])(
+      body: => T): T = {
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("graft.txlog.claim", store.getName)
+    try body finally hc.set("graft.txlog.claim", "scheme")
+  }
+
+  /** Runs `verb` with [[LosingClaim]] armed to lose the next `k` claims;
+    * returns the verb's version and the claims it made. */
+  private def losing(k: Int)(verb: => Int): (Int, Int) = {
+    LosingClaim.arm(k)
+    withClaim(classOf[LosingClaim]) { val v = verb; (v, LosingClaim.claims.get) }
+  }
+
+  test("every commit verb retries through two lost claims and lands") {
+    val dir = freshDir()
+    def ids(d: String = dir): Seq[Long] =
+      TxLog.read(spark, d).select("id").as[Long].collect().sorted.toSeq
+    // each verb loses two claims, then wins the next version on its
+    // third: 2 lost races + 1 win = 3 claims, content intact
+    def lands(expected: Int)(verb: => Int): Unit =
+      assert(losing(2)(verb) === ((expected, 3)))
+    val first = TxLog.writeBatch(
+      Seq((1L, 1.0), (2L, 2.0)).toDF("id", "v"), dir, "b0")
+    lands(1)(TxLog.commitWithRetry(dir, Seq(first)))
+    assert(ids() === Seq(1L, 2L))
+    lands(2)(TxLog.appendMapped(spark, dir,
+      Seq((3L, 3.0)).toDF("id", "v"), "b1"))
+    assert(ids() === Seq(1L, 2L, 3L))
+    lands(3)(TxLog.addConstraint(spark, dir, "pos", "id > 0"))
+    assert(TxLog.constraintsOf(dir) === Seq("pos" -> "id > 0"))
+    lands(4)(TxLog.overwriteAll(spark, dir,
+      Seq((4L, 4.0), (5L, 5.0)).toDF("id", "v"), "ow"))
+    assert(ids() === Seq(4L, 5L))
+    lands(5)(TxLog.analyze(spark, dir, Seq("v")))
+    assert(TxLog.liveEntries(dir).flatMap(_._2).exists(_.contains("v;4.0;5.0")))
+    val live = TxLog.liveFiles(dir)
+    val compacted = TxLog.writeBatch(
+      TxLog.read(spark, dir).coalesce(1), dir, "compact")
+    lands(6)(TxLog.commitRewrite(dir, Seq(compacted -> None), live))
+    assert(TxLog.liveFiles(dir) === Seq(compacted))
+    assert(ids() === Seq(4L, 5L))
+    lands(7)(TxLog.addColumn(spark, dir, "note", "STRING"))
+    lands(8)(TxLog.renameColumn(spark, dir, "v", "score"))
+    assert(TxLog.read(spark, dir).columns.toSeq === Seq("id", "score", "note"))
+    lands(9)(TxLog.appendMapped(spark, dir,
+      Seq((6L, 6.0, "n")).toDF("id", "score", "note"), "b2"))
+    assert(TxLog.read(spark, dir).orderBy("id")
+      .as[(Long, Double, Option[String])].collect().toSeq ===
+      Seq((4L, 4.0, None), (5L, 5.0, None), (6L, 6.0, Some("n"))))
+    lands(10)(TxLog.truncate(dir))
+    assert(TxLog.liveFiles(dir).isEmpty)
+    assert(TxLog.columnMapping(dir).isEmpty)
+    TxLog.destroy(dir)
+
+    val pdir = freshDir()
+    lands(1)(TxLog.setPartitionSpec(pdir, Seq("part")))
+    assert(TxLog.partitionSpec(pdir) === Some(Seq("part")))
+    lands(2)(TxLog.commitPartitionedCols(spark, pdir, "p0",
+      Seq((1L, "a"), (2L, "b")).toDF("id", "part"), Seq("part")))
+    assert(ids(pdir) === Seq(1L, 2L))
+    lands(3)(TxLog.overwritePartitionedCols(spark, pdir, "p1",
+      Seq((3L, "c")).toDF("id", "part"), Seq("part")))
+    assert(ids(pdir) === Seq(3L))
+    assert(TxLog.liveFiles(pdir).size === 1)
+    TxLog.destroy(pdir)
+  }
+
+  test("an exhausted retry budget fails with the uniform race error") {
+    val dir = freshDir()
+    val e = intercept[IllegalStateException] {
+      losing(Int.MaxValue)(TxLog.commitWithRetry(dir, Seq("/data/f1"),
+        maxAttempts = 3))
+    }
+    assert(e.getMessage.startsWith(
+      s"txlog: still losing the version race after 3 attempts on $dir"))
+    assert(e.getCause.isInstanceOf[TxLog.LostRace])
+    assert(LosingClaim.claims.get === 3, "exactly maxAttempts claims")
+    assert(TxLog.latestVersion(dir) === 0, "no manifest landed")
+    TxLog.destroy(dir)
+  }
+
+  test("a non-race IllegalStateException is not retried") {
+    // the message even reads like a lost race: only the LostRace type
+    // may trigger a retry, never the text
+    val dir = freshDir()
+    ThrowingClaim.claims.set(0)
+    val e = intercept[IllegalStateException] {
+      withClaim(classOf[ThrowingClaim])(
+        TxLog.commitWithRetry(dir, Seq("/data/f1")))
+    }
+    assert(!e.isInstanceOf[TxLog.LostRace])
+    assert(e.getMessage === ThrowingClaim.Message)
+    assert(ThrowingClaim.claims.get === 1, "one attempt, no retry")
+    TxLog.destroy(dir)
+  }
+
+  test("commit renders the same manifest lines as commitWithStats without stats") {
+    val dir = freshDir()
+    TxLog.commit(dir, Seq("/data/a", "/data/b"), remove = Seq("/data/c"))
+    TxLog.commit(dir, Nil)
+    def body(v: Int): String = {
+      val text = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(dir, "_txlog", f"v$v%08d.json")),
+        java.nio.charset.StandardCharsets.UTF_8)
+      assert(text.startsWith("meta\tts\t"))
+      text.substring(text.indexOf('\n') + 1) // minus the meta header
+    }
+    // stats-free adds render as two-field lines, removes after adds
+    assert(body(1) === "add\t/data/a\nadd\t/data/b\nremove\t/data/c\n")
+    assert(body(2) === "\n")
+    TxLog.destroy(dir)
+  }
+}
+
+/** [[TxLog.ClaimStore]] that loses the next armed number of claims —
+  * consuming the tmp manifest, as a real lost claim does — then
+  * delegates to [[TxLog.SchemeClaim]]. Installed through
+  * `graft.txlog.claim`, which instantiates the class per claim, so the
+  * state lives in the companion. */
+final class LosingClaim extends TxLog.ClaimStore {
+  def claim(fs: org.apache.hadoop.fs.FileSystem,
+      tmp: org.apache.hadoop.fs.Path,
+      target: org.apache.hadoop.fs.Path): Boolean = {
+    LosingClaim.claims.incrementAndGet()
+    if (LosingClaim.toLose.getAndDecrement() > 0) {
+      fs.delete(tmp, false)
+      false
+    } else TxLog.SchemeClaim.claim(fs, tmp, target)
+  }
+}
+
+object LosingClaim {
+  val claims = new java.util.concurrent.atomic.AtomicInteger
+  val toLose = new java.util.concurrent.atomic.AtomicInteger
+  def arm(k: Int): Unit = { claims.set(0); toLose.set(k) }
+}
+
+/** [[TxLog.ClaimStore]] whose claim fails with a plain
+  * `IllegalStateException` — a non-race failure inside a commit. */
+final class ThrowingClaim extends TxLog.ClaimStore {
+  def claim(fs: org.apache.hadoop.fs.FileSystem,
+      tmp: org.apache.hadoop.fs.Path,
+      target: org.apache.hadoop.fs.Path): Boolean = {
+    ThrowingClaim.claims.incrementAndGet()
+    fs.delete(tmp, false)
+    throw new IllegalStateException(ThrowingClaim.Message)
+  }
+}
+
+object ThrowingClaim {
+  val Message = "txlog: lost the race (simulated store fault)"
+  val claims = new java.util.concurrent.atomic.AtomicInteger
 }
