@@ -9877,25 +9877,18 @@ object Queries {
         val p = TxLog.writeBatch(b, root, s"band$i")
         TxLog.commitWithStats(root, Seq((p, TxLog.columnStats(b, "value"))))
       }
-      def plannedFiles(df: DataFrame): Int =
-        df.queryExecution.executedPlan.collectLeaves().collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-            f.relation.location
-              .listFiles(f.partitionFilters, f.dataFilters)
-              .map(_.files.size).sum
-        }.sum
       val api = TxLog.read(s, root)
         .filter(col("value") >= 55.0 && col("value") <= 70.0)
-      require(plannedFiles(api) == 1,
+      require(Graft.plannedFiles(api) == 1,
         s"API filter must plan exactly the one in-range band file, " +
-          s"planned ${plannedFiles(api)} of 4")
+          s"planned ${Graft.plannedFiles(api)} of 4")
       s.sql(s"DROP TABLE IF EXISTS graft.sql.evsp_$tag")
       s.sql(s"CREATE TABLE graft.sql.evsp_$tag USING graft LOCATION '$root'")
       val viaSql = s.sql(s"SELECT event_type, value FROM graft.sql.evsp_$tag " +
         "WHERE value >= 55.0 AND value <= 70.0")
-      require(plannedFiles(viaSql) == 1,
+      require(Graft.plannedFiles(viaSql) == 1,
         s"SQL filter must plan exactly the one in-range band file, " +
-          s"planned ${plannedFiles(viaSql)} of 4")
+          s"planned ${Graft.plannedFiles(viaSql)} of 4")
       viaSql.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           AggOps.sumExact(col("value")).as("sum_value"))
@@ -9940,21 +9933,14 @@ object Queries {
         "SELECT event_id, event_type, value, " +
         s"CAST(pmod(event_id, 4) AS INT) FROM ev_src_$tag " +
         "WHERE event_id % 2 = 1")
-      def plannedFiles(df: DataFrame): Int =
-        df.queryExecution.executedPlan.collectLeaves().collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-            f.relation.location
-              .listFiles(f.partitionFilters, f.dataFilters)
-              .map(_.files.size).sum
-        }.sum
       val filtered = s.sql(
         s"SELECT event_type, value FROM graft.sql.evpart_$tag " +
           "WHERE bucket = 2")
       // commit 1 wrote buckets {0,2} (even ids), commit 2 {1,3} (odd):
       // 4 one-file leaves total, and bucket=2 plans exactly one
-      require(plannedFiles(filtered) == 1,
+      require(Graft.plannedFiles(filtered) == 1,
         s"bucket=2 must plan 1 of the 4 value leaves, " +
-          s"planned ${plannedFiles(filtered)}")
+          s"planned ${Graft.plannedFiles(filtered)}")
       filtered.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           AggOps.sumExact(col("value")).as("sum_value"))
@@ -9997,24 +9983,17 @@ object Queries {
           "CAST(pmod(event_id, 2) AS INT), CAST(pmod(event_id, 3) AS INT) " +
           s"FROM ev2_src_$tag WHERE event_id % 2 = $parity")
       }
-      def plannedFiles(df: DataFrame): Int =
-        df.queryExecution.executedPlan.collectLeaves().collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-            f.relation.location
-              .listFiles(f.partitionFilters, f.dataFilters)
-              .map(_.files.size).sum
-        }.sum
       val filtered = s.sql(
         s"SELECT event_type, value FROM graft.sql.evpart2_$tag " +
           "WHERE b1 = 1 AND b2 = 2")
-      require(plannedFiles(filtered) == 1,
+      require(Graft.plannedFiles(filtered) == 1,
         s"b1=1 AND b2=2 must plan 1 of the 6 tuple leaves, " +
-          s"planned ${plannedFiles(filtered)}")
+          s"planned ${Graft.plannedFiles(filtered)}")
       val second = s.sql(
         s"SELECT event_type FROM graft.sql.evpart2_$tag WHERE b2 = 0")
-      require(plannedFiles(second) == 2,
+      require(Graft.plannedFiles(second) == 2,
         s"b2=0 alone must plan its 2 leaves (per-level stats), " +
-          s"planned ${plannedFiles(second)}")
+          s"planned ${Graft.plannedFiles(second)}")
       filtered.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           AggOps.sumExact(col("value")).as("sum_value"))
@@ -10062,20 +10041,13 @@ object Queries {
       s.sql(s"INSERT INTO graft.sql.evpac_$tag " +
         "SELECT event_id, event_type, CAST(pmod(event_id, 4) AS INT), " +
         s"value FROM evpac_src_$tag WHERE event_id % 2 = 1")
-      def plannedFiles(df: DataFrame): Int =
-        df.queryExecution.executedPlan.collectLeaves().collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-            f.relation.location
-              .listFiles(f.partitionFilters, f.dataFilters)
-              .map(_.files.size).sum
-        }.sum
       // even ids fill buckets {0,2}, odd ids {1,3}: 6 leaves live, and
       // a bucket filter still plans only that value's single leaf
       val pruned = s.sql(
         s"SELECT event_id FROM graft.sql.evpac_$tag WHERE bucket = 3")
-      require(plannedFiles(pruned) == 1,
+      require(Graft.plannedFiles(pruned) == 1,
         s"bucket=3 must plan 1 of the 6 leaves after ADD COLUMN, " +
-          s"planned ${plannedFiles(pruned)}")
+          s"planned ${Graft.plannedFiles(pruned)}")
       val renamed =
         try { s.sql(s"ALTER TABLE graft.sql.evpac_$tag " +
           "RENAME COLUMN event_id TO eid"); true }
@@ -10121,14 +10093,7 @@ object Queries {
         "USING graft PARTITIONED BY (days(ts))")
       s.sql(s"INSERT INTO graft.sql.evdays_$tag " +
         s"SELECT event_id, event_type, value, ts FROM evdays_src_$tag")
-      def plannedFiles(df: DataFrame): Int =
-        df.queryExecution.executedPlan.collectLeaves().collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-            f.relation.location
-              .listFiles(f.partitionFilters, f.dataFilters)
-              .map(_.files.size).sum
-        }.sum
-      val total = plannedFiles(s.sql(s"SELECT * FROM graft.sql.evdays_$tag"))
+      val total = Graft.plannedFiles(s.sql(s"SELECT * FROM graft.sql.evdays_$tag"))
       require(total >= 2, s"the events span must yield multiple day " +
         s"leaves, got $total")
       // the first day's window, derived from the data itself
@@ -10139,9 +10104,9 @@ object Queries {
         s"SELECT event_id FROM graft.sql.evdays_$tag " +
           s"WHERE ts >= timestamp_micros(${lo}L) " +
           s"AND ts < timestamp_micros(${hi}L)")
-      require(plannedFiles(oneDay) == 1,
+      require(Graft.plannedFiles(oneDay) == 1,
         s"a one-day raw-ts window must plan exactly 1 of $total day " +
-          s"leaves, planned ${plannedFiles(oneDay)}")
+          s"leaves, planned ${Graft.plannedFiles(oneDay)}")
       s.sql(s"SELECT unix_micros(ts) div 86400000000 AS day_num, value " +
           s"FROM graft.sql.evdays_$tag")
         .groupBy(col("day_num"))
@@ -10183,14 +10148,7 @@ object Queries {
         "USING graft PARTITIONED BY (months(ts))")
       s.sql(s"INSERT INTO graft.sql.evmon_$tag " +
         s"SELECT event_id, event_type, value, ts FROM evmon_src_$tag")
-      def plannedFiles(df: DataFrame): Int =
-        df.queryExecution.executedPlan.collectLeaves().collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-            f.relation.location
-              .listFiles(f.partitionFilters, f.dataFilters)
-              .map(_.files.size).sum
-        }.sum
-      val total = plannedFiles(s.sql(s"SELECT * FROM graft.sql.evmon_$tag"))
+      val total = Graft.plannedFiles(s.sql(s"SELECT * FROM graft.sql.evmon_$tag"))
       require(total >= 3, s"the widened events span must yield multiple " +
         s"month leaves, got $total")
       // the first month's window, derived from the data itself (UTC)
@@ -10205,9 +10163,9 @@ object Queries {
         s"SELECT event_id FROM graft.sql.evmon_$tag " +
           s"WHERE ts >= timestamp_micros(${lo}L) " +
           s"AND ts < timestamp_micros(${hi}L)")
-      require(plannedFiles(oneMonth) == 1,
+      require(Graft.plannedFiles(oneMonth) == 1,
         s"a one-month raw-ts window must plan exactly 1 of $total month " +
-          s"leaves, planned ${plannedFiles(oneMonth)}")
+          s"leaves, planned ${Graft.plannedFiles(oneMonth)}")
       s.sql(s"SELECT date_format(ts, 'yyyy-MM') AS month, value " +
           s"FROM graft.sql.evmon_$tag")
         .groupBy(col("month"))
@@ -10250,14 +10208,7 @@ object Queries {
         "USING graft PARTITIONED BY (years(ts))")
       s.sql(s"INSERT INTO graft.sql.evyr_$tag " +
         s"SELECT event_id, event_type, value, ts FROM evyr_src_$tag")
-      def plannedFiles(df: DataFrame): Int =
-        df.queryExecution.executedPlan.collectLeaves().collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-            f.relation.location
-              .listFiles(f.partitionFilters, f.dataFilters)
-              .map(_.files.size).sum
-        }.sum
-      val total = plannedFiles(s.sql(s"SELECT * FROM graft.sql.evyr_$tag"))
+      val total = Graft.plannedFiles(s.sql(s"SELECT * FROM graft.sql.evyr_$tag"))
       require(total >= 3, s"the widened events span must yield multiple " +
         s"year leaves, got $total")
       // the first year's window, derived from the data itself (UTC)
@@ -10272,9 +10223,9 @@ object Queries {
         s"SELECT event_id FROM graft.sql.evyr_$tag " +
           s"WHERE ts >= timestamp_micros(${lo}L) " +
           s"AND ts < timestamp_micros(${hi}L)")
-      require(plannedFiles(oneYear) == 1,
+      require(Graft.plannedFiles(oneYear) == 1,
         s"a one-year raw-ts window must plan exactly 1 of $total year " +
-          s"leaves, planned ${plannedFiles(oneYear)}")
+          s"leaves, planned ${Graft.plannedFiles(oneYear)}")
       s.sql(s"SELECT date_format(ts, 'yyyy') AS year, value " +
           s"FROM graft.sql.evyr_$tag")
         .groupBy(col("year"))
@@ -10318,14 +10269,7 @@ object Queries {
         "USING graft PARTITIONED BY (hours(ts))")
       s.sql(s"INSERT INTO graft.sql.evhr_$tag " +
         s"SELECT event_id, event_type, value, ts FROM evhr_src_$tag")
-      def plannedFiles(df: DataFrame): Int =
-        df.queryExecution.executedPlan.collectLeaves().collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-            f.relation.location
-              .listFiles(f.partitionFilters, f.dataFilters)
-              .map(_.files.size).sum
-        }.sum
-      val total = plannedFiles(s.sql(s"SELECT * FROM graft.sql.evhr_$tag"))
+      val total = Graft.plannedFiles(s.sql(s"SELECT * FROM graft.sql.evhr_$tag"))
       require(total >= 3, s"the rebased events span must yield multiple " +
         s"hour leaves, got $total")
       // the first hour's window, derived from the data itself
@@ -10337,9 +10281,9 @@ object Queries {
         s"SELECT event_id FROM graft.sql.evhr_$tag " +
           s"WHERE ts >= timestamp_micros(${lo}L) " +
           s"AND ts < timestamp_micros(${hi}L)")
-      require(plannedFiles(oneHour) == 1,
+      require(Graft.plannedFiles(oneHour) == 1,
         s"a one-hour raw-ts window must plan exactly 1 of $total hour " +
-          s"leaves, planned ${plannedFiles(oneHour)}")
+          s"leaves, planned ${Graft.plannedFiles(oneHour)}")
       s.sql(s"SELECT unix_micros(ts) div 3600000000 AS hour_num, value " +
           s"FROM graft.sql.evhr_$tag")
         .groupBy(col("hour_num"))
@@ -10381,23 +10325,16 @@ object Queries {
         "USING graft PARTITIONED BY (bucket(8, c_name))")
       s.sql(s"INSERT INTO graft.sql.custbk_$tag " +
         s"SELECT c_custkey, c_name, c_acctbal FROM custbk_src_$tag")
-      def plannedFiles(df: DataFrame): Int =
-        df.queryExecution.executedPlan.collectLeaves().collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-            f.relation.location
-              .listFiles(f.partitionFilters, f.dataFilters)
-              .map(_.files.size).sum
-        }.sum
-      val total = plannedFiles(s.sql(s"SELECT * FROM graft.sql.custbk_$tag"))
+      val total = Graft.plannedFiles(s.sql(s"SELECT * FROM graft.sql.custbk_$tag"))
       require(total == 8, s"bucket(8, c_name) over 1500 distinct names " +
         s"must land 8 leaves, got $total")
       val probe = s.sql(s"SELECT min(c_name) FROM custbk_src_$tag")
         .collect().head.getString(0)
       val one = s.sql(s"SELECT c_custkey FROM graft.sql.custbk_$tag " +
         s"WHERE c_name = '$probe'")
-      require(plannedFiles(one) == 1,
+      require(Graft.plannedFiles(one) == 1,
         s"a c_name point predicate must plan exactly 1 of 8 bucket " +
-          s"leaves (#bk# exact membership), planned ${plannedFiles(one)}")
+          s"leaves (#bk# exact membership), planned ${Graft.plannedFiles(one)}")
       s.sql(s"SELECT pmod(CAST(conv(substr(md5(c_name), 1, 8), 16, 10) " +
           s"AS BIGINT), 8) AS bucket, c_acctbal " +
           s"FROM graft.sql.custbk_$tag")
@@ -10440,22 +10377,15 @@ object Queries {
         "USING graft PARTITIONED BY (truncate(1, lang))")
       s.sql(s"INSERT INTO graft.sql.doctr_$tag " +
         s"SELECT doc_id, lang, n_chars FROM doctr_src_$tag")
-      def plannedFiles(df: DataFrame): Int =
-        df.queryExecution.executedPlan.collectLeaves().collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-            f.relation.location
-              .listFiles(f.partitionFilters, f.dataFilters)
-              .map(_.files.size).sum
-        }.sum
-      val total = plannedFiles(s.sql(s"SELECT * FROM graft.sql.doctr_$tag"))
+      val total = Graft.plannedFiles(s.sql(s"SELECT * FROM graft.sql.doctr_$tag"))
       require(total == 4, s"truncate(1, lang) over {de,en,es,fr,zh} " +
         s"must land 4 prefix leaves, got $total")
       Seq("fr", "en").foreach { l =>
         val one = s.sql(s"SELECT doc_id FROM graft.sql.doctr_$tag " +
           s"WHERE lang = '$l'")
-        require(plannedFiles(one) == 1,
+        require(Graft.plannedFiles(one) == 1,
           s"lang = '$l' must plan exactly 1 of 4 prefix leaves " +
-            s"(#tp# exact membership), planned ${plannedFiles(one)}")
+            s"(#tp# exact membership), planned ${Graft.plannedFiles(one)}")
       }
       s.sql(s"SELECT substr(lang, 1, 1) AS pfx, n_chars " +
           s"FROM graft.sql.doctr_$tag")
@@ -10517,36 +10447,29 @@ object Queries {
       val dNew = TxLog.liveFiles(loc).size - kOld
       require(kOld >= 2 && dNew >= 2,
         s"need a real mixed-grain era, got $kOld old + $dNew new leaves")
-      def plannedFiles(df: DataFrame): Int =
-        df.queryExecution.executedPlan.collectLeaves().collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-            f.relation.location
-              .listFiles(f.partitionFilters, f.dataFilters)
-              .map(_.files.size).sum
-        }.sum
       val (lo, hi) = (midUs, midUs + 86400000000L) // the first new day
       val window = s"ts >= timestamp_micros(${lo}L) AND " +
         s"ts < timestamp_micros(${hi}L)"
       val oneDay = s.sql(
         s"SELECT event_id FROM graft.sql.evolve_$tag WHERE $window")
-      require(plannedFiles(oneDay) == kOld + 1,
+      require(Graft.plannedFiles(oneDay) == kOld + 1,
         s"mixed grain: a one-day window must plan kOld+1 = ${kOld + 1} " +
           s"leaves (new days prune, old leaves read), " +
-          s"planned ${plannedFiles(oneDay)}")
+          s"planned ${Graft.plannedFiles(oneDay)}")
       val typeOf = s.sql(s"SELECT min(event_type) FROM evolve_src_$tag")
         .collect().head.getString(0)
       val oneType = s.sql(s"SELECT event_id FROM graft.sql.evolve_$tag " +
         s"WHERE event_type = '$typeOf'")
-      require(plannedFiles(oneType) == 1 + dNew,
+      require(Graft.plannedFiles(oneType) == 1 + dNew,
         s"mixed grain: a type point predicate must plan 1+dNew = " +
-          s"${1 + dNew} leaves, planned ${plannedFiles(oneType)}")
+          s"${1 + dNew} leaves, planned ${Graft.plannedFiles(oneType)}")
       s.sql(s"OPTIMIZE graft.sql.evolve_$tag")
       val days = s.sql(s"SELECT count(DISTINCT unix_micros(ts) div " +
         s"86400000000) FROM evolve_src_$tag").collect().head.getLong(0)
       require(TxLog.liveFiles(loc).size == days,
         s"OPTIMIZE must migrate to pure day grain ($days leaves), " +
           s"got ${TxLog.liveFiles(loc).size}")
-      require(plannedFiles(s.sql(
+      require(Graft.plannedFiles(s.sql(
         s"SELECT event_id FROM graft.sql.evolve_$tag WHERE $window")) == 1,
         "after migration the one-day window must plan exactly 1 leaf")
       s.sql(s"SELECT unix_micros(ts) div 86400000000 AS day_num, value " +
@@ -10707,27 +10630,20 @@ object Queries {
         col("value") >= 56.0 && col("value") < 57.0)
       s.sql(s"DROP TABLE IF EXISTS graft.sql.evana_$tag")
       s.sql(s"CREATE TABLE graft.sql.evana_$tag USING graft LOCATION '$root'")
-      def plannedFiles(df: DataFrame): Int =
-        df.queryExecution.executedPlan.collectLeaves().collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-            f.relation.location
-              .listFiles(f.partitionFilters, f.dataFilters)
-              .map(_.files.size).sum
-        }.sum
       def filtered = s.sql(
         s"SELECT event_type, value FROM graft.sql.evana_$tag " +
           "WHERE value >= 55.0 AND value <= 70.0")
-      require(plannedFiles(filtered) == 4,
+      require(Graft.plannedFiles(filtered) == 4,
         s"a stats-less table must plan every file, " +
-          s"planned ${plannedFiles(filtered)}")
+          s"planned ${Graft.plannedFiles(filtered)}")
       val filesPre = TxLog.liveFiles(root)
       s.sql(s"ANALYZE TABLE graft.sql.evana_$tag " +
         "COMPUTE STATISTICS FOR COLUMNS (value)")
       require(TxLog.liveFiles(root) == filesPre,
         "ANALYZE must not write or touch a single data file")
-      require(plannedFiles(filtered) == 1,
+      require(Graft.plannedFiles(filtered) == 1,
         s"the analyzed table must plan exactly the in-range band, " +
-          s"planned ${plannedFiles(filtered)}")
+          s"planned ${Graft.plannedFiles(filtered)}")
       filtered.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           AggOps.sumExact(col("value")).as("sum_value"))
@@ -10816,18 +10732,11 @@ object Queries {
       require(leafNames.sorted ==
         Seq("__pv=0", "__pv=1", "__pv=2", "__pv=3"),
         s"optimize must restore one leaf per value, got $leafNames")
-      def plannedFiles(df: DataFrame): Int =
-        df.queryExecution.executedPlan.collectLeaves().collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-            f.relation.location
-              .listFiles(f.partitionFilters, f.dataFilters)
-              .map(_.files.size).sum
-        }.sum
       val filtered = s.sql(
         s"SELECT event_type, value FROM graft.sql.evoptp_$tag " +
           "WHERE bucket = 2")
-      require(plannedFiles(filtered) == 1,
-        s"the restored grain must plan 1 leaf, got ${plannedFiles(filtered)}")
+      require(Graft.plannedFiles(filtered) == 1,
+        s"the restored grain must plan 1 leaf, got ${Graft.plannedFiles(filtered)}")
       require(s.sql(s"OPTIMIZE graft.sql.evoptp_$tag")
         .head().getInt(0) == 0, "a second optimize must be a no-op")
       filtered.groupBy(col("event_type"))
@@ -10872,20 +10781,13 @@ object Queries {
           s"SELECT event_id, event_type, value FROM ev_as_$tag " +
           s"WHERE value >= $lo AND value < $hi")
       }
-      def plannedFiles(df: DataFrame): Int =
-        df.queryExecution.executedPlan.collectLeaves().collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-            f.relation.location
-              .listFiles(f.partitionFilters, f.dataFilters)
-              .map(_.files.size).sum
-        }.sum
       val all = s.sql(s"SELECT value FROM graft.sql.evauto_$tag")
       val filtered = s.sql(
         s"SELECT event_type, value FROM graft.sql.evauto_$tag " +
           "WHERE value >= 35.0 AND value <= 55.0")
-      require(plannedFiles(filtered) * 3 <= plannedFiles(all),
+      require(Graft.plannedFiles(filtered) * 3 <= Graft.plannedFiles(all),
         s"stats-on-write must let the filter plan one band of three, " +
-          s"planned ${plannedFiles(filtered)} of ${plannedFiles(all)}")
+          s"planned ${Graft.plannedFiles(filtered)} of ${Graft.plannedFiles(all)}")
       filtered.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           AggOps.sumExact(col("value")).as("sum_value"))

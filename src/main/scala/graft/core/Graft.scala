@@ -115,6 +115,16 @@ object Graft {
     if (estimated * 2 <= cores) ds.repartition(cores) else ds
   }
 
+  /** Files the scan planner would read for `df`: each file-scan leaf's
+    * own `listFiles` under its partition and data filters, summed. Runs
+    * no job — the file-skipping check the pruning gates and specs make. */
+  def plannedFiles(df: DataFrame): Int =
+    df.queryExecution.executedPlan.collectLeaves().collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
+          .map(_.files.size).sum
+    }.sum
+
   /** Run independent Spark ACTIONS concurrently from a bounded pool and
     * return their results in input order (guide §2.6 "overlap independent
     * jobs"): the scheduler happily runs several jobs at once — a serial

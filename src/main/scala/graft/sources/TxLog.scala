@@ -76,9 +76,9 @@ object TxLog {
   /** Lost-race backoff: RANDOMIZED up to a linear-in-attempt cap.
     * Deterministic sleeps phase-lock contending writers — they wake
     * together, race for the same version slot, and the same loser can
-    * lose many straight rounds (tools/MultiWriterProbe measured blind
-    * appends exhausting a 16-attempt bound at 4 writers + a compactor
-    * under the old `sleep(min(5·attempt, 100))`); the jitter
+    * lose many straight rounds (the `multi_writer` scale scenario
+    * measured blind appends exhausting a 16-attempt bound at 4 writers +
+    * a compactor under the old `sleep(min(5·attempt, 100))`); the jitter
     * decorrelates wake times so every writer lands within a few
     * attempts (the standard randomized-backoff result). */
   private[graft] def raceBackoff(attempt: Int): Unit = {
@@ -191,7 +191,9 @@ object TxLog {
     *    put-if-absent of a whole object — S3 `If-None-Match: *`, GCS
     *    `ifGenerationMatch(0)`, ABFS conditional create).
     *  - any other value — a fully-qualified [[ClaimStore]] class name,
-    *    instantiated via its no-arg constructor. */
+    *    instantiated once per JVM via its no-arg constructor. That one
+    *    instance serves every claim of every table and writer thread,
+    *    so it must be thread-safe; it may hold state or connections. */
   trait ClaimStore {
     def claim(fs: FileSystem, tmp: Path, target: Path): Boolean
   }
@@ -271,12 +273,17 @@ object TxLog {
     }
   }
 
+  /** Custom claim stores by class name, each constructed on first use. */
+  private val customClaims =
+    new java.util.concurrent.ConcurrentHashMap[String, ClaimStore]()
+
   private def claimStore(): ClaimStore =
     conf().get("graft.txlog.claim", "scheme") match {
       case "scheme"             => SchemeClaim
       case "conditional-create" => ConditionalCreateClaim
-      case cls => Class.forName(cls).getDeclaredConstructor()
-        .newInstance().asInstanceOf[ClaimStore]
+      case cls => customClaims.computeIfAbsent(cls, c =>
+        Class.forName(c).getDeclaredConstructor()
+          .newInstance().asInstanceOf[ClaimStore])
     }
 
   private def claim(fs: FileSystem, tmp: Path, target: Path): Boolean =
@@ -455,6 +462,25 @@ object TxLog {
   private def renderColMap(m: Seq[(String, String)]): String =
     m.map { case (p, l) => s"${encCol(p)}:${encCol(l)}" }.mkString(",")
 
+  // One renderer per action kind, shared by [[commitWithStats]] and
+  // [[checkpoint]]: the grammar [[replayInto]] parses is written in one
+  // place. A None value renders the `-` that clears the binding.
+  private def addLine(p: String, st: Option[String]): String =
+    st.fold(s"add\t$p")(s => s"add\t$p\t$s")
+  private def dvLine(p: String, d: Option[String]): String =
+    s"dv\t$p\t${d.getOrElse("-")}"
+  private def colMapLine(m: Seq[(String, String)]): String =
+    if (m.isEmpty) "colmap\t-" // clear-to-identity sentinel
+    else s"colmap\t${renderColMap(m)}"
+  private def colTypeLine(p: String, t: Option[String]): String =
+    s"coltype\t${encCol(p)}\t${t.fold("-")(encCol)}"
+  private def constraintLine(n: String, e: Option[String]): String =
+    s"constraint\t${encCol(n)}\t${e.fold("-")(encCol)}"
+  private def txnLine(app: String, id: Long): String =
+    s"meta\ttxn\t${encCol(app)}\t$id"
+  private def partSpecLine(sp: Seq[String]): String =
+    s"meta\tpartspec\t${if (sp.isEmpty) "-" else sp.map(encCol).mkString(",")}"
+
   private def parseColMap(spec: String): Seq[(String, String)] =
     if (spec.trim.isEmpty) Seq.empty
     else spec.split(",", -1).toSeq.map { kv =>
@@ -607,26 +633,14 @@ object TxLog {
     val v = if (atVersion > 0) atVersion else latestVersion(dir) + 1
     val target = manifest(dir, v)
     val tmp = new Path(ld, s".v$v.tmp${System.nanoTime()}")
-    val body = metaHeader() + (add.map {
-      case (p, Some(st)) => s"add\t$p\t$st"
-      case (p, None)     => s"add\t$p"
-    } ++ remove.map(p => s"remove\t$p") ++ dvSets.map {
-      case (p, Some(d)) => s"dv\t$p\t$d"
-      case (p, None)    => s"dv\t$p\t-"
-    } ++ colMap.map {
-      case m if m.isEmpty => "colmap\t-" // clear-to-identity sentinel
-      case m              => s"colmap\t${renderColMap(m)}"
-    } ++ colTypes.map { // after colmap: a same-commit restate prunes first
-      case (p, Some(t)) => s"coltype\t${encCol(p)}\t${encCol(t)}"
-      case (p, None)    => s"coltype\t${encCol(p)}\t-"
-    } ++ checkSets.map {
-      case (n, Some(e)) => s"constraint\t${encCol(n)}\t${encCol(e)}"
-      case (n, None)    => s"constraint\t${encCol(n)}\t-"
-    } ++ txn.map { case (app, id) => s"meta\ttxn\t${encCol(app)}\t$id" }
-      ++ partSpecSet.map {
-        case Nil => "meta\tpartspec\t-"
-        case sp  => s"meta\tpartspec\t${sp.map(encCol).mkString(",")}"
-      }).mkString("", "\n", "\n")
+    val body = metaHeader() + (add.map((addLine _).tupled) ++
+      remove.map(p => s"remove\t$p") ++ dvSets.map((dvLine _).tupled) ++
+      colMap.map(colMapLine) ++
+      // after colmap: a same-commit restate prunes first
+      colTypes.map((colTypeLine _).tupled) ++
+      checkSets.map((constraintLine _).tupled) ++
+      txn.map((txnLine _).tupled) ++
+      partSpecSet.map(partSpecLine)).mkString("", "\n", "\n")
     val out = fs.create(tmp, false)
     try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
     if (!claim(fs, tmp, target))
@@ -1639,28 +1653,18 @@ object TxLog {
       // and dvs still serialize last). Old tail-layout checkpoints
       // replay identically; they just lack the marker and never take
       // the header-only fast path.
-      w.write("meta\tlayout\t2\n")
-      cmAtV.partSpec.foreach {
-        case Nil => w.write("meta\tpartspec\t-\n")
-        case sp  =>
-          w.write(s"meta\tpartspec\t${sp.map(encCol).mkString(",")}\n")
-      }
-      cmAtV.m.foreach(m => w.write(s"colmap\t${renderColMap(m)}\n"))
-      cmAtV.types.foreach { case (p, t) =>
-        w.write(s"coltype\t${encCol(p)}\t${encCol(t)}\n") // addColumn
-      }                                  // registry rides checkpoints
-      cmAtV.checks.foreach { case (n, e) =>
-        w.write(s"constraint\t${encCol(n)}\t${encCol(e)}\n")
-      }
-      cmAtV.txns.foreach { case (a, id) =>
-        w.write(s"meta\ttxn\t${encCol(a)}\t$id\n") // idempotence marks
-      }                                            // survive retention
-      entries.foreach {
-        case (p, Some(st)) => w.write(s"add\t$p\t$st\n")
-        case (p, None)     => w.write(s"add\t$p\n")
-      }
+      def line(l: String): Unit = { w.write(l); w.write('\n') }
+      line("meta\tlayout\t2")
+      cmAtV.partSpec.foreach(sp => line(partSpecLine(sp)))
+      cmAtV.m.foreach(m => line(colMapLine(m)))
+      // the addColumn registry, constraints and idempotence marks ride
+      // checkpoints, so they survive retention
+      cmAtV.types.foreach { case (p, t) => line(colTypeLine(p, Some(t))) }
+      cmAtV.checks.foreach { case (n, e) => line(constraintLine(n, Some(e))) }
+      cmAtV.txns.foreach { case (a, id) => line(txnLine(a, id)) }
+      entries.foreach { case (p, st) => line(addLine(p, st)) }
       entries.foreach { case (p, _) =>
-        dvs.get(p).foreach(d => w.write(s"dv\t$p\t$d\n"))
+        dvs.get(p).foreach(d => line(dvLine(p, Some(d))))
       }
     } finally w.close()
     if (!claim(fs, tmp, checkpointFile(dir, v)))
@@ -2656,8 +2660,8 @@ object TxLog {
     * `makeQualified` resolves relative paths against the filesystem's
     * working directory before the scheme is stripped; without it a table
     * rooted at a relative path maps NOTHING and a row-level verb would
-    * silently no-op (caught by tools/RowVerbProbe, guarded loudly in
-    * [[deleteWhere]]/[[merge]] besides). */
+    * silently no-op (a row-verb scale probe once caught exactly that;
+    * [[deleteWhere]]/[[merge]] guard it loudly besides). */
   private def normPath(p: String): String = {
     val path = new Path(p)
     fsOf(path).makeQualified(path).toUri.getPath.stripSuffix("/")

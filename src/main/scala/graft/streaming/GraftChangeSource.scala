@@ -196,8 +196,8 @@ final class GraftSink(spark: SparkSession, dir: String,
   override def toString: String = s"GraftSink[$dir]"
 }
 
-/** Probe-tool access to the package-private sink (tools/SinkProbe —
-  * the BENCH_SCALE `sink_probe_r14` measurement). */
+/** Tool access to the package-private sink (the `sink` scenario of
+  * [[graft.tools.ScaleSuite]], behind the BENCH_SCALE `sink_probe_r14` row). */
 object ProbeSink {
   def make(spark: SparkSession, dir: String, appId: String): GraftSink =
     new GraftSink(spark, dir, appId)

@@ -3,6 +3,7 @@ package graft.sources
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.core.Graft
 
 /** The SQL surface end-to-end: every statement here is a `spark.sql`
   * STRING — the catalog ([[GraftCatalog]]) resolves names/DDL/time
@@ -177,12 +178,6 @@ class GraftCatalogSpec extends AnyFunSuite {
   }
 
   test("PARTITIONED BY: value-grain ingest, planning-time pruning, overwrite") {
-    def plannedFiles(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.executedPlan.collectLeaves().collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
-            .map(_.files.size).sum
-      }.sum
     spark.sql("CREATE NAMESPACE IF NOT EXISTS cat.pt")
     spark.sql("DROP TABLE IF EXISTS cat.pt.t")
     spark.sql("CREATE TABLE cat.pt.t (id BIGINT, tag STRING) USING graft " +
@@ -192,23 +187,23 @@ class GraftCatalogSpec extends AnyFunSuite {
     // one leaf file per value; a point filter on the partition column
     // plans exactly one of them (bloom segment consulted at listFiles)
     val all = spark.sql("SELECT * FROM cat.pt.t")
-    assert(plannedFiles(all) === 3)
+    assert(Graft.plannedFiles(all) === 3)
     val one = spark.sql("SELECT id FROM cat.pt.t WHERE tag = 'a'")
-    assert(plannedFiles(one) === 1,
+    assert(Graft.plannedFiles(one) === 1,
       "a partition-value filter must plan exactly one leaf")
     assert(one.as[Long].collect().sorted.toSeq === Seq(1L, 4L))
     // IN-lists keep every candidate leaf, no more
-    assert(plannedFiles(spark.sql(
+    assert(Graft.plannedFiles(spark.sql(
       "SELECT * FROM cat.pt.t WHERE tag IN ('a', 'c')")) === 2)
     // a second INSERT adds new leaves; pruning still holds per commit
     spark.sql("INSERT INTO cat.pt.t VALUES (5, 'a')")
     val after = spark.sql("SELECT id FROM cat.pt.t WHERE tag = 'a'")
-    assert(plannedFiles(after) === 2)
+    assert(Graft.plannedFiles(after) === 2)
     assert(after.as[Long].collect().sorted.toSeq === Seq(1L, 4L, 5L))
     // INSERT OVERWRITE replaces atomically, keeping the value grain
     spark.sql("INSERT OVERWRITE cat.pt.t VALUES (9, 'z'), (10, 'y')")
     assert(spark.sql("SELECT * FROM cat.pt.t").count() === 2)
-    assert(plannedFiles(spark.sql(
+    assert(Graft.plannedFiles(spark.sql(
       "SELECT * FROM cat.pt.t WHERE tag = 'z'")) === 1)
     // pre-overwrite content still time travels
     assert(spark.sql("SELECT count(*) FROM cat.pt.t VERSION AS OF 2")
@@ -248,12 +243,6 @@ class GraftCatalogSpec extends AnyFunSuite {
   }
 
   test("PARTITIONED BY (a, b): composite value grain, pruning on any column") {
-    def plannedFiles(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.executedPlan.collectLeaves().collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
-            .map(_.files.size).sum
-      }.sum
     spark.sql("CREATE NAMESPACE IF NOT EXISTS cat.pt2")
     spark.sql("DROP TABLE IF EXISTS cat.pt2.t")
     spark.sql("CREATE TABLE cat.pt2.t (id BIGINT, day STRING, region STRING) " +
@@ -261,19 +250,19 @@ class GraftCatalogSpec extends AnyFunSuite {
     spark.sql("INSERT INTO cat.pt2.t VALUES " +
       "(1, 'd1', 'eu'), (2, 'd1', 'us'), (3, 'd2', 'eu'), (4, 'd2', 'us')")
     // one nested leaf per (day, region) combination
-    assert(plannedFiles(spark.sql("SELECT * FROM cat.pt2.t")) === 4)
+    assert(Graft.plannedFiles(spark.sql("SELECT * FROM cat.pt2.t")) === 4)
     // a two-predicate filter plans exactly its leaf
     val one = spark.sql(
       "SELECT id FROM cat.pt2.t WHERE day = 'd2' AND region = 'eu'")
-    assert(plannedFiles(one) === 1,
+    assert(Graft.plannedFiles(one) === 1,
       "a full partition-tuple filter must plan exactly one leaf")
     assert(one.as[Long].head() === 3L)
     // a PREFIX filter (first column only) prunes to its slice
-    assert(plannedFiles(spark.sql(
+    assert(Graft.plannedFiles(spark.sql(
       "SELECT * FROM cat.pt2.t WHERE day = 'd1'")) === 2)
     // a NON-prefix filter (second column alone) prunes too — per-level
     // stats, not a path-prefix convention
-    assert(plannedFiles(spark.sql(
+    assert(Graft.plannedFiles(spark.sql(
       "SELECT * FROM cat.pt2.t WHERE region = 'us'")) === 2)
     // SHOW PARTITIONS lists value tuples in the hive shape
     assert(spark.sql("SHOW PARTITIONS cat.pt2.t")
@@ -282,7 +271,7 @@ class GraftCatalogSpec extends AnyFunSuite {
         "day=d2/region=eu", "day=d2/region=us"))
     // INSERT OVERWRITE replaces atomically at the same grain
     spark.sql("INSERT OVERWRITE cat.pt2.t VALUES (9, 'd9', 'eu')")
-    assert(plannedFiles(spark.sql(
+    assert(Graft.plannedFiles(spark.sql(
       "SELECT * FROM cat.pt2.t WHERE region = 'eu'")) === 1)
     assert(spark.sql("SELECT count(*) FROM cat.pt2.t VERSION AS OF 1")
       .as[Long].head() === 4L)
@@ -322,12 +311,6 @@ class GraftCatalogSpec extends AnyFunSuite {
   }
 
   test("PARTITIONED BY (days(ts)): time-bucketed leaves, raw ts predicates prune") {
-    def plannedFiles(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.executedPlan.collectLeaves().collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
-            .map(_.files.size).sum
-      }.sum
     spark.sql("CREATE NAMESPACE IF NOT EXISTS cat.dts")
     spark.sql("DROP TABLE IF EXISTS cat.dts.t")
     spark.sql("CREATE TABLE cat.dts.t (id BIGINT, ts TIMESTAMP) " +
@@ -349,7 +332,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     val one = spark.sql("SELECT id FROM cat.dts.t " +
       "WHERE ts >= TIMESTAMP '2024-01-02 00:00:00' " +
       "AND ts < TIMESTAMP '2024-01-03 00:00:00'")
-    assert(plannedFiles(one) === 1,
+    assert(Graft.plannedFiles(one) === 1,
       "a one-day ts window must plan exactly that day's leaf")
     assert(one.as[Long].collect().toSeq === Seq(3L))
     // SHOW PARTITIONS lists the day values under the transform spec
@@ -386,12 +369,6 @@ class GraftCatalogSpec extends AnyFunSuite {
   }
 
   test("PARTITIONED BY (bucket(n, col)): exact #bk# pruning, nulls, DML") {
-    def plannedFiles(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.executedPlan.collectLeaves().collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
-            .map(_.files.size).sum
-      }.sum
     spark.sql("CREATE NAMESPACE IF NOT EXISTS cat.bk")
     spark.sql("DROP TABLE IF EXISTS cat.bk.t")
     spark.sql("CREATE TABLE cat.bk.t (id BIGINT, name STRING, v DOUBLE) " +
@@ -409,7 +386,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     // (plus nothing else: #bk# membership is exact, not a bloom), and
     // the null row's default leaf carries no segment so IS NULL reads
     val one = spark.sql("SELECT id FROM cat.bk.t WHERE name = 'user_7'")
-    assert(plannedFiles(one) === 1,
+    assert(Graft.plannedFiles(one) === 1,
       "a name point predicate must plan exactly 1 of the 4 bucket leaves")
     assert(one.as[Long].collect().toSeq === Seq(7L))
     assert(spark.sql("SELECT id FROM cat.bk.t WHERE name IS NULL")
@@ -432,19 +409,13 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(spark.sql("SELECT count(*) FROM cat.bk.t").as[Long].head() === 40L)
     spark.sql("OPTIMIZE cat.bk.t")
     val afterOpt = spark.sql("SELECT id FROM cat.bk.t WHERE name = 'user_7'")
-    assert(plannedFiles(afterOpt) === 1 &&
+    assert(Graft.plannedFiles(afterOpt) === 1 &&
       afterOpt.as[Long].collect().toSeq === Seq(7L),
       "OPTIMIZE must restore the exact bucket grain")
     spark.sql("DROP TABLE cat.bk.t")
   }
 
   test("PARTITIONED BY (truncate(w, col)): exact prefix pruning, ''/null routing") {
-    def plannedFiles(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.executedPlan.collectLeaves().collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
-            .map(_.files.size).sum
-      }.sum
     spark.sql("CREATE NAMESPACE IF NOT EXISTS cat.tr")
     spark.sql("DROP TABLE IF EXISTS cat.tr.t")
     spark.sql("CREATE TABLE cat.tr.t (id BIGINT, path STRING, v DOUBLE) " +
@@ -454,14 +425,14 @@ class GraftCatalogSpec extends AnyFunSuite {
       "(4, 'zz/q', 4.0), (5, '', 5.0), (6, NULL, 6.0)")
     // leaves: aa, ab, zz + the default leaf holding '' AND NULL
     val one = spark.sql("SELECT id FROM cat.tr.t WHERE path = 'aa/x'")
-    assert(plannedFiles(one) === 1,
+    assert(Graft.plannedFiles(one) === 1,
       "a path point predicate must plan exactly its prefix's leaf " +
         "(#tp# exact membership; the ''/null default leaf prunes via #te#)")
     assert(one.as[Long].collect().toSeq === Seq(1L))
     // the '' literal reads ONLY the default leaf (its #te# marker
     // admits it; every #tp# prefix leaf rejects it)
     val empty = spark.sql("SELECT id FROM cat.tr.t WHERE path = ''")
-    assert(plannedFiles(empty) === 1 &&
+    assert(Graft.plannedFiles(empty) === 1 &&
       empty.as[Long].collect().toSeq === Seq(5L))
     assert(spark.sql("SELECT id FROM cat.tr.t WHERE path IS NULL")
       .as[Long].collect().toSeq === Seq(6L))
@@ -474,12 +445,6 @@ class GraftCatalogSpec extends AnyFunSuite {
   }
 
   test("ALTER TABLE SET PARTITIONED BY: spec evolution, lazy migration") {
-    def plannedFiles(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.executedPlan.collectLeaves().collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
-            .map(_.files.size).sum
-      }.sum
     spark.sql("CREATE NAMESPACE IF NOT EXISTS cat.ev")
     spark.sql("DROP TABLE IF EXISTS cat.ev.t")
     spark.sql("CREATE TABLE cat.ev.t (id BIGINT, etype STRING, " +
@@ -514,7 +479,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     val day3 = spark.sql("SELECT id FROM cat.ev.t " +
       "WHERE ts >= TIMESTAMP '2024-01-03 00:00:00' " +
       "AND ts < TIMESTAMP '2024-01-04 00:00:00'")
-    assert(plannedFiles(day3) === 3 &&
+    assert(Graft.plannedFiles(day3) === 3 &&
       day3.as[Long].collect().toSeq === Seq(3L),
       "the day-4 leaf must prune; the two pre-evolution leaves read")
     // SHOW PARTITIONS under mixed grain: the dirname fast path would
@@ -535,7 +500,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     val day3After = spark.sql("SELECT id FROM cat.ev.t " +
       "WHERE ts >= TIMESTAMP '2024-01-03 00:00:00' " +
       "AND ts < TIMESTAMP '2024-01-04 00:00:00'")
-    assert(plannedFiles(day3After) === 1 &&
+    assert(Graft.plannedFiles(day3After) === 1 &&
       day3After.as[Long].collect().toSeq === Seq(3L),
       "after migration a one-day window plans exactly 1 of 4 leaves")
     assert(spark.sql("SELECT count(*) FROM cat.ev.t").as[Long].head() === 4L)
@@ -588,12 +553,6 @@ class GraftCatalogSpec extends AnyFunSuite {
   }
 
   test("ADD COLUMN on a partitioned table: metadata-only, pruning kept") {
-    def plannedFiles(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.executedPlan.collectLeaves().collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
-            .map(_.files.size).sum
-      }.sum
     spark.sql("CREATE NAMESPACE IF NOT EXISTS cat.pac")
     spark.sql("DROP TABLE IF EXISTS cat.pac.t")
     spark.sql("CREATE TABLE cat.pac.t (id BIGINT, tag STRING) USING graft " +
@@ -615,7 +574,7 @@ class GraftCatalogSpec extends AnyFunSuite {
       .as[Option[Double]].collect().toSeq ===
       Seq(None, None, Some(7.5)))
     // partition pruning still plans exactly one leaf
-    assert(plannedFiles(spark.sql(
+    assert(Graft.plannedFiles(spark.sql(
       "SELECT * FROM cat.pac.t WHERE tag = 'c'")) === 1)
     // the mapping-creating verbs stay refused with the documented reason
     val e = intercept[Exception] {
@@ -772,12 +731,6 @@ class GraftCatalogSpec extends AnyFunSuite {
   }
 
   test("stats-on-write: plain INSERTs prune; the conf opts out") {
-    def plannedFiles(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.executedPlan.collectLeaves().collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
-            .map(_.files.size).sum
-      }.sum
     spark.sql("CREATE NAMESPACE IF NOT EXISTS cat.as")
     spark.sql("DROP TABLE IF EXISTS cat.as.t")
     spark.sql("CREATE TABLE cat.as.t (id BIGINT, v DOUBLE) USING graft")
@@ -785,8 +738,8 @@ class GraftCatalogSpec extends AnyFunSuite {
     spark.sql("INSERT INTO cat.as.t VALUES (100, 10.0), (200, 20.0)")
     // range stats landed with each insert: a disjoint filter plans only
     // the one matching batch's part files (each insert may write several)
-    val all = plannedFiles(spark.sql("SELECT * FROM cat.as.t"))
-    val hi = plannedFiles(spark.sql(
+    val all = Graft.plannedFiles(spark.sql("SELECT * FROM cat.as.t"))
+    val hi = Graft.plannedFiles(spark.sql(
       "SELECT * FROM cat.as.t WHERE id >= 100"))
     assert(hi >= 1 && hi * 2 <= all,
       s"the high batch alone must plan, got $hi of $all")
@@ -795,8 +748,8 @@ class GraftCatalogSpec extends AnyFunSuite {
     // INSERT OVERWRITE keeps the behavior
     spark.sql("INSERT OVERWRITE cat.as.t VALUES (5, 5.0)")
     spark.sql("INSERT INTO cat.as.t VALUES (500, 50.0)")
-    val all2 = plannedFiles(spark.sql("SELECT * FROM cat.as.t"))
-    val lo = plannedFiles(spark.sql(
+    val all2 = Graft.plannedFiles(spark.sql("SELECT * FROM cat.as.t"))
+    val lo = Graft.plannedFiles(spark.sql(
       "SELECT * FROM cat.as.t WHERE id <= 10"))
     assert(lo >= 1 && lo * 2 <= all2,
       s"the overwrite batch alone must plan, got $lo of $all2")
@@ -807,7 +760,7 @@ class GraftCatalogSpec extends AnyFunSuite {
       spark.sql("CREATE TABLE cat.as.off (id BIGINT) USING graft")
       spark.sql("INSERT INTO cat.as.off VALUES (1)")
       spark.sql("INSERT INTO cat.as.off VALUES (100)")
-      assert(plannedFiles(spark.sql(
+      assert(Graft.plannedFiles(spark.sql(
         "SELECT * FROM cat.as.off WHERE id >= 100")) === 2)
       spark.sql("DROP TABLE cat.as.off")
     } finally spark.conf.unset("spark.graft.autoStats")

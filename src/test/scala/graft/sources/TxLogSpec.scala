@@ -2278,13 +2278,52 @@ class TxLogSpec extends AnyFunSuite {
     assert(body(2) === "\n")
     TxLog.destroy(dir)
   }
+
+  test("a custom claim store class is constructed once across commits") {
+    val dir = freshDir()
+    withClaim(classOf[CountingClaim]) {
+      (1 to 3).foreach(i => TxLog.commit(dir, Seq(s"/data/f$i")))
+    }
+    assert(TxLog.latestVersion(dir) === 3)
+    assert(CountingClaim.claims.get === 3)
+    assert(CountingClaim.constructed.get === 1, "one instance serves every claim")
+    TxLog.destroy(dir)
+  }
+
+  test("a layout-2 checkpoint renders every action kind in its fixed order") {
+    val dir = freshDir()
+    TxLog.commitWithStats(dir,
+      Seq("/data/a" -> Some("x;1.0;2.0"), "/data/b" -> None),
+      colMap = Some(Seq("c0" -> "x", "c1" -> "y z")),
+      colTypes = Seq("c1" -> Some("STRING")),
+      checkSets = Seq("pos" -> Some("x > 0")),
+      txn = Some("app" -> 7L),
+      partSpecSet = Some(Seq("p", "bucket(4,x)")))
+    TxLog.commitWithStats(dir, Nil, dvSets = Seq("/data/a" -> Some("/dv/a1")))
+    val v = TxLog.checkpoint(dir)
+    val text = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, "_txlog", f"c$v%08d.json")),
+      java.nio.charset.StandardCharsets.UTF_8)
+    assert(text.startsWith("meta\tts\t"))
+    assert(text.substring(text.indexOf('\n') + 1) === Seq(
+      "meta\tlayout\t2",
+      "meta\tpartspec\tp,bucket%284%2Cx%29",
+      "colmap\tc0:x,c1:y+z",
+      "coltype\tc1\tSTRING",
+      "constraint\tpos\tx+%3E+0",
+      "meta\ttxn\tapp\t7",
+      "add\t/data/a\tx;1.0;2.0",
+      "add\t/data/b",
+      "dv\t/data/a\t/dv/a1").mkString("", "\n", "\n"))
+    TxLog.destroy(dir)
+  }
 }
 
 /** [[TxLog.ClaimStore]] that loses the next armed number of claims —
   * consuming the tmp manifest, as a real lost claim does — then
   * delegates to [[TxLog.SchemeClaim]]. Installed through
-  * `graft.txlog.claim`, which instantiates the class per claim, so the
-  * state lives in the companion. */
+  * `graft.txlog.claim`; the state lives in the companion so a test can
+  * arm and read it. */
 final class LosingClaim extends TxLog.ClaimStore {
   def claim(fs: org.apache.hadoop.fs.FileSystem,
       tmp: org.apache.hadoop.fs.Path,
@@ -2317,5 +2356,22 @@ final class ThrowingClaim extends TxLog.ClaimStore {
 
 object ThrowingClaim {
   val Message = "txlog: lost the race (simulated store fault)"
+  val claims = new java.util.concurrent.atomic.AtomicInteger
+}
+
+/** [[TxLog.ClaimStore]] that counts its constructions and claims, then
+  * delegates to [[TxLog.SchemeClaim]]. */
+final class CountingClaim extends TxLog.ClaimStore {
+  CountingClaim.constructed.incrementAndGet()
+  def claim(fs: org.apache.hadoop.fs.FileSystem,
+      tmp: org.apache.hadoop.fs.Path,
+      target: org.apache.hadoop.fs.Path): Boolean = {
+    CountingClaim.claims.incrementAndGet()
+    TxLog.SchemeClaim.claim(fs, tmp, target)
+  }
+}
+
+object CountingClaim {
+  val constructed = new java.util.concurrent.atomic.AtomicInteger
   val claims = new java.util.concurrent.atomic.AtomicInteger
 }
