@@ -7689,7 +7689,7 @@ object Queries {
         "merge-on-read: the data-file set must be byte-identical — a " +
           "rewrite here is the copy-on-write cost model this verb exists " +
           "to avoid")
-      require(TxLog.liveDvs(root).size == 1,
+      require(TxLog.snapshot(root).dvs.size == 1,
         "cumulative vectors: two deletes on one file keep ONE binding")
       def agg(df: DataFrame, tag: String) =
         df.groupBy(col("event_type"))
@@ -7699,7 +7699,7 @@ object Queries {
         .unionByName(agg(TxLog.read(s, root, asOf = 3), "pre"))
       require(TxLog.optimize(s, root, "opt", targetFiles = 2) == 6,
         "optimize lands as version 6")
-      require(TxLog.liveDvs(root).isEmpty,
+      require(TxLog.snapshot(root).dvs.isEmpty,
         "compaction must MATERIALIZE the vectors and retire the sidecars")
       masked
         .unionByName(agg(TxLog.read(s, root), "optimized"))
@@ -7760,7 +7760,7 @@ object Queries {
         "merge-on-read UPDATE removes nothing — originals stay masked")
       require(live.size == before.size + 1,
         "the updated copies land as exactly one new file")
-      require(TxLog.liveDvs(root).nonEmpty,
+      require(TxLog.snapshot(root).dvs.nonEmpty,
         "the matched file must carry a deletion-vector binding")
       require(TxLog.updateWhereDV(s, root, "upd2", col("c_custkey") < 0,
         Seq("c_acctbal" -> lit(0.0))) == 0,
@@ -8319,15 +8319,7 @@ object Queries {
       val srcDir = java.nio.file.Paths.get(s"/tmp/graft_restart_src_$sfName")
       val tbl = s"/tmp/graft_restart_tbl_$sfName"
       val ckpt = s"/tmp/graft_restart_ckpt_$sfName"
-      def rmTree(p: String): Unit = {
-        val f = new java.io.File(p)
-        if (f.exists()) {
-          java.nio.file.Files.walk(f.toPath)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(q => { java.nio.file.Files.delete(q); () })
-        }
-      }
-      Seq(srcDir.toString, tbl, ckpt).foreach(rmTree)
+      Seq(srcDir.toString, tbl, ckpt).foreach(rmTreeQ)
       java.nio.file.Files.createDirectories(srcDir)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -8339,7 +8331,7 @@ object Queries {
           .find(f => f.getName.endsWith(".parquet")).get
         java.nio.file.Files.move(part.toPath,
           srcDir.resolve(s"split_$k.parquet"))
-        rmTree(tmp)
+        rmTreeQ(tmp)
       }
       def runPass(): Unit = {
         val feed = s.readStream
@@ -8544,7 +8536,7 @@ object Queries {
         "the threshold rewrite lands as version 5")
       val live = TxLog.liveFiles(root)
       require(live.exists(_.endsWith("b_rest")) &&
-        TxLog.liveDvs(root).keySet == Set(live.find(_.endsWith("b_rest")).get),
+        TxLog.snapshot(root).dvs.keySet == Set(live.find(_.endsWith("b_rest")).get),
         "the thinly-masked batch must stay live AND bound — rewriting it " +
           "would be the copy-on-write cost the threshold exists to avoid")
       require(!live.exists(_.endsWith("b_user7")),
@@ -9160,12 +9152,7 @@ object Queries {
       val view = s"/tmp/graft_srcview_$sfName"
       val ckpt = s"/tmp/graft_srcckpt_$sfName"
       TxLog.destroy(root); TxLog.destroy(view)
-      val ckptF = new java.io.File(ckpt)
-      if (ckptF.exists()) {
-        java.nio.file.Files.walk(ckptF.toPath)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => { java.nio.file.Files.delete(q); () })
-      }
+      rmTreeQ(ckpt)
       val ev = t(s, dir, "events")
         .filter(col("event_id").isNotNull)
         .select(col("event_id"), col("event_type"), col("value"))
@@ -9253,12 +9240,7 @@ object Queries {
       val dst = s"/tmp/graft_sinkdst_$sfName"
       val ckpt = s"/tmp/graft_sinkckpt_$sfName"
       TxLog.destroy(src); TxLog.destroy(dst)
-      val ckptF = new java.io.File(ckpt)
-      if (ckptF.exists()) {
-        java.nio.file.Files.walk(ckptF.toPath)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => { java.nio.file.Files.delete(q); () })
-      }
+      rmTreeQ(ckpt)
       val ev = t(s, dir, "events")
         .filter(col("event_id").isNotNull)
         .select(col("event_id"), col("event_type"), col("value"))

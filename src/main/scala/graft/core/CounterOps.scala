@@ -1,7 +1,6 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, Observation}
-import org.apache.spark.sql.functions._
 
 /** Counters, parity with the reference's distributed Counters surface
   * (reference: hadoop-mapreduce-client-core .../mapreduce/Counters.java,
@@ -22,9 +21,4 @@ object CounterOps {
     val cols = counters.map { case (n, c) => c.as(n) }.toSeq
     (df.observe(obs, cols.head, cols.tail: _*), obs)
   }
-
-  /** The reference's ubiquitous builtin: records-processed counter
-    * (MAP_INPUT_RECORDS analog). */
-  def recordCounter(df: DataFrame, name: String = "records"): (DataFrame, Observation) =
-    withCounters(df, name, Map("n_records" -> count(lit(1))))
 }

@@ -61,10 +61,4 @@ object FieldSelection {
     val fields = split(line, java.util.regex.Pattern.quote(sep))
     (joinSels(fields, s.keyFields, sep), joinSels(fields, s.valueFields, sep))
   }
-
-  /** Variant where the line is already split into an array column. */
-  def selectFromArray(fields: Column, spec: String, sep: String = "\t"): (Column, Column) = {
-    val s = parse(spec)
-    (joinSels(fields, s.keyFields, sep), joinSels(fields, s.valueFields, sep))
-  }
 }

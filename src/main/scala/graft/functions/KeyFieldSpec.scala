@@ -29,16 +29,6 @@ object KeyFieldSpec {
       case other => throw new IllegalArgumentException(s"bad -k spec part: $other")
     }
 
-  /** Compile the spec to sort columns over an array-of-fields column. */
-  def orderColumns(fields: Column, spec: String): Seq[Column] =
-    parse(spec).flatMap { kp =>
-      (kp.start to kp.end).map { i =>
-        val f0 = element_at(fields, i)
-        val f = if (kp.numeric) f0.cast("double") else f0
-        if (kp.reverse) f.desc else f.asc
-      }
-    }
-
   /** Compile against named columns (field i = cols(i-1)) instead of an array. */
   def orderColumnsNamed(cols: Seq[Column], spec: String): Seq[Column] =
     parse(spec).flatMap { kp =>

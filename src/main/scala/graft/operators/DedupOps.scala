@@ -44,14 +44,6 @@ object DedupOps {
       .select(col("_r.*"))
   }
 
-  /** Per-row MinHash signature: minhash_i = min over shingles of
-    * portableHash(shingle, i). Computed entirely inside one expression
-    * (array_min over transform) — zero shuffles, embarrassingly parallel. */
-  def minhashSignature(shinglesCol: Column, numHashes: Int): Seq[Column] =
-    (0 until numHashes).map { i =>
-      array_min(transform(shinglesCol, s => portableHash(s, i))).as(s"mh_$i")
-    }
-
   private val hexDigits = "0123456789abcdef".toCharArray
 
   // table-driven nibble lookup: the previous per-byte `f"%02x"` allocated

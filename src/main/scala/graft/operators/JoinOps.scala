@@ -39,12 +39,6 @@ object JoinOps {
         .select(col(key), coalesce(col("_r"), col("_l")).as(value))
     }
 
-  /** Broadcast (map-side hash) join: the reference's DistributedCache +
-    * in-memory HashMap idiom (reference: .../filecache/DistributedCache.java:134). */
-  def broadcastJoin(large: DataFrame, small: DataFrame, key: String,
-      joinType: String = "inner"): DataFrame =
-    large.join(broadcast(small), Seq(key), joinType)
-
   /** Reduce-side tagged join (hadoop-datajoin parity): per key, the
     * cross-product of the two sides, with each side's per-key group capped at
     * `maxPerGroup` rows (reference: hadoop-tools/hadoop-datajoin

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import graft.functions.KeyFieldSpec
 
 /** Sort / limit / top-k / sampling operators (SURVEY §2.8).
   *
@@ -14,11 +13,6 @@ import graft.functions.KeyFieldSpec
   * sampling internally.
   */
 object SortOps {
-
-  /** Totally-ordered dataset (Sort example parity, reference:
-    * hadoop-mapreduce-examples .../examples/Sort.java:57). */
-  def globalSort(df: DataFrame, order: Seq[Column]): DataFrame =
-    df.orderBy(order: _*)
 
   /** Range-partition + locally sort + PIN (eager `localCheckpoint`).
     *
@@ -129,10 +123,6 @@ object SortOps {
   def topK(df: DataFrame, order: Seq[Column], k: Int): DataFrame =
     df.orderBy(order: _*).limit(k)
 
-  /** unix-sort -k spec over named columns (KeyFieldBasedComparator parity). */
-  def keyFieldSort(df: DataFrame, fieldCols: Seq[String], spec: String): DataFrame =
-    df.orderBy(KeyFieldSpec.orderColumnsNamed(fieldCols.map(col), spec): _*)
-
   /** PercentFilter parity: keep keys where key mod f == 0 (reference:
     * .../lib/input/SequenceFileInputFilter.java:110). Pushed to the scan. */
   def modSample(df: DataFrame, keyCol: Column, f: Int): DataFrame =
@@ -162,11 +152,6 @@ object SortOps {
     }
     df.withColumn("split", label)
   }
-
-  /** Bernoulli sample (RandomSampler parity, reference:
-    * .../lib/partition/InputSampler.java:159). */
-  def randomSample(df: DataFrame, fraction: Double, seed: Long): DataFrame =
-    df.sample(withReplacement = false, fraction, seed)
 
   /** Global exact cumulative sum in total sort order WITHOUT a
     * single-partition window: range-partition + local sort, one long per

@@ -426,22 +426,19 @@ final case class GraftDescribeDetailCommand(nameParts: Seq[String])
         s"graft: ${nameParts.mkString(".")} is not a graft table " +
           s"(provider: ${other.properties.get("provider")})")
     }
-    val v = TxLog.latestVersion(g.dir)
-    val files = TxLog.liveFiles(g.dir)
+    val snap = TxLog.snapshot(g.dir)
     val conf = session.sparkContext.hadoopConfiguration
-    val size = files.map { f =>
+    val size = snap.files.map { f =>
       val p = new org.apache.hadoop.fs.Path(f)
       val fs = p.getFileSystem(conf)
       try fs.getContentSummary(p).getLength catch { case _: Exception => 0L }
     }.sum
     Seq(Row(
-      g.dir, v, files.size, size, TxLog.liveDvs(g.dir).size,
+      g.dir, snap.version, snap.entries.size, size, snap.dvs.size,
       g.partCols.mkString(","),
-      TxLog.constraintsOf(g.dir)
-        .map { case (n, e) => s"$n CHECK ($e)" }.mkString("; "),
-      TxLog.columnMapping(g.dir).isDefined,
-      TxLog.columnTypes(g.dir)
-        .map { case (c, t) => s"$c $t" }.mkString(", ")))
+      snap.checks.map { case (n, e) => s"$n CHECK ($e)" }.mkString("; "),
+      snap.colMap.isDefined,
+      snap.types.map { case (c, t) => s"$c $t" }.mkString(", ")))
   }
 }
 

@@ -441,9 +441,12 @@ final case class GraftTable(qualified: String, dir: String, asOf: Int,
   override def name(): String = qualified
 
   override lazy val schema: StructType =
-    if (pinnedVersion == 0 || TxLog.liveFiles(dir, pinnedVersion).isEmpty)
-      declared
-    else TxLog.read(SparkSession.active, dir, pinnedVersion).schema
+    if (pinnedVersion == 0) declared
+    else {
+      val snap = TxLog.snapshot(dir, pinnedVersion)
+      if (snap.entries.isEmpty) declared
+      else TxLog.readSnapshot(SparkSession.active, dir, snap).schema
+    }
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ,

@@ -43,12 +43,4 @@ object TextGen {
   /** The default vocab as a SQL list literal, for oracle queries. */
   def vocabSqlList: String =
     defaultVocab.map(w => s"'$w'").mkString("[", ",", "]")
-
-  /** Random KV records (RandomWriter parity): (key: hex, value: hex) with
-    * hash-derived sizes. */
-  def randomKv(spark: SparkSession, n: Long, parts: Int = 32): DataFrame =
-    spark.range(0, n, 1, parts).select(
-      md5(concat(col("id").cast("string"), lit(":rk"))).as("key"),
-      repeat(md5(concat(col("id").cast("string"), lit(":rv"))),
-        (pmod(col("id"), lit(4L)) + 1).cast("int")).as("value"))
 }

@@ -161,18 +161,25 @@ object TxLog {
     * at V proves V existed, so fully-expired logs (manifests before a
     * checkpoint deleted) still report — and continue committing from —
     * the right version. */
-  def latestVersion(dir: String): Int =
-    listLog(dir)
-      .collect { case ManifestName(d) => d.toInt
-                 case CheckpointName(d) => d.toInt }
-      .foldLeft(0)(math.max)
+  def latestVersion(dir: String): Int = versionOf(listLog(dir))
 
-  /** Highest checkpoint at or below `upTo`, if any. */
-  private def latestCheckpointVersion(dir: String, upTo: Int): Option[Int] =
-    listLog(dir)
-      .collect { case CheckpointName(d) => d.toInt }
-      .filter(_ <= upTo)
-      .reduceOption(math.max)
+  /** [[latestVersion]] of one log listing. */
+  private def versionOf(names: Array[String]): Int =
+    versionsIn(names).foldLeft(0)(math.max)
+
+  /** Every version one log listing can resolve: each manifest's, and
+    * each checkpoint's (which outlives its expired manifests). */
+  private def versionsIn(names: Array[String]): Array[Int] =
+    names.collect {
+      case ManifestName(d) => d.toInt
+      case CheckpointName(d) => d.toInt
+    }
+
+  /** Highest checkpoint at or below `upTo` in one log listing, if any. */
+  private def checkpointAtOrBelow(names: Array[String],
+      upTo: Int): Option[Int] =
+    names.collect { case CheckpointName(d) => d.toInt }
+      .filter(_ <= upTo).reduceOption(math.max)
 
   /** The ONE store-specific operation in the whole log protocol: promote
     * `tmp` to `target` iff `target` does not exist, atomically; `tmp` is
@@ -346,8 +353,9 @@ object TxLog {
       // where a commit landing between check and claim was committed on
       // top of undetected — now that interleaving makes our claim lose,
       // which re-runs the check
-      val checkV = latestVersion(dir)
-      val live = liveFiles(dir, checkV).toSet
+      val snap = snapshot(dir)
+      val checkV = snap.version
+      val live = snap.files.toSet
       val gone = remove.filterNot(live)
       if (gone.nonEmpty)
         throw new java.util.ConcurrentModificationException(
@@ -365,7 +373,7 @@ object TxLog {
       // only dvSets left compaction-vs-DV-delete unguarded in one
       // direction — the write-write conflict Delta's matrix documents).
       basedOnDvs.foreach { based =>
-        val nowDvs = liveDvs(dir, checkV)
+        val nowDvs = snap.dvs
         val stale = (dvSets.collect {
           case (p, _) if !live.contains(p) =>
             s"$p (no longer live)"
@@ -537,14 +545,11 @@ object TxLog {
           case _ => throw new IllegalStateException(
             s"txlog: bad txn mark 'meta\ttxn\t$rest' in $what")
         }
-        // partition-spec evolution mark: `-` = unpartitioned, else the
-        // percent-encoded specs joined by ',' (encoding protects a
-        // bucket spec's own comma); last-wins; pre-evolution readers
-        // replay it as a generic-meta no-op
+        // partition-spec evolution mark ([[parsePartSpecMark]]);
+        // last-wins; pre-evolution readers replay it as a generic-meta
+        // no-op
         case Array("meta", "partspec", rest) =>
-          cm.partSpec =
-            if (rest == "-") Some(Nil)
-            else Some(rest.split(",").toSeq.filter(_.nonEmpty).map(decCol))
+          cm.partSpec = Some(parsePartSpecMark(rest))
         // commit metadata (e.g. `meta ts <millis>`) is not a file action;
         // unknown meta keys replay as no-ops so the format stays
         // forward-extensible without breaking old readers
@@ -566,9 +571,14 @@ object TxLog {
     * pre-metadata fallback). When only the CHECKPOINT of `v` survives
     * (expired history), its header/mtime stands in, so a maintained log
     * keeps resolving timestamps. */
-  def manifestTs(dir: String, v: Int): Long = {
+  def manifestTs(dir: String, v: Int): Long =
+    manifestTsIn(dir, listLog(dir).toSet, v)
+
+  /** [[manifestTs]] against one log listing, so a walk over every
+    * version ([[versionAt]], [[history]]) lists the log once. */
+  private def manifestTsIn(dir: String, names: Set[String], v: Int): Long = {
     val p =
-      if (listLog(dir).contains(f"v$v%08d.json")) manifest(dir, v)
+      if (names(f"v$v%08d.json")) manifest(dir, v)
       else checkpointFile(dir, v)
     // streamed with early exit: the header is the first line, so a
     // million-entry checkpoint's timestamp costs one buffered read
@@ -590,13 +600,14 @@ object TxLog {
     * timestamp predates the oldest resolvable commit. */
   def versionAt(dir: String, tsMillis: Long): Int = {
     val names = listLog(dir)
-    val versions = (names.collect { case ManifestName(d) => d.toInt } ++
-      names.collect { case CheckpointName(d) => d.toInt }).distinct.sorted
+    val inLog = names.toSet
+    val versions = versionsIn(names).distinct.sorted
     require(versions.nonEmpty, s"txlog: $dir has no resolvable manifests")
-    val at = versions.filter(v => manifestTs(dir, v) <= tsMillis)
+    val at = versions.filter(v => manifestTsIn(dir, inLog, v) <= tsMillis)
     require(at.nonEmpty,
       s"txlog: no commit of $dir at or before ts=$tsMillis " +
-        s"(oldest resolvable: v${versions.head} @ ${manifestTs(dir, versions.head)})")
+        s"(oldest resolvable: v${versions.head} @ " +
+        s"${manifestTsIn(dir, inLog, versions.head)})")
     at.max
   }
 
@@ -848,16 +859,15 @@ object TxLog {
           df.filter(keep(org.apache.spark.sql.functions.col("stats")))
             .select("path", "dv").collect(), cmb)
       case None =>
-        val (entries, dv, cmb) = resolveFull(dir, asOf)
-        val cm = cmb.m
+        val s = snapshot(dir, asOf)
         // callers name LOGICAL columns; stats/bloom blobs carry the
         // names the files were written with (physical)
-        val physCol = toPhysicalName(cm, column)
-        val kept = entries.filter(e => bloomMayContain(e._2, physCol, value))
-          .map(_._1)
+        val physCol = toPhysicalName(s.colMap, column)
+        val kept = s.entries
+          .filter(e => bloomMayContain(e._2, physCol, value)).map(_._1)
         if (kept.isEmpty) None
-        else Some(applyMapping(readMasked(spark, kept, dv.toMap,
-          nullFill = cmb.types.toSeq), cm))
+        else Some(applyMapping(readMasked(spark, kept, s.dvs,
+          nullFill = s.types), s.colMap))
     }
 
   /** Shared tail of the twin fast path: collected survivor (path, dv)
@@ -893,55 +903,51 @@ object TxLog {
           rangeSurvivors(df, toPhysicalName(cmb.m, column), lo, hi)
             .select("path", "dv").collect(), cmb)
       case None =>
-        val (entries, dv, cmb) = resolveFull(dir, asOf)
-        val cm = cmb.m
-        val kept = entries
-          .filter(e => statsOverlap(e._2, toPhysicalName(cm, column), lo, hi))
-          .map(_._1)
+        val s = snapshot(dir, asOf)
+        val physCol = toPhysicalName(s.colMap, column)
+        val kept = s.entries
+          .filter(e => statsOverlap(e._2, physCol, lo, hi)).map(_._1)
         if (kept.isEmpty) None
-        else Some(applyMapping(readMasked(spark, kept, dv.toMap,
-          nullFill = cmb.types.toSeq), cm))
+        else Some(applyMapping(readMasked(spark, kept, s.dvs,
+          nullFill = s.types), s.colMap))
     }
 
-  /** The live file set at `asOf` (latest when <= 0): the newest
-    * CHECKPOINT at or below the version seeds the set, then the manifest
-    * SUFFIX replays on top — so resolution cost is O(suffix), not
-    * O(versions since table creation), the property a long-lived 100 TB
-    * table needs. With no usable checkpoint the full prefix replays
-    * (order-preserving adds minus removes). */
-  def liveFiles(dir: String, asOf: Int = -1): Seq[String] =
-    liveEntries(dir, asOf).map(_._1)
-
-  /** [[liveFiles]] with each file's optional manifest STATS blob (see
-    * [[commitWithStats]]) — the input to manifest-level data skipping. */
-  def liveEntries(dir: String, asOf: Int = -1): Seq[(String, Option[String])] =
-    resolveState(dir, asOf)._1
-
-  /** The live DELETION-VECTOR bindings at `asOf` (latest when <= 0):
-    * data-file path → sidecar dir holding its masked (part-file, row
-    * position) pairs. Empty for a table no merge-on-read verb ever
-    * touched — every reader's fast path is then exactly the pre-DV
-    * plan. */
-  def liveDvs(dir: String, asOf: Int = -1): Map[String, String] =
-    resolveState(dir, asOf)._2.toMap
-
-  private def resolveState(dir: String, asOf: Int): (
-      Seq[(String, Option[String])],
-      scala.collection.mutable.LinkedHashMap[String, String]) = {
-    val (e, d, _) = resolveFull(dir, asOf)
-    (e, d)
+  /** One resolved version of the table, from ONE replay ([[snapshot]]):
+    * the live `entries` (path, optional manifest stats blob — see
+    * [[commitWithStats]]) in commit order; the deletion-vector bindings
+    * `dvs` (data path → sidecar dir, empty for a table no merge-on-read
+    * verb touched); the column mapping `colMap` (`(physical, logical)`
+    * in logical order, None = identity); the [[addColumn]] registry
+    * `types` (phys → type DDL the read path null-fills); the CHECK
+    * constraints `checks` (name → SQL); the idempotent-writer marks
+    * `txns` (app → batch id); and the evolved `partSpec` (None = never
+    * evolved). A verb pins one per commit attempt, so every decision it
+    * makes reads the same version. */
+  final case class Snapshot(version: Int,
+      entries: Seq[(String, Option[String])],
+      dvs: Map[String, String],
+      colMap: Option[Seq[(String, String)]],
+      types: Seq[(String, String)],
+      checks: Seq[(String, String)],
+      txns: Map[String, Long],
+      partSpec: Option[Seq[String]]) {
+    def files: Seq[String] = entries.map(_._1)
   }
 
-  private def resolveFull(dir: String, asOf: Int): (
-      Seq[(String, Option[String])],
-      scala.collection.mutable.LinkedHashMap[String, String],
-      ColMapBox) = {
-    val upTo = if (asOf <= 0) latestVersion(dir) else asOf
+  /** The table state at `asOf` (latest when <= 0): the newest
+    * CHECKPOINT at or below the version seeds the state, then the
+    * manifest SUFFIX replays on top — so resolution cost is O(suffix),
+    * not O(versions since table creation), the property a long-lived
+    * 100 TB table needs. With no usable checkpoint the full prefix
+    * replays. One log listing, one replay. */
+  def snapshot(dir: String, asOf: Int = -1): Snapshot = {
+    val names = listLog(dir)
+    val upTo = if (asOf <= 0) versionOf(names) else asOf
     val live = scala.collection.mutable.LinkedHashMap
       .empty[String, Option[String]]
     val dv = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val cm = new ColMapBox
-    val from = latestCheckpointVersion(dir, upTo) match {
+    val from = checkpointAtOrBelow(names, upTo) match {
       case Some(cv) =>
         logLines(dir, checkpointFile(dir, cv), f"checkpoint c$cv%08d")(
           replayInto(live, _, f"checkpoint c$cv%08d", dv, cm))
@@ -952,38 +958,25 @@ object TxLog {
       logLines(dir, manifest(dir, v), s"manifest v$v (asOf=$asOf)")(
         replayInto(live, _, s"v$v", dv, cm))
     }
-    (live.toSeq, dv, cm)
+    Snapshot(upTo, live.toSeq, dv.toMap, cm.m, cm.types.toSeq,
+      cm.checks.toSeq, scala.collection.immutable.VectorMap.from(cm.txns),
+      cm.partSpec)
   }
 
-  /** The column mapping in force at `asOf` (latest when <= 0):
-    * `(physical, logical)` pairs in logical column order, or None for a
-    * table no rename/drop ever touched (identity — every reader then
-    * serves physical names untouched, the pre-mapping fast path). */
-  def columnMapping(dir: String, asOf: Int = -1)
-      : Option[Seq[(String, String)]] =
-    resolveFull(dir, asOf)._3.m
-
-  /** The [[addColumn]] type registry in force at `asOf` (latest when
-    * <= 0): physical name → type DDL for mapped columns the read path
-    * must null-fill when a file predates them. Empty for tables ADD
-    * COLUMN never touched — every such read keeps its untyped fast
-    * path. */
-  def columnTypes(dir: String, asOf: Int = -1): Seq[(String, String)] =
-    resolveFull(dir, asOf)._3.types.toSeq
+  /** The live file set at `asOf` (latest when <= 0) — [[snapshot]]'s
+    * paths. */
+  def liveFiles(dir: String, asOf: Int = -1): Seq[String] =
+    snapshot(dir, asOf).files
 
   /** The EVOLVED partition spec in force at `asOf` (latest when <= 0):
     * None for a table [[setPartitionSpec]] never touched (the catalog
     * then uses its CREATE-time spec), Some(specs) after an evolution,
     * Some(Nil) after evolving to unpartitioned.
     *
-    * Resolution is the [[txnVersion]] BACKWARD-WALK shape, not a full
-    * snapshot replay: the catalog consults this on EVERY table load,
-    * and a million-file table's full resolution costs ~0.8 s
-    * (manifest_state_r15) — a 2× planning tax per query. Partspec
-    * lines are last-wins and checkpoints restate them in the HEADER
-    * (before the adds), so the walk reads newest-first post-checkpoint
-    * manifests (commit-sized) and then at most the checkpoint's header
-    * block — O(post-checkpoint manifests), O(1) in live files.
+    * Resolution is the [[lastMark]] walk shared with [[txnVersion]], not
+    * a full snapshot replay: the catalog consults this on EVERY table
+    * load, and a million-file table's full resolution costs ~0.8 s
+    * (manifest_state_r15) — a 2× planning tax per query.
     *
     * The walk is additionally MEMOIZED per directory (latest-version
     * resolutions only): without a checkpoint, a never-evolved table's
@@ -996,61 +989,60 @@ object TxLog {
     * Delta's DeltaLog cache; [[destroy]] invalidates, so a
     * re-created table at the same path never serves a stale spec. */
   def partitionSpec(dir: String, asOf: Int = -1): Option[Seq[String]] = {
-    def parse(rest: String): Option[Seq[String]] =
-      if (rest == "-") Some(Nil)
-      else Some(rest.split(",").toSeq.filter(_.nonEmpty).map(decCol))
-    // last partspec line of one file; stopAtAdd bounds the checkpoint
-    // scan to its header block (partspec precedes the adds there)
-    def specIn(lines: Iterator[String],
-        stopAtAdd: Boolean): Option[Option[Seq[String]]] = {
-      var out: Option[Option[Seq[String]]] = None
-      val it = if (stopAtAdd) lines.takeWhile(l => !l.startsWith("add\t"))
-               else lines
-      it.foreach { l =>
-        if (l.startsWith("meta\tpartspec\t"))
-          out = Some(parse(l.substring("meta\tpartspec\t".length)))
+    val names = listLog(dir)
+    val upTo = if (asOf <= 0) versionOf(names) else asOf
+    val cp = checkpointAtOrBelow(names, upTo)
+    def walk(after: Int, seed: Option[Int]): Option[Seq[String]] =
+      lastMark(dir, names, "meta\tpartspec\t", upTo, after, seed)
+        .map(parsePartSpecMark)
+    val out = Option(partSpecCache.get(dir)).filter(_ => asOf <= 0) match {
+      case Some((v0, spec0)) if upTo == v0 => spec0
+      // incremental: only manifests in (v0, upTo] can change the answer
+      // (a checkpoint restates, never originates) — and with no
+      // checkpoint NEWER than v0 none of that window can have been
+      // expired out from under the walk
+      case Some((v0, spec0)) if upTo > v0 && cp.forall(_ <= v0) =>
+        walk(v0, None).orElse(spec0)
+      case _ => walk(cp.getOrElse(0), cp)
+    }
+    if (asOf <= 0) cachePartSpec(dir, upTo, out)
+    out
+  }
+
+  /** A `meta partspec` mark's value: `-` = unpartitioned, else the
+    * percent-encoded specs joined by ',' (the encoding protects a bucket
+    * spec's own comma). */
+  private def parsePartSpecMark(rest: String): Seq[String] =
+    if (rest == "-") Nil
+    else rest.split(",").toSeq.filter(_.nonEmpty).map(decCol)
+
+  /** The text after `prefix` on the newest line carrying it as of version
+    * `upTo` — the one reader of last-wins marks a checkpoint restates
+    * ([[partitionSpec]], [[txnVersion]]), O(1) in live files. Walks the
+    * manifests in (after, upTo] newest first and stops at the first one
+    * that carries the mark (a steady sink's previous commit: one small
+    * read); only then does it read checkpoint `seed` — its header alone
+    * when the checkpoint is layout 2 (every mark precedes the adds),
+    * else the whole file, streamed. None when nothing walked carries
+    * the mark. */
+  private def lastMark(dir: String, names: Array[String], prefix: String,
+      upTo: Int, after: Int, seed: Option[Int]): Option[String] = {
+    def lastIn(lines: Iterator[String]): Option[String] = {
+      var out: Option[String] = None // last-wins within one file
+      var layout2 = false
+      lines.takeWhile(l => !(layout2 &&
+          (l.startsWith("add\t") || l.startsWith("dv\t")))).foreach { l =>
+        if (l == "meta\tlayout\t2") layout2 = true
+        else if (l.startsWith(prefix)) out = Some(l.substring(prefix.length))
       }
       out
     }
-    val upTo = if (asOf <= 0) latestVersion(dir) else asOf
-    val cached = Option(partSpecCache.get(dir))
-    cached match {
-      case Some((v0, spec0)) if asOf <= 0 && upTo == v0 => spec0
-      case Some((v0, spec0)) if asOf <= 0 && upTo > v0 &&
-          !listLog(dir).exists {
-            case CheckpointName(d) => d.toInt > v0; case _ => false
-          } =>
-        // incremental: only manifests in (v0, upTo] can change the
-        // answer (a checkpoint restates, never originates) — and with
-        // no checkpoint NEWER than v0 none of that window can have
-        // been expired out from under the scan
-        val delta = listLog(dir)
-          .collect { case ManifestName(d) => d.toInt }
-          .filter(v => v <= upTo && v > v0).sorted.reverse
-        val out = delta.iterator
-          .flatMap(v => specIn(
-            readLogFile(dir, manifest(dir, v), s"manifest v$v")
-              .linesIterator, stopAtAdd = false))
-          .nextOption().getOrElse(spec0)
-        cachePartSpec(dir, upTo, out)
-        out
-      case _ =>
-        val names = listLog(dir)
-        val floor = names.collect { case CheckpointName(d) => d.toInt }
-          .filter(_ <= upTo).sorted.lastOption
-        val newestFirst = names.collect { case ManifestName(d) => d.toInt }
-          .filter(v => v <= upTo && v > floor.getOrElse(0)).sorted.reverse
-        val out = newestFirst.iterator
-          .flatMap(v => specIn(
-            readLogFile(dir, manifest(dir, v), s"manifest v$v")
-              .linesIterator, stopAtAdd = false))
-          .nextOption()
-          .orElse(floor.flatMap(cv => logLines(dir, checkpointFile(dir, cv),
-            f"checkpoint c$cv%08d")(specIn(_, stopAtAdd = true))))
-          .flatten
-        if (asOf <= 0) cachePartSpec(dir, upTo, out)
-        out
-    }
+    names.collect { case ManifestName(d) => d.toInt }
+      .filter(v => v > after && v <= upTo).sorted.reverseIterator
+      .flatMap(v => logLines(dir, manifest(dir, v), s"manifest v$v")(lastIn))
+      .nextOption()
+      .orElse(seed.flatMap(cv => logLines(dir, checkpointFile(dir, cv),
+        f"checkpoint c$cv%08d")(lastIn)))
   }
 
   /** [[partitionSpec]] memo: dir → (resolved version, spec at it).
@@ -1092,7 +1084,7 @@ object TxLog {
     val canonical = specs.map(s => parsePartSpec(s).spec)
     require(canonical.distinct.size == specs.size,
       s"txlog: duplicate partition specs: $specs")
-    require(columnMapping(dir).isEmpty,
+    require(snapshot(dir).colMap.isEmpty,
       "txlog: partition-spec evolution is not supported on a " +
         "column-mapped table — the partitioned ingest writes storage " +
         "under declared names")
@@ -1173,9 +1165,9 @@ object TxLog {
     * schema — what a table's first schema verb mutates (Delta's analogue:
     * enabling column mapping stamps every existing column with its own
     * name). */
-  private def identityMappingFromFiles(spark: SparkSession,
-      dir: String): Seq[(String, String)] = {
-    val files = liveFiles(dir)
+  private def identityMappingFromFiles(spark: SparkSession, dir: String,
+      snap: Snapshot): Seq[(String, String)] = {
+    val files = snap.files
     require(files.nonEmpty,
       s"txlog: cannot derive a column mapping for empty table $dir")
     val fromFiles = spark.read.option("mergeSchema", "true")
@@ -1183,25 +1175,28 @@ object TxLog {
     // a MAPPING-FREE [[addColumn]] registers a column no file carries
     // yet; the first schema verb's identity bootstrap must keep it, or
     // the rename/drop would silently lose the declared column
-    val registryOnly = resolveFull(dir, -1)._3.types.keys.toSeq
-      .filterNot(fromFiles.contains)
+    val registryOnly = snap.types.map(_._1).filterNot(fromFiles.contains)
     (fromFiles ++ registryOnly).map(n => n -> n)
   }
 
   /** Metadata-only colmap commit under optimistic retry. `mutate` is
-    * re-applied to a FRESH `columnMapping(dir)` read on every attempt
-    * (ADVICE r12): a lost race means another writer committed — possibly
-    * a schema verb — between our read and our claim, and re-stating the
-    * stale snapshot would silently undo that writer's rename/drop. The
-    * verb's own validation reruns against the rebased mapping, so a
-    * genuinely conflicting pair (two renames of one column) still fails
-    * loudly instead of last-wins. */
-  private def commitColMap(dir: String,
-      mutate: Seq[(String, String)] => Seq[(String, String)],
-      bootstrap: () => Seq[(String, String)]): Int =
+    * re-applied to a FRESH snapshot's mapping on every attempt (ADVICE
+    * r12), and the claim pins that snapshot's version + 1: a commit
+    * landing between our read and our claim — possibly a schema verb —
+    * makes us lose the race, where re-stating the stale mapping would
+    * silently undo that writer's rename/drop. The verb's own validation
+    * reruns against the rebased mapping, so a genuinely conflicting pair
+    * (two renames of one column) still fails loudly instead of
+    * last-wins. A table with no mapping yet bootstraps identity from
+    * its files ([[identityMappingFromFiles]]). */
+  private def commitColMap(spark: SparkSession, dir: String,
+      mutate: Seq[(String, String)] => Seq[(String, String)]): Int =
     retryOnLostRace(dir) { _ =>
-      val base = columnMapping(dir).getOrElse(bootstrap())
-      commitWithStats(dir, add = Nil, colMap = Some(mutate(base)))
+      val snap = snapshot(dir)
+      val base = snap.colMap.getOrElse(
+        identityMappingFromFiles(spark, dir, snap))
+      commitWithStats(dir, add = Nil, colMap = Some(mutate(base)),
+        atVersion = snap.version + 1)
     }
 
   /** RENAME COLUMN as a METADATA-ONLY commit (public precedent: Delta's
@@ -1229,7 +1224,7 @@ object TxLog {
   def renameColumn(spark: SparkSession, dir: String,
       oldName: String, newName: String): Int = {
     require(oldName != newName, s"rename to self: $oldName")
-    commitColMap(dir, m => {
+    commitColMap(spark, dir, m => {
       require(m.exists(_._2 == oldName),
         s"txlog: no column '$oldName' to rename in $dir " +
           s"(logical schema: ${m.map(_._2).mkString(", ")})")
@@ -1239,7 +1234,7 @@ object TxLog {
         case (p, l) if l == oldName => (p, newName)
         case other => other
       }
-    }, () => identityMappingFromFiles(spark, dir))
+    })
   }
 
   /** ADD COLUMN as a METADATA-ONLY commit (public precedent: Delta's
@@ -1274,40 +1269,38 @@ object TxLog {
     // every future read of the table
     val dt = org.apache.spark.sql.types.DataType.fromDDL(typeDdl)
     retryOnLostRace(dir) { _ =>
-      columnMapping(dir) match {
+      val snap = snapshot(dir)
+      snap.colMap match {
         case None =>
-          val fileCols = identityMappingFromFiles(spark, dir).map(_._2)
-          val registered = resolveFull(dir, -1)._3.types.keys.toSeq
+          val fileCols =
+            identityMappingFromFiles(spark, dir, snap).map(_._2)
+          val registered = snap.types.map(_._1)
           require(!fileCols.contains(name) && !registered.contains(name),
             s"txlog: column '$name' already exists in $dir " +
               s"(logical schema: ${(fileCols ++ registered).distinct
                 .mkString(", ")})")
           commitWithStats(dir, add = Nil,
-            colTypes = Seq(name -> Some(dt.catalogString)))
+            colTypes = Seq(name -> Some(dt.catalogString)),
+            atVersion = snap.version + 1)
         case Some(base) =>
           require(!base.exists(_._2 == name),
             s"txlog: column '$name' already exists in $dir " +
               s"(logical schema: ${base.map(_._2).mkString(", ")})")
-          val phys = s"c${latestVersion(dir) + 1}_$name"
+          val phys = s"c${snap.version + 1}_$name"
           commitWithStats(dir, add = Nil,
             colMap = Some(base :+ (phys -> name)),
-            colTypes = Seq(phys -> Some(dt.catalogString)))
+            colTypes = Seq(phys -> Some(dt.catalogString)),
+            atVersion = snap.version + 1)
       }
     }
   }
 
-  /** The persistent CHECK constraints in force at `asOf` (latest when
-    * <= 0): name → SQL expression. Empty for tables [[addConstraint]]
-    * never touched — every such write keeps its unchecked fast path. */
-  def constraintsOf(dir: String, asOf: Int = -1): Seq[(String, String)] =
-    resolveFull(dir, asOf)._3.checks.toSeq
-
   /** The high-water transaction mark an idempotent writer (`app`) last
     * committed with (Delta's txnVersion analogue). Marks are never
     * cleared by any action, so "the newest mark at the latest version"
-    * is found by walking manifests BACKWARD from the head and stopping
-    * at the first hit (checkpoints restate all marks, so the walk never
-    * crosses one): in a steady sink loop the PREVIOUS trigger's commit
+    * is the [[lastMark]] walk back from the head, stopping at the first
+    * hit (checkpoints restate all marks, so the walk never crosses
+    * one): in a steady sink loop the PREVIOUS trigger's commit
     * carries the mark, making this ONE small manifest read per trigger —
     * O(1) in live-file count and in table size, where a full snapshot
     * resolution (or the old path scan) would be O(live files). None for
@@ -1315,27 +1308,10 @@ object TxLog {
     * in checkpoints) and deliberately survive RESTORE — a rolled-back
     * table must not re-apply batches the pipeline already delivered. */
   def txnVersion(dir: String, app: String): Option[Long] = {
-    val key = s"meta\ttxn\t${encCol(app)}\t"
-    // streamed (logLines), not materialized: the checkpoint fallback
-    // reads the FULL live set's file at the million-file regime
-    def markIn(lines: Iterator[String]): Option[Long] = {
-      var out: Option[Long] = None // last-wins within one file
-      lines.foreach { l =>
-        if (l.startsWith(key)) out = Some(l.substring(key.length).toLong)
-      }
-      out
-    }
     val names = listLog(dir)
-    val latestCp = names.collect { case CheckpointName(d) => d.toInt }
-      .sorted.lastOption
-    val floor = latestCp.getOrElse(0)
-    val newestFirst = names.collect { case ManifestName(d) => d.toInt }
-      .filter(_ > floor).sorted.reverse
-    newestFirst.iterator
-      .flatMap(v => logLines(dir, manifest(dir, v), s"manifest v$v")(markIn))
-      .nextOption()
-      .orElse(latestCp.flatMap(cv => logLines(dir,
-        checkpointFile(dir, cv), f"checkpoint c$cv%08d")(markIn)))
+    val cp = checkpointAtOrBelow(names, Int.MaxValue)
+    lastMark(dir, names, s"meta\ttxn\t${encCol(app)}\t", versionOf(names),
+      cp.getOrElse(0), cp).map(_.toLong)
   }
 
   /** ADD CONSTRAINT — attach a persistent CHECK rule to the table as a
@@ -1380,13 +1356,14 @@ object TxLog {
       // lose the race and re-validate against ITS rows — without the
       // pin, neither side would see the other and a constraint could be
       // born violated.
-      val checkV = latestVersion(dir)
-      val existing = resolveFull(dir, checkV)._3.checks
+      val snap = snapshot(dir)
+      val checkV = snap.version
+      val existing = snap.checks.toMap
       require(!existing.contains(name),
         s"txlog: constraint '$name' already exists on $dir " +
           s"(CHECK (${existing.getOrElse(name, "")}))")
-      if (liveFiles(dir, checkV).nonEmpty) {
-        val bad = read(spark, dir, checkV)
+      if (snap.entries.nonEmpty) {
+        val bad = readSnapshot(spark, dir, snap)
           .agg(sum(when(coalesce(c, lit(false)), 0L).otherwise(1L)))
           .head().getLong(0)
         require(bad == 0L,
@@ -1402,22 +1379,22 @@ object TxLog {
     * commit; time travel to earlier versions still enforces nothing
     * (enforcement is write-time, and writes resolve the LATEST set). */
   def dropConstraint(dir: String, name: String): Int = {
-    val existing = resolveFull(dir, -1)._3.checks
-    require(existing.contains(name),
+    val existing = snapshot(dir).checks
+    require(existing.exists(_._1 == name),
       s"txlog: no constraint '$name' on $dir " +
-        s"(constraints: ${existing.keys.mkString(", ")})")
+        s"(constraints: ${existing.map(_._1).mkString(", ")})")
     commitWithStats(dir, add = Nil, checkSets = Seq(name -> None))
   }
 
   /** Write-time CHECK enforcement — ONE aggregation pass over the batch
     * (all constraints together, [[commitChecked]]'s shape) naming every
     * violated rule with its row count; zero cost for tables without
-    * constraints. `rows` carries the LOGICAL schema (constraints name
-    * the columns users see). */
-  private def enforceChecks(spark: SparkSession, dir: String,
+    * constraints. `checks` come from the verb's pinned [[Snapshot]];
+    * `rows` carries the LOGICAL schema (constraints name the columns
+    * users see). */
+  private def enforceChecks(checks: Seq[(String, String)], dir: String,
       rows: DataFrame, verb: String): Unit = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, sum, when}
-    val checks = resolveFull(dir, -1)._3.checks.toSeq
     if (checks.isEmpty) return
     val aggs = checks.map { case (n, e) =>
       sum(when(coalesce(expr(e), lit(false)), 0L).otherwise(1L)).as(n)
@@ -1433,24 +1410,25 @@ object TxLog {
   }
 
   /** The pinned-claim discipline of the batch-writing verbs: validates
-    * `rows` against the table's constraints at the current version and
-    * returns the re-pin step. Each call of it reads the latest version,
-    * re-runs [[enforceChecks]] iff the log moved past the last
-    * validated version (a lost race, or a commit during the batch
-    * write), and returns that version — the caller claims exactly it
-    * + 1, so any interleaving commit forces a lost race and a
-    * re-validation instead of an unvalidated landing. */
-  private def checkPin(spark: SparkSession, dir: String, rows: DataFrame,
-      verb: String): () => Int = {
-    var validatedV = latestVersion(dir)
-    enforceChecks(spark, dir, rows, verb)
+    * `rows` against the constraints of the current [[snapshot]] and
+    * returns the re-pin step. Each call of it reads the latest version
+    * and, iff the log moved past the validated snapshot (a lost race,
+    * or a commit during the batch write), resolves the new one and
+    * re-runs [[enforceChecks]] against it; it returns the validated
+    * snapshot — the caller claims exactly its version + 1, so any
+    * interleaving commit forces a lost race and a re-validation instead
+    * of an unvalidated landing. */
+  private def checkPin(dir: String, rows: DataFrame,
+      verb: String): () => Snapshot = {
+    var validated = snapshot(dir)
+    enforceChecks(validated.checks, dir, rows, verb)
     () => {
       val v = latestVersion(dir)
-      if (v != validatedV) {
-        enforceChecks(spark, dir, rows, verb)
-        validatedV = v
+      if (v != validated.version) {
+        validated = snapshot(dir, v)
+        enforceChecks(validated.checks, dir, rows, verb)
       }
-      v
+      validated
     }
   }
 
@@ -1459,14 +1437,14 @@ object TxLog {
     * bytes stay in place until files naturally rewrite, and time travel
     * to pre-drop versions still serves it. Returns the commit version. */
   def dropColumn(spark: SparkSession, dir: String, name: String): Int =
-    commitColMap(dir, m => {
+    commitColMap(spark, dir, m => {
       require(m.exists(_._2 == name),
         s"txlog: no column '$name' to drop in $dir " +
           s"(logical schema: ${m.map(_._2).mkString(", ")})")
       val next = m.filterNot(_._2 == name)
       require(next.nonEmpty, s"txlog: dropping the last column of $dir")
       next
-    }, () => identityMappingFromFiles(spark, dir))
+    })
 
   /** Rename a batch's LOGICAL columns to the table's PHYSICAL names —
     * the write-side half of column mapping, for appends to a mapped
@@ -1488,16 +1466,16 @@ object TxLog {
     // without ever losing a race, and lands unvalidated. Claiming
     // exactly the pinned version + 1 makes any interleaving commit force
     // this writer through a lost race and a re-validation.)
-    val repin = checkPin(spark, dir, df, "append") // logical rows, pre-rename
+    val repin = checkPin(dir, df, "append") // logical rows, pre-rename
     def autoStats(path: String): Option[String] =
       autoStatsFor(spark, path, autoStatsCols)
-    columnMapping(dir) match {
+    repin().colMap match {
       case None =>
         // unmapped table: physical == logical, plain append
         val path = writeBatch(df, dir, name)
         val st = autoStats(path)
         retryOnLostRace(dir)(_ => commitWithStats(dir, Seq(path -> st),
-          txn = txn, atVersion = repin() + 1))
+          txn = txn, atVersion = repin().version + 1))
       case Some(_) =>
         // the mapping is re-read on EVERY attempt (ADVICE r12): a lost
         // race means another commit landed — if it was a schema verb,
@@ -1509,10 +1487,10 @@ object TxLog {
         var written: Option[(Seq[String], String)] = None // (phys names, path)
         var writtenStats: Option[String] = None
         retryOnLostRace(dir) { attempt =>
-          val v = repin()
-          val m = columnMapping(dir, v).getOrElse(
-            identityMappingFromFiles(spark, dir))
-          val nextV = v + 1
+          val snap = repin()
+          val m = snap.colMap.getOrElse(
+            identityMappingFromFiles(spark, dir, snap))
+          val nextV = snap.version + 1
           val known = m.map { case (p, l) => l -> p }.toMap
           val fresh = df.columns.toSeq.filterNot(known.contains)
             .map(l => l -> s"c${nextV}_$l")
@@ -1570,17 +1548,24 @@ object TxLog {
     * travel to the replaced content. Returns the commit version. */
   def overwriteAll(spark: SparkSession, dir: String, df: DataFrame,
       name: String, autoStatsCols: Int = 0): Int = {
-    val repin = checkPin(spark, dir, df, "overwrite")
+    val repin = checkPin(dir, df, "overwrite")
     val path = writeBatch(df, dir, name)
     val st = autoStatsFor(spark, path, autoStatsCols)
-    retryOnLostRace(dir) { _ =>
-      val v = repin()
-      commitWithStats(dir, Seq(path -> st),
-        remove = liveFiles(dir, v),
-        colMap = if (columnMapping(dir, v).isDefined) Some(Nil) else None,
-        atVersion = v + 1)
-    }
+    retryOnLostRace(dir)(_ => replaceAll(dir, repin(), Seq(path -> st)))
   }
+
+  /** The commit of a full REPLACE ([[overwriteAll]],
+    * [[overwritePartitionedCols]], [[truncate]]) against `snap`: `adds`
+    * in, every live file out, and a mapped table's colmap restated to
+    * identity (Some(Nil)) — the new content carries logical names, and
+    * a stale mapping left in force would project wrong or missing
+    * columns on every later read (ADVICE r13). Claims exactly
+    * `snap.version` + 1. */
+  private def replaceAll(dir: String, snap: Snapshot,
+      adds: Seq[(String, Option[String])]): Int =
+    commitWithStats(dir, adds, remove = snap.files,
+      colMap = if (snap.colMap.isDefined) Some(Nil) else None,
+      atVersion = snap.version + 1)
 
   /** DESCRIBE HISTORY — one row per still-resolvable commit (public
     * precedent: Delta's DESCRIBE HISTORY): version, commit timestamp,
@@ -1592,6 +1577,7 @@ object TxLog {
   def history(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val names = listLog(dir)
+    val inLog = names.toSet
     val versions = names.collect { case ManifestName(d) => d.toInt }.sorted
     versions.toSeq.map { v =>
       val text = readLogFile(dir, manifest(dir, v), s"manifest v$v")
@@ -1607,7 +1593,7 @@ object TxLog {
           case _                      =>
         }
       }
-      (v, manifestTs(dir, v), adds, removes, dvSet, dvClear, schema)
+      (v, manifestTsIn(dir, inLog, v), adds, removes, dvSet, dvClear, schema)
     }.toDF("version", "ts_millis", "n_added", "n_removed",
       "n_dv_bound", "n_dv_cleared", "schema_change")
   }
@@ -1620,9 +1606,9 @@ object TxLog {
     * so time travel to pre-checkpoint versions still works. Returns the
     * checkpointed version (0 = empty table, nothing written). */
   def checkpoint(dir: String): Int = {
-    val v = latestVersion(dir)
+    val snap = snapshot(dir)
+    val v = snap.version
     if (v == 0) return 0
-    val (entries, dvs, cmAtV) = resolveFull(dir, v)
     val ld = logDir(dir)
     val fs = fsOf(ld)
     val tmp = new Path(ld, s".c$v.tmp${System.nanoTime()}")
@@ -1655,22 +1641,22 @@ object TxLog {
       // the header-only fast path.
       def line(l: String): Unit = { w.write(l); w.write('\n') }
       line("meta\tlayout\t2")
-      cmAtV.partSpec.foreach(sp => line(partSpecLine(sp)))
-      cmAtV.m.foreach(m => line(colMapLine(m)))
+      snap.partSpec.foreach(sp => line(partSpecLine(sp)))
+      snap.colMap.foreach(m => line(colMapLine(m)))
       // the addColumn registry, constraints and idempotence marks ride
       // checkpoints, so they survive retention
-      cmAtV.types.foreach { case (p, t) => line(colTypeLine(p, Some(t))) }
-      cmAtV.checks.foreach { case (n, e) => line(constraintLine(n, Some(e))) }
-      cmAtV.txns.foreach { case (a, id) => line(txnLine(a, id)) }
-      entries.foreach { case (p, st) => line(addLine(p, st)) }
-      entries.foreach { case (p, _) =>
-        dvs.get(p).foreach(d => line(dvLine(p, Some(d))))
+      snap.types.foreach { case (p, t) => line(colTypeLine(p, Some(t))) }
+      snap.checks.foreach { case (n, e) => line(constraintLine(n, Some(e))) }
+      snap.txns.foreach { case (a, id) => line(txnLine(a, id)) }
+      snap.entries.foreach { case (p, st) => line(addLine(p, st)) }
+      snap.entries.foreach { case (p, _) =>
+        snap.dvs.get(p).foreach(d => line(dvLine(p, Some(d))))
       }
     } finally w.close()
     if (!claim(fs, tmp, checkpointFile(dir, v)))
       throw new IllegalStateException(
         s"txlog: checkpoint race for version $v of $dir — already written")
-    writeCheckpointTwin(dir, v, entries.size)
+    writeCheckpointTwin(dir, v, snap.entries.size)
     v
   }
 
@@ -1832,14 +1818,6 @@ object TxLog {
       }
     }
 
-  /** The live entry state at `asOf` as a DISTRIBUTED DataFrame
-    * (path, stats, dv) plus the resolved header box — the twin-backed
-    * resolution path. None when the snapshot has no layout-2 checkpoint
-    * with a twin at or below the version, or when the post-checkpoint
-    * delta is too large to plan as literals (an unmaintained table —
-    * the driver replay is the right tool there). Correctness contract:
-    * the returned frame holds EXACTLY the rows
-    * `resolveFull(dir, asOf)` would produce (spec-pinned). */
   /** Probe surface of the twin path: the (path, stats, dv) entry rows
     * the distributed resolution produces, or None when no twin fast
     * path is eligible — specs and the gate pin this EQUAL to the
@@ -1884,11 +1862,20 @@ object TxLog {
     }
   }
 
+  /** The live entry state at `asOf` as a DISTRIBUTED DataFrame
+    * (path, stats, dv) plus the resolved header box — the twin-backed
+    * resolution path. None when the snapshot has no layout-2 checkpoint
+    * with a twin at or below the version, or when the post-checkpoint
+    * delta is too large to plan as literals (an unmaintained table —
+    * the driver replay is the right tool there). Correctness contract:
+    * the returned frame holds EXACTLY the rows
+    * `snapshot(dir, asOf).entries` holds, with its dvs (spec-pinned). */
   private def scanEntries(spark: SparkSession, dir: String,
       asOf: Int = -1): Option[(DataFrame, ColMapBox)] = {
     import org.apache.spark.sql.functions._
-    val upTo = if (asOf <= 0) latestVersion(dir) else asOf
-    latestCheckpointVersion(dir, upTo).flatMap { cv =>
+    val names = listLog(dir)
+    val upTo = if (asOf <= 0) versionOf(names) else asOf
+    checkpointAtOrBelow(names, upTo).flatMap { cv =>
       val twin = twinPath(dir, cv)
       val fs = fsOf(twin)
       if (!fs.exists(new Path(twin, "_SUCCESS"))) None
@@ -1952,10 +1939,11 @@ object TxLog {
   def expireManifests(dir: String): Int = {
     val ld = logDir(dir)
     val fs = fsOf(ld)
-    latestCheckpointVersion(dir, latestVersion(dir)) match {
+    val names = listLog(dir)
+    checkpointAtOrBelow(names, Int.MaxValue) match {
       case None => 0
       case Some(cv) =>
-        val victims = listLog(dir)
+        val victims = names
           .collect { case n @ ManifestName(d) if d.toInt <= cv => n }
         victims.foreach(n => fs.delete(new Path(ld, n), false))
         victims.length
@@ -2001,9 +1989,9 @@ object TxLog {
     // logical names (and typed null-fill adds) resolve at the window
     // END (one schema per feed)
     else {
-      val cmb = resolveFull(dir, toVersion)._3
-      Some(applyMapping(readMasked(spark, files, liveDvs(dir, toVersion),
-        nullFill = cmb.types.toSeq), cmb.m))
+      val end = snapshot(dir, toVersion)
+      Some(applyMapping(readMasked(spark, files, end.dvs,
+        nullFill = end.types), end.colMap))
     }
   }
 
@@ -2049,15 +2037,15 @@ object TxLog {
     require(fromVersion >= 0 && toVersion >= fromVersion,
       s"bad version window: ($fromVersion, $toVersion]")
     val sign = org.apache.spark.sql.functions.lit _
-    val (beforeEntries, beforeDvM) =
-      if (fromVersion == 0)
-        (Seq.empty[(String, Option[String])], Map.empty[String, String])
-      else { val (e, d) = resolveState(dir, fromVersion); (e, d.toMap) }
-    val (afterEntries, afterDvM) = {
-      val (e, d) = resolveState(dir, toVersion); (e, d.toMap)
-    }
-    val beforeFiles = beforeEntries.map(_._1).toSet
-    val afterFiles = afterEntries.map(_._1).toSet
+    val (beforeFiles, beforeDvM) =
+      if (fromVersion == 0) (Set.empty[String], Map.empty[String, String])
+      else {
+        val b = snapshot(dir, fromVersion)
+        (b.files.toSet, b.dvs)
+      }
+    val after = snapshot(dir, toVersion)
+    val afterFiles = after.files.toSet
+    val afterDvM = after.dvs
     // file-grain diff, each side masked AS OF ITS OWN SNAPSHOT: an added
     // file contributes its window-end rows, a removed file retracts the
     // rows that were VISIBLE at window start (retracting rows a DV had
@@ -2067,7 +2055,7 @@ object TxLog {
     // typed null-fill adds resolve at the window END on every leg — the
     // feed's one logical schema; a removed (pre-add) file's retractions
     // null-fill the added column exactly like its snapshot read would
-    val nf = resolveFull(dir, toVersion)._3.types.toSeq
+    val nf = after.types
     val plus =
       if (added.isEmpty) None
       else Some(readMasked(spark, added, afterDvM, nullFill = nf)
@@ -2120,8 +2108,7 @@ object TxLog {
       .reduceOption(_ unionByName _)
       // one logical schema per feed, resolved at the window END; the
       // sign column is feed metadata and passes through the mapping
-      .map(applyMapping(_, columnMapping(dir, toVersion),
-        keep = Seq(signCol)))
+      .map(applyMapping(_, after.colMap, keep = Seq(signCol)))
   }
 
   /** Snapshot read — all live parquet files as one DataFrame; empty
@@ -2135,17 +2122,20 @@ object TxLog {
     * predates a column. The default read keeps Spark's single-footer
     * fast path — a homogeneous table pays nothing for the capability. */
   def read(spark: SparkSession, dir: String, asOf: Int = -1,
-      mergeSchema: Boolean = false): DataFrame = {
-    val (entries, dv, cmb) = resolveFull(dir, asOf)
-    val files = entries.map(_._1)
-    require(files.nonEmpty,
-      s"txlog: snapshot of $dir at asOf=$asOf holds no files")
+      mergeSchema: Boolean = false): DataFrame =
+    readSnapshot(spark, dir, snapshot(dir, asOf), mergeSchema)
+
+  /** [[read]] of an already-resolved snapshot of `dir`. */
+  private[sources] def readSnapshot(spark: SparkSession, dir: String,
+      snap: Snapshot, mergeSchema: Boolean = false): DataFrame = {
+    require(snap.entries.nonEmpty,
+      s"txlog: snapshot of $dir at version ${snap.version} holds no files")
     // the mapping resolves AS OF the same snapshot — time travel across
     // a rename serves that version's own logical names; typed metadata
     // adds ([[addColumn]]) null-fill as of the same version; manifest
     // stats ride into the scan so pushed filters SKIP files at planning
-    applyMapping(readMasked(spark, files, dv.toMap, mergeSchema,
-      nullFill = cmb.types.toSeq, stats = entries.toMap), cmb.m)
+    applyMapping(readMasked(spark, snap.files, snap.dvs, mergeSchema,
+      nullFill = snap.types, stats = snap.entries.toMap), snap.colMap)
   }
 
   // deletion-vector sidecar schema: the PART-file URI (as Spark's
@@ -2332,7 +2322,8 @@ object TxLog {
   def optimize(spark: SparkSession, dir: String, name: String,
       targetFiles: Int = 1): Int = {
     require(targetFiles >= 1, s"targetFiles must be >= 1: $targetFiles")
-    val entries = liveEntries(dir)
+    val snap = snapshot(dir)
+    val entries = snap.entries
     if (entries.size <= targetFiles) return 0
     val files = entries.map(_._1)
     // union of stat columns across the replaced files' blobs — the
@@ -2344,15 +2335,15 @@ object TxLog {
     // The dv snapshot the read went through is threaded into the commit
     // as basedOnDvs (ADVICE r11): a DV delete landing between this read
     // and the swap must abort the swap, not be silently materialized away
-    val dvSnap = liveDvs(dir)
+    val dvSnap = snap.dvs
     // nullFill: a compaction of files that evolved apart (post-addColumn
     // inserts) must union their schemas, not inherit one footer's —
     // dropping the evolved column here would be silent data loss
-    val snap = readMasked(spark, files, dvSnap, nullFill = columnTypes(dir))
+    val rows = readMasked(spark, files, dvSnap, nullFill = snap.types)
     val compacted = (statCols.headOption match {
-      case Some(c) if targetFiles > 1 => snap.repartitionByRange(
+      case Some(c) if targetFiles > 1 => rows.repartitionByRange(
         targetFiles, org.apache.spark.sql.functions.col(c))
-      case _ => snap.repartition(targetFiles)
+      case _ => rows.repartition(targetFiles)
     }).localCheckpoint()
     try {
       val adds =
@@ -2398,7 +2389,8 @@ object TxLog {
   def optimizeIncremental(spark: SparkSession, dir: String, name: String,
       smallBytes: Long): Int = {
     require(smallBytes >= 1, s"smallBytes must be >= 1: $smallBytes")
-    val entries = liveEntries(dir)
+    val snap = snapshot(dir)
+    val entries = snap.entries
     def bytesOf(p: String): Long = {
       val path = new Path(p)
       val fs = fsOf(path)
@@ -2409,10 +2401,9 @@ object TxLog {
     if (small.size < 2) return 0
     val smallPaths = small.map(_._1)
     val statCols = small.flatMap(e => statColsOf(e._2)).distinct
-    val dvSnap = liveDvs(dir)
+    val dvSnap = snap.dvs
     val compacted =
-      readMasked(spark, smallPaths, dvSnap,
-        nullFill = columnTypes(dir)).coalesce(1)
+      readMasked(spark, smallPaths, dvSnap, nullFill = snap.types).coalesce(1)
     val st =
       if (statCols.isEmpty) None else columnStatsMulti(compacted, statCols)
     commitRewrite(dir,
@@ -2465,11 +2456,12 @@ object TxLog {
     require(cols.size >= 2, s"zorder needs >= 2 columns: ${cols.size}")
     require(cols.distinct.size == cols.size,
       s"zorder columns must be distinct: ${cols.mkString(", ")}")
-    val files = liveFiles(dir)
+    val pinned = snapshot(dir)
+    val files = pinned.files
     if (files.isEmpty) return 0
-    val dvSnap = liveDvs(dir)
+    val dvSnap = pinned.dvs
     val snap = readMasked(spark, files, dvSnap,
-      nullFill = columnTypes(dir)).localCheckpoint()
+      nullFill = pinned.types).localCheckpoint()
     val withZ =
       try {
         // ONE quantile job for every dimension (the multi-column
@@ -2545,14 +2537,12 @@ object TxLog {
     // per manifest/checkpoint file PRESENT in the log; a version whose
     // pre-checkpoint prefix was expired raises the missing-manifest error
     // and is — by exactly that token — unreachable, so it holds nothing
-    val names = listLog(dir)
-    val versions = (names.collect { case ManifestName(d) => d.toInt } ++
-      names.collect { case CheckpointName(d) => d.toInt }).distinct.sorted
+    val versions = versionsIn(listLog(dir)).distinct.sorted
     // a version's reachable footprint is its data files PLUS the
     // deletion-vector sidecar dirs its bindings reference — a swept
     // sidecar would silently resurrect deleted rows on the next read
     val reachable = versions.flatMap { v =>
-      try { val (e, d) = resolveState(dir, v); e.map(_._1) ++ d.values }
+      try { val s = snapshot(dir, v); s.files ++ s.dvs.values }
       catch { case _: IllegalStateException => Nil }
     }.toSet
     val dataDir = new Path(dir, "data")
@@ -2602,19 +2592,19 @@ object TxLog {
     * set — idempotence, same contract as [[optimize]]. */
   def restore(dir: String, toVersion: Int): Int = {
     require(toVersion >= 1, s"toVersion must be >= 1: $toVersion")
-    val (target, targetDvM, targetCm) = resolveFull(dir, toVersion)
-    val (current, currentDvM, currentCm) = resolveFull(dir, -1)
-    val targetDv = targetDvM.toMap
-    val currentDv = currentDvM.toMap
-    val currentPaths = current.map(_._1).toSet
-    val targetPaths = target.map(_._1).toSet
-    val add = target.filterNot { case (p, _) => currentPaths(p) }
+    val target = snapshot(dir, toVersion)
+    val current = snapshot(dir)
+    val targetDv = target.dvs
+    val currentDv = current.dvs
+    val currentPaths = current.files.toSet
+    val targetPaths = target.files.toSet
+    val add = target.entries.filterNot { case (p, _) => currentPaths(p) }
     val addSet = add.map(_._1).toSet
-    val remove = current.map(_._1).filterNot(targetPaths)
+    val remove = current.files.filterNot(targetPaths)
     // deletion-vector reconciliation: a file live at the target must end
     // up bound to the target's sidecar (or unbound, `-`) — replay clears
     // the binding on re-add, so compare against the post-commit default
-    val dvSets = target.map(_._1).flatMap { p =>
+    val dvSets = target.files.flatMap { p =>
       val want = targetDv.get(p)
       val haveAfter = if (addSet(p)) None else currentDv.get(p)
       if (want == haveAfter) None else Some(p -> want)
@@ -2625,8 +2615,8 @@ object TxLog {
     // now-mapped table restores identity behavior via the `colmap -`
     // clear (Some(Seq.empty) is the API sentinel that renders it).
     val cmSet: Option[Seq[(String, String)]] =
-      if (targetCm.m == currentCm.m) None
-      else targetCm.m.orElse(Some(Seq.empty))
+      if (target.colMap == current.colMap) None
+      else target.colMap.orElse(Some(Seq.empty))
     // addColumn type registry reconciles INDEPENDENTLY of the mapping
     // (a mapping-free addColumn on an unmapped table carries no colmap
     // at all): restate the target's registry and explicitly drop
@@ -2635,18 +2625,21 @@ object TxLog {
     // then these explicit lines apply — covering a drop BETWEEN target
     // and now that pruned a type the target still needs (a phys's type
     // never changes, so restating is always safe).
-    val typeSet: Seq[(String, Option[String])] =
-      if (targetCm.types == currentCm.types && cmSet.isEmpty) Nil
-      else targetCm.types.toSeq.map { case (p, t) => (p, Some(t)) } ++
-        currentCm.types.keys.filterNot(targetCm.types.contains)
-          .map(p => (p, None: Option[String])).toSeq
+    // (registry and constraint sets compare as maps: order-insensitive)
+    def restate(want: Seq[(String, String)], have: Seq[(String, String)])
+        : Seq[(String, Option[String])] = {
+      val wanted = want.toMap
+      want.map { case (k, x) => (k, Some(x)) } ++
+        have.map(_._1).filterNot(wanted.contains).map(k => (k, None))
+    }
+    val typeSet =
+      if (target.types.toMap == current.types.toMap && cmSet.isEmpty) Nil
+      else restate(target.types, current.types)
     // CHECK constraints roll back with the snapshot: restate the
     // target's set, drop names only the current version has
-    val checkSet: Seq[(String, Option[String])] =
-      if (targetCm.checks == currentCm.checks) Nil
-      else targetCm.checks.toSeq.map { case (n, e) => (n, Some(e)) } ++
-        currentCm.checks.keys.filterNot(targetCm.checks.contains)
-          .map(n => (n, None: Option[String])).toSeq
+    val checkSet =
+      if (target.checks.toMap == current.checks.toMap) Nil
+      else restate(target.checks, current.checks)
     if (add.isEmpty && remove.isEmpty && dvSets.isEmpty && cmSet.isEmpty
         && typeSet.isEmpty && checkSet.isEmpty)
       return 0
@@ -2798,11 +2791,12 @@ object TxLog {
   def deleteWhere(spark: SparkSession, dir: String, name: String,
       predicate0: org.apache.spark.sql.Column): Int = {
     import org.apache.spark.sql.functions._
-    val (entries, dvM, cmb) = resolveFull(dir, -1)
+    val snap = snapshot(dir)
+    val entries = snap.entries
     if (entries.isEmpty) return 0
-    val nf = cmb.types.toSeq
-    val predicate = dmlColumn(cmb.m, predicate0, "DELETE")
-    val dvs = dvM.toMap
+    val nf = snap.types
+    val predicate = dmlColumn(snap.colMap, predicate0, "DELETE")
+    val dvs = snap.dvs
     // the probe scan's pushed predicate skips stats-disjoint files at
     // planning (the readPruned trust contract, applied to DML probes)
     val touched = probeTouched(spark, entries.map(_._1), dvs,
@@ -2848,13 +2842,14 @@ object TxLog {
     import org.apache.spark.sql.functions._
     val pinned = df.localCheckpoint() // 3 consumers: guard, checks, write
     try {
-      val (entries, dvM, cmb) = resolveFull(dir, -1)
-      val nf = cmb.types.toSeq
-      val dvs = dvM.toMap
+      val snap = snapshot(dir)
+      val entries = snap.entries
+      val nf = snap.types
+      val dvs = snap.dvs
       // validate the predicate against the table's LOGICAL schema first
       // (the dmlColumn discipline: a retired physical name gets the
       // instructive error, not an unresolved-column analysis failure)
-      val predicate = dmlColumn(cmb.m, predicate0, "REPLACE WHERE")
+      val predicate = dmlColumn(snap.colMap, predicate0, "REPLACE WHERE")
       val bad = pinned
         .agg(sum(when(coalesce(predicate0, lit(false)), 0L).otherwise(1L)))
         .head()
@@ -2863,11 +2858,11 @@ object TxLog {
         s"txlog: replaceWhere source carries $outside row(s) that do NOT " +
           "satisfy the predicate — a replace must stay inside its own " +
           "window; nothing committed")
-      enforceChecks(spark, dir, pinned, "replaceWhere")
+      enforceChecks(snap.checks, dir, pinned, "replaceWhere")
       // batch lands under PHYSICAL names on a mapped table (the
       // appendMapped translation, minus fresh-column extension: a
       // replace must match the logical schema it replaces into)
-      val physDf = cmb.m match {
+      val physDf = snap.colMap match {
         case None => pinned
         case Some(m) =>
           val known = m.map { case (p, l) => l -> p }.toMap
@@ -2940,12 +2935,13 @@ object TxLog {
   def deleteWhereDV(spark: SparkSession, dir: String, name: String,
       predicate0: org.apache.spark.sql.Column): Int = {
     import org.apache.spark.sql.functions._
-    val (entries, dvM, cmb) = resolveFull(dir, -1)
+    val snap = snapshot(dir)
+    val entries = snap.entries
     if (entries.isEmpty) return 0
-    val predicate = dmlColumn(cmb.m, predicate0, "DELETE (DV)")
-    val dvs = dvM.toMap
-    val matched = readMasked(spark, entries.map(_._1), dvs, withPos = true,
-        nullFill = cmb.types.toSeq, stats = entries.toMap)
+    val predicate = dmlColumn(snap.colMap, predicate0, "DELETE (DV)")
+    val dvs = snap.dvs
+    val matched = readMasked(spark, snap.files, dvs, withPos = true,
+        nullFill = snap.types, stats = entries.toMap)
       .filter(coalesce(predicate, lit(false)))
       .select(DvFileCol, DvPosCol).localCheckpoint()
     try {
@@ -2996,8 +2992,9 @@ object TxLog {
       minMaskedFraction: Double): Int = {
     require(minMaskedFraction > 0.0 && minMaskedFraction <= 1.0,
       s"minMaskedFraction must be in (0,1]: $minMaskedFraction")
-    val (entries, dvM) = resolveState(dir, -1)
-    val dvs = dvM.toMap
+    val snap = snapshot(dir)
+    val entries = snap.entries
+    val dvs = snap.dvs
     if (dvs.isEmpty) return 0
     // masked-row count per batch dir, attributed from each file's OWN
     // sidecar (bindings are cumulative, so a file's sidecar carries every
@@ -3018,7 +3015,7 @@ object TxLog {
       total == 0L || masked.toDouble / total >= minMaskedFraction
     }
     if (victims.isEmpty) return 0
-    val nf = columnTypes(dir)
+    val nf = snap.types
     rewriteTouched(spark, dir, name, entries, victims.map(normPath),
       p => readMasked(spark, Seq(p), dvs, nullFill = nf),
       extraAdds = Nil, what = "optimizeDv", basedOnDvs = Some(dvs))
@@ -3045,16 +3042,17 @@ object TxLog {
     require(set0.map(_._1).distinct.size == set0.size,
       s"updateWhereDV: a column may appear at most once in SET " +
         s"(got ${set0.map(_._1).mkString(", ")})")
-    val (entries, dvM, cmb) = resolveFull(dir, -1)
+    val snap = snapshot(dir)
+    val entries = snap.entries
     if (entries.isEmpty) return 0
-    val cm = cmb.m
-    val nf = cmb.types.toSeq
+    val cm = snap.colMap
+    val nf = snap.types
     val predicate = dmlColumn(cm, predicate0, "UPDATE (DV)")
     val set = set0.map { case (n, e) =>
       cm.fold(n)(dmlPhysicalName(_, n, "UPDATE (DV) SET")) ->
         dmlColumn(cm, e, "UPDATE (DV) SET")
     }
-    val dvs = dvM.toMap
+    val dvs = snap.dvs
     // head-file columns plus typed metadata adds (a just-added column is
     // a legal SET target even before any file carries it)
     val tableCols =
@@ -3094,7 +3092,8 @@ object TxLog {
         }
       }: _*)
       // table constraints see the POST-SET rows, under logical names
-      enforceChecks(spark, dir, applyMapping(updated, cm), "UPDATE (DV)")
+      enforceChecks(snap.checks, dir, applyMapping(updated, cm),
+        "UPDATE (DV)")
       val statCols = touched
         .flatMap(p => statColsOf(statsByNorm(normPath(p)))).distinct
         .filter(dataCols.contains)
@@ -3144,10 +3143,11 @@ object TxLog {
     require(set0.map(_._1).distinct.size == set0.size,
       s"updateWhere: a column may appear at most once in SET " +
         s"(got ${set0.map(_._1).mkString(", ")})")
-    val (entries, dvM, cmb) = resolveFull(dir, -1)
+    val snap = snapshot(dir)
+    val entries = snap.entries
     if (entries.isEmpty) return 0
-    val cm = cmb.m
-    val nf = cmb.types.toSeq
+    val cm = snap.colMap
+    val nf = snap.types
     val predicate = dmlColumn(cm, predicate0, "UPDATE")
     val set = set0.map { case (n, e) =>
       cm.fold(n)(dmlPhysicalName(_, n, "UPDATE SET")) ->
@@ -3164,7 +3164,7 @@ object TxLog {
     require(missing.isEmpty,
       s"updateWhere: SET targets column(s) absent from the table: " +
         s"${missing.mkString(", ")}")
-    val dvs = dvM.toMap
+    val dvs = snap.dvs
     val touched = probeTouched(spark, entries.map(_._1), dvs,
       _.filter(predicate), nullFill = nf, stats = entries.toMap)
     val setByCol = set.toMap
@@ -3172,7 +3172,7 @@ object TxLog {
     // table constraints see the POST-SET matched rows under logical
     // names — one extra scan of the touched files, paid only when the
     // table carries constraints
-    if (touched.nonEmpty && cmb.checks.nonEmpty) {
+    if (touched.nonEmpty && snap.checks.nonEmpty) {
       val m = readMasked(spark, entries.map(_._1), dvs, nullFill = nf,
         stats = entries.toMap).filter(hit)
       val tps = m.schema.map(f => f.name -> f.dataType).toMap
@@ -3182,7 +3182,7 @@ object TxLog {
           case None    => col(c)
         }
       }: _*)
-      enforceChecks(spark, dir, applyMapping(preview, cm), "UPDATE")
+      enforceChecks(snap.checks, dir, applyMapping(preview, cm), "UPDATE")
     }
     rewriteTouched(spark, dir, name, entries, touched,
       { p =>
@@ -3261,10 +3261,11 @@ object TxLog {
       source: DataFrame, keys: Seq[String]): Int = {
     import org.apache.spark.sql.functions._
     require(keys.nonEmpty, "deleteByKeys needs at least one key column")
-    val (entries, dvM, cmb) = resolveFull(dir, -1)
+    val snap = snapshot(dir)
+    val entries = snap.entries
     if (entries.isEmpty) return 0
-    val cm = cmb.m
-    val nf = cmb.types.toSeq
+    val cm = snap.colMap
+    val nf = snap.types
     val physKeys = keys.map(k =>
       cm.fold(k)(dmlPhysicalName(_, k, "MERGE DELETE key")))
     val srcKeys = source
@@ -3272,7 +3273,7 @@ object TxLog {
       .na.drop("any").distinct().localCheckpoint()
     try {
       if (srcKeys.isEmpty) return 0
-      val dvs = dvM.toMap
+      val dvs = snap.dvs
       val touched = probeTouched(spark,
         keyPrunedProbeFiles(entries, srcKeys, physKeys), dvs,
         _.join(broadcast(srcKeys), physKeys, "left_semi"), nullFill = nf)
@@ -3305,11 +3306,11 @@ object TxLog {
     * or 0 when `source` is empty. Fresh `name` per call. */
   def merge(spark: SparkSession, dir: String, name: String,
       source: DataFrame, keys: Seq[String]): Int = {
-    enforceChecks(spark, dir, source, "MERGE") // logical source rows
-    val cm = columnMapping(dir)
+    val snap = snapshot(dir)
+    enforceChecks(snap.checks, dir, source, "MERGE") // logical source rows
     val (physSource, physKeys) =
-      sourceToPhysical(cm, source, keys, "MERGE", passCols = Nil)
-    mergeImpl(spark, dir, name, identity, physSource, physKeys, cm = cm)
+      sourceToPhysical(snap.colMap, source, keys, "MERGE", passCols = Nil)
+    mergeImpl(spark, dir, name, snap, identity, physSource, physKeys)
   }
 
   /** The write-side logical→physical half of the DML verbs on a
@@ -3361,16 +3362,16 @@ object TxLog {
     require(changes.columns.contains(opCol),
       s"applyChanges: feed has no op column '$opCol' " +
         s"(columns: ${changes.columns.mkString(", ")})")
+    val snap = snapshot(dir)
     // table constraints check the rows that will LAND (upserts); a
     // delete marker removes data and cannot violate a CHECK
-    enforceChecks(spark, dir,
+    enforceChecks(snap.checks, dir,
       changes.filter(col(opCol) =!= deleteOp).drop(opCol), "APPLY CHANGES")
-    val cm = columnMapping(dir)
-    val (physChanges, physKeys) = sourceToPhysical(cm, changes, keys,
-      "APPLY CHANGES", passCols = Seq(opCol))
-    mergeImpl(spark, dir, name,
+    val (physChanges, physKeys) = sourceToPhysical(snap.colMap, changes,
+      keys, "APPLY CHANGES", passCols = Seq(opCol))
+    mergeImpl(spark, dir, name, snap,
       k => k.filter(col(opCol) =!= deleteOp).drop(opCol), physChanges,
-      physKeys, opNullCheck = Some(opCol), cm = cm)
+      physKeys, opNullCheck = Some(opCol))
   }
 
   /** Manifest-stats pre-pruning of a key-probe scan ([[merge]],
@@ -3406,12 +3407,13 @@ object TxLog {
     * of re-running the caller's (possibly expensive) feed plan per
     * action. */
   private def mergeImpl(spark: SparkSession, dir: String, name: String,
-      upsertsOf: DataFrame => DataFrame, keyedRaw: DataFrame,
-      keys: Seq[String], opNullCheck: Option[String] = None,
-      cm: Option[Seq[(String, String)]] = None): Int = {
+      snap: Snapshot, upsertsOf: DataFrame => DataFrame,
+      keyedRaw: DataFrame, keys: Seq[String],
+      opNullCheck: Option[String] = None): Int = {
     import org.apache.spark.sql.functions._
     require(keys.nonEmpty, "merge needs at least one key column")
-    val entries = liveEntries(dir)
+    val entries = snap.entries
+    val cm = snap.colMap
     require(entries.nonEmpty,
       s"merge into an empty table $dir: commit the first batch instead")
     val keyed = keyedRaw.localCheckpoint()
@@ -3468,10 +3470,10 @@ object TxLog {
       }
       val srcKeys = nonNullKeyed.select(keys.map(col): _*).distinct()
       val probeFiles = keyPrunedProbeFiles(entries, nonNullKeyed, keys)
-      val dvs = liveDvs(dir)
+      val dvs = snap.dvs
       // typed metadata adds null-fill the probe/rewrite reads (a merge
       // KEYED on a just-added column is degenerate but must not crash)
-      val nf = if (cm.isEmpty) Nil else columnTypes(dir)
+      val nf = if (cm.isEmpty) Nil else snap.types
       val touched = probeTouched(spark, probeFiles, dvs,
         _.join(broadcast(srcKeys), keys, "left_semi"), nullFill = nf)
       val extraAdds =
@@ -3574,7 +3576,8 @@ object TxLog {
     * nested value leaf, one narrow distinct scan otherwise. */
   def partitionTuples(spark: SparkSession, dir: String,
       partCols: Seq[String]): Seq[Seq[Option[String]]] = {
-    val entries = liveEntries(dir)
+    val snap = snapshot(dir)
+    val entries = snap.entries
     require(entries.nonEmpty, s"txlog: $dir holds no files")
     val n = partCols.length
     val canonical = partCols.map(c => parsePartSpec(c).spec).mkString(",")
@@ -3587,7 +3590,7 @@ object TxLog {
       parsed.flatten.distinct.map(_.map(v =>
         if (v == HiveDefaultPartition) None else Some(v)))
     else
-      read(spark, dir)
+      readSnapshot(spark, dir, snap)
         .select(partCols.map(c => parsePartSpec(c).derive): _*)
         .distinct().collect().map(r =>
           partCols.indices.map(i =>
@@ -3636,11 +3639,12 @@ object TxLog {
       extraStatsCols: Seq[String] = Nil,
       txn: Option[(String, Long)] = None): Int = {
     // the leaves are written once; only the manifest line retries
-    val repin = checkPin(spark, dir, df, "partitioned append")
+    val repin = checkPin(dir, df, "partitioned append")
     val adds = writePartitionLeaves(spark, dir, name, df,
       partCols, bloomBits, extraStatsCols)
     retryOnLostRace(dir)(_ =>
-      commitWithStats(dir, adds, txn = txn, atVersion = repin() + 1))
+      commitWithStats(dir, adds, txn = txn,
+        atVersion = repin().version + 1))
   }
 
   /** Atomic partitioned full REPLACE — [[overwriteAll]]'s semantics at
@@ -3653,19 +3657,10 @@ object TxLog {
   def overwritePartitionedCols(spark: SparkSession, dir: String,
       name: String, df: DataFrame, partCols: Seq[String],
       bloomBits: Int = 1024, extraStatsCols: Seq[String] = Nil): Int = {
-    val repin = checkPin(spark, dir, df, "partitioned overwrite")
+    val repin = checkPin(dir, df, "partitioned overwrite")
     val adds = writePartitionLeaves(spark, dir, name, df, partCols,
       bloomBits, extraStatsCols)
-    retryOnLostRace(dir) { _ =>
-      val v = repin()
-      // like overwriteAll: a full replace on a MAPPED table restates the
-      // colmap to identity (Some(Nil)) — the new leaves carry logical
-      // names, and a stale mapping left in force would project wrong or
-      // missing columns on every subsequent read (ADVICE r13)
-      commitWithStats(dir, adds, remove = liveFiles(dir, v),
-        colMap = if (columnMapping(dir, v).isDefined) Some(Nil) else None,
-        atVersion = v + 1)
-    }
+    retryOnLostRace(dir)(_ => replaceAll(dir, repin(), adds))
   }
 
   /** TRUNCATE — one adds-empty remove-all commit: the table becomes
@@ -3678,9 +3673,7 @@ object TxLog {
     * the commit version; a no-op (already empty, no mapping) still
     * commits so the verb is always visible in history. */
   def truncate(dir: String): Int =
-    retryOnLostRace(dir)(_ =>
-      commitWithStats(dir, add = Nil, remove = liveFiles(dir),
-        colMap = if (columnMapping(dir).isDefined) Some(Nil) else None))
+    retryOnLostRace(dir)(_ => replaceAll(dir, snapshot(dir), Nil))
 
   /** The internal partition-copy column name for level `i` of a
     * partitioned ingest: `__pv` for the first (the historical
@@ -3973,7 +3966,8 @@ object TxLog {
     * never rewrite. */
   def optimizePartitionedCols(spark: SparkSession, dir: String,
       name: String, partCols: Seq[String], bloomBits: Int = 1024): Int = {
-    val entries = liveEntries(dir)
+    val pinned = snapshot(dir)
+    val entries = pinned.entries
     if (entries.isEmpty) return 0
     val specs = partCols.map(parsePartSpec)
     val n = partCols.length
@@ -3988,8 +3982,8 @@ object TxLog {
     val residue = parsed.collect { case (p, None) => p }
     val byValue = parsed.collect { case (p, Some(t)) => (p, t) }
       .groupBy(_._2)
-    val dvSnap = liveDvs(dir)
-    val nf = columnTypes(dir)
+    val dvSnap = pinned.dvs
+    val nf = pinned.types
     def toTuple(r: org.apache.spark.sql.Row): Seq[Option[String]] =
       partCols.indices.map(i =>
         if (r.isNullAt(i)) None else Some(r.getString(i)))
@@ -4046,11 +4040,11 @@ object TxLog {
     import org.apache.spark.sql.functions._
     require(columns0.nonEmpty, "analyze needs at least one column")
     retryOnLostRace(dir) { _ =>
-      val checkV = latestVersion(dir)
-      val (entries, dvM, cmb) = resolveFull(dir, checkV)
+      val snap = snapshot(dir)
+      val entries = snap.entries
       require(entries.nonEmpty, s"txlog: analyze of empty table $dir")
       val columns = columns0.map(c =>
-        cmb.m.fold(c)(dmlPhysicalName(_, c, "ANALYZE")))
+        snap.colMap.fold(c)(dmlPhysicalName(_, c, "ANALYZE")))
       columns.foreach(c => require(
         !c.exists(ch => ch == ';' || ch == ',' || ch == '\t' || ch == '\n'),
         s"stats column name unsupported: $c"))
@@ -4085,8 +4079,8 @@ object TxLog {
         p -> (if (all.isEmpty) None else Some(all.mkString(",")))
       }
       commitWithStats(dir, adds,
-        dvSets = dvM.toMap.toSeq.map { case (p, d) => p -> Some(d) },
-        atVersion = checkV + 1)
+        dvSets = snap.dvs.toSeq.map { case (p, d) => p -> Some(d) },
+        atVersion = snap.version + 1)
     }
   }
 
@@ -4113,8 +4107,8 @@ object TxLog {
   def cloneShallow(src: String, dst: String, asOf: Int = -1): Int = {
     require(latestVersion(dst) == 0,
       s"txlog: clone target $dst already has a log — clone forks a NEW table")
-    val (entries, dvM, cmb) = resolveFull(src, asOf)
-    require(entries.nonEmpty,
+    val snap = snapshot(src, asOf)
+    require(snap.entries.nonEmpty,
       s"txlog: snapshot of $src at asOf=$asOf holds no files")
     // qualify every referenced path: the clone's manifest lives under a
     // different root, so a relative source path would resolve wrong
@@ -4123,16 +4117,16 @@ object TxLog {
       fsOf(path).makeQualified(path).toString
     }
     commitWithStats(dst,
-      entries.map { case (p, st) => qualify(p) -> st },
-      dvSets = dvM.toMap.toSeq.map { case (p, d) =>
+      snap.entries.map { case (p, st) => qualify(p) -> st },
+      dvSets = snap.dvs.toSeq.map { case (p, d) =>
         qualify(p) -> Some(qualify(d))
       },
-      colMap = cmb.m,
+      colMap = snap.colMap,
       // the addColumn type registry is snapshot state too — a clone of
       // a table with a never-written added column must null-fill it
-      colTypes = cmb.types.toSeq.map { case (p, t) => (p, Some(t)) },
+      colTypes = snap.types.map { case (p, t) => (p, Some(t)) },
       // CHECK constraints are table rules and travel with the fork
-      checkSets = cmb.checks.toSeq.map { case (n, e) => (n, Some(e)) })
+      checkSets = snap.checks.map { case (n, e) => (n, Some(e)) })
   }
 
   /** Drop the whole table — data files and log. (Test/rebuild helper;

@@ -102,6 +102,19 @@ object ScaleSuite {
 
     def best(body: => Any): Double = bestOf(_ => timed(body))
 
+    /** `repeat` runs of each of two contrast arms, after one untimed
+      * warm-up run apiece, alternating which arm goes first on each
+      * repeat so neither always pays the colder JVM. Returns each arm's
+      * per-repeat results. */
+    def interleaved[T](a: => T, b: => T): (Seq[T], Seq[T]) = {
+      a; b
+      val runs = (1 to repeat).map { r =>
+        if (r % 2 == 1) { val x = a; (x, b) }
+        else { val y = b; (a, y) }
+      }
+      (runs.map(_._1), runs.map(_._2))
+    }
+
     /** `body` on a fresh table root, destroyed before and after. */
     def withTable[T](name: String)(body: String => T): T = {
       val root = s"/tmp/graft_scale_$name"
@@ -119,6 +132,7 @@ object ScaleSuite {
   private def json(v: Any): String = v match {
     case s: String  => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     case xs: Seq[_] => xs.map(json).mkString("[", ",", "]")
+    case o: Option[_] => o.fold("null")(json)
     case other      => other.toString
   }
 
@@ -165,12 +179,16 @@ object ScaleSuite {
     * `files` log-only entries with two-column stats blobs (the log is the
     * cost surface, no data file is opened), then `checkpoint_s` (full
     * streamed checkpoint plus its parquet twin), `resolve_s` (checkpoint-
-    * seeded `liveEntries`), `twin_prune_s` (survivor selection as a
+    * seeded `snapshot`), `twin_prune_s` (survivor selection as a
     * distributed filter over the twin), `commit_s` (one more append),
     * `partspec_s` (backward-walk spec lookup) and `heap_mb` (retained
-    * bytes of one resolved snapshot). Claim: `commit_s`, `partspec_s`
-    * and `twin_prune_s` stay flat while checkpoint and resolve grow
-    * linearly, single-digit seconds at a million files. */
+    * bytes of one resolved snapshot's entries). `heap_mb` and
+    * `bytes_per_entry` print null below 10^5 files: the two-`System.gc()`
+    * settle is noisier than a small snapshot's retained bytes (4096
+    * files read -0.6 MB), so there the figure is meaningless rather than
+    * small. Claim: `commit_s`, `partspec_s` and `twin_prune_s` stay flat
+    * while checkpoint and resolve grow linearly, single-digit seconds at
+    * a million files. */
   private def manifest(c: Ctx, files: Seq[Int]): Unit = files.foreach { n =>
     c.withTable(s"manifest_$n") { root =>
       (0 until n).grouped(4096).foreach { g =>
@@ -191,7 +209,7 @@ object ScaleSuite {
         c.timed(TxLog.checkpoint(root))
       }
       TxLog.expireManifests(root) // the maintained-table steady state
-      val resolveS = c.best(require(TxLog.liveEntries(root).size == n))
+      val resolveS = c.best(require(TxLog.snapshot(root).entries.size == n))
       val twinPruneS = c.best {
         val hits = TxLog.prunedEntryCount(c.spark, root, "value", 8.0, 9.0)
         require(hits.exists(h => h >= 1 && h <= 4),
@@ -206,16 +224,17 @@ object ScaleSuite {
         rt.totalMemory() - rt.freeMemory()
       }
       val before = settledUsed()
-      var held: Seq[(String, Option[String])] = TxLog.liveEntries(root)
+      var held: Seq[(String, Option[String])] = TxLog.snapshot(root).entries
       require(held.size >= n)
       val after = settledUsed()
       held = null
+      val heldBytes = Some(after - before).filter(_ => n >= 100000)
       c.emit("live_files" -> n, "checkpoint_s" -> round(checkpointS, 3),
         "resolve_s" -> round(resolveS, 3),
         "twin_prune_s" -> round(twinPruneS, 3),
         "commit_s" -> round(commitS, 5), "partspec_s" -> round(partspecS, 5),
-        "heap_mb" -> round((after - before) / 1048576.0, 1),
-        "bytes_per_entry" -> math.round((after - before).toDouble / n))
+        "heap_mb" -> heldBytes.map(b => round(b / 1048576.0, 1)),
+        "bytes_per_entry" -> heldBytes.map(b => math.round(b.toDouble / n)))
     }
   }
 
@@ -314,7 +333,7 @@ object ScaleSuite {
           "failed" -> failed.get, "compact_rounds" -> compactRounds.get,
           "compactor_retries" -> compactorRetries.get)
         require(failed.get == 0, s"append exhausted its retry bound at N=$n")
-        require(TxLog.liveEntries(root).nonEmpty)
+        require(TxLog.snapshot(root).entries.nonEmpty)
       } finally prior.fold(hc.unset("graft.txlog.claim"))(
         hc.set("graft.txlog.claim", _))
     }
@@ -326,8 +345,9 @@ object ScaleSuite {
     * spearman (two midrank maps) and weightedQuantile (cumulative sums)
     * on lineitem, under `spark.graft.pinnedSort` true and false, with the
     * Spark job count of one execution as the mechanism check (unpinned
-    * re-executes the sort per pass). Run it on 10x data
-    * (`target/scale10`), where the sort dominates. */
+    * re-executes the sort per pass). The two arms of a query interleave
+    * ([[Ctx.interleaved]]). Run it on 10x data (`target/scale10`), where
+    * the sort dominates. */
   private def pinnedSort(c: Ctx, points: Seq[Int]): Unit = {
     val spark = c.spark
     val li = Graft.table(spark, c.sf, "lineitem")
@@ -341,28 +361,29 @@ object ScaleSuite {
     try {
       spark.range(1000000).selectExpr("sum(id)")
         .write.format("noop").mode("overwrite").save()
-      def arm(query: String, pinned: Boolean)(df: => DataFrame): Unit =
+      // one execution: (seconds, Spark jobs)
+      def run(pinned: Boolean, df: => DataFrame): (Double, Int) =
         c.withSqlConf("spark.graft.pinnedSort", pinned.toString) {
-          val runs = (1 to c.repeat).map { _ =>
-            val j0 = jobs.get
-            val s = c.timed(df.write.format("noop").mode("overwrite").save())
-            spark.sparkContext.getPersistentRDDs.values
-              .foreach(_.unpersist(blocking = true))
-            System.gc()
-            (s, jobs.get - j0)
-          }
+          val j0 = jobs.get
+          val s = c.timed(df.write.format("noop").mode("overwrite").save())
+          spark.sparkContext.getPersistentRDDs.values
+            .foreach(_.unpersist(blocking = true))
+          System.gc()
+          (s, jobs.get - j0)
+        }
+      def contrast(query: String)(df: => DataFrame): Unit = {
+        val (on, off) = c.interleaved(run(true, df), run(false, df))
+        for ((pinned, runs) <- Seq(true -> on, false -> off))
           c.emit("query" -> query, "pinned" -> pinned,
             "min" -> round(runs.map(_._1).min, 3),
             "all" -> runs.map(r => round(r._1, 3)),
             "jobs" -> runs.map(_._2).distinct)
-        }
-      for (p <- Seq(true, false)) {
-        arm("spearman", p)(StatsOps.spearman(li, Seq(col("l_returnflag")),
-          col("l_quantity"), col("l_extendedprice")))
-        arm("weighted_quantile", p)(StatsOps.weightedQuantile(li,
-          Seq(col("l_returnflag")), col("l_extendedprice"), col("l_quantity"),
-          q = 0.5))
       }
+      contrast("spearman")(StatsOps.spearman(li, Seq(col("l_returnflag")),
+        col("l_quantity"), col("l_extendedprice")))
+      contrast("weighted_quantile")(StatsOps.weightedQuantile(li,
+        Seq(col("l_returnflag")), col("l_extendedprice"), col("l_quantity"),
+        q = 0.5))
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -538,7 +559,8 @@ object ScaleSuite {
     * rows. `leaves` is what the FileIndex plans unfiltered,
     * `plan_point_s`/`plan_point_files` the zero-job planning of a point
     * filter, `query_on_s`/`query_off_s` the point aggregate with
-    * skipping on and with `spark.graft.scanPrune=false`. Claim:
+    * skipping on and with `spark.graft.scanPrune=false`, the two arms
+    * interleaved ([[Ctx.interleaved]]). Claim:
     * `plan_point_files` stays 1 and `query_on_s` flat while the table
     * grows 16x; `query_off_s` tracks the file count. */
   private def scanPrune(c: Ctx, leaves: Seq[Int]): Unit = leaves.foreach { n =>
@@ -555,8 +577,9 @@ object ScaleSuite {
       val planPointS = c.best { planPointFiles = Graft.plannedFiles(filtered) }
       def runQuery(): Long =
         filtered.agg(sum("v"), count(lit(1))).head().getLong(1)
-      val onS = c.best(runQuery())
-      val offS = c.withSqlConf("spark.graft.scanPrune", "false")(c.best(runQuery()))
+      val (on, off) = c.interleaved(c.timed(runQuery()),
+        c.withSqlConf("spark.graft.scanPrune", "false")(c.timed(runQuery())))
+      val (onS, offS) = (on.min, off.min)
       c.emit("leaves" -> planAllFiles, "table_rows" -> n * RowsPerLeaf,
         "plan_point_files" -> planPointFiles,
         "plan_point_s" -> round(planPointS, 3),

@@ -3,7 +3,7 @@ package graft.sources
 import java.net.URI
 import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardOpenOption}
 
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, Path, RawLocalFileSystem}
 import org.apache.spark.sql.SparkSession
 
 /** Test double for an S3-class object store: a Hadoop FileSystem whose
@@ -71,6 +71,43 @@ object FakeObjectStoreFileSystem {
     require(absolutePath.startsWith("/"),
       s"need an absolute path: $absolutePath")
     s"$Scheme://$absolutePath"
+  }
+}
+
+/** [[FakeObjectStoreFileSystem]] that counts every open of a file under a
+  * `_txlog/` directory — on an object store each is a GET, and a log
+  * replay costs one per manifest it reads. Specs pin a verb's replay
+  * count with it. */
+class CountingObjectStoreFileSystem extends FakeObjectStoreFileSystem {
+  override def getScheme: String = CountingObjectStoreFileSystem.Scheme
+  override def getUri: URI =
+    URI.create(s"${CountingObjectStoreFileSystem.Scheme}:///")
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    if (f.toUri.getPath.contains("/_txlog/"))
+      CountingObjectStoreFileSystem.logOpens.incrementAndGet()
+    super.open(f, bufferSize)
+  }
+}
+
+object CountingObjectStoreFileSystem {
+  val Scheme = "countos"
+  val logOpens = new java.util.concurrent.atomic.AtomicLong
+
+  def register(spark: SparkSession): Unit =
+    spark.sparkContext.hadoopConfiguration.set(
+      s"fs.$Scheme.impl", classOf[CountingObjectStoreFileSystem].getName)
+
+  def uri(absolutePath: String): String = {
+    require(absolutePath.startsWith("/"),
+      s"need an absolute path: $absolutePath")
+    s"$Scheme://$absolutePath"
+  }
+
+  /** `_txlog/` opens `body` makes. */
+  def logOpensOf(body: => Any): Long = {
+    val before = logOpens.get
+    body
+    logOpens.get - before
   }
 }
 

@@ -311,7 +311,7 @@ class TxLogSpec extends AnyFunSuite {
           TxLog.columnStats(batch, "x")))
     }
     assert(TxLog.optimize(spark, dir, "opt", targetFiles = 2) === 5)
-    val entries = TxLog.liveEntries(dir)
+    val entries = TxLog.snapshot(dir).entries
     assert(entries.size === 2)
     assert(entries.forall(_._2.exists(_.startsWith("x;"))),
       "compacted files must carry re-derived stats, not commit stats-free")
@@ -340,7 +340,7 @@ class TxLogSpec extends AnyFunSuite {
     assert(TxLog.read(spark, dir, asOf = 2).as[Int].collect().sorted.toSeq
       === Seq(1, 2, 3, 4), "time travel across the restore still works")
     assert(TxLog.restore(dir, 1) === 0, "re-restore is a no-op")
-    assert(TxLog.liveEntries(dir).forall(_._2.exists(_.startsWith("x;"))),
+    assert(TxLog.snapshot(dir).entries.forall(_._2.exists(_.startsWith("x;"))),
       "the restored file keeps its manifest stats")
     // rolling FORWARD to the compacted version is just another restore
     assert(TxLog.restore(dir, 3) === 5)
@@ -497,7 +497,7 @@ class TxLogSpec extends AnyFunSuite {
       "time travel to the pre-merge version is untouched")
     // the source file carries k stats (union of live stat columns), so
     // a probe outside every file's range prunes everything
-    assert(TxLog.liveEntries(dir).forall(_._2.exists(_.contains("k;"))),
+    assert(TxLog.snapshot(dir).entries.forall(_._2.exists(_.contains("k;"))),
       "every post-merge file carries k stats")
     val dup = Seq((5, "d", 1.0), (5, "e", 2.0)).toDF("k", "tag", "v")
     intercept[IllegalArgumentException] {
@@ -514,7 +514,7 @@ class TxLogSpec extends AnyFunSuite {
       (4, null, 4.0), (5, "buy", 5.0)).toDF("id", "etype", "v")
     val v = TxLog.commitPartitioned(spark, dir, "p1", df, "etype")
     assert(v === 1)
-    val entries = TxLog.liveEntries(dir)
+    val entries = TxLog.snapshot(dir).entries
     assert(entries.size === 4, "click, view, buy, null-default leaves")
     // the partition column survives in the data; the internal copy does not
     val back = TxLog.read(spark, dir)
@@ -546,8 +546,8 @@ class TxLogSpec extends AnyFunSuite {
     val dir = freshDir()
     val df = (0 until 30).map(i => (i, i % 3)).toDF("id", "bucket")
     assert(TxLog.commitPartitioned(spark, dir, "p1", df, "bucket") === 1)
-    assert(TxLog.liveEntries(dir).size === 3)
-    assert(TxLog.liveEntries(dir).forall(_._2.exists(_.contains("bucket;"))),
+    assert(TxLog.snapshot(dir).entries.size === 3)
+    assert(TxLog.snapshot(dir).entries.forall(_._2.exists(_.contains("bucket;"))),
       "numeric partition values carry a min=max range segment")
     def leavesOf(d: org.apache.spark.sql.DataFrame) =
       d.inputFiles.map(f => f.substring(0, f.lastIndexOf('/'))).distinct
@@ -739,7 +739,7 @@ class TxLogSpec extends AnyFunSuite {
     assert(live.contains(bigPath), "the big file is never touched")
     assert(live.size === 2, "three small files became one")
     assert(TxLog.read(spark, dir).count() === 50003, "content neutral")
-    assert(TxLog.liveEntries(dir).exists(_._2.exists(_.startsWith("a;"))),
+    assert(TxLog.snapshot(dir).entries.exists(_._2.exists(_.startsWith("a;"))),
       "the compacted file re-derives the union of its inputs' stat columns")
     assert(TxLog.optimizeIncremental(spark, dir, "inc2", 100000) === 0,
       "one remaining small file: nothing to gain, no commit")
@@ -848,7 +848,7 @@ class TxLogSpec extends AnyFunSuite {
       Seq(1, 2))
     // a rewrite re-derives ranges and drops blooms without choking
     assert(TxLog.optimize(spark, dir, "opt", targetFiles = 1) === 3)
-    val st = TxLog.liveEntries(dir).head._2
+    val st = TxLog.snapshot(dir).entries.head._2
     assert(st.exists(_.contains("x;")), "range stats survive the rewrite")
     assert(!st.exists(_.contains("#bf#")), "blooms are per-ingest artifacts")
     assert(TxLog.read(spark, dir).count() === 4, "content neutral")
@@ -897,7 +897,7 @@ class TxLogSpec extends AnyFunSuite {
     // file before the compactor's swap lands — committing the compacted
     // copy would resurrect the newly-deleted rows
     TxLog.deleteWhereDV(spark, dir, "dv1", col("x") === 3L)
-    val staleDvs = TxLog.liveDvs(dir)
+    val staleDvs = TxLog.snapshot(dir).dvs
     val staleInputs = TxLog.liveFiles(dir)
     val compacted = TxLog.writeBatch(
       TxLog.read(spark, dir).coalesce(1), dir, "slowCompact")
@@ -983,7 +983,7 @@ class TxLogSpec extends AnyFunSuite {
     TxLog.restore(dir, 1)                            // v3: back past the verb
     assert(TxLog.read(spark, dir).columns.toSeq === Seq("id", "n"),
       "restore to a pre-mapping version clears the mapping to identity")
-    assert(TxLog.columnMapping(dir).isEmpty)
+    assert(TxLog.snapshot(dir).colMap.isEmpty)
     TxLog.destroy(dir)
   }
 
@@ -1179,7 +1179,7 @@ class TxLogSpec extends AnyFunSuite {
       .filter(col("v") === 150.0)) === 1L)
     assert(TxLog.readPrunedByKey(spark, dir, "tag", "zzz").isDefined ===
       true) // b1 has no bloom -> always reads; b0's bloom proves absence
-    assert(TxLog.liveEntries(dir).exists(_._2.exists(_.contains("#bf#tag"))),
+    assert(TxLog.snapshot(dir).entries.exists(_._2.exists(_.contains("#bf#tag"))),
       "analyze must preserve the pre-existing bloom segment")
     // the deletion-vector binding survived the restate
     assert(TxLog.read(spark, dir).orderBy("id")
@@ -1203,7 +1203,7 @@ class TxLogSpec extends AnyFunSuite {
       TxLog.addConstraint(spark, dir, "v_big", "v > 15.0")
     }
     val v = TxLog.addConstraint(spark, dir, "v_pos", "v > 0.0")
-    assert(TxLog.constraintsOf(dir) === Seq("v_pos" -> "v > 0.0"))
+    assert(TxLog.snapshot(dir).checks === Seq("v_pos" -> "v > 0.0"))
     val filesPre = TxLog.liveFiles(dir)
     // a violating append/merge/update is rejected loudly, zero footprint
     val e = intercept[IllegalArgumentException] {
@@ -1233,10 +1233,10 @@ class TxLogSpec extends AnyFunSuite {
     // the rule travels with a clone, and restore rolls it back
     val dst = freshDir()
     TxLog.cloneShallow(dir, dst)
-    assert(TxLog.constraintsOf(dst) === Seq("v_pos" -> "v > 0.0"))
+    assert(TxLog.snapshot(dst).checks === Seq("v_pos" -> "v > 0.0"))
     TxLog.destroy(dst)
     TxLog.restore(dir, 1) // pre-constraint version
-    assert(TxLog.constraintsOf(dir).isEmpty,
+    assert(TxLog.snapshot(dir).checks.isEmpty,
       "restore across ADD CONSTRAINT must roll the rule back")
     // re-add, checkpoint, expire: the rule survives log retention
     TxLog.addConstraint(spark, dir, "v_pos", "v > 0.0")
@@ -1393,14 +1393,14 @@ class TxLogSpec extends AnyFunSuite {
     TxLog.commit(dir, Seq(TxLog.writeBatch(
       Seq((1L, 10.0, "a")).toDF("id", "score", "part"), dir, "b0")))
     TxLog.renameColumn(spark, dir, "score", "quality")
-    assert(TxLog.columnMapping(dir).isDefined)
+    assert(TxLog.snapshot(dir).colMap.isDefined)
     // the partitioned full replace writes LOGICAL-named leaves; leaving
     // the stale mapping in force would project the renamed column away
     // from the new files (ADVICE r13)
     TxLog.overwritePartitionedCols(spark, dir, "ow",
       Seq((2L, 20.0, "b"), (3L, 30.0, "c")).toDF("id", "quality", "part"),
       Seq("part"))
-    assert(TxLog.columnMapping(dir).isEmpty,
+    assert(TxLog.snapshot(dir).colMap.isEmpty,
       "a full replace must clear the mapping to identity")
     assert(TxLog.read(spark, dir).orderBy("id")
       .as[(Long, Double, String)].collect().toSeq ===
@@ -1418,7 +1418,7 @@ class TxLogSpec extends AnyFunSuite {
     TxLog.renameColumn(spark, dir, "score", "quality")
     val v = TxLog.truncate(dir)
     assert(TxLog.liveFiles(dir).isEmpty)
-    assert(TxLog.columnMapping(dir).isEmpty)
+    assert(TxLog.snapshot(dir).colMap.isEmpty)
     assert(TxLog.read(spark, dir, asOf = v - 1).count() === 1L,
       "the truncated content must still time travel")
     TxLog.destroy(dir)
@@ -1528,7 +1528,7 @@ class TxLogSpec extends AnyFunSuite {
     assert(v === 3)
     // the new frame IS the schema: logical == physical again
     assert(TxLog.read(spark, dir).columns.toSeq === Seq("k", "tag"))
-    assert(TxLog.columnMapping(dir).isEmpty,
+    assert(TxLog.snapshot(dir).colMap.isEmpty,
       "a full replace must clear the mapping back to identity")
     // the replaced content still time travels under its OWN schema
     assert(TxLog.read(spark, dir, asOf = 2).columns.toSeq ===
@@ -1657,7 +1657,7 @@ class TxLogSpec extends AnyFunSuite {
     val v = TxLog.optimizeZOrder(spark, dir, "z", "x", "y",
       targetFiles = 4)
     assert(v === 2)
-    val entries = TxLog.liveEntries(dir)
+    val entries = TxLog.snapshot(dir).entries
     assert(entries.size === 4)
     assert(entries.forall(_._2.exists(_.contains("x;"))),
       "every z-file must carry multi-column stats")
@@ -1803,7 +1803,7 @@ class TxLogSpec extends AnyFunSuite {
     assert(v === 4, "the DV delete lands as an ordinary version")
     assert(TxLog.liveFiles(dir) === before,
       "merge-on-read: the data file set must be byte-identical")
-    val dvs = TxLog.liveDvs(dir)
+    val dvs = TxLog.snapshot(dir).dvs
     assert(dvs.keySet === Set(paths(1)), "only the holding batch is bound")
     assert(TxLog.read(spark, dir).select("x").as[Long].collect().sorted.toSeq
       === ((0L to 29L).filterNot(x => x >= 12 && x < 15)))
@@ -1830,7 +1830,7 @@ class TxLogSpec extends AnyFunSuite {
     val (dir, paths) = dvTable()
     TxLog.deleteWhereDV(spark, dir, "dva", col("x") === 12)
     TxLog.deleteWhereDV(spark, dir, "dvb", col("x") === 17)
-    assert(TxLog.liveDvs(dir).size === 1, "one binding per file, no chains")
+    assert(TxLog.snapshot(dir).dvs.size === 1, "one binding per file, no chains")
     assert(TxLog.read(spark, dir).select("x").as[Long].collect().sorted.toSeq
       === (0L to 29L).filterNot(x => x == 12 || x == 17))
     // pruned reads apply the mask too
@@ -1844,7 +1844,7 @@ class TxLogSpec extends AnyFunSuite {
     TxLog.deleteWhereDV(spark, dir, "dv1", col("x") === 11)
     // CoW delete on the SAME file materializes the mask in the rewrite
     TxLog.deleteWhere(spark, dir, "cow", col("x") === 13)
-    assert(TxLog.liveDvs(dir).isEmpty,
+    assert(TxLog.snapshot(dir).dvs.isEmpty,
       "the rewrite retired the bound file, clearing its binding")
     assert(TxLog.read(spark, dir).select("x").as[Long].collect().sorted.toSeq
       === (0L to 29L).filterNot(x => x == 11 || x == 13),
@@ -1855,9 +1855,9 @@ class TxLogSpec extends AnyFunSuite {
   test("optimize materializes deletion vectors and retires sidecars") {
     val (dir, _) = dvTable()
     TxLog.deleteWhereDV(spark, dir, "dv1", col("x") % 10 === 3)
-    assert(TxLog.liveDvs(dir).nonEmpty)
+    assert(TxLog.snapshot(dir).dvs.nonEmpty)
     assert(TxLog.optimize(spark, dir, "opt") > 0)
-    assert(TxLog.liveDvs(dir).isEmpty, "compaction materializes the mask")
+    assert(TxLog.snapshot(dir).dvs.isEmpty, "compaction materializes the mask")
     assert(TxLog.read(spark, dir).select("x").as[Long].collect().sorted.toSeq
       === (0L to 29L).filterNot(_ % 10 == 3))
     // after checkpoint + expire, vacuum reclaims the orphaned sidecar
@@ -1923,7 +1923,7 @@ class TxLogSpec extends AnyFunSuite {
     assert(xs === (0L to 29L).filterNot(_ == 7))
     // restore to pre-delete: everything visible again (binding cleared)
     assert(TxLog.restore(dir, 3) > 0)
-    assert(TxLog.liveDvs(dir).isEmpty)
+    assert(TxLog.snapshot(dir).dvs.isEmpty)
     assert(TxLog.read(spark, dir).count() === 30)
     // the resurrection is visible to CDC as +1 rows
     val feed = TxLog.readChanges(spark, dir, v4 + 1, TxLog.latestVersion(dir)).get
@@ -1940,7 +1940,7 @@ class TxLogSpec extends AnyFunSuite {
     TxLog.expireManifests(dir)
     assert(TxLog.read(spark, dir).select("x").as[Long].collect().sorted.toSeq
       === (3L to 29L), "the checkpoint-seeded snapshot still masks")
-    assert(TxLog.liveDvs(dir).size === 1)
+    assert(TxLog.snapshot(dir).dvs.size === 1)
     TxLog.destroy(dir)
   }
 
@@ -1962,7 +1962,7 @@ class TxLogSpec extends AnyFunSuite {
     // b2 (10..19) fully masked; b3 (20..29) masked one row of ten
     TxLog.deleteWhereDV(spark, dir, "dvh", col("x") >= 10 && col("x") < 20)
     TxLog.deleteWhereDV(spark, dir, "dvl", col("x") === 25)
-    assert(TxLog.liveDvs(dir).keySet === Set(paths(1), paths(2)))
+    assert(TxLog.snapshot(dir).dvs.keySet === Set(paths(1), paths(2)))
     val v = TxLog.optimizeDv(spark, dir, "mat", minMaskedFraction = 0.5)
     assert(v > 0)
     val live = TxLog.liveFiles(dir)
@@ -1970,13 +1970,13 @@ class TxLogSpec extends AnyFunSuite {
       "the fully-masked file rewrites to NOTHING: removed, no replacement")
     assert(live.contains(paths(2)),
       "the 10%-masked file stays under the threshold — untouched")
-    assert(TxLog.liveDvs(dir).keySet === Set(paths(2)),
+    assert(TxLog.snapshot(dir).dvs.keySet === Set(paths(2)),
       "the light file keeps its binding; the heavy one retired with its file")
     assert(TxLog.read(spark, dir).select("x").as[Long].collect().sorted.toSeq
       === (0L to 29L).filterNot(x => (x >= 10 && x < 20) || x == 25))
     // threshold crossed later: a second pass materializes the rest
     assert(TxLog.optimizeDv(spark, dir, "mat2", minMaskedFraction = 0.05) > 0)
-    assert(TxLog.liveDvs(dir).isEmpty)
+    assert(TxLog.snapshot(dir).dvs.isEmpty)
     assert(TxLog.optimizeDv(spark, dir, "mat3", 0.05) === 0, "idempotent")
     TxLog.destroy(dir)
   }
@@ -2003,7 +2003,7 @@ class TxLogSpec extends AnyFunSuite {
     assert(TxLog.read(spark, dir).select("x").as[Long].collect().sorted.toSeq
       === (0L to 29L).filterNot(_ == 4))
     assert(TxLog.read(spark, dir).filter(col("y") === 777).count() === 0)
-    assert(TxLog.liveDvs(dir).size === 1, "source bindings untouched")
+    assert(TxLog.snapshot(dir).dvs.size === 1, "source bindings untouched")
     // a clone vacuum sweeps only the clone's own data dir — the
     // referenced source files are out of its jurisdiction by layout
     TxLog.checkpoint(dst)
@@ -2033,7 +2033,7 @@ class TxLogSpec extends AnyFunSuite {
     // mask three even rows: the touched batch dirs are PARTITION LEAVES
     TxLog.deleteWhereDV(spark, dir, "dvp", col("x").isin(2L, 4L, 22L))
     assert(TxLog.liveFiles(dir) === before, "no leaf rewrites")
-    assert(TxLog.liveDvs(dir).size === 2,
+    assert(TxLog.snapshot(dir).dvs.size === 2,
       "one binding per touched even-leaf (both batches)")
     // the point probe still prunes to the even leaves AND applies masks
     val probe = TxLog.readPrunedByKey(spark, dir, "kind", "even").get
@@ -2070,11 +2070,11 @@ class TxLogSpec extends AnyFunSuite {
     TxLog.destroy(dir)
   }
 
-  /** The twin-path contract: scanEntries == resolveFull, exactly. */
+  /** The twin-path contract: scanEntries == snapshot, exactly. */
   private def entriesViaDriver(dir: String)
       : Set[(String, Option[String], Option[String])] = {
-    val dvs = TxLog.liveDvs(dir)
-    TxLog.liveEntries(dir)
+    val dvs = TxLog.snapshot(dir).dvs
+    TxLog.snapshot(dir).entries
       .map { case (p, st) => (p, st, dvs.get(p)) }.toSet
   }
 
@@ -2110,8 +2110,8 @@ class TxLogSpec extends AnyFunSuite {
     // asOf resolution through the twin pins the intermediate version
     val vMid = 2 // checkpoint at 1, first delta commit at 2
     assert(TxLog.scanEntriesCollected(spark, dir, asOf = vMid).get.toSet ===
-      TxLog.liveEntries(dir, asOf = vMid).map { case (p, st) =>
-        (p, st, TxLog.liveDvs(dir, asOf = vMid).get(p)) }.toSet)
+      TxLog.snapshot(dir, asOf = vMid).entries.map { case (p, st) =>
+        (p, st, TxLog.snapshot(dir, asOf = vMid).dvs.get(p)) }.toSet)
     // a SECOND checkpoint folds the delta in; twin follows
     TxLog.checkpoint(dir)
     TxLog.expireManifests(dir)
@@ -2195,12 +2195,12 @@ class TxLogSpec extends AnyFunSuite {
       Seq((3L, 3.0)).toDF("id", "v"), "b1"))
     assert(ids() === Seq(1L, 2L, 3L))
     lands(3)(TxLog.addConstraint(spark, dir, "pos", "id > 0"))
-    assert(TxLog.constraintsOf(dir) === Seq("pos" -> "id > 0"))
+    assert(TxLog.snapshot(dir).checks === Seq("pos" -> "id > 0"))
     lands(4)(TxLog.overwriteAll(spark, dir,
       Seq((4L, 4.0), (5L, 5.0)).toDF("id", "v"), "ow"))
     assert(ids() === Seq(4L, 5L))
     lands(5)(TxLog.analyze(spark, dir, Seq("v")))
-    assert(TxLog.liveEntries(dir).flatMap(_._2).exists(_.contains("v;4.0;5.0")))
+    assert(TxLog.snapshot(dir).entries.flatMap(_._2).exists(_.contains("v;4.0;5.0")))
     val live = TxLog.liveFiles(dir)
     val compacted = TxLog.writeBatch(
       TxLog.read(spark, dir).coalesce(1), dir, "compact")
@@ -2217,7 +2217,7 @@ class TxLogSpec extends AnyFunSuite {
       Seq((4L, 4.0, None), (5L, 5.0, None), (6L, 6.0, Some("n"))))
     lands(10)(TxLog.truncate(dir))
     assert(TxLog.liveFiles(dir).isEmpty)
-    assert(TxLog.columnMapping(dir).isEmpty)
+    assert(TxLog.snapshot(dir).colMap.isEmpty)
     TxLog.destroy(dir)
 
     val pdir = freshDir()
@@ -2316,6 +2316,110 @@ class TxLogSpec extends AnyFunSuite {
       "add\t/data/b",
       "dv\t/data/a\t/dv/a1").mkString("", "\n", "\n"))
     TxLog.destroy(dir)
+  }
+
+  test("merge, optimize and DESCRIBE DETAIL replay the log once per commit attempt") {
+    import CountingObjectStoreFileSystem.logOpensOf
+    CountingObjectStoreFileSystem.register(spark)
+    val dir = CountingObjectStoreFileSystem.uri(freshDir())
+    (1 to 3).foreach { i =>
+      TxLog.commit(dir, Seq(TxLog.writeBatch(
+        Seq((i.toLong, i * 1.0)).toDF("k", "v"), dir, s"b$i")))
+    }
+    // one replay at version V opens the V manifests
+    assert(logOpensOf(TxLog.snapshot(dir)) === 3)
+    // the verb's snapshot, then the commit attempt's conflict check
+    assert(logOpensOf(TxLog.merge(spark, dir, "m",
+      Seq((2L, 20.0), (9L, 9.0)).toDF("k", "v"), Seq("k"))) === 2 * 3)
+    assert(TxLog.latestVersion(dir) === 4)
+    assert(logOpensOf(TxLog.optimize(spark, dir, "o")) === 2 * 4)
+    assert(TxLog.read(spark, dir).as[(Long, Double)].collect().sorted.toSeq ===
+      Seq((1L, 1.0), (2L, 20.0), (3L, 3.0), (9L, 9.0)))
+    val wh = java.nio.file.Files.createTempDirectory("txlog-cat").toString
+    spark.conf.set("spark.sql.catalog.txcount",
+      classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.txcount.warehouse", wh)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS txcount.ns")
+    spark.sql(s"CREATE TABLE txcount.ns.t USING graft LOCATION '$dir'")
+    try {
+      // the first DESCRIBE memoizes the table load's partition-spec walk
+      spark.sql("DESCRIBE DETAIL txcount.ns.t").collect()
+      var row: org.apache.spark.sql.Row = null
+      assert(logOpensOf {
+        row = spark.sql("DESCRIBE DETAIL txcount.ns.t").head()
+      } === 5, "one replay of v1..v5")
+      assert(row.getAs[Int]("version") === 5 && row.getAs[Int]("n_files") === 1)
+    } finally spark.sql("DROP TABLE txcount.ns.t")
+    TxLog.destroy(dir)
+  }
+
+  test("the partspec and txn walks agree with the full replay at every resolvable version") {
+    val dir = freshDir()
+    val apps = Seq("app", "other", "never")
+    def agreeAtLatest(): Unit = {
+      val s = TxLog.snapshot(dir)
+      assert(TxLog.partitionSpec(dir) === s.partSpec, s"v${s.version}")
+      apps.foreach(a =>
+        assert(TxLog.txnVersion(dir, a) === s.txns.get(a), s"$a @ v${s.version}"))
+    }
+    def f(i: Int) = s"$dir/data/f$i"
+    agreeAtLatest() // the empty table
+    Seq[() => Int](
+      () => TxLog.commitWithStats(dir,
+        Seq(f(1) -> Some("x;1.0;2.0"), f(2) -> None),
+        partSpecSet = Some(Seq("p1"))),
+      () => TxLog.commitWithStats(dir, Seq(f(3) -> Some("x;5.0;6.0")),
+        remove = Seq(f(1)), txn = Some("app" -> 5L)),
+      () => TxLog.commitWithStats(dir, Nil,
+        dvSets = Seq(f(2) -> Some(s"$dir/dv/d1")),
+        colMap = Some(Seq("x" -> "x", "y" -> "y"))),
+      () => TxLog.commitWithStats(dir, Nil,
+        colTypes = Seq("z" -> Some("int")),
+        checkSets = Seq("pos" -> Some("x > 0"))),
+      () => TxLog.commitWithStats(dir, Nil, txn = Some("app" -> 7L)),
+      () => TxLog.commitWithStats(dir, Nil, txn = Some("other" -> 1L),
+        partSpecSet = Some(Seq("p2", "bucket(4,x)"))),
+      () => TxLog.checkpoint(dir),
+      () => TxLog.commitWithStats(dir, Nil,
+        dvSets = Seq(f(2) -> None), txn = Some("other" -> 2L)),
+      () => TxLog.commitWithStats(dir, Seq(f(5) -> None),
+        partSpecSet = Some(Nil)),
+      () => TxLog.expireManifests(dir),
+      () => TxLog.restore(dir, 7),
+      () => TxLog.checkpoint(dir),
+      () => TxLog.commitWithStats(dir, Seq(f(4) -> None),
+        txn = Some("app" -> 9L)),
+      () => TxLog.restore(dir, 6),
+      () => TxLog.commitWithStats(dir, Nil, partSpecSet = Some(Seq("p3")))
+    ).foreach { step => step(); agreeAtLatest() }
+    val resolvable = new java.io.File(dir, "_txlog").list().toSeq
+      .collect { case n if n.matches("[vc]\\d{8}\\.json") =>
+        n.substring(1, 9).toInt }
+      .distinct.sorted
+    assert(resolvable === (6 to 12), "v1..v5 expired behind c6")
+    resolvable.foreach { v =>
+      assert(TxLog.partitionSpec(dir, v) === TxLog.snapshot(dir, v).partSpec,
+        s"v$v")
+    }
+    assert(TxLog.snapshot(dir).txns ===
+      Map("app" -> 9L, "other" -> 2L), "marks survive restore")
+    TxLog.destroy(dir)
+    // a pre-layout-2 checkpoint carries its marks AFTER the adds: the
+    // walk streams the whole file there
+    val old = freshDir()
+    val ld = java.nio.file.Paths.get(old, "_txlog")
+    java.nio.file.Files.createDirectories(ld)
+    java.nio.file.Files.write(ld.resolve("c00000001.json"), Seq(
+      "meta\tts\t1", "add\t/data/a", "meta\ttxn\tapp\t3",
+      "meta\tpartspec\tp").mkString("", "\n", "\n")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val s = TxLog.snapshot(old)
+    assert(s.files === Seq("/data/a"))
+    assert(TxLog.txnVersion(old, "app") === Some(3L) &&
+      s.txns.get("app") === Some(3L))
+    assert(TxLog.partitionSpec(old) === Some(Seq("p")) &&
+      s.partSpec === Some(Seq("p")))
+    TxLog.destroy(old)
   }
 }
 
