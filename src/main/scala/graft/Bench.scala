@@ -22,8 +22,16 @@ object Bench {
     // stop in finally, THEN print: the compact summary must be the last
     // stdout line of the process even when the run fails part-way — a
     // bench runner parses the tail of stdout as JSON (build.sbt strips
-    // sbt's "[info] " run prefix and "[success]" footer)
-    val summary = try run(spark) finally spark.stop()
+    // sbt's "[info] " run prefix and "[success]" footer); a failing stop
+    // is logged to stderr, so it neither drops the summary nor masks a
+    // failure of the run itself
+    val summary = try run(spark) finally {
+      try spark.stop()
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[bench] spark.stop() failed: $e")
+      }
+    }
     println(summary)
   }
 

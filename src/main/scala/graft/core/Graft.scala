@@ -63,9 +63,16 @@ object Graft {
     *    precision above 2^53 ns.
     *  - timestamp[us] without timezone: arrives as TIMESTAMP_NTZ; cast to
     *    TIMESTAMP, which interprets the wall-clock in the session zone
-    *    (pinned UTC by every entrypoint) — the same instant DuckDB reads. */
+    *    (pinned UTC by every entrypoint) — the same instant DuckDB reads.
+    *
+    * The schema comes from the file's own footer, read on the driver
+    * ([[org.apache.spark.sql.graftbridge.FooterSchema]]), so loading a
+    * table starts no Spark job; layouts Spark would infer differently
+    * (partitioned dirs, summary files, `mergeSchema`) keep Spark's
+    * inference. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = org.apache.spark.sql.graftbridge.FooterSchema.read(
+      spark, s"$dir/$name.parquet")
     if (name != "events") df
     else df.schema.find(_.name == "ts").map(_.dataType) match {
       case Some(org.apache.spark.sql.types.LongType) =>

@@ -239,16 +239,18 @@ object GraftScanBridge {
     val fmt = new ParquetFileFormat
     val allParts = dirs.flatMap(_._2.toSeq)
     val options = Map("mergeSchema" -> mergeSchema.toString)
-    // schema from the footers we already listed (one footer on the
-    // default path, a distributed union under mergeSchema) — no second
-    // listing job
+    // schema from the footers we already listed — no second listing
+    // job: the first part's footer read on the driver by default, a
+    // distributed union under mergeSchema
     // asNullable — the same normalization Spark's DataSource.resolveRelation
     // applies to every file-source schema: a footer written from a
     // non-null frame marks its fields REQUIRED, and under a mergeSchema
     // union the vectorized reader would then REFUSE files that predate
     // such a column instead of null-filling it
-    val schema = fmt.inferSchema(classic, options,
-      if (mergeSchema) allParts else allParts.take(1)).getOrElse(
+    val inferred =
+      if (mergeSchema) fmt.inferSchema(classic, options, allParts)
+      else allParts.headOption.map(FooterSchema.ofFile(classic, _, hconf))
+    val schema = inferred.getOrElse(
       throw new IllegalArgumentException(
         s"graft: could not infer a parquet schema over " +
           s"${dirEntries.size} batch dirs (first: " +

@@ -107,6 +107,104 @@ object SqlBridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** `body`'s result and the number of Spark jobs started while it ran.
+    * The listener bus delivers asynchronously, so it is drained
+    * (`waitUntilEmpty`, `private[spark]`) before the listener joins —
+    * queued events of earlier jobs would reach it — and again before the
+    * count is read. Jobs other threads start meanwhile count too. */
+  def jobsOf[T](spark: org.apache.spark.sql.SparkSession)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    sc.listenerBus.waitUntilEmpty()
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      sc.listenerBus.waitUntilEmpty()
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+}
+
+/** A parquet read's schema from ONE driver-side footer read — the
+  * reference's client-side `FileInputFormat.getSplits` discipline: learn
+  * the input's shape from file metadata before submission instead of
+  * running a one-task Spark job for it. Spark's non-merge inference
+  * (`ParquetUtils.inferSchema`) reads exactly one footer too, but ships
+  * that read as a job; this reads the same file — the first data file
+  * by full path name — on the driver and converts it with Spark's own
+  * converter built from the session conf (`nanosAsLong`, the NTZ and
+  * binary-as-string flags), so the result is the type Spark would infer.
+  *
+  * Whenever Spark would read something else, [[of]] answers None and the
+  * caller keeps `spark.read.parquet`: schema merging requested (the
+  * `mergeSchema` conf; callers that pass the option never ask), a
+  * `_metadata` / `_common_metadata` summary file, a glob, a first path
+  * holding a sub-directory (a partitioned layout) or no data file (an
+  * empty dir), or a path that does not exist (Spark raises the error). */
+object FooterSchema {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.types.StructType
+
+  /** The schema `spark.read.parquet(paths: _*)` would infer, or None. */
+  def of(spark: SparkSession, paths: Seq[String]): Option[StructType] = {
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    if (paths.isEmpty || classic.sessionState.conf.isParquetSchemaMergingEnabled ||
+        paths.exists(_.exists("*?[]{}".contains(_)))) None
+    else {
+      val hconf = classic.sessionState.newHadoopConf()
+      try {
+        // Spark sorts every leaf file by its full path and reads the
+        // first: the smallest root (with its separator, so `b1/` sorts
+        // before `b10/`) holds it
+        val root = paths.map { p =>
+          val path = new Path(p)
+          path.getFileSystem(hconf).makeQualified(path)
+        }.minBy(_.toString + "/")
+        val listed = root.getFileSystem(hconf).listStatus(root)
+        if (listed.exists(s => s.isDirectory ||
+            Set("_metadata", "_common_metadata")(s.getPath.getName))) None
+        else listed.filter(s => isData(s.getPath.getName))
+          .sortBy(_.getPath.toString).headOption.map(ofFile(spark, _, hconf))
+      } catch { case _: java.io.FileNotFoundException => None }
+    }
+  }
+
+  /** The schema of one parquet file's footer, nullable as every
+    * file-source relation's schema is (`DataSource.resolveRelation`). */
+  def ofFile(spark: SparkSession, file: FileStatus,
+      hconf: org.apache.hadoop.conf.Configuration): StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val footer = ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, hconf),
+      org.apache.parquet.format.converter.ParquetMetadataConverter
+        .SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.asInstanceOf[
+        org.apache.spark.sql.classic.SparkSession].sessionState.conf)).asNullable
+  }
+
+  /** `spark.read.parquet(paths: _*)`, with the schema from [[of]] when
+    * it answers — the same relation without the inference job. */
+  def read(spark: SparkSession, paths: String*): DataFrame =
+    of(spark, paths).fold(spark.read.parquet(paths: _*))(
+      spark.read.schema(_).parquet(paths: _*))
+
+  // the data files Spark's file index keeps (`shouldFilterOutPathName`):
+  // hidden names and in-flight copies are skipped (summary files are
+  // handled above)
+  private def isData(name: String): Boolean =
+    !((name.startsWith("_") && !name.contains("=")) ||
+      name.startsWith(".") || name.endsWith("._COPYING_"))
 }
 
 /** `ExpectsInputTypes.inputTypes` returns `Seq[AbstractDataType]`, and

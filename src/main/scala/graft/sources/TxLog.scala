@@ -582,10 +582,18 @@ object TxLog {
       else checkpointFile(dir, v)
     // streamed with early exit: the header is the first line, so a
     // million-entry checkpoint's timestamp costs one buffered read
-    logLines(dir, p, s"manifest v$v")(_.collectFirst {
-      case l if l.startsWith("meta\tts\t") => l.split("\t", 3)(2).toLong
-    }).getOrElse(fsOf(p).getFileStatus(p).getModificationTime)
+    logLines(dir, p, s"manifest v$v")(metaTsOf)
+      .getOrElse(mtimeOf(p))
   }
+
+  /** The `meta ts` header among a log file's lines, if it carries one. */
+  private def metaTsOf(lines: Iterator[String]): Option[Long] =
+    lines.collectFirst {
+      case l if l.startsWith("meta\tts\t") => l.split("\t", 3)(2).toLong
+    }
+
+  private def mtimeOf(p: Path): Long =
+    fsOf(p).getFileStatus(p).getModificationTime
 
   /** Timestamp-based time travel resolution (public precedent: Delta's
     * `TIMESTAMP AS OF`): the newest version whose commit time is at or
@@ -683,21 +691,71 @@ object TxLog {
   def columnStatsMulti(df: DataFrame,
       columns: Seq[String]): Option[String] = {
     require(columns.nonEmpty, "need at least one stats column")
+    val aggs = statsAggs(columns)
+    val r = df.agg(aggs.head, aggs.tail: _*).head()
+    statsBlobOf(columns, r.getValuesMap[Any](r.schema.fieldNames.toSeq))
+  }
+
+  /** Each column's min and max as doubles, named for [[boundsOf]] —
+    * the aggregates behind stats blobs and key pruning, so they can ride
+    * any job that already scans the rows (observe()). */
+  private def minMaxAggs(columns: Seq[String]): Seq[org.apache.spark.sql.Column] = {
+    import org.apache.spark.sql.functions.{col, max, min}
+    columns.zipWithIndex.flatMap { case (c, i) =>
+      Seq(min(col(c).cast("double")).as(s"_graft_mn$i"),
+        max(col(c).cast("double")).as(s"_graft_mx$i"))
+    }
+  }
+
+  /** (column, min, max) from [[minMaxAggs]]' values, for each column
+    * that held a non-null value. */
+  private def boundsOf(columns: Seq[String],
+      values: Map[String, Any]): Seq[(String, Double, Double)] =
+    columns.zipWithIndex.flatMap { case (c, i) =>
+      (values(s"_graft_mn$i"), values(s"_graft_mx$i")) match {
+        case (mn: Double, mx: Double) => Some((c, mn, mx))
+        case _                        => None
+      }
+    }
+
+  /** [[minMaxAggs]] over stats columns, whose names the blob grammar
+    * must be able to carry. */
+  private def statsAggs(columns: Seq[String]): Seq[org.apache.spark.sql.Column] = {
     columns.foreach(c => require(
       !c.exists(ch => ch == ';' || ch == ',' || ch == '\t' || ch == '\n'),
       s"stats column name unsupported: $c"))
-    val aggs = columns.flatMap { c =>
-      Seq(org.apache.spark.sql.functions.min(
-            org.apache.spark.sql.functions.col(c).cast("double")),
-          org.apache.spark.sql.functions.max(
-            org.apache.spark.sql.functions.col(c).cast("double")))
-    }
-    val r = df.agg(aggs.head, aggs.tail: _*).head()
-    val segs = columns.zipWithIndex.flatMap { case (c, i) =>
-      if (r.isNullAt(2 * i)) None
-      else Some(s"$c;${r.getDouble(2 * i)};${r.getDouble(2 * i + 1)}")
-    }
+    minMaxAggs(columns)
+  }
+
+  /** The `col;min;max` blob from [[statsAggs]]' values: all-null columns
+    * drop their segment; None when every column is all-null. */
+  private def statsBlobOf(columns: Seq[String],
+      values: Map[String, Any]): Option[String] = {
+    val segs = boundsOf(columns, values).map { case (c, mn, mx) => s"$c;$mn;$mx" }
     if (segs.isEmpty) None else Some(segs.mkString(","))
+  }
+
+  /** `df` pinned by `localCheckpoint`, with `metrics` (named aggregates)
+    * observed on the pinning job itself — the counters ride the job that
+    * moves the data instead of each costing a job of its own. */
+  private def pinObserved(df: DataFrame,
+      metrics: Seq[org.apache.spark.sql.Column]): (DataFrame, Map[String, Any]) = {
+    val obs = org.apache.spark.sql.Observation()
+    val pinned = df.observe(obs, metrics.head, metrics.tail: _*).localCheckpoint()
+    (pinned, obs.get)
+  }
+
+  /** [[writeBatch]] that counts the written rows and derives the
+    * `statCols` blob ([[columnStatsMulti]]) on the write job itself —
+    * no read-back. Returns (path, rows, stats). */
+  private def writeObserved(df: DataFrame, dir: String, name: String,
+      statCols: Seq[String]): (String, Long, Option[String]) = {
+    import org.apache.spark.sql.functions.{count, lit}
+    val obs = org.apache.spark.sql.Observation()
+    val path = writeBatch(df.observe(obs, count(lit(1)).as("_graft_n"),
+      statsAggs(statCols): _*), dir, name)
+    val m = obs.get
+    (path, m("_graft_n").asInstanceOf[Long], statsBlobOf(statCols, m))
   }
 
   /** [[columnStatsMulti]] for EVERY group of an int key column in ONE
@@ -1467,13 +1525,10 @@ object TxLog {
     // exactly the pinned version + 1 makes any interleaving commit force
     // this writer through a lost race and a re-validation.)
     val repin = checkPin(dir, df, "append") // logical rows, pre-rename
-    def autoStats(path: String): Option[String] =
-      autoStatsFor(spark, path, autoStatsCols)
     repin().colMap match {
       case None =>
         // unmapped table: physical == logical, plain append
-        val path = writeBatch(df, dir, name)
-        val st = autoStats(path)
+        val (path, st) = writeAutoStats(df, dir, name, autoStatsCols)
         retryOnLostRace(dir)(_ => commitWithStats(dir, Seq(path -> st),
           txn = txn, atVersion = repin().version + 1))
       case Some(_) =>
@@ -1499,11 +1554,12 @@ object TxLog {
           val path = written match {
             case Some((names, p)) if names == physNames => p
             case _ =>
-              val p = writeBatch(df.select(df.columns.toSeq.map(c =>
+              // stats under physical names, as blobs carry
+              val (p, st) = writeAutoStats(df.select(df.columns.toSeq.map(c =>
                 col(c).as(full(c))): _*), dir, name + (
-                  if (attempt == 1) "" else s"_r$attempt"))
+                  if (attempt == 1) "" else s"_r$attempt"), autoStatsCols)
               written = Some((physNames, p))
-              writtenStats = autoStats(p) // physical names, as blobs carry
+              writtenStats = st
               p
           }
           val colMap =
@@ -1515,29 +1571,25 @@ object TxLog {
     }
   }
 
-  /** STATS-ON-WRITE (Delta's default analogue): derive a manifest range
-    * blob for up to `n` numeric columns of a just-written batch — one
-    * cheap columnar read-back of only those columns — so the commit
+  /** STATS-ON-WRITE (Delta's default analogue): write `df` as a batch
+    * and derive a manifest range blob for up to `n` of its numeric
+    * columns on the write job itself ([[writeObserved]]), so the commit
     * prunes ([[readPruned]] / the scan-planning FileIndex) from day one
-    * without an ANALYZE. Best-effort by contract: an empty batch (no
-    * part files to infer from) yields None, never an error, because
-    * stats only ever ADD skipping. The SQL catalog passes n = 8 by
-    * default (`spark.graft.autoStats=false` opts out); API callers opt
-    * in per call. */
-  private def autoStatsFor(spark: SparkSession, path: String,
-      n: Int): Option[String] =
-    if (n <= 0) None
-    else
-      try {
-        val back = spark.read.parquet(path)
-        val numeric = back.schema.fields
-          .filter(_.dataType.isInstanceOf[
-            org.apache.spark.sql.types.NumericType])
-          .map(_.name).take(n).toSeq
-        if (numeric.isEmpty) None else columnStatsMulti(back, numeric)
-      } catch {
-        case _: org.apache.spark.sql.AnalysisException => None
-      }
+    * without an ANALYZE. An empty batch yields None: stats only ever ADD
+    * skipping. The SQL catalog passes n = 8 by default
+    * (`spark.graft.autoStats=false` opts out); API callers opt in per
+    * call. Returns (path, stats). */
+  private def writeAutoStats(df: DataFrame, dir: String, name: String,
+      n: Int): (String, Option[String]) = {
+    val numeric = if (n <= 0) Nil else df.schema.fields
+      .filter(_.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
+      .map(_.name).take(n).toSeq
+    if (numeric.isEmpty) writeBatch(df, dir, name) -> None
+    else {
+      val (path, _, st) = writeObserved(df, dir, name, numeric)
+      path -> st
+    }
+  }
 
   /** Atomic full REPLACE — one commit lands `df` as the table's entire
     * content: the new batch in, every live file out (their deletion-vector
@@ -1549,8 +1601,7 @@ object TxLog {
   def overwriteAll(spark: SparkSession, dir: String, df: DataFrame,
       name: String, autoStatsCols: Int = 0): Int = {
     val repin = checkPin(dir, df, "overwrite")
-    val path = writeBatch(df, dir, name)
-    val st = autoStatsFor(spark, path, autoStatsCols)
+    val (path, st) = writeAutoStats(df, dir, name, autoStatsCols)
     retryOnLostRace(dir)(_ => replaceAll(dir, repin(), Seq(path -> st)))
   }
 
@@ -1576,10 +1627,10 @@ object TxLog {
     * table owner runs FIRST when auditing what touched a 100 TB table. */
   def history(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val names = listLog(dir)
-    val inLog = names.toSet
-    val versions = names.collect { case ManifestName(d) => d.toInt }.sorted
+    val versions = listLog(dir).collect { case ManifestName(d) => d.toInt }.sorted
     versions.toSeq.map { v =>
+      // one open per manifest: the commit time comes from the text in
+      // hand ([[manifestTs]]'s header rule, mtime for headerless ones)
       val text = readLogFile(dir, manifest(dir, v), s"manifest v$v")
       var (adds, removes, dvSet, dvClear, schema) = (0L, 0L, 0L, 0L, false)
       text.linesIterator.foreach { line =>
@@ -1593,7 +1644,8 @@ object TxLog {
           case _                      =>
         }
       }
-      (v, manifestTsIn(dir, inLog, v), adds, removes, dvSet, dvClear, schema)
+      val ts = metaTsOf(text.linesIterator).getOrElse(mtimeOf(manifest(dir, v)))
+      (v, ts, adds, removes, dvSet, dvClear, schema)
     }.toDF("version", "ts_millis", "n_added", "n_removed",
       "n_dv_bound", "n_dv_cleared", "schema_change")
   }
@@ -1892,7 +1944,7 @@ object TxLog {
         if (delta.touched.size + delta.dvSet.size +
             delta.dvCleared.size > 100000) None
         else {
-          val twinDf = spark.read.parquet(twin.toString)
+          val twinDf = parquet(spark, twin.toString)
           val base =
             if (delta.touched.isEmpty) twinDf
             else twinDf.filter(!col("path").isin(delta.touched: _*))
@@ -2147,8 +2199,14 @@ object TxLog {
   private val DvFileCol = "_graft_dv_file"
   private val DvPosCol = "_graft_dv_pos"
 
+  /** A plain (non-merging) parquet read of files this table wrote, its
+    * schema taken from one driver-side footer instead of an inference
+    * job ([[org.apache.spark.sql.graftbridge.FooterSchema]]). */
+  private def parquet(spark: SparkSession, paths: String*): DataFrame =
+    org.apache.spark.sql.graftbridge.FooterSchema.read(spark, paths: _*)
+
   private def dvRows(spark: SparkSession, dvDirs: Seq[String]): DataFrame =
-    spark.read.parquet(dvDirs.distinct: _*).select(DvFileCol, DvPosCol)
+    parquet(spark, dvDirs.distinct: _*).select(DvFileCol, DvPosCol)
 
   /** Size gate between the two masking regimes, from one file-count-sized
     * listing (no data read). On-disk parquet under-states in-memory row
@@ -2204,8 +2262,6 @@ object TxLog {
     // present in NO file yet projects as a typed null below. Tables ADD
     // COLUMN never touched pass Nil and keep the single-footer fast path.
     val ms = mergeSchema || nullFill.nonEmpty
-    def rd = if (ms) spark.read.option("mergeSchema", "true")
-             else spark.read
     // stats (batch dir → manifest blob): when the caller's snapshot
     // carries manifest stats, the scan plans over a stats-aware
     // FileIndex ([[graft.plans]]' GraftStatsFileIndex) that SKIPS
@@ -2220,7 +2276,8 @@ object TxLog {
         org.apache.spark.sql.graftbridge.GraftScanBridge.statsPrunedParquet(
           spark, group.map(p => p -> stats.getOrElse(p, None)),
           statsOverlap, bloomMayContain, ms)
-      else rd.parquet(group: _*)
+      else if (ms) spark.read.option("mergeSchema", "true").parquet(group: _*)
+      else parquet(spark, group: _*)
     def withMeta(df: DataFrame) = df
       .withColumn(DvFileCol, col("_metadata.file_path"))
       .withColumn(DvPosCol, col("_metadata.row_index"))
@@ -2715,27 +2772,18 @@ object TxLog {
       .map(r => batchDirOf(r.getString(0))).distinct.sorted.toSeq
   }
 
-  /** Write one rewrite output, then derive emptiness and fresh manifest
-    * stats from the WRITTEN file (a columnar read of just the stat
-    * columns) instead of recomputing the remainder plan two more times —
-    * each rewritten dir is read once and written once. An empty
-    * remainder leaves no file (and no add). */
-  private def writeRewrite(spark: SparkSession, dir: String, name: String,
-      remainder: DataFrame,
+  /** Write one rewrite output; its row count and fresh manifest stats
+    * ride the write job ([[writeObserved]]), so each rewritten dir is
+    * read once and written once, with no read-back. An empty remainder
+    * leaves no file (and no add). */
+  private def writeRewrite(dir: String, name: String, remainder: DataFrame,
       statCols: Seq[String]): Option[(String, Option[String])] = {
-    val path = writeBatch(remainder, dir, name)
-    // explicit schema: an all-rows-removed write may hold zero part
-    // files, which schema inference would refuse to read
-    val back = spark.read.schema(remainder.schema).parquet(path)
-    if (back.isEmpty) {
+    val (path, rows, st) = writeObserved(remainder, dir, name, statCols)
+    if (rows == 0) {
       val p = new Path(path)
       fsOf(p).delete(p, true)
       None
-    } else {
-      val st =
-        if (statCols.isEmpty) None else columnStatsMulti(back, statCols)
-      Some(path -> st)
-    }
+    } else Some(path -> st)
   }
 
   /** Shared copy-on-write commit scaffolding of [[deleteWhere]] and the
@@ -2745,7 +2793,7 @@ object TxLog {
     * stat columns re-derived, and swap atomically together with
     * `extraAdds`. Returns the commit version, or 0 when the verb
     * changes nothing. */
-  private def rewriteTouched(spark: SparkSession, dir: String, name: String,
+  private def rewriteTouched(dir: String, name: String,
       entries: Seq[(String, Option[String])], touched: Seq[String],
       remainderOf: String => DataFrame,
       extraAdds: Seq[(String, Option[String])], what: String,
@@ -2757,7 +2805,7 @@ object TxLog {
       s"txlog: ${touched.size - removes.size} matched batch dirs did not " +
         s"map back to a manifest path of $dir — refusing a partial $what")
     val rewrites = removes.zipWithIndex.flatMap { case (p, i) =>
-      writeRewrite(spark, dir, s"${name}_d$i", remainderOf(p),
+      writeRewrite(dir, s"${name}_d$i", remainderOf(p),
         statColsOf(statsByNorm(normPath(p))))
     }
     val adds = rewrites ++ extraAdds
@@ -2805,7 +2853,7 @@ object TxLog {
     // null-predicate rows); per-dir read keeps untouched dirs untouched;
     // a rewrite of a DV-bound dir reads through its mask (materializing
     // the vector) — raw reads here would resurrect masked rows
-    rewriteTouched(spark, dir, name, entries, touched,
+    rewriteTouched(dir, name, entries, touched,
       p => readMasked(spark, Seq(p), dvs, nullFill = nf)
         .filter(!coalesce(predicate, lit(false))),
       extraAdds = Nil, what = "delete", basedOnDvs = Some(dvs))
@@ -2875,10 +2923,7 @@ object TxLog {
       }
       val extraAdds =
         if (pinned.isEmpty) Nil
-        else {
-          val p = writeBatch(physDf, dir, name)
-          Seq(p -> autoStatsFor(spark, p, autoStatsCols))
-        }
+        else Seq(writeAutoStats(physDf, dir, name, autoStatsCols))
       if (entries.isEmpty) {
         if (extraAdds.isEmpty) return 0
         return commitWithStats(dir, extraAdds)
@@ -2886,7 +2931,7 @@ object TxLog {
       val touched = probeTouched(spark, entries.map(_._1), dvs,
         _.filter(predicate), nullFill = nf, stats = entries.toMap)
       if (touched.isEmpty && extraAdds.isEmpty) return 0
-      rewriteTouched(spark, dir, s"${name}_rw", entries, touched,
+      rewriteTouched(dir, s"${name}_rw", entries, touched,
         p => readMasked(spark, Seq(p), dvs, nullFill = nf)
           .filter(!coalesce(predicate, lit(false))),
         extraAdds = extraAdds, what = "replaceWhere",
@@ -3010,13 +3055,13 @@ object TxLog {
       case (p, _) if dvs.contains(p) &&
           maskedByDir(dvs(p)).getOrElse(normPath(p), 0L) > 0L => p
     }.filter { p =>
-      val total = spark.read.parquet(p).count()
+      val total = parquet(spark, p).count()
       val masked = maskedByDir(dvs(p))(normPath(p))
       total == 0L || masked.toDouble / total >= minMaskedFraction
     }
     if (victims.isEmpty) return 0
     val nf = snap.types
-    rewriteTouched(spark, dir, name, entries, victims.map(normPath),
+    rewriteTouched(dir, name, entries, victims.map(normPath),
       p => readMasked(spark, Seq(p), dvs, nullFill = nf),
       extraAdds = Nil, what = "optimizeDv", basedOnDvs = Some(dvs))
   }
@@ -3056,7 +3101,7 @@ object TxLog {
     // head-file columns plus typed metadata adds (a just-added column is
     // a legal SET target even before any file carries it)
     val tableCols =
-      spark.read.parquet(entries.head._1).columns.toSet ++ nf.map(_._1)
+      parquet(spark, entries.head._1).columns.toSet ++ nf.map(_._1)
     val missing = set.map(_._1).filterNot(tableCols)
     require(missing.isEmpty,
       s"updateWhereDV: SET targets column(s) absent from the table: " +
@@ -3159,7 +3204,7 @@ object TxLog {
     // forever (one footer read against the snapshot's schema; typed
     // metadata adds are legal SET targets before any file carries them)
     val tableCols =
-      spark.read.parquet(entries.head._1).columns.toSet ++ nf.map(_._1)
+      parquet(spark, entries.head._1).columns.toSet ++ nf.map(_._1)
     val missing = set.map(_._1).filterNot(tableCols)
     require(missing.isEmpty,
       s"updateWhere: SET targets column(s) absent from the table: " +
@@ -3184,7 +3229,7 @@ object TxLog {
       }: _*)
       enforceChecks(snap.checks, dir, applyMapping(preview, cm), "UPDATE")
     }
-    rewriteTouched(spark, dir, name, entries, touched,
+    rewriteTouched(dir, name, entries, touched,
       { p =>
         val df = readMasked(spark, Seq(p), dvs, nullFill = nf)
         val types = df.schema.map(f => f.name -> f.dataType).toMap
@@ -3244,7 +3289,7 @@ object TxLog {
     val batchStr = s"$dir/data/b_convert0"
     val st =
       if (statsCols.isEmpty) None
-      else columnStatsMulti(spark.read.parquet(batchStr), statsCols)
+      else columnStatsMulti(parquet(spark, batchStr), statsCols)
     commitWithStats(dir, Seq(batchStr -> st))
   }
 
@@ -3268,16 +3313,18 @@ object TxLog {
     val nf = snap.types
     val physKeys = keys.map(k =>
       cm.fold(k)(dmlPhysicalName(_, k, "MERGE DELETE key")))
-    val srcKeys = source
+    // the key count and bounds ride the pin's own job
+    val (srcKeys, seen) = pinObserved(source
       .select(keys.zip(physKeys).map { case (l, p) => col(l).as(p) }: _*)
-      .na.drop("any").distinct().localCheckpoint()
+      .na.drop("any").distinct(),
+      count(lit(1)).as("_graft_n") +: minMaxAggs(physKeys))
     try {
-      if (srcKeys.isEmpty) return 0
+      if (seen("_graft_n") == 0L) return 0
       val dvs = snap.dvs
       val touched = probeTouched(spark,
-        keyPrunedProbeFiles(entries, srcKeys, physKeys), dvs,
+        keyPrunedProbeFiles(entries, physKeys, seen), dvs,
         _.join(broadcast(srcKeys), physKeys, "left_semi"), nullFill = nf)
-      rewriteTouched(spark, dir, name, entries, touched,
+      rewriteTouched(dir, name, entries, touched,
         p => readMasked(spark, Seq(p), dvs, nullFill = nf)
           .join(broadcast(srcKeys), physKeys, "left_anti"),
         extraAdds = Nil, what = "deleteByKeys", basedOnDvs = Some(dvs))
@@ -3310,7 +3357,7 @@ object TxLog {
     enforceChecks(snap.checks, dir, source, "MERGE") // logical source rows
     val (physSource, physKeys) =
       sourceToPhysical(snap.colMap, source, keys, "MERGE", passCols = Nil)
-    mergeImpl(spark, dir, name, snap, identity, physSource, physKeys)
+    mergeImpl(spark, dir, name, snap, physSource, physKeys)
   }
 
   /** The write-side logical→physical half of the DML verbs on a
@@ -3369,9 +3416,8 @@ object TxLog {
       changes.filter(col(opCol) =!= deleteOp).drop(opCol), "APPLY CHANGES")
     val (physChanges, physKeys) = sourceToPhysical(snap.colMap, changes,
       keys, "APPLY CHANGES", passCols = Seq(opCol))
-    mergeImpl(spark, dir, name, snap,
-      k => k.filter(col(opCol) =!= deleteOp).drop(opCol), physChanges,
-      physKeys, opNullCheck = Some(opCol))
+    mergeImpl(spark, dir, name, snap, physChanges, physKeys,
+      feedOp = Some(opCol -> deleteOp))
   }
 
   /** Manifest-stats pre-pruning of a key-probe scan ([[merge]],
@@ -3379,20 +3425,14 @@ object TxLog {
     * ANY key column is disjoint from the source's span on that column
     * cannot hold an all-keys-equal match — it is skipped before any
     * footer is read ([[statsOverlap]], the readPruned trust contract).
-    * ONE aggregation derives every key's bounds; non-numeric keys and
-    * files without stats for a column prune nothing on that column
+    * Every key's bounds are [[minMaxAggs]] observed on the job that
+    * pins the source's key set (`seen`); non-numeric keys and files
+    * without stats for a column prune nothing on that column
     * (conservative). At a merge of a small batch into a 100 TB table,
     * this is what keeps even the PROBE from touching disjoint files. */
   private def keyPrunedProbeFiles(entries: Seq[(String, Option[String])],
-      nonNullKeyed: DataFrame, keys: Seq[String]): Seq[String] = {
-    import org.apache.spark.sql.functions._
-    val aggs = keys.flatMap(k => Seq(min(col(k).cast("double")),
-      max(col(k).cast("double"))))
-    val r = nonNullKeyed.agg(aggs.head, aggs.tail: _*).head()
-    val bounds = keys.zipWithIndex.flatMap { case (k, i) =>
-      if (r.isNullAt(2 * i)) None
-      else Some((k, r.getDouble(2 * i), r.getDouble(2 * i + 1)))
-    }
+      keys: Seq[String], seen: Map[String, Any]): Seq[String] = {
+    val bounds = boundsOf(keys, seen)
     if (bounds.isEmpty) entries.map(_._1)
     else entries.filter(e => bounds.forall { case (k, lo, hi) =>
       statsOverlap(e._2, k, lo, hi)
@@ -3401,95 +3441,106 @@ object TxLog {
 
   /** Shared copy-on-write core of [[merge]] and [[applyChanges]]:
     * `keyedRaw` carries every key leaving the current snapshot (upserted
-    * or deleted); `upsertsOf` derives what lands as the new source file
-    * from the PINNED feed, so the probe, cardinality check, bounds, key
-    * set, stats and source write all consume one materialization instead
-    * of re-running the caller's (possibly expensive) feed plan per
-    * action. */
+    * or deleted); what lands as the new source file is every pinned row
+    * of a merge, and for an applyChanges feed (`feedOp` = op column,
+    * delete marker) the non-delete rows with the marker dropped. The
+    * probe, cardinality check, bounds, key set, stats and source write
+    * all consume two materializations — the pinned feed and its pinned
+    * key multiplicities — instead of re-running the caller's (possibly
+    * expensive) feed plan per action, and every counter the verb decides
+    * on rides one of those pinning jobs (observe()) rather than a job of
+    * its own. */
   private def mergeImpl(spark: SparkSession, dir: String, name: String,
-      snap: Snapshot, upsertsOf: DataFrame => DataFrame,
-      keyedRaw: DataFrame, keys: Seq[String],
-      opNullCheck: Option[String] = None): Int = {
+      snap: Snapshot, keyedRaw: DataFrame, keys: Seq[String],
+      feedOp: Option[(String, String)] = None): Int = {
     import org.apache.spark.sql.functions._
     require(keys.nonEmpty, "merge needs at least one key column")
     val entries = snap.entries
     val cm = snap.colMap
     require(entries.nonEmpty,
       s"merge into an empty table $dir: commit the first batch instead")
-    val keyed = keyedRaw.localCheckpoint()
+    val lands = feedOp.fold(lit(true)) { case (oc, del) => col(oc) =!= del }
+    val (keyed, fed) = pinObserved(keyedRaw,
+      Seq(count(lit(1)).as("_graft_n"), count(when(lands, 1)).as("_graft_lands")) ++
+        feedOp.map { case (oc, _) =>
+          count(when(col(oc).isNull, 1)).as("_graft_null_ops") })
     try {
-      if (keyed.isEmpty) return 0
-      opNullCheck.foreach { oc =>
-        val nulls = keyed.filter(col(oc).isNull).count()
-        require(nulls == 0,
+      if (fed("_graft_n") == 0L) return 0
+      feedOp.foreach { case (oc, _) =>
+        val nulls = fed("_graft_null_ops")
+        require(nulls == 0L,
           s"applyChanges: $nulls feed rows carry a NULL '$oc' — a null op " +
             "cannot be classified as update or delete; fix the feed")
       }
       // cardinality check over NON-NULL keys only: a null key never
       // equi-matches a target row, so several null-key rows are ordinary
-      // independent inserts, not a multi-match
-      val nonNullKeyed =
+      // independent inserts, not a multi-match. The pinned per-key counts
+      // are also the distinct key set the probe and the rewrite
+      // broadcast, and their pinning job observes the key bounds
+      val (keyRows, seen) = pinObserved(
         keyed.filter(keys.map(col(_).isNotNull).reduce(_ && _))
-      val dupKeys = nonNullKeyed.groupBy(keys.map(col): _*)
-        .count().filter(col("count") > 1).limit(1).count()
-      require(dupKeys == 0,
-        s"merge source has duplicate keys on (${keys.mkString(", ")}) — " +
-          "a multi-match upsert is ill-defined; dedupe the source first")
-      val upserts0 = upsertsOf(keyed)
-      val headSchema = spark.read.parquet(entries.head._1).schema
-      val upserts = cm match {
-        case None =>
-          // schema drift check: a source missing (or adding) columns would
-          // land a heterogeneous file and make the default read()'s schema
-          // file-order dependent — fail loudly instead (Delta validates the
-          // write schema the same way; use read(mergeSchema) + an explicit
-          // evolved batch commit for intentional evolution)
-          val tableCols = headSchema.fieldNames.sorted
-          require(upserts0.columns.sorted.sameElements(tableCols),
-            s"merge source schema (${upserts0.columns.sorted.mkString(", ")}) " +
-              s"does not match the table (${tableCols.mkString(", ")}) — " +
-              "schema evolution goes through an explicit evolved commit")
-          upserts0
-        case Some(m) =>
-          // mapped table: the source arrived validated against the LOGICAL
-          // schema and renamed to physical ([[sourceToPhysical]]); the new
-          // file matches the probe file's physical layout, null-filling
-          // RETIRED storage columns (dropped from the mapping, still in
-          // old files' bytes — their data is logically gone), and appends
-          // mapped physical columns the probe file predates (fresh columns
-          // from a post-ADD appendMapped)
-          val present = upserts0.columns.toSet
-          val headCols = headSchema.map { f =>
-            if (present(f.name)) col(f.name)
-            else lit(null).cast(f.dataType).as(f.name)
-          }
-          val extra = m.map(_._1)
-            .filterNot(headSchema.fieldNames.contains)
-            .filter(present).map(col)
-          upserts0.select(headCols ++ extra: _*)
-      }
-      val srcKeys = nonNullKeyed.select(keys.map(col): _*).distinct()
-      val probeFiles = keyPrunedProbeFiles(entries, nonNullKeyed, keys)
-      val dvs = snap.dvs
-      // typed metadata adds null-fill the probe/rewrite reads (a merge
-      // KEYED on a just-added column is degenerate but must not crash)
-      val nf = if (cm.isEmpty) Nil else snap.types
-      val touched = probeTouched(spark, probeFiles, dvs,
-        _.join(broadcast(srcKeys), keys, "left_semi"), nullFill = nf)
-      val extraAdds =
-        if (upserts.isEmpty) Nil
-        else {
-          val srcStatCols = entries.flatMap(e => statColsOf(e._2)).distinct
-            .filter(upserts.columns.contains)
-          val srcStats =
-            if (srcStatCols.isEmpty) None
-            else columnStatsMulti(upserts, srcStatCols)
-          Seq(writeBatch(upserts, dir, s"${name}_src") -> srcStats)
+          .groupBy(keys.map(col): _*).agg(count(lit(1)).as("_graft_rows")),
+        max(col("_graft_rows")).as("_graft_max_rows") +: minMaxAggs(keys))
+      try {
+        require(Option(seen("_graft_max_rows")).forall(_ == 1L),
+          s"merge source has duplicate keys on (${keys.mkString(", ")}) — " +
+            "a multi-match upsert is ill-defined; dedupe the source first")
+        val upserts0 = feedOp.fold(keyed) { case (oc, _) =>
+          keyed.filter(lands).drop(oc) }
+        val headSchema = parquet(spark, entries.head._1).schema
+        val upserts = cm match {
+          case None =>
+            // schema drift check: a source missing (or adding) columns would
+            // land a heterogeneous file and make the default read()'s schema
+            // file-order dependent — fail loudly instead (Delta validates the
+            // write schema the same way; use read(mergeSchema) + an explicit
+            // evolved batch commit for intentional evolution)
+            val tableCols = headSchema.fieldNames.sorted
+            require(upserts0.columns.sorted.sameElements(tableCols),
+              s"merge source schema (${upserts0.columns.sorted.mkString(", ")}) " +
+                s"does not match the table (${tableCols.mkString(", ")}) — " +
+                "schema evolution goes through an explicit evolved commit")
+            upserts0
+          case Some(m) =>
+            // mapped table: the source arrived validated against the LOGICAL
+            // schema and renamed to physical ([[sourceToPhysical]]); the new
+            // file matches the probe file's physical layout, null-filling
+            // RETIRED storage columns (dropped from the mapping, still in
+            // old files' bytes — their data is logically gone), and appends
+            // mapped physical columns the probe file predates (fresh columns
+            // from a post-ADD appendMapped)
+            val present = upserts0.columns.toSet
+            val headCols = headSchema.map { f =>
+              if (present(f.name)) col(f.name)
+              else lit(null).cast(f.dataType).as(f.name)
+            }
+            val extra = m.map(_._1)
+              .filterNot(headSchema.fieldNames.contains)
+              .filter(present).map(col)
+            upserts0.select(headCols ++ extra: _*)
         }
-      rewriteTouched(spark, dir, name, entries, touched,
-        p => readMasked(spark, Seq(p), dvs, nullFill = nf)
-          .join(broadcast(srcKeys), keys, "left_anti"),
-        extraAdds, what = "merge", basedOnDvs = Some(dvs))
+        val srcKeys = keyRows.select(keys.map(col): _*)
+        val dvs = snap.dvs
+        // typed metadata adds null-fill the probe/rewrite reads (a merge
+        // KEYED on a just-added column is degenerate but must not crash)
+        val nf = if (cm.isEmpty) Nil else snap.types
+        val touched = probeTouched(spark,
+          keyPrunedProbeFiles(entries, keys, seen), dvs,
+          _.join(broadcast(srcKeys), keys, "left_semi"), nullFill = nf)
+        val extraAdds =
+          if (fed("_graft_lands") == 0L) Nil
+          else {
+            val srcStatCols = entries.flatMap(e => statColsOf(e._2)).distinct
+              .filter(upserts.columns.contains)
+            val (path, _, srcStats) =
+              writeObserved(upserts, dir, s"${name}_src", srcStatCols)
+            Seq(path -> srcStats)
+          }
+        rewriteTouched(dir, name, entries, touched,
+          p => readMasked(spark, Seq(p), dvs, nullFill = nf)
+            .join(broadcast(srcKeys), keys, "left_anti"),
+          extraAdds, what = "merge", basedOnDvs = Some(dvs))
+      } finally graft.core.Checkpoints.release(keyRows)
     } finally graft.core.Checkpoints.release(keyed)
   }
 

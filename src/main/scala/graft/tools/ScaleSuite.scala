@@ -1,11 +1,10 @@
 package graft.tools
 
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.functions._
 
@@ -101,6 +100,11 @@ object ScaleSuite {
     def bestOf(f: Int => Double): Double = (1 to repeat).map(f).min
 
     def best(body: => Any): Double = bestOf(_ => timed(body))
+
+    /** `body`'s result and the Spark jobs it started — the mechanism
+      * figure next to a timing. */
+    def jobsOf[T](body: => T): (T, Int) =
+      org.apache.spark.sql.graftbridge.SqlBridge.jobsOf(spark)(body)
 
     /** `repeat` runs of each of two contrast arms, after one untimed
       * warm-up run apiece, alternating which arm goes first on each
@@ -351,40 +355,30 @@ object ScaleSuite {
   private def pinnedSort(c: Ctx, points: Seq[Int]): Unit = {
     val spark = c.spark
     val li = Graft.table(spark, c.sf, "lineitem")
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
+    spark.range(1000000).selectExpr("sum(id)")
+      .write.format("noop").mode("overwrite").save()
+    // one execution: (seconds, Spark jobs)
+    def run(pinned: Boolean, df: => DataFrame): (Double, Int) =
+      c.withSqlConf("spark.graft.pinnedSort", pinned.toString) {
+        val r = c.jobsOf(c.timed(df.write.format("noop").mode("overwrite").save()))
+        spark.sparkContext.getPersistentRDDs.values
+          .foreach(_.unpersist(blocking = true))
+        System.gc()
+        r
       }
+    def contrast(query: String)(df: => DataFrame): Unit = {
+      val (on, off) = c.interleaved(run(true, df), run(false, df))
+      for ((pinned, runs) <- Seq(true -> on, false -> off))
+        c.emit("query" -> query, "pinned" -> pinned,
+          "min" -> round(runs.map(_._1).min, 3),
+          "all" -> runs.map(r => round(r._1, 3)),
+          "jobs" -> runs.map(_._2).distinct)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.range(1000000).selectExpr("sum(id)")
-        .write.format("noop").mode("overwrite").save()
-      // one execution: (seconds, Spark jobs)
-      def run(pinned: Boolean, df: => DataFrame): (Double, Int) =
-        c.withSqlConf("spark.graft.pinnedSort", pinned.toString) {
-          val j0 = jobs.get
-          val s = c.timed(df.write.format("noop").mode("overwrite").save())
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          System.gc()
-          (s, jobs.get - j0)
-        }
-      def contrast(query: String)(df: => DataFrame): Unit = {
-        val (on, off) = c.interleaved(run(true, df), run(false, df))
-        for ((pinned, runs) <- Seq(true -> on, false -> off))
-          c.emit("query" -> query, "pinned" -> pinned,
-            "min" -> round(runs.map(_._1).min, 3),
-            "all" -> runs.map(r => round(r._1, 3)),
-            "jobs" -> runs.map(_._2).distinct)
-      }
-      contrast("spearman")(StatsOps.spearman(li, Seq(col("l_returnflag")),
-        col("l_quantity"), col("l_extendedprice")))
-      contrast("weighted_quantile")(StatsOps.weightedQuantile(li,
-        Seq(col("l_returnflag")), col("l_extendedprice"), col("l_quantity"),
-        q = 0.5))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    contrast("spearman")(StatsOps.spearman(li, Seq(col("l_returnflag")),
+      col("l_quantity"), col("l_extendedprice")))
+    contrast("weighted_quantile")(StatsOps.weightedQuantile(li,
+      Seq(col("l_returnflag")), col("l_extendedprice"), col("l_quantity"),
+      q = 0.5))
   }
 
   /** Recall@5 of PQ top-k with codebooks of size k under the two seeding
@@ -492,7 +486,10 @@ object ScaleSuite {
     * second table ingests lineitem partitioned by `l_partkey % 16`: the
     * point probe reads one leaf, the full scan all 16. Claim: the verbs
     * and the point probe track touched bytes, the full rewrite and full
-    * scan track table bytes (~10x between sf0.1 and `target/scale10`). */
+    * scan track table bytes (~10x between sf0.1 and `target/scale10`).
+    * `delete_jobs`, `merge_jobs` and `update_jobs` are each verb's Spark
+    * job count on the last repeat — the per-verb floor the timings sit
+    * on. */
   private def rowVerbs(c: Ctx, points: Seq[Int]): Unit = {
     val spark = c.spark
     val li = Graft.table(spark, c.sf, "lineitem")
@@ -509,9 +506,9 @@ object ScaleSuite {
           TxLog.columnStats(batch, "l_orderkey")))
       }
       // DELETE confined to batch 3's key range (half its part keys)
-      val delS = c.timed(TxLog.deleteWhere(spark, root, s"del$r",
-        col("l_orderkey") >= 3 * width && col("l_orderkey") < 4 * width &&
-          col("l_partkey") % 2 === 0))
+      val (delS, delJobs) = c.jobsOf(c.timed(TxLog.deleteWhere(spark, root,
+        s"del$r", col("l_orderkey") >= 3 * width &&
+          col("l_orderkey") < 4 * width && col("l_partkey") % 2 === 0)))
       val delRewrote = rewrote(root, s"del${r}_")
       // MERGE whose source keys live in batch 5, plus out-of-range inserts
       val src = li.filter(floor(col("l_orderkey") / width) === 5 &&
@@ -521,18 +518,19 @@ object ScaleSuite {
         .withColumn("l_quantity", col("l_quantity") + 1.0)
       val inserts = src.limit(1000)
         .withColumn("l_orderkey", col("l_orderkey") + maxKey + 1)
-      val mergeS = c.timed(TxLog.merge(spark, root, s"m$r",
-        src.unionByName(inserts), Seq("l_orderkey")))
+      val (mergeS, mergeJobs) = c.jobsOf(c.timed(TxLog.merge(spark, root,
+        s"m$r", src.unionByName(inserts), Seq("l_orderkey"))))
       val mergeRewrote = rewrote(root, s"m${r}_d")
       // UPDATE confined to batch 7's key range
-      val updS = c.timed(TxLog.updateWhere(spark, root, s"u$r",
-        col("l_orderkey") >= 7 * width && col("l_orderkey") < 8 * width &&
-          col("l_partkey") % 2 === 0,
-        Seq("l_quantity" -> (col("l_quantity") + 1.0))))
+      val (updS, updJobs) = c.jobsOf(c.timed(TxLog.updateWhere(spark, root,
+        s"u$r", col("l_orderkey") >= 7 * width &&
+          col("l_orderkey") < 8 * width && col("l_partkey") % 2 === 0,
+        Seq("l_quantity" -> (col("l_quantity") + 1.0)))))
       val updRewrote = rewrote(root, s"u${r}_d")
       // contrast: the full-table rewrite the verbs exist to avoid
       val optS = c.timed(TxLog.optimize(spark, root, s"opt$r", targetFiles = 4))
-      (Seq(delS, mergeS, updS, optS), Seq(delRewrote, mergeRewrote, updRewrote))
+      (Seq(delS, mergeS, updS, optS), Seq(delRewrote, mergeRewrote, updRewrote),
+        Seq(delJobs, mergeJobs, updJobs))
     }}
     val part = (1 to c.repeat).map { _ => c.withTable("row_verbs_part") { root =>
       val ingestS = c.timed(TxLog.commitPartitioned(spark, root, "p1",
@@ -545,10 +543,14 @@ object ScaleSuite {
     }}
     val Seq(delS, mergeS, updS, optS) = minEach(verbs.map(_._1))
     val Seq(delRewrote, mergeRewrote, updRewrote) = verbs.last._2
+    val Seq(delJobs, mergeJobs, updJobs) = verbs.last._3
     val Seq(ingestS, fullS, pointS) = minEach(part.map(_._1))
     c.emit("rows" -> rows, "delete_s" -> delS, "delete_rewrote" -> delRewrote,
+      "delete_jobs" -> delJobs,
       "merge_s" -> mergeS, "merge_rewrote" -> mergeRewrote,
+      "merge_jobs" -> mergeJobs,
       "update_s" -> updS, "update_rewrote" -> updRewrote,
+      "update_jobs" -> updJobs,
       "full_rewrite_s" -> optS, "leaves" -> part.last._2,
       "ingest_s" -> ingestS, "full_scan_s" -> fullS,
       "point_probe_s" -> pointS)

@@ -384,6 +384,48 @@ class TxLogSpec extends AnyFunSuite {
     TxLog.destroy(dir)
   }
 
+  test("a deleteWhere that empties a touched batch leaves no file and no add") {
+    val dir = freshDir()
+    TxLog.commit(dir, Seq(TxLog.writeBatch(Seq(1, 2).toDF("x"), dir, "b1")))
+    TxLog.commit(dir, Seq(TxLog.writeBatch(Seq(3, 4).toDF("x"), dir, "b2")))
+    assert(TxLog.deleteWhere(spark, dir, "del", col("x") <= 2) === 3)
+    assert(!new java.io.File(s"$dir/data/del_d0").exists(),
+      "the empty remainder's dir is removed")
+    assert(TxLog.liveFiles(dir).map(new java.io.File(_).getName) === Seq("b2"))
+    val manifest = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, "_txlog", f"v${3}%08d.json")),
+      java.nio.charset.StandardCharsets.UTF_8)
+    assert(!manifest.linesIterator.exists(_.startsWith("add\t")),
+      "the delete commits only the remove")
+    assert(TxLog.read(spark, dir).as[Int].collect().sorted.toSeq === Seq(3, 4))
+    TxLog.destroy(dir)
+  }
+
+  test("merge and applyChanges start only the jobs that move data") {
+    import org.apache.spark.sql.graftbridge.SqlBridge
+    val dir = freshDir()
+    TxLog.commit(dir, Seq(TxLog.writeBatch(
+      (0 until 50).map(i => (i, i * 1.0)).toDF("k", "v"), dir, "b_lo")))
+    TxLog.commit(dir, Seq(TxLog.writeBatch(
+      (50 until 100).map(i => (i, i * 1.0)).toDF("k", "v"), dir, "b_hi")))
+    // pin, key multiplicities, probe, source write, one rewrite — the
+    // schema, emptiness, key-count and bounds probes ride those jobs
+    val (vM, mergeJobs) = SqlBridge.jobsOf(spark)(TxLog.merge(spark, dir, "m",
+      Seq((1, 10.0), (500, 5.0)).toDF("k", "v"), Seq("k")))
+    assert(vM === 3)
+    assert(mergeJobs <= 9, s"merge started $mergeJobs jobs")
+    val (vC, cdcJobs) = SqlBridge.jobsOf(spark)(TxLog.applyChanges(spark, dir,
+      "c", Seq((2, 0.0, "D"), (3, 30.5, "U"), (600, 6.0, "U"))
+        .toDF("k", "v", "op"), Seq("k")))
+    assert(vC === 4)
+    assert(cdcJobs <= 9, s"applyChanges started $cdcJobs jobs")
+    assert(TxLog.read(spark, dir).as[(Int, Double)].collect().sorted.toSeq ===
+      ((0 until 100).filterNot(_ == 2).map(i => (i, i * 1.0))
+        .map { case (1, _) => (1, 10.0); case (3, _) => (3, 30.5); case r => r } ++
+        Seq((500, 5.0), (600, 6.0))).sorted)
+    TxLog.destroy(dir)
+  }
+
   test("updateWhere: pre-update-row SET semantics, null predicates skip, pruning and stats survive") {
     val dir = freshDir()
     // b_lo holds x in [0,100) with y = 2x (nullable), b_hi x in [100,200)
@@ -2333,6 +2375,8 @@ class TxLogSpec extends AnyFunSuite {
       Seq((2L, 20.0), (9L, 9.0)).toDF("k", "v"), Seq("k"))) === 2 * 3)
     assert(TxLog.latestVersion(dir) === 4)
     assert(logOpensOf(TxLog.optimize(spark, dir, "o")) === 2 * 4)
+    // DESCRIBE HISTORY opens each of the 5 manifests once
+    assert(logOpensOf(TxLog.history(spark, dir)) === 5)
     assert(TxLog.read(spark, dir).as[(Long, Double)].collect().sorted.toSeq ===
       Seq((1L, 1.0), (2L, 20.0), (3L, 3.0), (9L, 9.0)))
     val wh = java.nio.file.Files.createTempDirectory("txlog-cat").toString

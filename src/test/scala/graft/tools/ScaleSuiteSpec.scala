@@ -33,6 +33,17 @@ class ScaleSuiteSpec extends AnyFunSuite {
     assert(row("plan_point_files") === 1)
   }
 
+  test("row_verbs reports each verb's job count next to its timing") {
+    val rows = ScaleSuite.run(spark, "row_verbs", Nil, repeat = 1)
+    assert(rows.size === 1)
+    val row = rows.head
+    Seq("delete", "merge", "update").foreach { v =>
+      assert(row(s"${v}_s").asInstanceOf[Double] > 0, v)
+      assert(row(s"${v}_rewrote") === 1, v)
+      assert(row(s"${v}_jobs").asInstanceOf[Int] > 0, v)
+    }
+  }
+
   test("an unknown scenario fails with the list of scenarios") {
     val e = intercept[IllegalArgumentException](
       ScaleSuite.run(spark, "nope", Nil, repeat = 1))
