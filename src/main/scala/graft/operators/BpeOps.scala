@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoints
+
 /** Byte-pair-encoding vocabulary induction over a document corpus — the
   * tokenizer-training step of an LLM data pipeline.
   *
@@ -73,38 +75,35 @@ object BpeOps {
   /** Train `k` BPE merges. Returns (step, left, right, pair_count) in merge
     * order. Each round: aggregate pairs over the words table, take the
     * (count desc, pair asc) argmax on the driver (ONE row crosses), apply
-    * the merge with the greedy kernel, localCheckpoint to keep the iterated
-    * plan flat (same pattern as the connected-components rounds). */
+    * the merge with the greedy kernel, and pin the result to keep the
+    * iterated plan flat. The argmax is an aggregation over pairs, so it
+    * cannot ride the pin job; nothing stays pinned on return. */
   def trainMerges(docs: DataFrame, textCol: Column, k: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    var words = symbolized(docs, textCol)
-      .select(col("cnt"), col("syms")).as[(Long, Seq[String])]
-      .localCheckpoint()
+    var words = Checkpoints.pin(symbolized(docs, textCol)
+      .select(col("cnt"), col("syms")).as[(Long, Seq[String])])._1
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var step = 0
-    var exhausted = false
-    while (step < k && !exhausted) {
-      val top = pairCounts(words.toDF("cnt", "syms"))
-        .orderBy(col("n").desc, col("pair"))
-        .limit(1).as[(String, Long)].collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (pair, n) = top.head
-        val Array(leftSym, rightSym) = pair.split(" ", 2)
-        step += 1
-        merges += ((step, leftSym, rightSym, n))
-        // localCheckpoint is eager, so the superseded round's blocks can be
-        // released immediately — otherwise k rounds pin k vocab copies.
-        // (Dataset.unpersist would NOT do it: it only evicts CacheManager
-        // entries, and checkpoint RDD blocks never enter the CacheManager.)
-        val next = words
-          .map { case (cnt, syms) => (cnt, applyMerge(syms, leftSym, rightSym)) }
-          .localCheckpoint()
-        graft.core.Checkpoints.release(words)
-        words = next
+    try {
+      var step = 0
+      var exhausted = false
+      while (step < k && !exhausted) {
+        val top = pairCounts(words.toDF("cnt", "syms"))
+          .orderBy(col("n").desc, col("pair"))
+          .limit(1).as[(String, Long)].collect()
+        if (top.isEmpty) exhausted = true
+        else {
+          val (pair, n) = top.head
+          val Array(leftSym, rightSym) = pair.split(" ", 2)
+          step += 1
+          merges += ((step, leftSym, rightSym, n))
+          val next = Checkpoints.pin(words
+            .map { case (cnt, syms) => (cnt, applyMerge(syms, leftSym, rightSym)) })._1
+          Checkpoints.release(words)
+          words = next
+        }
       }
-    }
+    } finally Checkpoints.release(words)
     merges.toSeq.toDF("step", "left", "right", "pair_count")
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 import graft.functions.TextFunctions._
 
 /** Deduplication operators for the LLM-data-pipeline surface: exact,
@@ -536,7 +537,7 @@ object DedupOps {
       .distinct()
       .localCheckpoint()
     // und is eager, so the directed pair checkpoint is already dead
-    graft.core.Checkpoints.release(edges)
+    Checkpoints.release(edges)
     // label₀ = min(node, min neighbor): same single shuffle a plain
     // distinct-node init would cost, but it IS the first propagation round —
     // one fewer join+agg+checkpoint cycle every invocation (propagation
@@ -544,37 +545,23 @@ object DedupOps {
     //
     // Convergence check rides on monotonicity: a node's label can only
     // decrease (the groupBy-min includes its old label), so some label
-    // changed iff sum(label) strictly dropped. The sum rides the
-    // checkpoint's OWN materialization job via observe() (r12): a
-    // separate agg-on-checkpoint action cost one extra Spark job per
-    // round — pure scheduling overhead on a converged tiny label table,
-    // ~40 ms/job of driver latency that dominates this loop at small SF.
-    def checkpointWithSum(df: DataFrame): (DataFrame, Any) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = df.observe(obs,
-        sum(col("label").cast("decimal(38,0)")).as("s")).localCheckpoint()
-      (ck, obs.get("s"))
-    }
-    var (labels, prevSum) = checkpointWithSum(
+    // changed iff sum(label) strictly dropped. The sum is observed on each
+    // round's own pin job: a job of its own would cost ~40 ms of driver
+    // latency per round, which dominates this loop at small SF.
+    val labelSum = sum(col("label").cast("decimal(38,0)")).as("s")
+    val (labels0, seen0) = Checkpoints.pin(
       und.groupBy(col("x"))
         .agg(least(min(col("y")), col("x")).as("label"))
-        .select(col("x").as("node"), col("label")))
-    var converged = false
-    while (!converged) {
+        .select(col("x").as("node"), col("label")), labelSum)
+    val labels = Checkpoints.iterate(labels0, seen0, Int.MaxValue, labelSum)(
+        (prev, next) => prev("s") == next("s")) { (labels, _) =>
       val prop = und.alias("e")
         .join(labels.alias("l"), col("e.y") === col("l.node"))
         .select(col("e.x").as("node"), col("l.label").as("label"))
-      val (next, nextSum) = checkpointWithSum(
-        labels.union(prop).groupBy("node").agg(min("label").as("label")))
-      converged = nextSum == prevSum
-      prevSum = nextSum
-      // next is eager: the superseded round's label blocks are dead — free
-      // them now rather than waiting for ContextCleaner + GC
-      graft.core.Checkpoints.release(labels)
-      labels = next
+      labels.union(prop).groupBy("node").agg(min("label").as("label"))
     }
     // only the final label checkpoint (the result) stays pinned
-    graft.core.Checkpoints.release(und)
+    Checkpoints.release(und)
     labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
   }
 
@@ -663,26 +650,19 @@ object DedupOps {
       pairs: DataFrame, aCol: String = "a", bCol: String = "b"): DataFrame = {
     val big = greatest(col("u"), col("v"))
     val small = least(col("u"), col("v"))
-    // fixpoint detection = (count, keyed sum) signature of the edge set;
-    // it rides each checkpoint's own materialization job via observe()
-    // (r12) instead of a separate agg action — one Spark job per round,
-    // not two (same rationale as [[nearDupClusters]]'s checkpointWithSum)
-    def checkpointWithSig(e: DataFrame): (DataFrame, (Any, Any)) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = e.observe(obs, count(lit(1)).as("c"),
-        sum((col("u") * 1000003L + col("v")).cast("decimal(38,0)")).as("s"))
-        .localCheckpoint()
-      (ck, (obs.get("c"), obs.get("s")))
-    }
-    var (edges, sig0) = checkpointWithSig(pairs
+    // fixpoint detection = (count, keyed sum) signature of the edge set,
+    // observed on each round's own pin job
+    val sig = Seq(count(lit(1)).as("c"),
+      sum((col("u") * 1000003L + col("v")).cast("decimal(38,0)")).as("s"))
+    val (edges0, sig0) = Checkpoints.pin(pairs
       .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
       .select(big.as("u"), small.as("v"))
-      .distinct())
+      .distinct(), sig: _*)
     // the original vertex set: star-contraction drops isolated-after-merge
     // nodes from the edge list, but every input node still needs a label
-    val nodes = edges.select(col("u").as("doc_id"))
-      .union(edges.select(col("v").as("doc_id")))
+    val nodes = edges0.select(col("u").as("doc_id"))
+      .union(edges0.select(col("v").as("doc_id")))
       .distinct()
       .localCheckpoint()
     def star(e: DataFrame, largeSide: Boolean): DataFrame = {
@@ -702,15 +682,9 @@ object DedupOps {
         .select(col("x").as("u"), col("m").as("v"))
         .distinct()
     }
-    var converged = false
-    var sig = sig0
-    while (!converged) {
-      val (next, nextSig) = checkpointWithSig(
-        star(star(edges, largeSide = true), largeSide = false))
-      converged = nextSig == sig
-      sig = nextSig
-      graft.core.Checkpoints.release(edges)
-      edges = next
+    val edges = Checkpoints.iterate(edges0, sig0, Int.MaxValue, sig: _*)(
+        (prev, next) => prev == next) { (edges, _) =>
+      star(star(edges, largeSide = true), largeSide = false)
     }
     // fixpoint = components are stars rooted at their min: non-roots appear
     // as u with v = root; roots label themselves. Fold into one result
@@ -720,7 +694,7 @@ object DedupOps {
       .select(col("doc_id"),
         coalesce(col("v"), col("doc_id")).as("cluster_id"))
       .localCheckpoint()
-    graft.core.Checkpoints.releaseAll(nodes, edges)
+    Checkpoints.releaseAll(nodes, edges)
     result
   }
 

@@ -51,59 +51,38 @@ object GraphOps {
     // kCore discipline), so the old standalone nodes-checkpoint + count()
     // jobs disappear too: setup is now two jobs (e, nodesD), and each
     // iteration consumes the rank state exactly once.
-    val nObs = org.apache.spark.sql.Observation()
-    val nodesD = e.select(col("src").as("id"))
+    val (nodesD, nSeen) = Checkpoints.pin(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id")))
       .distinct()
       .join(e.groupBy(col("src").as("id"))
-        .agg(count(lit(1)).cast("double").as("deg")), Seq("id"), "left_outer")
-      .observe(nObs, count(lit(1)).as("n"),
-        sum(when(col("deg").isNull, 1L).otherwise(0L)).as("n_dangling"))
-      .localCheckpoint()
-    val n = nObs.get("n").asInstanceOf[Long].toDouble
-    val nDangling = nObs.get("n_dangling").asInstanceOf[Long]
+        .agg(count(lit(1)).cast("double").as("deg")), Seq("id"), "left_outer"),
+      count(lit(1)).as("n"),
+      sum(when(col("deg").isNull, 1L).otherwise(0L)).as("n_dangling"))
+    val n = nSeen("n").asInstanceOf[Long].toDouble
+    val nDangling = nSeen("n_dangling").asInstanceOf[Long]
     // dangling mass of the UNIFORM initial vector, computed in the driver
     // with the same IEEE ops the in-plan fold would use: every dangling row
     // contributes floor((1/n)·1e15 + 0.5) — identical terms, exact sum
-    var dm = nDangling * math.floor(1.0 / n * 1e15 + 0.5) / 1e15
+    val dm0 = nDangling * math.floor(1.0 / n * 1e15 + 0.5) / 1e15
     // dangling mass of each NEW rank vector rides its checkpoint job as an
-    // observed exact scaled-long fold — no second consumption of the state
-    // and no per-iteration 1-row crossJoin; the double crosses the driver
-    // losslessly (a long quotient by 1e15), so the blend arithmetic is
-    // bit-identical to the in-plan form
-    def ckptWithDm(df: DataFrame): (DataFrame, Double) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = df.observe(obs,
-        (coalesce(sum(when(col("deg").isNull,
-          floor(col("r") * lit(1e15) + lit(0.5)))), lit(0L))
-          .cast("double") / lit(1e15)).as("dm"))
-        .localCheckpoint()
-      (ck, { val d = obs.get("dm").asInstanceOf[Double]; d })
-    }
-    var ranks = nodesD.select(col("id"), col("deg"), (lit(1.0) / lit(n)).as("r"))
-    for (_ <- 1 to iters) {
+    // observed exact scaled-long fold ([[danglingMass]]) — no second
+    // consumption of the state and no per-iteration 1-row crossJoin
+    val ranks = Checkpoints.iterate(
+      nodesD.select(col("id"), col("deg"), (lit(1.0) / lit(n)).as("r")),
+      Map("dm" -> dm0), iters, danglingMass)((_, _) => false) { (ranks, seen) =>
+      val dm = seen("dm").asInstanceOf[Double]
       val contribs = e
         .join(ranks.filter(col("deg").isNotNull)
           .select(col("id").as("src"), col("r"), col("deg")), Seq("src"))
         .groupBy(col("dst").as("id"))
         .agg((sum(floor(col("r") / col("deg") * lit(1e15) + lit(0.5))).cast("double")
           / lit(1e15)).as("contrib"))
-      val next = nodesD
+      nodesD
         .join(contribs, Seq("id"), "left_outer")
         .select(col("id"), col("deg"),
           ((lit(1.0) - lit(damping)) / lit(n) +
             lit(damping) * (coalesce(col("contrib"), lit(0.0)) + lit(dm) / lit(n)))
             .as("r"))
-      val prev = ranks
-      val (ck, dmNext) = ckptWithDm(next)
-      ranks = ck
-      dm = dmNext
-      // the new checkpoint is eager (fully materialized), so the superseded
-      // round's blocks are dead — free them now instead of waiting for a GC
-      // to reach the ContextCleaner (20 iterations would otherwise pin 20
-      // copies of the rank table in executor storage). Release is a no-op
-      // on round 1's lazy init projection by design.
-      Checkpoints.release(prev)
     }
     // the final ranks frame is self-contained once iterated: the shared
     // inputs are no longer reachable from the returned plan. At iters = 0
@@ -137,48 +116,37 @@ object GraphOps {
     // materialization job, and each new rank vector's dangling mass
     // observed on ITS checkpoint job — the state is consumed once per
     // iteration and the 1-row crossJoin is gone.
-    val nObs = org.apache.spark.sql.Observation()
-    val nodesD = e.select(col("src").as("id"))
+    val (nodesD, nSeen) = Checkpoints.pin(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id")))
       .distinct()
       .join(e.groupBy(col("src").as("id"))
         .agg(count(lit(1)).cast("double").as("deg")), Seq("id"), "left_outer")
       .join(seedSet.withColumn("_isSeed", lit(true)), Seq("id"), "left_outer")
       .select(col("id"), col("deg"),
-        coalesce(col("_isSeed"), lit(false)).as("is_seed"))
-      .observe(nObs,
-        sum(when(col("is_seed"), 1L).otherwise(0L)).as("ns"),
-        sum(when(col("is_seed") && col("deg").isNull, 1L).otherwise(0L))
-          .as("ns_dangling"))
-      .localCheckpoint()
-    val nsL = nObs.get("ns").asInstanceOf[Long]
+        coalesce(col("_isSeed"), lit(false)).as("is_seed")),
+      sum(when(col("is_seed"), 1L).otherwise(0L)).as("ns"),
+      sum(when(col("is_seed") && col("deg").isNull, 1L).otherwise(0L))
+        .as("ns_dangling"))
+    val nsL = nSeen("ns").asInstanceOf[Long]
     require(nsL > 0, "personalizedPagerank needs at least one seed in the graph")
     val ns = nsL.toDouble
     // initial vector: 1/ns on seeds, 0 elsewhere — its dangling mass is
     // (dangling seeds)·floor((1/ns)·1e15 + 0.5) exactly (zero rows fold to
     // floor(0.5) = 0), replicated in the driver with the same IEEE ops
-    var dm = nObs.get("ns_dangling").asInstanceOf[Long] *
+    val dm0 = nSeen("ns_dangling").asInstanceOf[Long] *
       math.floor(1.0 / ns * 1e15 + 0.5) / 1e15
-    def ckptWithDm(df: DataFrame): (DataFrame, Double) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = df.observe(obs,
-        (coalesce(sum(when(col("deg").isNull,
-          floor(col("r") * lit(1e15) + lit(0.5)))), lit(0L))
-          .cast("double") / lit(1e15)).as("dm"))
-        .localCheckpoint()
-      (ck, obs.get("dm").asInstanceOf[Double])
-    }
     val restart = when(col("is_seed"), lit(1.0) / lit(ns)).otherwise(lit(0.0))
-    var ranks = nodesD.select(col("id"), col("deg"), col("is_seed"),
-      restart.as("r"))
-    for (_ <- 1 to iters) {
+    val ranks = Checkpoints.iterate(
+      nodesD.select(col("id"), col("deg"), col("is_seed"), restart.as("r")),
+      Map("dm" -> dm0), iters, danglingMass)((_, _) => false) { (ranks, seen) =>
+      val dm = seen("dm").asInstanceOf[Double]
       val contribs = e
         .join(ranks.filter(col("deg").isNotNull)
           .select(col("id").as("src"), col("r"), col("deg")), Seq("src"))
         .groupBy(col("dst").as("id"))
         .agg((sum(floor(col("r") / col("deg") * lit(1e15) + lit(0.5))).cast("double")
           / lit(1e15)).as("contrib"))
-      val next = nodesD
+      nodesD
         .join(contribs, Seq("id"), "left_outer")
         .select(col("id"), col("deg"), col("is_seed"),
           (when(col("is_seed"), (lit(1.0) - lit(damping)) / lit(ns))
@@ -186,15 +154,19 @@ object GraphOps {
             lit(damping) * (coalesce(col("contrib"), lit(0.0)) +
               when(col("is_seed"), lit(dm) / lit(ns)).otherwise(lit(0.0))))
             .as("r"))
-      val prev = ranks
-      val (ck, dmNext) = ckptWithDm(next)
-      ranks = ck
-      dm = dmNext
-      Checkpoints.release(prev)
     }
     if (iters > 0) Checkpoints.releaseAll(e, nodesD)
     ranks.select(col("id"), col("r"))
   }
+
+  /** The dangling mass of a rank vector (`r` over `deg`-null rows) as an
+    * exact scaled-long fold; the double crosses the driver losslessly (a
+    * long quotient by 1e15), so the next round's blend arithmetic is
+    * bit-identical to the in-plan form. */
+  private val danglingMass: Column =
+    (coalesce(sum(when(col("deg").isNull,
+      floor(col("r") * lit(1e15) + lit(0.5)))), lit(0L))
+      .cast("double") / lit(1e15)).as("dm")
 
   /** One-row graph profile — the summary a pipeline logs before running
     * anything heavier on an edge list: node/edge counts, max and mean
@@ -329,7 +301,9 @@ object GraphOps {
     * re-checkpointing the union would cost an extra O(|visited|) pass
     * every round for nothing, since its members are already cut from the
     * lineage). Edges are canonicalized to distinct undirected pairs once,
-    * up front. Early exit when the frontier empties. On return the per-hop
+    * up front. Early exit when the frontier empties: each frontier's row
+    * count is observed on its own pin job, so a hop is one pin and no
+    * emptiness probe. On return the per-hop
     * frames fold into ONE result checkpoint (a single O(|visited|) pass)
     * and the adjacency list plus every frontier block are released — the
     * only storage the call leaves behind is the result table itself. */
@@ -342,29 +316,25 @@ object GraphOps {
     val adj = und.unionAll(und.select(col("v").as("u"), col("u").as("v")))
       .distinct()
       .localCheckpoint()
-    var frontier = seeds.select(col("node").cast("long").as("node"))
-      .distinct()
-      .withColumn("hops", lit(0L))
-      .localCheckpoint()
+    val rows = count(lit(1)).as("n")
+    var (frontier, seen) = Checkpoints.pin(
+      seeds.select(col("node").cast("long").as("node"))
+        .distinct()
+        .withColumn("hops", lit(0L)), rows)
     var hopSets = Vector(frontier)
     var hop = 0L
-    // early-exit contract: `frontier` is always an EAGER localCheckpoint —
-    // the materializing job has already run by the time the loop condition
-    // evaluates, so `isEmpty` here is a take(1) against cached partitions
-    // (no recompute, no shuffle), not a second pass over the round's work.
-    // One real job per round.
-    while (hop < maxHops && !frontier.isEmpty) {
+    while (hop < maxHops && seen("n") != 0L) {
       hop += 1
       val visited = hopSets.map(_.select("node")).reduce(_ unionAll _)
-      val next = frontier
+      val (next, nextSeen) = Checkpoints.pin(frontier
         .join(adj, frontier("node") === adj("u"))
         .select(col("v").as("node"))
         .distinct()
         .join(visited, Seq("node"), "left_anti")
-        .withColumn("hops", lit(hop))
-        .localCheckpoint()
+        .withColumn("hops", lit(hop)), rows)
       hopSets :+= next
       frontier = next
+      seen = nextSeen
     }
     val result = hopSets.reduce(_ unionAll _).localCheckpoint()
     Checkpoints.release(adj)
@@ -392,8 +362,8 @@ object GraphOps {
     * against the canonicalized adjacency list (localCheckpoint'd once)
     * plus a min aggregation with map-side partials — per-round shuffle
     * O(|V|), same asymptotics as [[bfsHops]]; the distance table is
-    * checkpointed per round with release chaining, so the lineage stays
-    * flat and the only storage left on return is the result.
+    * checkpointed per round ([[Checkpoints.iterate]]), so the lineage
+    * stays flat and the only storage left on return is the result.
     * (Reference capability analog: iterative multi-job MapReduce drivers;
     * each round here is one declarative join+agg pass.) */
   def shortestPaths(edges: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
@@ -413,17 +383,15 @@ object GraphOps {
         und.select(col("v").as("u"), col("u").as("v"), col("w")))
       .groupBy("u", "v").agg(min("w").as("w"))
       .localCheckpoint()
-    var dist = seeds.select(col("node").cast("long").as("node")).distinct()
+    val seedDist = seeds.select(col("node").cast("long").as("node")).distinct()
       .withColumn("dist", lit(0.0))
       .localCheckpoint()
-    (1 to iters).foreach { _ =>
+    val dist = Checkpoints.iterate(seedDist, Map.empty, iters)(
+        (_, _) => false) { (dist, _) =>
       val relaxed = dist.join(adj, dist("node") === adj("u"))
         .select(col("v").as("node"), (col("dist") + col("w")).as("dist"))
-      val next = dist.unionAll(relaxed)
+      dist.unionAll(relaxed)
         .groupBy("node").agg(min("dist").as("dist"))
-        .localCheckpoint()
-      Checkpoints.release(dist)
-      dist = next
     }
     Checkpoints.release(adj)
     dist
@@ -478,13 +446,12 @@ object GraphOps {
     var step = 0
     while (step < steps) {
       step += 1
-      pos = pos
+      pos = Checkpoints.pin(pos
         .join(adj, pos("node") === adj("u"))
         .groupBy(col("walk_id"))
         .agg(min_by(col("v"),
           md5(concat_ws("|", col("walk_id"), lit(step), col("v")))).as("node"))
-        .select(col("walk_id"), lit(step).as("step"), col("node"))
-        .localCheckpoint()
+        .select(col("walk_id"), lit(step).as("step"), col("node")))._1
       stepFrames += pos
       out = out.unionAll(pos)
     }
@@ -704,10 +671,9 @@ object GraphOps {
     * contract, converging to the true k-core as rounds grow.)
     *
     * Scale: per round, two semi-joins (endpoint liveness) + one hash
-    * aggregation, all shuffling on node keys; the frontier is
-    * localCheckpoint'd per round to cut lineage (the Pregel-batch shape
-    * of [[bfsHops]]). The early-exit count scans the just-checkpointed
-    * blocks — no recomputation, one plan execution per round. */
+    * aggregation, all shuffling on node keys; the survivor set is pinned
+    * per round to cut lineage, and the early-exit survivor count is
+    * observed on that pin job — one plan execution per round. */
   def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
@@ -723,27 +689,11 @@ object GraphOps {
       dir.join(nodes, Seq("n"), "left_semi")
         .join(nodes.select(col("n").as("m")), Seq("m"), "left_semi")
         .groupBy("n").agg(count(lit(1)).as("degree"))
-    // survivor count rides each checkpoint's own materialization job via
-    // observe() (r12, the nearDupClusters discipline) — the separate
-    // count() action was one extra Spark job per peel round
-    def checkpointWithCount(df: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = df.observe(obs, count(lit(1)).as("c")).localCheckpoint()
-      (ck, obs.get("c").asInstanceOf[Long])
-    }
-    var (nodes, before) = checkpointWithCount(
-      dir.select(col("n")).distinct())
-    var r = 0
-    var stable = false
-    while (r < rounds && !stable) {
-      val prev = nodes
-      val (next, after) = checkpointWithCount(
-        coreDegrees(nodes).filter(col("degree") >= k).select(col("n")))
-      nodes = next
-      Checkpoints.release(prev)
-      stable = after == before
-      before = after
-      r += 1
+    val survivors = count(lit(1)).as("c")
+    val (nodes0, seen0) = Checkpoints.pin(dir.select(col("n")).distinct(), survivors)
+    val nodes = Checkpoints.iterate(nodes0, seen0, rounds, survivors)(
+        (before, after) => before("c") == after("c")) { (nodes, _) =>
+      coreDegrees(nodes).filter(col("degree") >= k).select(col("n"))
     }
     // materialize the final degree pass so the adjacency and survivor
     // checkpoints can be freed deterministically (result is O(|core|))
@@ -952,8 +902,7 @@ object GraphOps {
     * broadcastable when |V| fits), one partial-aggregated
     * (node, label) count, and one struct-argmax `max(cnt, −label)`
     * fold — no window, no driver loop over nodes. Rounds are chained
-    * through eager localCheckpoints with prompt release, the
-    * [[pagerank]] discipline, so `iters` rounds never pin `iters`
+    * through [[Checkpoints.iterate]], so `iters` rounds never pin `iters`
     * copies of the label table. Returns (node, label) over every node
     * incident to an edge. */
   def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
@@ -971,20 +920,18 @@ object GraphOps {
     // round 1 closed form: with self-labels every neighbor label is
     // distinct (count 1 each), so the count-desc/label-asc argmax IS
     // min(neighbor) — one aggregation instead of a join + two-level vote
-    var labels = und.groupBy(col("node"))
+    val round1 = und.groupBy(col("node"))
       .agg(min(col("nb")).as("label"))
       .localCheckpoint()
-    for (_ <- 2 to iters) {
-      val next = und
+    val labels = Checkpoints.iterate(round1, Map.empty, iters - 1)(
+        (_, _) => false) { (labels, _) =>
+      und
         .join(labels.select(col("node").as("nb"), col("label")), Seq("nb"))
         .groupBy(col("node"), col("label"))
         .agg(count(lit(1)).as("cnt"))
         .groupBy(col("node"))
         .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
         .select(col("node"), (-col("m.nl")).as("label"))
-      val prev = labels
-      labels = next.localCheckpoint()
-      Checkpoints.release(prev)
     }
     Checkpoints.release(und)
     labels

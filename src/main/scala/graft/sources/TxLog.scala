@@ -735,26 +735,15 @@ object TxLog {
     if (segs.isEmpty) None else Some(segs.mkString(","))
   }
 
-  /** `df` pinned by `localCheckpoint`, with `metrics` (named aggregates)
-    * observed on the pinning job itself — the counters ride the job that
-    * moves the data instead of each costing a job of its own. */
-  private def pinObserved(df: DataFrame,
-      metrics: Seq[org.apache.spark.sql.Column]): (DataFrame, Map[String, Any]) = {
-    val obs = org.apache.spark.sql.Observation()
-    val pinned = df.observe(obs, metrics.head, metrics.tail: _*).localCheckpoint()
-    (pinned, obs.get)
-  }
-
   /** [[writeBatch]] that counts the written rows and derives the
     * `statCols` blob ([[columnStatsMulti]]) on the write job itself —
     * no read-back. Returns (path, rows, stats). */
   private def writeObserved(df: DataFrame, dir: String, name: String,
       statCols: Seq[String]): (String, Long, Option[String]) = {
     import org.apache.spark.sql.functions.{count, lit}
-    val obs = org.apache.spark.sql.Observation()
-    val path = writeBatch(df.observe(obs, count(lit(1)).as("_graft_n"),
-      statsAggs(statCols): _*), dir, name)
-    val m = obs.get
+    val (path, m) = graft.core.Checkpoints.observed(df,
+      count(lit(1)).as("_graft_n") +: statsAggs(statCols): _*)(
+      writeBatch(_, dir, name))
     (path, m("_graft_n").asInstanceOf[Long], statsBlobOf(statCols, m))
   }
 
@@ -2199,6 +2188,13 @@ object TxLog {
   private val DvFileCol = "_graft_dv_file"
   private val DvPosCol = "_graft_dv_pos"
 
+  /** The sorted distinct part files of a matched-rows frame (file-count
+    * sized) as `_graft_parts` — observed on the DV verbs' pin job. */
+  private def touchedPartsOf: org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{col, collect_set, sort_array}
+    sort_array(collect_set(col(DvFileCol))).as("_graft_parts")
+  }
+
   /** A plain (non-merging) parquet read of files this table wrote, its
     * schema taken from one driver-side footer instead of an inference
     * job ([[org.apache.spark.sql.graftbridge.FooterSchema]]). */
@@ -2985,14 +2981,15 @@ object TxLog {
     if (entries.isEmpty) return 0
     val predicate = dmlColumn(snap.colMap, predicate0, "DELETE (DV)")
     val dvs = snap.dvs
-    val matched = readMasked(spark, snap.files, dvs, withPos = true,
-        nullFill = snap.types, stats = entries.toMap)
-      .filter(coalesce(predicate, lit(false)))
-      .select(DvFileCol, DvPosCol).localCheckpoint()
+    // the file-count-sized list of part files holding matches rides the
+    // pin job
+    val (matched, seen) = graft.core.Checkpoints.pin(
+      readMasked(spark, snap.files, dvs, withPos = true,
+          nullFill = snap.types, stats = entries.toMap)
+        .filter(coalesce(predicate, lit(false)))
+        .select(DvFileCol, DvPosCol), touchedPartsOf)
     try {
-      // file-count-sized collect: which part files hold matches
-      val touchedParts = matched.select(DvFileCol).distinct()
-        .collect().map(_.getString(0))
+      val touchedParts = seen("_graft_parts").asInstanceOf[collection.Seq[String]]
       if (touchedParts.isEmpty) return 0
       val byNorm = entries.map(e => normPath(e._1) -> e._1).toMap
       val touchedDirs =
@@ -3106,12 +3103,12 @@ object TxLog {
     require(missing.isEmpty,
       s"updateWhereDV: SET targets column(s) absent from the table: " +
         s"${missing.mkString(", ")}")
-    val matched = readMasked(spark, entries.map(_._1), dvs, withPos = true,
-        nullFill = nf, stats = entries.toMap)
-      .filter(coalesce(predicate, lit(false))).localCheckpoint()
+    val (matched, seen) = graft.core.Checkpoints.pin(
+      readMasked(spark, entries.map(_._1), dvs, withPos = true,
+          nullFill = nf, stats = entries.toMap)
+        .filter(coalesce(predicate, lit(false))), touchedPartsOf)
     try {
-      val touchedParts = matched.select(DvFileCol).distinct()
-        .collect().map(_.getString(0))
+      val touchedParts = seen("_graft_parts").asInstanceOf[collection.Seq[String]]
       if (touchedParts.isEmpty) return 0
       val byNorm = entries.map(e => normPath(e._1) -> e._1).toMap
       val statsByNorm =
@@ -3314,10 +3311,10 @@ object TxLog {
     val physKeys = keys.map(k =>
       cm.fold(k)(dmlPhysicalName(_, k, "MERGE DELETE key")))
     // the key count and bounds ride the pin's own job
-    val (srcKeys, seen) = pinObserved(source
+    val (srcKeys, seen) = graft.core.Checkpoints.pin(source
       .select(keys.zip(physKeys).map { case (l, p) => col(l).as(p) }: _*)
       .na.drop("any").distinct(),
-      count(lit(1)).as("_graft_n") +: minMaxAggs(physKeys))
+      count(lit(1)).as("_graft_n") +: minMaxAggs(physKeys): _*)
     try {
       if (seen("_graft_n") == 0L) return 0
       val dvs = snap.dvs
@@ -3460,10 +3457,10 @@ object TxLog {
     require(entries.nonEmpty,
       s"merge into an empty table $dir: commit the first batch instead")
     val lands = feedOp.fold(lit(true)) { case (oc, del) => col(oc) =!= del }
-    val (keyed, fed) = pinObserved(keyedRaw,
+    val (keyed, fed) = graft.core.Checkpoints.pin(keyedRaw,
       Seq(count(lit(1)).as("_graft_n"), count(when(lands, 1)).as("_graft_lands")) ++
         feedOp.map { case (oc, _) =>
-          count(when(col(oc).isNull, 1)).as("_graft_null_ops") })
+          count(when(col(oc).isNull, 1)).as("_graft_null_ops") }: _*)
     try {
       if (fed("_graft_n") == 0L) return 0
       feedOp.foreach { case (oc, _) =>
@@ -3477,10 +3474,10 @@ object TxLog {
       // independent inserts, not a multi-match. The pinned per-key counts
       // are also the distinct key set the probe and the rewrite
       // broadcast, and their pinning job observes the key bounds
-      val (keyRows, seen) = pinObserved(
+      val (keyRows, seen) = graft.core.Checkpoints.pin(
         keyed.filter(keys.map(col(_).isNotNull).reduce(_ && _))
           .groupBy(keys.map(col): _*).agg(count(lit(1)).as("_graft_rows")),
-        max(col("_graft_rows")).as("_graft_max_rows") +: minMaxAggs(keys))
+        max(col("_graft_rows")).as("_graft_max_rows") +: minMaxAggs(keys): _*)
       try {
         require(Option(seen("_graft_max_rows")).forall(_ == 1L),
           s"merge source has duplicate keys on (${keys.mkString(", ")}) — " +

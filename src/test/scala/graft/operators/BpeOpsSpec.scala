@@ -46,6 +46,15 @@ class BpeOpsSpec extends AnyFunSuite {
     assert(m(3) == ((4, "e", "we", 4L)))
   }
 
+  test("trainMerges leaves nothing pinned, even at k = 0") {
+    val sc = spark.sparkContext
+    Seq(0, 3).foreach { k =>
+      val before = sc.getPersistentRDDs.keySet
+      BpeOps.trainMerges(docs, col("text"), k).collect()
+      assert((sc.getPersistentRDDs.keySet -- before).isEmpty, s"k = $k")
+    }
+  }
+
   test("tokenCounts applies merges in order; repeated-symbol runs merge left-greedy") {
     val merges = BpeOps.trainMerges(docs, col("text"), k = 4)
       .as[(Int, String, String, Long)].collect().sortBy(_._1)

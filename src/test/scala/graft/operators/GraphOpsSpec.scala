@@ -275,6 +275,41 @@ class PmiDriftSpec extends AnyFunSuite {
     assert(pinnedCount === 1, s"randomWalks residual: $pinnedCount")
   }
 
+  test("personalizedPagerank and shortestPaths leave only their result pinned; hits its two score tables") {
+    sweepStorage()
+    val edges = Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 4L -> 1L).toDF("src", "dst")
+    assert(GraphOps.personalizedPagerank(edges, Seq(1L).toDF("id"), iters = 3)
+      .count() === 4)
+    assert(pinnedCount === 1, s"personalizedPagerank residual: $pinnedCount")
+    sweepStorage()
+    val w = Seq((1L, 2L, 1.0), (2L, 3L, 2.0), (1L, 3L, 5.0)).toDF("src", "dst", "w")
+    assert(GraphOps.shortestPaths(w, Seq(1L).toDF("node"), iters = 3).count() === 3)
+    assert(pinnedCount === 1, s"shortestPaths residual: $pinnedCount")
+    sweepStorage()
+    // the result is a lazy join over the last hub and authority tables
+    assert(GraphOps.hits(edges, iters = 3).count() === 4)
+    assert(pinnedCount === 2, s"hits residual: $pinnedCount")
+  }
+
+  /** Spark jobs one more round costs: the jobs of a run to `r + 1` rounds
+    * minus those of a run to `r`, each consumed by one count. */
+  private def jobsPerRound(run: Int => org.apache.spark.sql.DataFrame, r: Int): Int = {
+    import org.apache.spark.sql.graftbridge.SqlBridge
+    def jobs(n: Int): Int = SqlBridge.jobsOf(spark)(run(n).count())._2
+    jobs(r + 1) - jobs(r)
+  }
+
+  test("bfsHops and kCore start at most 4 Spark jobs per round") {
+    // a 13-node path: neither the frontier nor the 2-core peel settles
+    // within 3 rounds, so every round runs
+    val path = (1L to 12L).map(i => (i, i + 1)).toDF("src", "dst")
+    // the frontier's row count rides its pin job — no emptiness probe
+    val hop = jobsPerRound(GraphOps.bfsHops(path, Seq(1L).toDF("node"), _), 2)
+    assert(hop <= 4, s"bfsHops: $hop jobs per hop")
+    val peel = jobsPerRound(GraphOps.kCore(path, k = 2, _), 2)
+    assert(peel <= 4, s"kCore: $peel jobs per round")
+  }
+
   test("labelPropagation: two bridged triangles, hand-traced two rounds") {
     sweepStorage()
     // triangles {1,2,3} and {10,11,12}, bridge 3-10; round 1 (all labels

@@ -1854,6 +1854,19 @@ class TxLogSpec extends AnyFunSuite {
     TxLog.destroy(dir)
   }
 
+  test("deleteWhereDV: the touched-parts list rides the pin job") {
+    import org.apache.spark.sql.graftbridge.SqlBridge
+    val (dir, _) = dvTable()
+    // the pin and the sidecar write — no separate distinct-collect of the
+    // matched part files
+    val (v, jobs) = SqlBridge.jobsOf(spark)(
+      TxLog.deleteWhereDV(spark, dir, "dvj", col("x") >= 12 && col("x") < 15))
+    assert(v === 4)
+    assert(jobs <= 2, s"deleteWhereDV started $jobs jobs")
+    assert(TxLog.read(spark, dir).count() === 27)
+    TxLog.destroy(dir)
+  }
+
   test("deleteWhereDV: SQL semantics — null predicate keeps, no match commits nothing") {
     val (dir, _) = dvTable()
     // y is null for multiples of 7; y % 2 = 0 is NULL there -> kept
