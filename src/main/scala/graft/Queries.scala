@@ -114,10 +114,11 @@ object Queries {
     * process; a fresh process (Verify, the driver) rebuilds on first
     * touch. `put(df, name, mtime)` writes one coalesced split and pins its
     * mod-time — file sources trigger in mtime order, so arrival order is
-    * part of the fixture, not an accident of staging speed. */
-  private def stageSplitDir(key: String, srcDir: java.nio.file.Path)(
+    * part of the fixture, not an accident of staging speed. The memo key
+    * is `srcDir` itself, a scratch path unique per dataset and gate. */
+  private def stageSplitDir(srcDir: java.nio.file.Path)(
       build: ((DataFrame, String, Long) => Unit) => Unit): Unit =
-    fixtureOnce(key) {
+    fixtureOnce(srcDir.toString) {
       rmTreeQ(srcDir.toString)
       java.nio.file.Files.createDirectories(srcDir)
       def put(df: DataFrame, name: String, mtime: Long): Unit = {
@@ -143,6 +144,21 @@ object Queries {
       s.read.parquet(s"$dir/events.parquet").schema("ts")
         .dataType == org.apache.spark.sql.types.LongType)
 
+  /** The scratch dir `name` ([[Graft.scratch]]) with a symlink to the
+    * dataset's `table`.parquet in it: a file stream source reads every
+    * file of a directory, so each stream gets a directory of its own. The
+    * link target is absolute, so a relative data dir resolves too. */
+  private def linkedSource(dir: String, name: String,
+      table: String): java.nio.file.Path = {
+    val streamDir = java.nio.file.Paths.get(Graft.scratch(dir, name))
+    java.nio.file.Files.createDirectories(streamDir)
+    val link = streamDir.resolve(s"$table.parquet")
+    if (!java.nio.file.Files.exists(link))
+      java.nio.file.Files.createSymbolicLink(link,
+        java.nio.file.Paths.get(dir, s"$table.parquet").toAbsolutePath)
+    streamDir
+  }
+
   /** File-stream source over the events table, generation-robust: the
     * streaming gates all read events through this ONE builder so the ts
     * physical-type variance (see [[eventsTsIsRawNanos]]) is absorbed here.
@@ -151,18 +167,12 @@ object Queries {
     * of the raw six: `ts_us` (exact event-time micros, long — integer
     * division from nanos, so no double rounding) and `event_time`
     * (session-zone timestamp; every entrypoint pins UTC, the same instant
-    * the DuckDB oracle reads). `dirPrefix` picks a distinct /tmp dir for
-    * gates that add side files to the source listing (the outer-join
-    * sentinel). */
+    * the DuckDB oracle reads). `srcName` picks a distinct scratch dir
+    * ([[Graft.scratch]]) for gates that add side files to the source
+    * listing (the outer-join sentinel). */
   private def eventsStream(s: SparkSession, dir: String,
-      dirPrefix: String = "graft_streamsrc_"): DataFrame = {
-    val streamDir = java.nio.file.Paths.get(
-      s"/tmp/$dirPrefix${new java.io.File(dir).getName}")
-    java.nio.file.Files.createDirectories(streamDir)
-    val link = streamDir.resolve("events.parquet")
-    if (!java.nio.file.Files.exists(link))
-      java.nio.file.Files.createSymbolicLink(
-        link, java.nio.file.Paths.get(s"$dir/events.parquet"))
+      srcName: String = "streamsrc"): DataFrame = {
+    val streamDir = linkedSource(dir, srcName, "events")
     val rawNanos = eventsTsIsRawNanos(s, dir)
     val schema =
       if (rawNanos)
@@ -674,7 +684,7 @@ object Queries {
     "q_seqfile_roundtrip",
     (s, dir) => {
       import s.implicits._
-      val out = s"/tmp/graft_seqfile_${new java.io.File(dir).getName}"
+      val out = Graft.scratch(dir, "seqfile")
       val fs = new org.apache.hadoop.fs.Path(out)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(out), true)
@@ -701,7 +711,7 @@ object Queries {
     "q_mapfile_read",
     (s, dir) => {
       import org.apache.hadoop.io.{MapFile, Text}
-      val out = s"/tmp/graft_mapfile_${new java.io.File(dir).getName}"
+      val out = Graft.scratch(dir, "mapfile")
       val conf = s.sparkContext.hadoopConfiguration
       val p = new org.apache.hadoop.fs.Path(out)
       p.getFileSystem(conf).delete(p, true)
@@ -736,7 +746,7 @@ object Queries {
   private val qMapfileRoundtrip = QuerySpec(
     "q_mapfile_roundtrip",
     (s, dir) => {
-      val out = s"/tmp/graft_mapfile_rt_${new java.io.File(dir).getName}"
+      val out = Graft.scratch(dir, "mapfile_rt")
       val p = new org.apache.hadoop.fs.Path(out)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       graft.sources.LegacyContainers.writeMapFile(
@@ -761,7 +771,7 @@ object Queries {
     "q_tfile_read",
     (s, dir) => {
       import org.apache.hadoop.io.file.tfile.TFile
-      val out = s"/tmp/graft_tfile_${new java.io.File(dir).getName}"
+      val out = Graft.scratch(dir, "tfile")
       val conf = s.sparkContext.hadoopConfiguration
       val base = new org.apache.hadoop.fs.Path(out)
       val fs = base.getFileSystem(conf)
@@ -801,7 +811,7 @@ object Queries {
     "q_bloommapfile_read",
     (s, dir) => {
       import org.apache.hadoop.io.{BloomMapFile, MapFile, Text}
-      val out = s"/tmp/graft_bloommapfile_${new java.io.File(dir).getName}"
+      val out = Graft.scratch(dir, "bloommapfile")
       val conf = s.sparkContext.hadoopConfiguration
       val p = new org.apache.hadoop.fs.Path(out)
       val fs = p.getFileSystem(conf)
@@ -835,7 +845,7 @@ object Queries {
     "q_seqfile_typed",
     (s, dir) => {
       import org.apache.hadoop.io.{IntWritable, SequenceFile, Text}
-      val out = s"/tmp/graft_seqtyped_${new java.io.File(dir).getName}"
+      val out = Graft.scratch(dir, "seqtyped")
       val conf = s.sparkContext.hadoopConfiguration
       val p = new org.apache.hadoop.fs.Path(out)
       p.getFileSystem(conf).delete(p, true)
@@ -867,7 +877,7 @@ object Queries {
   private val qAvroRoundtrip = QuerySpec(
     "q_avro_roundtrip",
     (s, dir) => {
-      val out = s"/tmp/graft_avro_${new java.io.File(dir).getName}"
+      val out = Graft.scratch(dir, "avro")
       val p = new org.apache.hadoop.fs.Path(out)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       graft.sources.Avro.writeAvro(
@@ -890,7 +900,7 @@ object Queries {
   private val qAvroEvents = QuerySpec(
     "q_avro_events",
     (s, dir) => {
-      val out = s"/tmp/graft_avroev_${new java.io.File(dir).getName}"
+      val out = Graft.scratch(dir, "avroev")
       val p = new org.apache.hadoop.fs.Path(out)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       graft.sources.Avro.writeAvro(
@@ -916,7 +926,7 @@ object Queries {
   private val qOrcRoundtrip = QuerySpec(
     "q_orc_roundtrip",
     (s, dir) => {
-      val out = s"/tmp/graft_orc_${new java.io.File(dir).getName}"
+      val out = Graft.scratch(dir, "orc")
       t(s, dir, "supplier")
         .select(col("s_suppkey"), col("s_nationkey"), col("s_acctbal"))
         .write.mode("overwrite").option("compression", "zlib").orc(out)
@@ -1457,10 +1467,9 @@ object Queries {
   // summarized; the oracle regenerates the same records arithmetically.
   private val qFixedWidth = QuerySpec(
     "q_fixed_width",
-    (s, _) => {
+    (s, dir) => {
       val n = 500
-      val f = new java.io.File(
-        System.getProperty("java.io.tmpdir"), "graft_fixed_width.bin")
+      val f = new java.io.File(Graft.scratch(dir, "fixed_width.bin"))
       if (!f.exists() || f.length() != n * 40L) {
         val md = java.security.MessageDigest.getInstance("MD5")
         def hex(b: Array[Byte]) = b.map(x => f"${x & 0xff}%02x").mkString
@@ -1692,9 +1701,8 @@ object Queries {
     "q_ann_ivf_inc",
     (s, dir) => {
       import graft.sources.TxLog
-      val sfName = new java.io.File(dir).getName
-      val fix = s"/tmp/graft_fix_ivf_$sfName"
-      val root = s"/tmp/graft_ivf_store_$sfName"
+      val fix = Graft.scratch(dir, "fix_ivf")
+      val root = Graft.scratch(dir, "ivf_store")
       TxLog.destroy(root)
       val emb = t(s, dir, "embeddings")
       val cent = s.read.parquet(s"$fix/centroids")
@@ -1744,7 +1752,7 @@ object Queries {
         WHERE a.nbr_id <> p.query_id) t
       WHERE "rank" <= 5 ORDER BY query_id, "rank""""),
     stage = Some((s, dir) => {
-      val fix = s"/tmp/graft_fix_ivf_${new java.io.File(dir).getName}"
+      val fix = Graft.scratch(dir, "fix_ivf")
       val emb = t(s, dir, "embeddings")
       val seen = emb.filter(col("vec_id") % 10 =!= 0)
       val cent = seen.orderBy("vec_id").limit(8)
@@ -1950,7 +1958,7 @@ object Queries {
   private val qKvtextRoundtrip = QuerySpec(
     "q_kvtext_roundtrip",
     (s, dir) => {
-      val out = s"/tmp/graft_kvtext_${new java.io.File(dir).getName}"
+      val out = Graft.scratch(dir, "kvtext")
       Graft.sink(
         t(s, dir, "events")
           .select(col("event_id").cast("string").as("key"), col("event_type").as("value")),
@@ -1971,7 +1979,7 @@ object Queries {
   private val qPartitionedSink = QuerySpec(
     "q_partitioned_sink",
     (s, dir) => {
-      val out = s"/tmp/graft_parts_${new java.io.File(dir).getName}"
+      val out = Graft.scratch(dir, "parts")
       Graft.sink(t(s, dir, "events").select("event_id", "event_type", "value"),
         out, partitionBy = Seq("event_type"))
       Graft.source(s, out)
@@ -1992,7 +2000,7 @@ object Queries {
   private val qDynamicOverwrite = QuerySpec(
     "q_dynamic_overwrite",
     (s, dir) => {
-      val out = s"/tmp/graft_dynover_${new java.io.File(dir).getName}"
+      val out = Graft.scratch(dir, "dynover")
       val ev = t(s, dir, "events").select("event_id", "event_type", "value")
       ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
       // per-WRITE option (not a session conf): scopes dynamic mode to this
@@ -2018,7 +2026,7 @@ object Queries {
   private val qCompactRoundtrip = QuerySpec(
     "q_compact_roundtrip",
     (s, dir) => {
-      val out = s"/tmp/graft_compact_${new java.io.File(dir).getName}"
+      val out = Graft.scratch(dir, "compact")
       graft.sources.Compact.compact(s, s"$dir/orders.parquet", out,
         targetFileBytes = 1L * 1024 * 1024)
       Graft.source(s, out)
@@ -2086,6 +2094,14 @@ object Queries {
       SELECT COUNT(*) AS n_state_rows, CAST(SUM(cnt) AS BIGINT) AS n_events,
         CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users FROM g"""))
 
+  /** The URL of the dataset's one embedded Derby database, which the JDBC
+    * gates share ([[Graft.scratch]] `derby`); Derby's error log goes to
+    * the same scratch root. */
+  private def derbyUrl(dir: String): String = {
+    System.setProperty("derby.stream.error.file", Graft.scratch(dir, "derby.log"))
+    s"jdbc:derby:${Graft.scratch(dir, "derby")};create=true"
+  }
+
   /** DBOutputFormat/DataDrivenDBInputFormat parity against a real database:
     * batched JDBC insert into embedded Derby, then a partitioned bounded
     * read back (WHERE c_custkey BETWEEN lo AND hi per split — the
@@ -2093,9 +2109,7 @@ object Queries {
   private val qJdbcRoundtrip = QuerySpec(
     "q_jdbc_roundtrip",
     (s, dir) => {
-      System.setProperty("derby.stream.error.file", "/tmp/derby.log")
-      val db = s"/tmp/graft_derby_${new java.io.File(dir).getName}"
-      val url = s"jdbc:derby:$db;create=true"
+      val url = derbyUrl(dir)
       val props = new java.util.Properties()
       props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
       val cust = t(s, dir, "customer").select("c_custkey", "c_nationkey", "c_acctbal")
@@ -2119,9 +2133,7 @@ object Queries {
   private val qJdbcPartitioned = QuerySpec(
     "q_jdbc_partitioned",
     (s, dir) => {
-      System.setProperty("derby.stream.error.file", "/tmp/derby.log")
-      val db = s"/tmp/graft_derby_${new java.io.File(dir).getName}"
-      val url = s"jdbc:derby:$db;create=true"
+      val url = derbyUrl(dir)
       val props = new java.util.Properties()
       props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
       // fixture memo: loading Derby is the writer gate's job
@@ -2197,7 +2209,7 @@ object Queries {
     "q_bucketed_join",
     (s, dir) => {
       val sf = new java.io.File(dir).getName.replace('.', '_')
-      val wh = s"/tmp/graft_bucketed_$sf"
+      val wh = Graft.scratch(dir, "bucketed")
       def writeBucketed(df: DataFrame, tbl: String, key: String): Unit = {
         s.sql(s"DROP TABLE IF EXISTS $tbl")
         // pre-shuffle on the bucket key: each write task then owns exactly
@@ -2342,7 +2354,7 @@ object Queries {
   private val qDedupClustersInc = QuerySpec(
     "q_dedup_clusters_inc",
     (s, dir) => {
-      val fix = clustersIncFixtureDir(dir)
+      val fix = Graft.scratch(dir, "fix_clusters_inc")
       val existing = s.read.parquet(s"$fix/existing")
       val seenSigs = s.read.parquet(s"$fix/seen_sigs")
       val batch = t(s, dir, "documents").filter(col("doc_id") % 10 === 0)
@@ -2353,7 +2365,7 @@ object Queries {
     },
     qDedupClusters.oracle,
     stage = Some((s, dir) => {
-      val fix = clustersIncFixtureDir(dir)
+      val fix = Graft.scratch(dir, "fix_clusters_inc")
       val seen = t(s, dir, "documents").filter(col("doc_id") % 10 =!= 0)
       DedupOps.nearDupClusters(
           DedupOps.minhashLsh(seen, col("doc_id"), col("text"),
@@ -2363,9 +2375,6 @@ object Queries {
           shingleSize = 5, bands = 4, rowsPerBand = 2)
         .coalesce(1).write.mode("overwrite").parquet(s"$fix/seen_sigs")
     }))
-
-  private def clustersIncFixtureDir(dir: String): String =
-    s"/tmp/graft_fix_clusters_inc_${new java.io.File(dir).getName}"
 
   /** The same transitive clusters via alternating large-star/small-star
     * ([[DedupOps.nearDupClustersStar]]) — the O(log n)-round formulation for
@@ -2429,15 +2438,9 @@ object Queries {
   private val qStreamEtl = QuerySpec(
     "q_stream_etl",
     (s, dir) => {
-      val sfName = new java.io.File(dir).getName
       val schema = "event_id LONG, ts LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING"
-      val streamDir = java.nio.file.Paths.get(s"/tmp/graft_streamsrc_$sfName")
-      java.nio.file.Files.createDirectories(streamDir)
-      val link = streamDir.resolve("events.parquet")
-      if (!java.nio.file.Files.exists(link))
-        java.nio.file.Files.createSymbolicLink(
-          link, java.nio.file.Paths.get(s"$dir/events.parquet"))
-      val out = s"/tmp/graft_stream_etl_$sfName"
+      val streamDir = linkedSource(dir, "streamsrc", "events")
+      val out = Graft.scratch(dir, "stream_etl")
       runAvailableNow(s, s.readStream.schema(schema)
         .parquet(streamDir.toString)
         .select(col("event_id"), col("event_type"), col("value"))
@@ -2870,13 +2873,7 @@ object Queries {
     "q_stream_dedup",
     (s, dir) => {
       val schema = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
-      val streamDir = java.nio.file.Paths.get(
-        s"/tmp/graft_streamdoc_${new java.io.File(dir).getName}")
-      java.nio.file.Files.createDirectories(streamDir)
-      val link = streamDir.resolve("documents.parquet")
-      if (!java.nio.file.Files.exists(link))
-        java.nio.file.Files.createSymbolicLink(
-          link, java.nio.file.Paths.get(s"$dir/documents.parquet"))
+      val streamDir = linkedSource(dir, "streamdoc", "documents")
       val agg = s.readStream.schema(schema).parquet(streamDir.toString)
         .select(md5(col("text")).as("content_hash"), col("doc_id"))
         .groupBy("content_hash")
@@ -2924,7 +2921,7 @@ object Queries {
   private val qAutoSource = QuerySpec(
     "q_auto_source",
     (s, dir) => {
-      val out = s"/tmp/graft_auto_${new java.io.File(dir).getName}.csv"
+      val out = Graft.scratch(dir, "auto.csv")
       Graft.sink(
         t(s, dir, "orders")
           .select(col("o_orderkey").cast("string"), col("o_orderstatus")),
@@ -3073,7 +3070,7 @@ object Queries {
   private val qXmlRecords = QuerySpec(
     "q_xml_records",
     (s, dir) => {
-      val out = s"/tmp/graft_xml_${new java.io.File(dir).getName}"
+      val out = Graft.scratch(dir, "xml")
       Graft.sink(
         t(s, dir, "nation").select(concat(
           lit("<rec>\n  <key>"), col("n_nationkey"), lit("</key>\n  <name>"),
@@ -3094,7 +3091,7 @@ object Queries {
   private val qNamedOutputs = QuerySpec(
     "q_named_outputs",
     (s, dir) => {
-      val base = s"/tmp/graft_named_${new java.io.File(dir).getName}"
+      val base = Graft.scratch(dir, "named")
       Graft.namedSinks(
         t(s, dir, "events").select("event_id", "event_type", "value"), base,
         Map(
@@ -3124,7 +3121,7 @@ object Queries {
   private val qNamedOutputsAtomic = QuerySpec(
     "q_named_outputs_atomic",
     (s, dir) => {
-      val base = s"/tmp/graft_namedat_${new java.io.File(dir).getName}"
+      val base = Graft.scratch(dir, "namedat")
       val hfs = new org.apache.hadoop.fs.Path(base)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       hfs.delete(new org.apache.hadoop.fs.Path(base), true)
@@ -3320,7 +3317,7 @@ object Queries {
   private val qCodecRoundtrip = QuerySpec(
     "q_codec_roundtrip",
     (s, dir) => {
-      val base = s"/tmp/graft_codec_${new java.io.File(dir).getName}"
+      val base = Graft.scratch(dir, "codec")
       val src = t(s, dir, "events").select("event_id", "event_type", "value")
       Graft.sink(src, s"$base/gzip", format = "csv",
         options = Map("compression" -> "gzip"))
@@ -3351,7 +3348,7 @@ object Queries {
   private val qCombineFiles = QuerySpec(
     "q_combine_files",
     (s, dir) => {
-      val out = s"/tmp/graft_small_${new java.io.File(dir).getName}"
+      val out = Graft.scratch(dir, "small")
       t(s, dir, "events").select("event_id", "value")
         .repartition(50).write.mode("overwrite").parquet(out)
       s.read.parquet(out)
@@ -3548,17 +3545,9 @@ object Queries {
   private val qStreamJdbc = QuerySpec(
     "q_stream_jdbc",
     (s, dir) => {
-      val sfName = new java.io.File(dir).getName
       val schema = "event_id LONG, ts LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING"
-      val streamDir = java.nio.file.Paths.get(s"/tmp/graft_streamsrc_$sfName")
-      java.nio.file.Files.createDirectories(streamDir)
-      val link = streamDir.resolve("events.parquet")
-      if (!java.nio.file.Files.exists(link))
-        java.nio.file.Files.createSymbolicLink(
-          link, java.nio.file.Paths.get(s"$dir/events.parquet"))
-      System.setProperty("derby.stream.error.file", "/tmp/derby.log")
-      val db = s"/tmp/graft_derby_$sfName"
-      val url = s"jdbc:derby:$db;create=true"
+      val streamDir = linkedSource(dir, "streamsrc", "events")
+      val url = derbyUrl(dir)
       val props = new java.util.Properties()
       props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
       val feed = s.readStream.schema(schema).parquet(streamDir.toString)
@@ -3571,7 +3560,7 @@ object Queries {
             mode = "overwrite", props = props)
           ()
         }
-        .option("checkpointLocation", s"/tmp/graft_stream_jdbc_$sfName.ckpt"))
+        .option("checkpointLocation", Graft.scratch(dir, "stream_jdbc.ckpt")))
       graft.sources.Jdbc.readOne(s, url, "stream_agg", props)
         .orderBy("event_type")
     },
@@ -3681,13 +3670,7 @@ object Queries {
     "q_stream_static_join",
     (s, dir) => {
       val schema = "event_id LONG, ts LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING"
-      val streamDir = java.nio.file.Paths.get(
-        s"/tmp/graft_streamsrc_${new java.io.File(dir).getName}")
-      java.nio.file.Files.createDirectories(streamDir)
-      val link = streamDir.resolve("events.parquet")
-      if (!java.nio.file.Files.exists(link))
-        java.nio.file.Files.createSymbolicLink(
-          link, java.nio.file.Paths.get(s"$dir/events.parquet"))
+      val streamDir = linkedSource(dir, "streamsrc", "events")
       val dim = {
         import s.implicits._
         Seq(
@@ -3894,12 +3877,13 @@ object Queries {
       val tbl = s"ord_lookup_$sf"
       // building the bucketed table is fixture (the sink gates measure
       // writes); the measured operator is the bucket-pruned point lookup
-      fixtureOnce(s"bucket_lookup|$dir") {
+      val path = Graft.scratch(dir, "lookup")
+      fixtureOnce(path) {
         s.sql(s"DROP TABLE IF EXISTS $tbl")
         t(s, dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
           .repartition(8, col("o_orderkey"))
           .write.mode("overwrite")
-          .option("path", s"/tmp/graft_lookup_$sf")
+          .option("path", path)
           .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
           .saveAsTable(tbl)
       }
@@ -4035,7 +4019,7 @@ object Queries {
   private val qJsonRoundtrip = QuerySpec(
     "q_json_roundtrip",
     (s, dir) => {
-      val out = s"/tmp/graft_json_${new java.io.File(dir).getName}"
+      val out = Graft.scratch(dir, "json")
       Graft.sink(t(s, dir, "events").select("event_id", "event_type", "value"),
         out, format = "json")
       Graft.source(s, out, format = "json",
@@ -4057,16 +4041,15 @@ object Queries {
     "q_distcp_sync",
     (s, dir) => {
       import s.implicits._
-      val sfName = new java.io.File(dir).getName
-      val src = s"/tmp/graft_sync_src_$sfName"
-      val dst = s"/tmp/graft_sync_dst_$sfName"
+      val src = Graft.scratch(dir, "sync_src")
+      val dst = Graft.scratch(dir, "sync_dst")
       // fresh dst each run so the copied/skipped counts are deterministic
       val fs = new org.apache.hadoop.fs.Path(dst)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(dst), true)
       // writing the sync SOURCE is fixture; the measured operator is the
       // copy/skip sync pair against a fresh destination
-      fixtureOnce(s"distcp_sync|$dir") {
+      fixtureOnce(src) {
         t(s, dir, "events").select("event_id", "value")
           .repartition(4).write.mode("overwrite").parquet(src)
       }
@@ -4099,8 +4082,7 @@ object Queries {
     "q_distcp_diff",
     (s, dir) => {
       import s.implicits._
-      val sfName = new java.io.File(dir).getName
-      val root = s"/tmp/graft_diffsync_$sfName"
+      val root = Graft.scratch(dir, "diffsync")
       val hfs = new org.apache.hadoop.fs.Path(root)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       hfs.delete(new org.apache.hadoop.fs.Path(root), true)
@@ -4367,7 +4349,7 @@ object Queries {
     "q_txlog_cms_ivm",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_cms_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_cms")
       TxLog.destroy(root)
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val b = TextFunctions.portableBucket(col("doc_id"), 2)
@@ -4589,7 +4571,7 @@ object Queries {
   private val qPartitionPrune = QuerySpec(
     "q_partition_prune",
     (s, dir) => {
-      val out = s"/tmp/graft_prune_${new java.io.File(dir).getName}"
+      val out = Graft.scratch(dir, "prune")
       Graft.sink(t(s, dir, "events").select("event_id", "event_type", "value"),
         out, partitionBy = Seq("event_type"))
       Graft.source(s, out)
@@ -4776,7 +4758,7 @@ object Queries {
   private val qSchemaEvolution = QuerySpec(
     "q_schema_evolution",
     (s, dir) => {
-      val base = s"/tmp/graft_evo_${new java.io.File(dir).getName}"
+      val base = Graft.scratch(dir, "evo")
       val ev = t(s, dir, "events")
       ev.filter(pmod(col("event_id"), lit(2)) === 0)
         .select("event_id", "value")
@@ -4806,7 +4788,7 @@ object Queries {
   private val qCsvPermissive = QuerySpec(
     "q_csv_permissive",
     (s, dir) => {
-      val out = s"/tmp/graft_csv_perm_${new java.io.File(dir).getName}"
+      val out = Graft.scratch(dir, "csv_perm")
       t(s, dir, "documents")
         .select(concat(
           col("doc_id").cast("string"), lit(","),
@@ -4862,13 +4844,7 @@ object Queries {
   private val qStreamOuterJoin = QuerySpec(
     "q_stream_outer_join",
     (s, dir) => {
-      val sfName = new java.io.File(dir).getName
-      val streamDir = java.nio.file.Paths.get(s"/tmp/graft_streamsrc_outer_$sfName")
-      java.nio.file.Files.createDirectories(streamDir)
-      val link = streamDir.resolve("events.parquet")
-      if (!java.nio.file.Files.exists(link))
-        java.nio.file.Files.createSymbolicLink(
-          link, java.nio.file.Paths.get(s"$dir/events.parquet"))
+      val streamDir = linkedSource(dir, "streamsrc_outer", "events")
       // A far-future sentinel row per side pushes the watermark past every
       // real deadline so the trailing no-data batch emits ALL outer rows.
       // It must sit as a plain FILE next to events.parquet (the file stream
@@ -4881,7 +4857,7 @@ object Queries {
       // (raw nanos long vs TIMESTAMP_NTZ micros — see eventsTsIsRawNanos)
       // so the stream's declared schema reads both files; its filename is
       // KEYED by the dataset's max timestamp so a regenerated dataset can
-      // never reuse a stale (no-longer-far-future) sentinel from /tmp.
+      // never reuse a stale (no-longer-far-future) sentinel from scratch.
       val rawNanos = eventsTsIsRawNanos(s, dir)
       val maxTs: Long = maxTsMemo.computeIfAbsent(dir, _ => {
         val batch = s.read.parquet(s"$dir/events.parquet")
@@ -4910,7 +4886,7 @@ object Queries {
       }
       // all files land in microbatch 1 (no per-trigger cap): the sentinel
       // must not be read before the real rows or they'd be marked late
-      val feed = eventsStream(s, dir, "graft_streamsrc_outer_")
+      val feed = eventsStream(s, dir, "streamsrc_outer")
       val clicks = feed.filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id").as("cu"),
           col("event_time").as("click_time"))
@@ -5184,8 +5160,7 @@ object Queries {
   private val qBinaryFiles = QuerySpec(
     "q_binary_files",
     (s, dir) => {
-      val base = java.nio.file.Paths.get(
-        s"/tmp/graft_binfiles_${new java.io.File(dir).getName}")
+      val base = java.nio.file.Paths.get(Graft.scratch(dir, "binfiles"))
       // rebuild from scratch: stale files from a previous dataset would
       // otherwise survive the per-name overwrite and pollute the scan
       if (java.nio.file.Files.exists(base)) {
@@ -5450,7 +5425,7 @@ object Queries {
   private val qCsvQuoted = QuerySpec(
     "q_csv_quoted",
     (s, dir) => {
-      val out = s"/tmp/graft_csvq_${new java.io.File(dir).getName}"
+      val out = Graft.scratch(dir, "csvq")
       val tricky = t(s, dir, "documents").filter(col("doc_id") < 100)
         .select(col("doc_id"),
           concat(lit("a,b \""), col("source"), lit("\"\nline2 "),
@@ -5617,7 +5592,7 @@ object Queries {
   private val qParquetBloom = QuerySpec(
     "q_parquet_bloom",
     (s, dir) => {
-      val out = s"/tmp/graft_parquet_bloom_${new java.io.File(dir).getName}"
+      val out = Graft.scratch(dir, "parquet_bloom")
       t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"), col("l_quantity"))
         .write.mode("overwrite")
@@ -6598,9 +6573,8 @@ object Queries {
   private val qHarLookup = QuerySpec(
     "q_har_lookup",
     (s, dir) => {
-      val sfName = new java.io.File(dir).getName
-      val src = s"/tmp/graft_har_src_$sfName"
-      val arch = s"/tmp/graft_har_arc_$sfName"
+      val src = Graft.scratch(dir, "har_src")
+      val arch = Graft.scratch(dir, "har_arc")
       // fixture mastering: 40 tiny one-doc files (driver-side by design —
       // this builds the small-file INPUT the archive operator exists for)
       val docs = t(s, dir, "documents").filter(col("doc_id") < 40)
@@ -7173,8 +7147,7 @@ object Queries {
     (s, dir) => {
       import graft.sources.TxLog
       graft.sources.GraftFileSystem.register(s)
-      val root = graft.sources.GraftFileSystem.uri(
-        s"/tmp/graft_txlog_${new java.io.File(dir).getName}")
+      val root = graft.sources.GraftFileSystem.uri(Graft.scratch(dir, "txlog"))
       TxLog.destroy(root)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
@@ -7225,7 +7198,7 @@ object Queries {
     "q_txlog_incremental",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_inc_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_inc")
       TxLog.destroy(root)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -7271,7 +7244,7 @@ object Queries {
     "q_txlog_optimize",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_opt_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_opt")
       TxLog.destroy(root)
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
@@ -7356,7 +7329,7 @@ object Queries {
     "q_txlog_restore",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_restore_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_restore")
       TxLog.destroy(root)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -7403,7 +7376,7 @@ object Queries {
     "q_txlog_delete",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_del_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_del")
       TxLog.destroy(root)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -7461,7 +7434,7 @@ object Queries {
     "q_txlog_merge",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_merge_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_merge")
       TxLog.destroy(root)
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
@@ -7527,7 +7500,7 @@ object Queries {
     "q_txlog_cdc",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_cdc_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_cdc")
       TxLog.destroy(root)
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
@@ -7598,7 +7571,7 @@ object Queries {
     "q_txlog_update",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_upd_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_upd")
       TxLog.destroy(root)
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_nationkey"),
@@ -7668,7 +7641,7 @@ object Queries {
     "q_txlog_delete_dv",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_dvdel_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_dvdel")
       TxLog.destroy(root)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -7740,7 +7713,7 @@ object Queries {
     "q_txlog_update_dv",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_dvupd_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_dvupd")
       TxLog.destroy(root)
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_nationkey"),
@@ -7810,7 +7783,7 @@ object Queries {
     "q_txlog_dv_cdc",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_dvcdc_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_dvcdc")
       TxLog.destroy(root)
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
@@ -7879,7 +7852,7 @@ object Queries {
     "q_txlog_rowverb_cdc",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_rvcdc_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_rvcdc")
       TxLog.destroy(root)
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
@@ -7953,7 +7926,7 @@ object Queries {
     "q_txlog_partitioned",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_part_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_part")
       TxLog.destroy(root)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -8011,7 +7984,7 @@ object Queries {
     "q_txlog_ivm",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_ivm_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_ivm")
       TxLog.destroy(root)
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
@@ -8106,7 +8079,7 @@ object Queries {
     "q_stream_txlog_cdc",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_sub_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_sub")
       TxLog.destroy(root)
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
@@ -8184,7 +8157,7 @@ object Queries {
     "q_txlog_history",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_hist_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_hist")
       TxLog.destroy(root)
       val n = t(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
       TxLog.commit(root, Seq(
@@ -8223,7 +8196,7 @@ object Queries {
     "q_txlog_optimize_inc",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_optinc_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_optinc")
       TxLog.destroy(root)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -8274,7 +8247,7 @@ object Queries {
     "q_txlog_bloom_prune",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_bf_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_bf")
       TxLog.destroy(root)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"))
@@ -8315,10 +8288,9 @@ object Queries {
     "q_stream_restart",
     (s, dir) => {
       import graft.sources.TxLog
-      val sfName = new java.io.File(dir).getName
-      val srcDir = java.nio.file.Paths.get(s"/tmp/graft_restart_src_$sfName")
-      val tbl = s"/tmp/graft_restart_tbl_$sfName"
-      val ckpt = s"/tmp/graft_restart_ckpt_$sfName"
+      val srcDir = java.nio.file.Paths.get(Graft.scratch(dir, "restart_src"))
+      val tbl = Graft.scratch(dir, "restart_tbl")
+      val ckpt = Graft.scratch(dir, "restart_ckpt")
       Seq(srcDir.toString, tbl, ckpt).foreach(rmTreeQ)
       java.nio.file.Files.createDirectories(srcDir)
       val ev = t(s, dir, "events")
@@ -8381,7 +8353,7 @@ object Queries {
     "q_txlog_forget",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_forget_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_forget")
       TxLog.destroy(root)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
@@ -8434,9 +8406,8 @@ object Queries {
     "q_txlog_clone",
     (s, dir) => {
       import graft.sources.TxLog
-      val stem = new java.io.File(dir).getName
-      val src = s"/tmp/graft_txlog_clsrc_$stem"
-      val dst = s"/tmp/graft_txlog_cldst_$stem"
+      val src = Graft.scratch(dir, "txlog_clsrc")
+      val dst = Graft.scratch(dir, "txlog_cldst")
       TxLog.destroy(src); TxLog.destroy(dst)
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
@@ -8508,7 +8479,7 @@ object Queries {
     "q_txlog_forget_dv",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_fgdv_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_fgdv")
       TxLog.destroy(root)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
@@ -8574,7 +8545,7 @@ object Queries {
     "q_txlog_time_travel",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_ts_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_ts")
       TxLog.destroy(root)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -8619,7 +8590,7 @@ object Queries {
     "q_txlog_rename",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_ren_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_ren")
       TxLog.destroy(root)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -8679,7 +8650,7 @@ object Queries {
     "q_txlog_mapped_dml",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_mdml_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_mdml")
       TxLog.destroy(root)
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
@@ -8755,15 +8726,17 @@ object Queries {
       ORDER BY snapshot, c_mktsegment"""))
 
   /** One-time catalog registration for the SQL-surface gates: the graft
-    * [[graft.sources.GraftCatalog]] under the name `graft` with a fixed
-    * warehouse (per-dataset state lives in per-dataset TABLE names, so
-    * the process-wide catalog instance can never serve a stale dir —
-    * the q_external_table lesson). CatalogManager instantiates lazily on
-    * first `graft.` reference and caches; conf set-before-use is the
-    * supported runtime registration path (same as Delta's). */
-  private def sqlCatalog(s: SparkSession): Unit = {
+    * [[graft.sources.GraftCatalog]] under the name `graft`, its warehouse
+    * in the scratch root ([[Graft.scratch]]) of the first dataset a
+    * session registers it for (per-dataset state lives in per-dataset
+    * TABLE names, so the session-wide catalog instance can never serve a
+    * stale dir — the q_external_table lesson). CatalogManager
+    * instantiates lazily on first `graft.` reference and caches; conf
+    * set-before-use is the supported runtime registration path (same as
+    * Delta's). */
+  private def sqlCatalog(s: SparkSession, dir: String): Unit = {
     s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.warehouse", "/tmp/graft_sql_warehouse")
+    s.conf.set("spark.sql.catalog.graft.warehouse", Graft.scratch(dir, "sql_warehouse"))
     s.sql("CREATE NAMESPACE IF NOT EXISTS graft.sql")
   }
 
@@ -8785,9 +8758,9 @@ object Queries {
     "q_sql_merge_into",
     (s, dir) => {
       import graft.sources.TxLog
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
-      val root = s"/tmp/graft_sqlmrg_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "sqlmrg")
       TxLog.destroy(root)
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
@@ -8836,9 +8809,9 @@ object Queries {
     "q_sql_merge_delete",
     (s, dir) => {
       import graft.sources.TxLog
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
-      val root = s"/tmp/graft_sqlmdel_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "sqlmdel")
       TxLog.destroy(root)
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
@@ -8887,9 +8860,9 @@ object Queries {
     "q_txlog_convert",
     (s, dir) => {
       import graft.sources.TxLog
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
-      val root = s"/tmp/graft_convert_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "convert")
       TxLog.destroy(root)
       t(s, dir, "supplier")
         .select(col("s_suppkey"), col("s_nationkey"), col("s_acctbal"))
@@ -8934,9 +8907,9 @@ object Queries {
     "q_sql_restore_clone",
     (s, dir) => {
       import graft.sources.TxLog
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
-      val root = s"/tmp/graft_sqlrc_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "sqlrc")
       TxLog.destroy(root)
       val ev = t(s, dir, "events")
         .filter(col("event_id").isNotNull)
@@ -8993,9 +8966,9 @@ object Queries {
     "q_sql_time_travel",
     (s, dir) => {
       import graft.sources.TxLog
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
-      val root = s"/tmp/graft_sqltt_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "sqltt")
       TxLog.destroy(root)
       val ev = t(s, dir, "events")
         .filter(col("event_id").isNotNull)
@@ -9040,9 +9013,9 @@ object Queries {
     "q_sql_row_dml",
     (s, dir) => {
       import graft.sources.TxLog
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
-      val root = s"/tmp/graft_sqldml_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "sqldml")
       TxLog.destroy(root)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -9082,9 +9055,9 @@ object Queries {
     "q_sql_add_column",
     (s, dir) => {
       import graft.sources.TxLog
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
-      val root = s"/tmp/graft_sqladdc_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "sqladdc")
       TxLog.destroy(root)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -9147,10 +9120,9 @@ object Queries {
     "q_stream_txlog_source",
     (s, dir) => {
       import graft.sources.TxLog
-      val sfName = new java.io.File(dir).getName
-      val root = s"/tmp/graft_srctbl_$sfName"
-      val view = s"/tmp/graft_srcview_$sfName"
-      val ckpt = s"/tmp/graft_srcckpt_$sfName"
+      val root = Graft.scratch(dir, "srctbl")
+      val view = Graft.scratch(dir, "srcview")
+      val ckpt = Graft.scratch(dir, "srcckpt")
       TxLog.destroy(root); TxLog.destroy(view)
       rmTreeQ(ckpt)
       val ev = t(s, dir, "events")
@@ -9235,10 +9207,9 @@ object Queries {
     "q_stream_txlog_sink",
     (s, dir) => {
       import graft.sources.TxLog
-      val sfName = new java.io.File(dir).getName
-      val src = s"/tmp/graft_sinksrc_$sfName"
-      val dst = s"/tmp/graft_sinkdst_$sfName"
-      val ckpt = s"/tmp/graft_sinkckpt_$sfName"
+      val src = Graft.scratch(dir, "sinksrc")
+      val dst = Graft.scratch(dir, "sinkdst")
+      val ckpt = Graft.scratch(dir, "sinkckpt")
       TxLog.destroy(src); TxLog.destroy(dst)
       rmTreeQ(ckpt)
       val ev = t(s, dir, "events")
@@ -9290,9 +9261,9 @@ object Queries {
     "q_sql_maintenance",
     (s, dir) => {
       import graft.sources.TxLog
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
-      val root = s"/tmp/graft_sqlmaint_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "sqlmaint")
       TxLog.destroy(root)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -9342,7 +9313,7 @@ object Queries {
     "q_txlog_constraints",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_chk_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_chk")
       TxLog.destroy(root)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -9385,7 +9356,7 @@ object Queries {
     "q_txlog_evolve",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_evolve_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_evolve")
       TxLog.destroy(root)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -9427,10 +9398,9 @@ object Queries {
     "q_stream_txlog_merge",
     (s, dir) => {
       import graft.sources.TxLog
-      val sfName = new java.io.File(dir).getName
-      val srcDir = java.nio.file.Paths.get(s"/tmp/graft_smerge_src_$sfName")
-      val tbl = s"/tmp/graft_smerge_tbl_$sfName"
-      val ckpt = s"/tmp/graft_smerge_ckpt_$sfName"
+      val srcDir = java.nio.file.Paths.get(Graft.scratch(dir, "smerge_src"))
+      val tbl = Graft.scratch(dir, "smerge_tbl")
+      val ckpt = Graft.scratch(dir, "smerge_ckpt")
       Seq(tbl, ckpt).foreach(rmTreeQ)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
@@ -9477,9 +9447,8 @@ object Queries {
       SELECT DISTINCT user_id + 100000, 'seed', 0.0 FROM events
       ORDER BY user_id"""),
     stage = Some((s, dir) => {
-      val sfName = new java.io.File(dir).getName
-      val srcDir = java.nio.file.Paths.get(s"/tmp/graft_smerge_src_$sfName")
-      stageSplitDir(s"smerge_src_$dir", srcDir) { put =>
+      val srcDir = java.nio.file.Paths.get(Graft.scratch(dir, "smerge_src"))
+      stageSplitDir(srcDir) { put =>
         val ev = t(s, dir, "events")
           .select(col("event_id"), col("user_id"), col("event_type"),
             col("value"))
@@ -9510,10 +9479,9 @@ object Queries {
     "q_stream_forget_dv",
     (s, dir) => {
       import graft.sources.TxLog
-      val sfName = new java.io.File(dir).getName
-      val srcDir = java.nio.file.Paths.get(s"/tmp/graft_sfg_src_$sfName")
-      val tbl = s"/tmp/graft_sfg_tbl_$sfName"
-      val ckpt = s"/tmp/graft_sfg_ckpt_$sfName"
+      val srcDir = java.nio.file.Paths.get(Graft.scratch(dir, "sfg_src"))
+      val tbl = Graft.scratch(dir, "sfg_tbl")
+      val ckpt = Graft.scratch(dir, "sfg_ckpt")
       Seq(tbl, ckpt).foreach(rmTreeQ)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
@@ -9562,9 +9530,8 @@ object Queries {
       FROM events WHERE NOT COALESCE(user_id % 7 = 0, FALSE)
       GROUP BY 1 ORDER BY 1"""),
     stage = Some((s, dir) => {
-      val sfName = new java.io.File(dir).getName
-      val srcDir = java.nio.file.Paths.get(s"/tmp/graft_sfg_src_$sfName")
-      stageSplitDir(s"sfg_src_$dir", srcDir) { put =>
+      val srcDir = java.nio.file.Paths.get(Graft.scratch(dir, "sfg_src"))
+      stageSplitDir(srcDir) { put =>
         // the forget queue: users ≡ 0 (mod 7), split into three
         // arrival-ordered request files by user-id tercile
         val requests = t(s, dir, "events")
@@ -9583,7 +9550,7 @@ object Queries {
     "q_txlog_zorder",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_z_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_z")
       TxLog.destroy(root)
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
@@ -9638,7 +9605,7 @@ object Queries {
     "q_txlog_zorder3",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_z3_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_z3")
       TxLog.destroy(root)
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
@@ -9706,7 +9673,7 @@ object Queries {
     "q_txlog_compact_delta",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_cd_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_cd")
       TxLog.destroy(root)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -9748,7 +9715,7 @@ object Queries {
     "q_txlog_pruned",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_pr_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_pr")
       TxLog.destroy(root)
       val ev = t(s, dir, "events").select(col("event_type"), col("value"))
         .filter(col("value").isNotNull)
@@ -9787,7 +9754,7 @@ object Queries {
     "q_txlog_checkpoint_parquet",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_txlog_cpq_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_cpq")
       TxLog.destroy(root)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -9847,9 +9814,9 @@ object Queries {
     "q_txlog_scan_prune",
     (s, dir) => {
       import graft.sources.TxLog
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
-      val root = s"/tmp/graft_txlog_sp_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "txlog_sp")
       TxLog.destroy(root)
       val ev = t(s, dir, "events").select(col("event_type"), col("value"))
         .filter(col("value").isNotNull)
@@ -9895,9 +9862,9 @@ object Queries {
     "q_sql_partitioned",
     (s, dir) => {
       import graft.sources.TxLog
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
-      val root = s"/tmp/graft_sqlpart_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "sqlpart")
       TxLog.destroy(root)
       t(s, dir, "events").select(col("event_id"), col("event_type"),
           col("value"))
@@ -9947,7 +9914,7 @@ object Queries {
     "q_sql_partitioned2",
     (s, dir) => {
       import graft.sources.TxLog
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
       s.sql(s"DROP TABLE IF EXISTS graft.sql.evpart2_$tag")
       t(s, dir, "events").select(col("event_id"), col("event_type"),
@@ -10000,7 +9967,7 @@ object Queries {
     "q_sql_part_add_column",
     (s, dir) => {
       import graft.sources.TxLog
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
       s.sql(s"DROP TABLE IF EXISTS graft.sql.evpac_$tag")
       t(s, dir, "events").select(col("event_id"), col("event_type"),
@@ -10063,7 +10030,7 @@ object Queries {
     "q_sql_partitioned_days",
     (s, dir) => {
       import graft.sources.TxLog
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
       s.sql(s"DROP TABLE IF EXISTS graft.sql.evdays_$tag")
       t(s, dir, "events")
@@ -10116,7 +10083,7 @@ object Queries {
   private val qSqlPartitionedMonths = QuerySpec(
     "q_sql_partitioned_months",
     (s, dir) => {
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
       s.sql(s"DROP TABLE IF EXISTS graft.sql.evmon_$tag")
       t(s, dir, "events")
@@ -10176,7 +10143,7 @@ object Queries {
   private val qSqlPartitionedYears = QuerySpec(
     "q_sql_partitioned_years",
     (s, dir) => {
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
       s.sql(s"DROP TABLE IF EXISTS graft.sql.evyr_$tag")
       t(s, dir, "events")
@@ -10236,7 +10203,7 @@ object Queries {
   private val qSqlPartitionedHours = QuerySpec(
     "q_sql_partitioned_hours",
     (s, dir) => {
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
       s.sql(s"DROP TABLE IF EXISTS graft.sql.evhr_$tag")
       t(s, dir, "events")
@@ -10295,7 +10262,7 @@ object Queries {
   private val qSqlPartitionedBucket = QuerySpec(
     "q_sql_partitioned_bucket",
     (s, dir) => {
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
       s.sql(s"DROP TABLE IF EXISTS graft.sql.custbk_$tag")
       t(s, dir, "customer")
@@ -10347,7 +10314,7 @@ object Queries {
   private val qSqlPartitionedTruncate = QuerySpec(
     "q_sql_partitioned_truncate",
     (s, dir) => {
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
       s.sql(s"DROP TABLE IF EXISTS graft.sql.doctr_$tag")
       t(s, dir, "documents")
@@ -10399,7 +10366,7 @@ object Queries {
     "q_sql_partition_evolution",
     (s, dir) => {
       import graft.sources.TxLog
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
       s.sql(s"DROP TABLE IF EXISTS graft.sql.evolve_$tag")
       t(s, dir, "events")
@@ -10481,7 +10448,7 @@ object Queries {
     "q_txlog_replace_where",
     (s, dir) => {
       import graft.sources.TxLog
-      val root = s"/tmp/graft_replw_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "replw")
       TxLog.destroy(root)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -10544,9 +10511,9 @@ object Queries {
     "q_sql_describe_detail",
     (s, dir) => {
       import graft.sources.TxLog
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
-      val root = s"/tmp/graft_sqldd_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "sqldd")
       TxLog.destroy(root)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -10592,9 +10559,9 @@ object Queries {
     "q_sql_analyze",
     (s, dir) => {
       import graft.sources.TxLog
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
-      val root = s"/tmp/graft_sqlana_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "sqlana")
       TxLog.destroy(root)
       val ev = t(s, dir, "events").select(col("event_type"), col("value"))
         .filter(col("value").isNotNull)
@@ -10647,9 +10614,9 @@ object Queries {
     "q_sql_show_partitions",
     (s, dir) => {
       import graft.sources.TxLog
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
-      val root = s"/tmp/graft_sqlshowp_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "sqlshowp")
       TxLog.destroy(root)
       t(s, dir, "events").select(col("event_id"), col("value"))
         .filter(col("event_id").isNotNull)
@@ -10682,9 +10649,9 @@ object Queries {
     "q_sql_optimize_part",
     (s, dir) => {
       import graft.sources.TxLog
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
-      val root = s"/tmp/graft_sqloptp_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "sqloptp")
       TxLog.destroy(root)
       t(s, dir, "events").select(col("event_id"), col("event_type"),
           col("value"))
@@ -10745,9 +10712,9 @@ object Queries {
     "q_sql_auto_stats",
     (s, dir) => {
       import graft.sources.TxLog
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
-      val root = s"/tmp/graft_sqlauto_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "sqlauto")
       TxLog.destroy(root)
       t(s, dir, "events").select(col("event_id"), col("event_type"),
           col("value"))
@@ -10793,9 +10760,9 @@ object Queries {
     "q_sql_constraint",
     (s, dir) => {
       import graft.sources.TxLog
-      sqlCatalog(s)
+      sqlCatalog(s, dir)
       val tag = dsTag(dir)
-      val root = s"/tmp/graft_sqlck_${new java.io.File(dir).getName}"
+      val root = Graft.scratch(dir, "sqlck")
       TxLog.destroy(root)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -11072,10 +11039,9 @@ object Queries {
   private val qStreamCdcAgg = QuerySpec(
     "q_stream_cdc_agg",
     (s, dir) => {
-      val sfName = new java.io.File(dir).getName
-      val srcDir = java.nio.file.Paths.get(s"/tmp/graft_cdc_src_$sfName")
-      val stateDir = s"/tmp/graft_cdc_state_$sfName"
-      val ckpt = s"/tmp/graft_cdc_ckpt_$sfName"
+      val srcDir = java.nio.file.Paths.get(Graft.scratch(dir, "cdc_src"))
+      val stateDir = Graft.scratch(dir, "cdc_state")
+      val ckpt = Graft.scratch(dir, "cdc_ckpt")
       Seq(stateDir, ckpt).foreach(rmTreeQ)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -11118,9 +11084,8 @@ object Queries {
         CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
       FROM nb GROUP BY 1 ORDER BY 1"""),
     stage = Some((s, dir) => {
-      val sfName = new java.io.File(dir).getName
-      val srcDir = java.nio.file.Paths.get(s"/tmp/graft_cdc_src_$sfName")
-      stageSplitDir(s"cdc_src_$dir", srcDir) { put =>
+      val srcDir = java.nio.file.Paths.get(Graft.scratch(dir, "cdc_src"))
+      stageSplitDir(srcDir) { put =>
         val ev = t(s, dir, "events")
           .select(col("event_id"), col("event_type"), col("value"))
         val b10 = TextFunctions.portableBucket(col("event_id"), 10)
@@ -11148,10 +11113,9 @@ object Queries {
   private val qStreamIncremental = QuerySpec(
     "q_stream_incremental",
     (s, dir) => {
-      val sfName = new java.io.File(dir).getName
-      val srcDir = java.nio.file.Paths.get(s"/tmp/graft_incr_src_$sfName")
-      val stateDir = s"/tmp/graft_incr_state_$sfName"
-      val ckpt = s"/tmp/graft_incr_ckpt_$sfName"
+      val srcDir = java.nio.file.Paths.get(Graft.scratch(dir, "incr_src"))
+      val stateDir = Graft.scratch(dir, "incr_state")
+      val ckpt = Graft.scratch(dir, "incr_ckpt")
       // fresh state per run (a reused checkpoint would skip the
       // batches and leave no states)
       Seq(stateDir, ckpt).foreach(rmTreeQ)
@@ -11186,9 +11150,8 @@ object Queries {
           / COUNT(value), 6) AS avg_value
       FROM events GROUP BY 1 ORDER BY 1"""),
     stage = Some((s, dir) => {
-      val sfName = new java.io.File(dir).getName
-      val srcDir = java.nio.file.Paths.get(s"/tmp/graft_incr_src_$sfName")
-      stageSplitDir(s"incr_src_$dir", srcDir) { put =>
+      val srcDir = java.nio.file.Paths.get(Graft.scratch(dir, "incr_src"))
+      stageSplitDir(srcDir) { put =>
         val ev = t(s, dir, "events")
           .select(col("event_id"), col("event_type"), col("value"))
         (0 until 3).foreach { b =>
@@ -11225,11 +11188,10 @@ object Queries {
   private val qStreamLshDedup = QuerySpec(
     "q_stream_lsh_dedup",
     (s, dir) => {
-      val sfName = new java.io.File(dir).getName
-      val srcDir = java.nio.file.Paths.get(s"/tmp/graft_lsh_src_$sfName")
-      val sigStore = s"/tmp/graft_lsh_sigs_$sfName"
-      val pairStore = s"/tmp/graft_lsh_pairs_$sfName"
-      val ckpt = s"/tmp/graft_lsh_ckpt_$sfName"
+      val srcDir = java.nio.file.Paths.get(Graft.scratch(dir, "lsh_src"))
+      val sigStore = Graft.scratch(dir, "lsh_sigs")
+      val pairStore = Graft.scratch(dir, "lsh_pairs")
+      val ckpt = Graft.scratch(dir, "lsh_ckpt")
       Seq(sigStore, pairStore, ckpt).foreach(rmTreeQ)
       import graft.sources.TxLog
       val emptySigs = s.createDataFrame(
@@ -11323,9 +11285,8 @@ object Queries {
                      JOIN docs db ON p.b = db.doc_id) v
       WHERE jaccard >= 0.2 ORDER BY a, b"""),
     stage = Some((s, dir) => {
-      val sfName = new java.io.File(dir).getName
-      val srcDir = java.nio.file.Paths.get(s"/tmp/graft_lsh_src_$sfName")
-      stageSplitDir(s"lsh_src_$dir", srcDir) { put =>
+      val srcDir = java.nio.file.Paths.get(Graft.scratch(dir, "lsh_src"))
+      stageSplitDir(srcDir) { put =>
         val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
         (0 until 3).foreach { b =>
           put(docs.filter(
@@ -12739,10 +12700,9 @@ object Queries {
     "q_stream_anomaly",
     (s, dir) => {
       import s.implicits._
-      val sfName = new java.io.File(dir).getName
-      val srcDir = java.nio.file.Paths.get(s"/tmp/graft_anom_src_$sfName")
-      val outDir = s"/tmp/graft_anom_out_$sfName"
-      val ckpt = s"/tmp/graft_anom_ckpt_$sfName"
+      val srcDir = java.nio.file.Paths.get(Graft.scratch(dir, "anom_src"))
+      val outDir = Graft.scratch(dir, "anom_out")
+      val ckpt = Graft.scratch(dir, "anom_ckpt")
       Seq(outDir, ckpt).foreach(rmTreeQ)
       val feed = s.readStream
         .schema("event_type STRING, event_id BIGINT, value DOUBLE")
@@ -12796,9 +12756,8 @@ object Queries {
         CAST(SUM(fl) AS BIGINT) AS n_flagged
       FROM f GROUP BY 1 ORDER BY 1"""),
     stage = Some((s, dir) => {
-      val sfName = new java.io.File(dir).getName
-      val srcDir = java.nio.file.Paths.get(s"/tmp/graft_anom_src_$sfName")
-      stageSplitDir(s"anom_src_$dir", srcDir) { put =>
+      val srcDir = java.nio.file.Paths.get(Graft.scratch(dir, "anom_src"))
+      stageSplitDir(srcDir) { put =>
         val ev = t(s, dir, "events")
           .filter(col("value").isNotNull && col("event_type").isNotNull &&
             col("event_id").isNotNull)

@@ -51,6 +51,25 @@ object Graft {
     spark
   }
 
+  /** Where a gate keeps its side files (TxLog tables, stream sources and
+    * checkpoints, Derby databases) for the dataset at `dataDir`:
+    * `<java.io.tmpdir>/graft-<basename>-<hash>/<name>`, the hash taken
+    * over the dir's canonical path. The root is the same for every
+    * process that names the same dir (a relative path or a symlink
+    * included), so reruns find what earlier runs left; two datasets with
+    * one basename in different parents get different roots. Creates the
+    * root, not `name`. */
+  def scratch(dataDir: String, name: String): String = {
+    val canon = new java.io.File(dataDir).getCanonicalFile
+    val hash = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(canon.getPath.getBytes("UTF-8")).take(4).map(b => f"$b%02x").mkString
+    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft-${canon.getName.replaceAll("[^A-Za-z0-9._-]", "_")}-$hash")
+      .getAbsoluteFile
+    java.nio.file.Files.createDirectories(root.toPath)
+    new java.io.File(root, name).getPath
+  }
+
   /** Load one of the driver-generated tables from a scale-factor dir.
     *
     * The events table's `ts` physical type has varied across driver data

@@ -77,13 +77,15 @@ object BpeOps {
     * (count desc, pair asc) argmax on the driver (ONE row crosses), apply
     * the merge with the greedy kernel, and pin the result to keep the
     * iterated plan flat. The argmax is an aggregation over pairs, so it
-    * cannot ride the pin job; nothing stays pinned on return. */
+    * cannot ride the pin job; nothing stays pinned on return, and
+    * `k <= 0` starts no job. */
   def trainMerges(docs: DataFrame, textCol: Column, k: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
+    if (k <= 0) return merges.toSeq.toDF("step", "left", "right", "pair_count")
     var words = Checkpoints.pin(symbolized(docs, textCol)
       .select(col("cnt"), col("syms")).as[(Long, Seq[String])])._1
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     try {
       var step = 0
       var exhausted = false

@@ -119,9 +119,10 @@ object ScaleSuite {
       (runs.map(_._1), runs.map(_._2))
     }
 
-    /** `body` on a fresh table root, destroyed before and after. */
+    /** `body` on a fresh table root in the dataset's scratch root
+      * ([[Graft.scratch]]), destroyed before and after. */
     def withTable[T](name: String)(body: String => T): T = {
-      val root = s"/tmp/graft_scale_$name"
+      val root = Graft.scratch(sf, s"scale_$name")
       TxLog.destroy(root)
       try body(root) finally TxLog.destroy(root)
     }

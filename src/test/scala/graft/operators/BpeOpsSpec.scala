@@ -50,8 +50,11 @@ class BpeOpsSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     Seq(0, 3).foreach { k =>
       val before = sc.getPersistentRDDs.keySet
-      BpeOps.trainMerges(docs, col("text"), k).collect()
+      val (merges, jobs) = org.apache.spark.sql.graftbridge.SqlBridge.jobsOf(spark)(
+        BpeOps.trainMerges(docs, col("text"), k))
+      merges.collect()
       assert((sc.getPersistentRDDs.keySet -- before).isEmpty, s"k = $k")
+      if (k == 0) assert(jobs == 0, "k = 0 starts no Spark job")
     }
   }
 

@@ -88,8 +88,9 @@ class RoundSevenOpsSpec extends AnyFunSuite {
   }
 
   test("Har archive: every entry random-accesses back byte-identical; unknown name is None") {
-    val src = "/tmp/graft_har_spec_src"
-    val arch = "/tmp/graft_har_spec_arc"
+    val base = java.nio.file.Files.createTempDirectory("graft_har_spec").toString
+    val src = s"$base/src"
+    val arch = s"$base/arc"
     val payloads = Map(
       "a.txt" -> "alpha content",
       "b.txt" -> "",

@@ -868,12 +868,13 @@ class GraftCatalogSpec extends AnyFunSuite {
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     val gate = new java.util.concurrent.CountDownLatch(1)
+    val base = freshDir()
     val futs = (1 to 8).map { i =>
       scala.concurrent.Future {
         gate.await()
         try {
           spark.sql(s"CREATE TABLE cat.race.t (id BIGINT) USING graft " +
-            s"LOCATION '/tmp/graft_race_loc_$i'")
+            s"LOCATION '$base/graft_race_loc_$i'")
           Right(i)
         } catch { case e: Exception => Left(e.getClass.getSimpleName) }
       }

@@ -22,7 +22,8 @@ class GraftFsSpec extends AnyFunSuite {
 
   test("round-trip: write file://, read graftfs:// — identical rows") {
     GraftFileSystem.register(spark)
-    val out = "/tmp/graft_fs_scheme_spec"
+    val out = java.nio.file.Files.createTempDirectory("graft_fs_scheme_spec")
+      .resolve("out").toString
     val df = (1L to 100L).toDF("id").withColumn("sq",
       org.apache.spark.sql.functions.col("id") * org.apache.spark.sql.functions.col("id"))
     df.write.mode("overwrite").parquet(out)
@@ -33,7 +34,8 @@ class GraftFsSpec extends AnyFunSuite {
 
   test("writes go through the scheme too") {
     GraftFileSystem.register(spark)
-    val out = GraftFileSystem.uri("/tmp/graft_fs_scheme_write")
+    val out = GraftFileSystem.uri(java.nio.file.Files.createTempDirectory(
+      "graft_fs_scheme_write").resolve("out").toString)
     (1L to 10L).toDF("id").write.mode("overwrite").parquet(out)
     assert(spark.read.parquet(out).count() == 10)
     val fs = FileSystem.get(java.net.URI.create(out),

@@ -14,7 +14,7 @@ class SourcesSpec extends AnyFunSuite {
     Files.createTempDirectory("graft-test").toString
 
   test("string-range predicates split a JDBC read disjointly and cover NULLs") {
-    System.setProperty("derby.stream.error.file", "/tmp/derby.log")
+    System.setProperty("derby.stream.error.file", s"${tmpDir()}/derby.log")
     val url = s"jdbc:derby:${tmpDir()}/db;create=true"
     val props = new java.util.Properties()
     props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
