@@ -62,12 +62,25 @@ object Queries {
     q
   }
 
-  /** [[runAvailableNow]] into the in-memory sink `name`; returns its table. */
-  private def runToMemory(s: SparkSession, df: DataFrame, name: String,
-      outputMode: String): DataFrame = {
+  /** [[runAvailableNow]] into the in-memory sink `name`; returns its table.
+    * The checkpoint lives in the dataset's scratch root ([[memoryCheckpoint]]). */
+  private def runToMemory(s: SparkSession, dir: String, df: DataFrame,
+      name: String, outputMode: String): DataFrame = {
     runAvailableNow(s, df.writeStream.format("memory").queryName(name)
+      .option("checkpointLocation", memoryCheckpoint(dir, name))
       .outputMode(outputMode))
     s.table(name)
+  }
+
+  /** A fresh checkpoint dir for the memory-sink stream `name`,
+    * `<name>.ckpt` under [[Graft.scratch]], so no stream leaves a Spark
+    * `temporary-*` dir beside it. Wiped first: the memory sink keeps no
+    * data across runs, and an append-mode memory sink refuses to restart
+    * from an existing checkpoint. */
+  private def memoryCheckpoint(dir: String, name: String): String = {
+    val ckpt = Graft.scratch(dir, s"$name.ckpt")
+    rmTreeQ(ckpt)
+    ckpt
   }
 
   // per-dataset fixture probes are memoized for the life of the process:
@@ -2050,7 +2063,7 @@ object Queries {
         .withColumn("value_dec", col("value").cast("decimal(18,6)"))
       val agg = graft.streaming.StreamOps.windowedAgg(
         stream, "event_time", "event_type", "value_dec", "1 hour", "1 hour")
-      runToMemory(s, agg, "graft_stream_tumbling", "complete")
+      runToMemory(s, dir, agg, "graft_stream_tumbling", "complete")
         .select(
           date_format(col("window_start"), "yyyy-MM-dd HH:00:00").as("hour"),
           col("event_type"), col("cnt"),
@@ -2080,6 +2093,8 @@ object Queries {
           .agg(count(lit(1)).as("cnt"))
         val q = runAvailableNow(s, agg.writeStream
           .format("memory").queryName("graft_stream_rocksdb")
+          .option("checkpointLocation",
+            memoryCheckpoint(dir, "graft_stream_rocksdb"))
           .outputMode("complete"))
         require(q.lastProgress != null && q.lastProgress.json.contains("rocksdb"),
           "RocksDB state store did not engage")
@@ -2174,7 +2189,7 @@ object Queries {
         .as[graft.streaming.StreamOps.SessionEvent]
       val closed = graft.streaming.StreamOps.closedSessions(
         events, gapMicros = 1800000000L, watermarkDelay = "36500 days")
-      runToMemory(s, closed.toDF(), "graft_stream_sessions", "append")
+      runToMemory(s, dir, closed.toDF(), "graft_stream_sessions", "append")
         .select(col("userId").as("user_id"), col("startMicros").as("start_us"),
           col("endMicros").as("end_us"), col("nEvents").as("n_events"))
         .orderBy("user_id", "start_us")
@@ -2878,7 +2893,7 @@ object Queries {
         .select(md5(col("text")).as("content_hash"), col("doc_id"))
         .groupBy("content_hash")
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
-      runToMemory(s, agg, "graft_stream_dedup", "complete").orderBy("content_hash")
+      runToMemory(s, dir, agg, "graft_stream_dedup", "complete").orderBy("content_hash")
     },
     Some("""SELECT md5(text) AS content_hash, MIN(doc_id) AS keep_id,
       COUNT(*) AS n_copies FROM documents GROUP BY 1 ORDER BY content_hash"""))
@@ -3109,7 +3124,7 @@ object Queries {
       CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS sum_value
       FROM events GROUP BY 1 ORDER BY 1"""))
 
-  /** [[core.Graft.namedSinksAtomic]] — the SINGLE-COMMIT MultipleOutputs
+  /** [[core.Graft.namedSinks]] — the SINGLE-COMMIT MultipleOutputs
     * semantics (VERDICT r15 missing item 5: N filtered writes were N
     * committer transactions): all named outputs stage under one hidden
     * job dir and publish together, the `_GRAFT_MULTI_SUCCESS` marker
@@ -3129,7 +3144,7 @@ object Queries {
       // invisible to readers and be swept by the next publish
       hfs.mkdirs(new org.apache.hadoop.fs.Path(s"$base/.staging_0/high"))
       val ev = t(s, dir, "events").select("event_id", "event_type", "value")
-      Graft.namedSinksAtomic(ev, base, Map(
+      Graft.namedSinks(ev, base, Map(
         "high" -> (col("value") >= 250.0),
         "low" -> (col("value") < 250.0),
         "scored" -> col("value").isNotNull))
@@ -3683,7 +3698,7 @@ object Queries {
         .join(broadcast(dim), Seq("event_type"))
       val agg = stream.groupBy("category")
         .agg(count(lit(1)).as("cnt"), sum(col("value_dec")).as("sum_dec"))
-      runToMemory(s, agg, "graft_stream_static", "complete")
+      runToMemory(s, dir, agg, "graft_stream_static", "complete")
         .select(col("category"), col("cnt"),
           col("sum_dec").cast("double").as("sum_value"))
         .orderBy("category")
@@ -3726,7 +3741,7 @@ object Queries {
       // into the query at start, batch queries after restore are unaffected)
       val pairs = joined
         .select(col("click_id"), col("purchase_id"), col("cu").as("user_id"))
-      runToMemory(s, pairs, "graft_stream_stream", "append")
+      runToMemory(s, dir, pairs, "graft_stream_stream", "append")
         .orderBy("click_id", "purchase_id")
     },
     Some("""SELECT c.event_id AS click_id, p.event_id AS purchase_id,
@@ -4545,7 +4560,7 @@ object Queries {
   /** Z-order clustering ([[graft.functions.ZOrder]]): the Morton value of
     * (o_custkey, o_orderkey) computed through the clustered plan — the
     * engine's z-value must bit-for-bit match the oracle's rendering of the
-    * same interleave ([[graft.functions.ZOrder.zValueSql]] keeps the two
+    * same interleave ([[graft.functions.ZOrder.zValueNSql]] keeps the two
     * from drifting). The data-skipping benefit is plan-asserted in
     * RoundFourOpsSpec. */
   private val qZorder = QuerySpec(
@@ -4555,12 +4570,12 @@ object Queries {
         t(s, dir, "orders"), col("o_custkey"), col("o_orderkey"),
         bits = 10, n = 8)
       clustered.select(col("o_orderkey"),
-          graft.functions.ZOrder.zValue(
-            col("o_custkey"), col("o_orderkey"), 10).as("zv"))
+          graft.functions.ZOrder.zValueN(
+            Seq(col("o_custkey"), col("o_orderkey")), 10).as("zv"))
         .orderBy("o_orderkey")
     },
     Some(s"""SELECT o_orderkey,
-      ${graft.functions.ZOrder.zValueSql("o_custkey", "o_orderkey", 10)} AS zv
+      ${graft.functions.ZOrder.zValueNSql(Seq("o_custkey", "o_orderkey"), 10)} AS zv
       FROM orders ORDER BY o_orderkey"""))
 
   /** Partition-pruned read: events written partitionBy(event_type), read
@@ -4907,7 +4922,7 @@ object Queries {
       // sentinel exclusion happens HERE, on the sink table (see above)
       val pairs = joined
         .select(col("click_id"), col("purchase_id"), col("cu").as("user_id"))
-      runToMemory(s, pairs, "graft_stream_outer", "append")
+      runToMemory(s, dir, pairs, "graft_stream_outer", "append")
         .filter(col("user_id") >= 0)
         .orderBy("click_id", "purchase_id")
     },
@@ -6678,10 +6693,10 @@ object Queries {
           AS surv_e6
       FROM cum ORDER BY cohort, t"""))
 
-  /** Count-min sketch ([[AggOps.cmsCounters]]/[[AggOps.cmsEstimates]]):
+  /** Count-min sketch ([[StatsOps.cmsBuild]]/[[StatsOps.cmsEstimate]]):
     * per-user event frequencies through a 4×64 sketch — small enough that
     * collisions actually occur, so the gate exercises the est ≥ exact
-    * overcount path, not just identity. The seeded md5 bucketing is
+    * overcount path, not just identity. The md5 bucketing is
     * bit-portable, so the oracle rebuilds the identical sketch in SQL and
     * replays the min-over-rows estimate; `over_n = est − n ≥ 0` is the
     * CMS upper-bound contract, hash-checked row by row. */
@@ -6689,10 +6704,10 @@ object Queries {
     "q_cms",
     (s, dir) => {
       val ev = t(s, dir, "events")
-      val counters = AggOps.cmsCounters(ev, col("user_id"), "cms7",
+      val sketch = StatsOps.cmsBuild(ev, col("user_id"), depth = 4, width = 64)
+      val est = StatsOps.cmsEstimate(sketch, ev, col("user_id"),
         depth = 4, width = 64)
-      val est = AggOps.cmsEstimates(counters, ev, col("user_id"), "cms7",
-        depth = 4, width = 64)
+        .select(col("key").as("k"), col("est").as("est_n"))
       val exact = ev.groupBy(col("user_id").cast("string").as("k"))
         .agg(count(lit(1)).as("n"))
       exact.join(est, Seq("k"))
@@ -6704,11 +6719,11 @@ object Queries {
         WHERE user_id IS NOT NULL),
       rs AS (SELECT unnest(range(4)) AS r),
       cnt AS (SELECT r,
-          CAST('0x' || substr(md5('cms7|' || CAST(r AS VARCHAR) || '|' || k),
+          CAST('0x' || substr(md5(CAST(r AS VARCHAR) || '|' || k),
             1, 8) AS BIGINT) % 64 AS b, CAST(COUNT(*) AS BIGINT) AS c
         FROM rows_ CROSS JOIN rs GROUP BY 1, 2),
       probes AS (SELECT k, r,
-          CAST('0x' || substr(md5('cms7|' || CAST(r AS VARCHAR) || '|' || k),
+          CAST('0x' || substr(md5(CAST(r AS VARCHAR) || '|' || k),
             1, 8) AS BIGINT) % 64 AS b
         FROM (SELECT DISTINCT k FROM rows_) CROSS JOIN rs),
       est AS (SELECT p.k, MIN(COALESCE(c.c, 0)) AS est_n
@@ -7307,15 +7322,6 @@ object Queries {
       FROM lineitem WHERE l_orderkey <= 1000
       ORDER BY 1"""))
 
-  /** Z-ORDER layout + cross-dimension data skipping
-    * ([[graft.sources.TxLog.optimizeZOrder]]): the table is rewritten
-    * along a rank-normalized z-curve over (l_orderkey, l_partkey) into 4
-    * files with multi-column manifest stats, and the gate REQUIRES that
-    * a narrow range query on EITHER dimension skips at least one file
-    * (`inputFiles` count vs the full snapshot) — the property a
-    * single-column sort cannot give. The hash-checked output is the pair
-    * of pruned-read aggregates, which the oracle recomputes from the raw
-    * table — file skipping provably loses no rows. */
   /** Version rollback ([[graft.sources.TxLog.restore]]) — the RESTORE
     * verb completing the maintenance loop: two batches land, OPTIMIZE
     * compacts them, then restore rolls the table back to version 1 as
@@ -9546,6 +9552,15 @@ object Queries {
       }
     }))
 
+  /** Z-ORDER layout + cross-dimension data skipping
+    * ([[graft.sources.TxLog.optimizeZOrderN]]): the table is rewritten
+    * along a rank-normalized z-curve over (l_orderkey, l_partkey) into 4
+    * files with multi-column manifest stats, and the gate REQUIRES that
+    * a narrow range query on EITHER dimension skips at least one file
+    * (`inputFiles` count vs the full snapshot) — the property a
+    * single-column sort cannot give. The hash-checked output is the pair
+    * of pruned-read aggregates, which the oracle recomputes from the raw
+    * table — file skipping provably loses no rows. */
   private val qTxlogZorder = QuerySpec(
     "q_txlog_zorder",
     (s, dir) => {
@@ -9561,8 +9576,8 @@ object Queries {
         TxLog.writeBatch(li.filter(b === k), root, s"b$k")
       })
       paths.foreach(p => TxLog.commit(root, Seq(p)))
-      val v = TxLog.optimizeZOrder(s, root, "z",
-        "l_orderkey", "l_partkey", targetFiles = 4)
+      val v = TxLog.optimizeZOrderN(s, root, "z",
+        Seq("l_orderkey", "l_partkey"), targetFiles = 4)
       require(v == 5, s"zorder optimize must commit as version 5, got $v")
       require(TxLog.liveFiles(root).size == 4)
       val full = TxLog.read(s, root)

@@ -242,43 +242,29 @@ object Graft {
 
   /** Named side outputs (MultipleOutputs parity, reference:
     * hadoop-mapreduce-client-core .../lib/output/MultipleOutputs.java:179 —
-    * the `write(name, k, v)` form with N named streams): one cached pass over
-    * the input, one filtered write per named output. The cache means the
-    * upstream plan executes once however many outputs there are; for
-    * data-driven paths (the `baseOutputPath` form) use `sink(partitionBy)`
-    * instead. Rows matching several predicates go to every matching output,
-    * rows matching none go nowhere — exactly the reference's semantics. */
+    * the `write(name, k, v)` form with N named streams, under one
+    * FileOutputCommitter job commit): one cached pass over the input, one
+    * filtered write per named output. The cache means the upstream plan
+    * executes once however many outputs there are; for data-driven paths
+    * (the `baseOutputPath` form) use `sink(partitionBy)` instead. Rows
+    * matching several predicates go to every matching output, rows
+    * matching none go nowhere — exactly the reference's semantics.
+    *
+    * Every named output stages under one hidden job dir, then the publish
+    * renames each into place and writes ONE `_GRAFT_MULTI_SUCCESS` marker
+    * naming every output LAST — the commit signal, exactly Hadoop's
+    * _SUCCESS discipline (the reference's "single transaction" is likewise
+    * a single commitJob call, not multi-dir atomicity — no plain
+    * filesystem has that). An observer honoring the marker ([[readNamed]])
+    * sees all outputs or none: a crash before the marker leaves only
+    * invisible staging (swept by the next attempt); a re-publish retracts
+    * the marker first, so a half-swapped republish reads as uncommitted,
+    * never as a mix. */
   def namedSinks(
       df: DataFrame, base: String,
       outputs: Map[String, org.apache.spark.sql.Column],
       format: String = "parquet"): Unit = {
-    val cached = df.persist()
-    try {
-      cached.count() // materialize once before the N filtered writes
-      outputs.foreach { case (name, pred) =>
-        sink(cached.filter(pred), s"$base/$name", format)
-      }
-    } finally cached.unpersist()
-  }
-
-  /** [[namedSinks]] with the reference's SINGLE-COMMIT semantics
-    * (MultipleOutputs.java:179 under one FileOutputCommitter job
-    * commit): every named output stages under one hidden job dir, then
-    * the publish renames each into place and writes ONE
-    * `_GRAFT_MULTI_SUCCESS` marker naming every output LAST — the
-    * commit signal, exactly Hadoop's _SUCCESS discipline (the
-    * reference's "single transaction" is likewise a single commitJob
-    * call, not multi-dir atomicity — no plain filesystem has that). An
-    * observer honoring the marker ([[readNamed]]) sees all outputs or
-    * none: a crash before the marker leaves only invisible staging
-    * (swept by the next attempt); a re-publish retracts the marker
-    * first, so a half-swapped republish reads as uncommitted, never as
-    * a mix. */
-  def namedSinksAtomic(
-      df: DataFrame, base: String,
-      outputs: Map[String, org.apache.spark.sql.Column],
-      format: String = "parquet"): Unit = {
-    require(outputs.nonEmpty, "namedSinksAtomic needs at least one output")
+    require(outputs.nonEmpty, "namedSinks needs at least one output")
     outputs.keys.foreach(n => require(
       !n.startsWith(".") && !n.startsWith("_") && !n.contains("/"),
       s"named output '$n' must be a plain visible dirname"))
@@ -317,7 +303,7 @@ object Graft {
     } finally { cached.unpersist(); () }
   }
 
-  /** Read one output of a [[namedSinksAtomic]] job, honoring the commit
+  /** Read one output of a [[namedSinks]] job, honoring the commit
     * marker: a missing marker (crashed publish, mid-republish) or an
     * unlisted name refuses loudly instead of serving a torn view. */
   def readNamed(spark: SparkSession, base: String, name: String,

@@ -19,29 +19,15 @@ import org.apache.spark.sql.functions._
   */
 object ZOrder {
 
-  /** Interleave the low `bits` bits of two non-negative integer columns
-    * (x at even bit positions, y at odd): the Morton z-value. Inputs are
-    * taken mod 2^bits so out-of-range values wrap rather than corrupt
-    * neighboring bits. */
-  def zValue(x: Column, y: Column, bits: Int): Column = {
-    require(bits >= 1 && bits <= 31, s"bits must be in [1,31]: $bits")
-    val xm = pmod(x.cast("long"), lit(1L << bits))
-    val ym = pmod(y.cast("long"), lit(1L << bits))
-    (0 until bits).foldLeft(lit(0L)) { (acc, i) =>
-      acc
-        .bitwiseOR(shiftleft(shiftright(xm, i).bitwiseAND(lit(1L)), 2 * i))
-        .bitwiseOR(shiftleft(shiftright(ym, i).bitwiseAND(lit(1L)), 2 * i + 1))
-    }
-  }
-
-  /** N-dimensional Morton z-value — [[zValue]] generalized to any number
-    * of dimensions (Delta's `OPTIMIZE … ZORDER BY (a, b, c, …)` takes an
+  /** N-dimensional Morton z-value over the low `bits` bits of each
+    * integer column (Delta's `OPTIMIZE … ZORDER BY (a, b, c, …)` takes an
     * arbitrary column list for the same reason): bit `i` of dimension
     * `d` lands at interleave position `i * k + d` for `k` dimensions, so
     * each z-range covers a compact k-orthotope and per-file min/max
-    * stats prune on EVERY listed dimension. Same codegen-only
-    * shift/and/or construction; `k * bits` must fit a signed long.
-    * `zValueN(Seq(x, y), bits)` bit-equals the 2-D [[zValue]]. */
+    * stats prune on EVERY listed dimension; for two dimensions x takes
+    * the even bit positions and y the odd ones. Inputs are taken mod
+    * 2^bits (non-negative) so out-of-range values wrap rather than
+    * corrupt neighboring bits; `k * bits` must fit a signed long. */
   def zValueN(dims: Seq[Column], bits: Int): Column = {
     require(dims.size >= 2, s"zValueN needs >= 2 dimensions: ${dims.size}")
     require(bits >= 1 && dims.size * bits <= 62,
@@ -63,6 +49,8 @@ object ZOrder {
     require(dims.size >= 2 && bits >= 1 && dims.size * bits <= 62)
     val m = 1L << bits
     val k = dims.size
+    // non-negative mod to match zValueN's pmod: DuckDB's % keeps the
+    // dividend's sign, which would diverge on negative inputs
     def wrap(c: String) = s"(((($c) % $m) + $m) % $m)"
     val terms = (0 until bits).flatMap { i =>
       dims.zipWithIndex.map { case (c, j) =>
@@ -72,26 +60,11 @@ object ZOrder {
     terms.mkString("(", " | ", ")")
   }
 
-  /** The DuckDB/ANSI-SQL rendering of [[zValue]] over column names `x`/`y`
-    * — kept next to the implementation so oracle SQL and engine can never
-    * drift. */
-  def zValueSql(x: String, y: String, bits: Int): String = {
-    val m = 1L << bits
-    // non-negative mod to match zValue's pmod: DuckDB's % keeps the
-    // dividend's sign, which would diverge on negative inputs
-    def wrap(c: String) = s"(((($c) % $m) + $m) % $m)"
-    val terms = (0 until bits).flatMap { i =>
-      Seq(s"(((${wrap(x)} >> $i) & 1) << ${2 * i})",
-        s"(((${wrap(y)} >> $i) & 1) << ${2 * i + 1})")
-    }
-    terms.mkString("(", " | ", ")")
-  }
-
   /** Cluster a table along the z-curve: range-partition + local sort on the
     * z-value, so each of the `n` output splits covers a compact (x,y)
     * rectangle. Write the result and both dimensions prune at scan time. */
   def cluster(df: DataFrame, x: Column, y: Column, bits: Int, n: Int): DataFrame = {
-    val z = zValue(x, y, bits)
+    val z = zValueN(Seq(x, y), bits)
     df.repartitionByRange(n, z).sortWithinPartitions(z)
   }
 }

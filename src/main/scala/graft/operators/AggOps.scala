@@ -336,52 +336,6 @@ object AggOps {
     state.select(keys :+ hll_sketch_estimate(col("hll")).as("est_ndv"): _*)
   }
 
-  /** Count-min sketch counters: a `depth × width` grid of collision-tolerant
-    * counts — the fixed-size frequency summary for streams/corpora whose
-    * key cardinality is unbounded (the approximate complement of
-    * [[heavyHitters]]' exact recount). Row `r`'s hash of key `k` is the
-    * portable md5 bucket of `seed|r|k` (same discipline as
-    * [[graft.functions.TextFunctions.portableBucket]]), so the sketch is
-    * bit-identical across engines and partitionings. Returns `(r, b, c)`
-    * with only occupied cells present (absent cell = 0).
-    *
-    * Scale: the corpus-sized pass is one explode(depth)+count whose
-    * grouping keyspace is bounded by depth × width — map-side partials
-    * reduce each task's output to at most that many rows regardless of
-    * input size, so the shuffle is O(partitions × depth × width), not
-    * O(|data|). No per-key state anywhere: this is exactly the bounded
-    * memory CMS exists to provide. */
-  def cmsCounters(df: DataFrame, keyCol: Column, seed: String,
-      depth: Int, width: Int): DataFrame = {
-    require(depth >= 1, s"depth must be >= 1: $depth")
-    require(width >= 2, s"width must be >= 2: $width")
-    df.select(keyCol.cast("string").as("k"))
-      .filter(col("k").isNotNull)
-      .select(col("k"), explode(sequence(lit(0), lit(depth - 1))).as("r"))
-      .groupBy(col("r"),
-        pmod(conv(substring(md5(concat_ws("|", lit(seed), col("r"), col("k"))),
-          1, 8), 16, 10).cast("long"), lit(width.toLong)).as("b"))
-      .agg(count(lit(1)).as("c"))
-  }
-
-  /** Point estimates from a count-min sketch: for each queried key, the
-    * minimum over the sketch's `depth` rows of the key's cell count —
-    * an upper bound on the true frequency (classic CMS guarantee:
-    * `n ≤ est ≤ n + ε·N` w.h.p.). `counters` is the (tiny, ≤ depth×width
-    * rows) output of [[cmsCounters]] built with the SAME seed/depth/width;
-    * it broadcasts to the probe join, so estimating costs |keys| × depth
-    * probe rows and zero corpus access. */
-  def cmsEstimates(counters: DataFrame, keys: DataFrame, keyCol: Column,
-      seed: String, depth: Int, width: Int): DataFrame = {
-    val probes = keys.select(keyCol.cast("string").as("k")).distinct()
-      .select(col("k"), explode(sequence(lit(0), lit(depth - 1))).as("r"))
-      .withColumn("b",
-        pmod(conv(substring(md5(concat_ws("|", lit(seed), col("r"), col("k"))),
-          1, 8), 16, 10).cast("long"), lit(width.toLong)))
-    probes.join(broadcast(counters), Seq("r", "b"), "left")
-      .groupBy("k").agg(min(coalesce(col("c"), lit(0L))).as("est_n"))
-  }
-
   /** KMV (k-minimum-values) distinct-count sketch per group — the
     * order-statistics alternative to HLL (Bar-Yossef et al.): hash every
     * distinct element uniformly, keep the k SMALLEST hashes; with h(k)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Corpus-assembly operators for training-data pipelines: packing documents
   * into fixed-length context windows and selecting documents under a token
   * budget. Both need an exact global prefix sum over a deterministic
-  * document order; they reuse [[SortOps.globalCumSum]]'s two-level
+  * document order; they reuse [[SortOps.globalCumSums]]' two-level
   * formulation (per-partition sums + driver offsets), so neither serializes
   * through a single task at 100 TB — the shuffle is one range partition on
   * the ordering key.
@@ -37,7 +37,8 @@ object CorpusOps {
     require(contextLen > 0, s"contextLen must be positive: $contextLen")
     val withN = df.withColumn("n_tokens", nTokensCol.cast("long"))
       .filter(col("n_tokens") > 0)
-    SortOps.globalCumSum(withN, corpusOrder(idCol), col("n_tokens"), "cum_tokens")
+    SortOps.globalCumSums(withN, corpusOrder(idCol), Seq(col("n_tokens")),
+        Seq("cum_tokens"))
       .withColumn("start_offset", col("cum_tokens") - col("n_tokens"))
       .withColumn("first_example", expr(s"start_offset div $contextLen"))
       .withColumn("last_example", expr(s"(cum_tokens - 1) div $contextLen"))
@@ -213,9 +214,9 @@ object CorpusOps {
       nTokensCol: Column, budget: Long): DataFrame = {
     require(budget > 0, s"budget must be positive: $budget")
     val withN = df.withColumn("n_tokens", nTokensCol.cast("long"))
-    SortOps.globalCumSum(withN,
+    SortOps.globalCumSums(withN,
         qualityCol.desc +: corpusOrder(idCol),
-        col("n_tokens"), "cum_tokens")
+        Seq(col("n_tokens")), Seq("cum_tokens"))
       .filter(col("cum_tokens") <= budget)
   }
 

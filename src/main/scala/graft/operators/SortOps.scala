@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -34,87 +34,29 @@ object SortOps {
     * inputs), or by the session-level persistent-RDD sweep between
     * queries.
     *
-    * Fault-tolerance tradeoff (and the `spark.graft.pinnedSort` escape
-    * hatch): `localCheckpoint` stores blocks on the EXECUTORS
-    * (MEMORY_AND_DISK) and severs lineage, so losing an executor mid-query
-    * fails the job instead of recomputing, and library callers without a
-    * per-query sweep accumulate a pinned copy per template call until they
-    * release it. Deployments that prefer recompute-on-failure can set
-    * `spark.graft.pinnedSort=false` in the session conf to fall back to an
-    * unpinned sort — same plan minus the checkpoint — accepting the r8
-    * caveats pinning exists to remove: the range shuffle + sort execute
-    * once per pass (2×), and offset alignment between the passes then
-    * RELIES on re-execution reproducing an identical partitioning and row
-    * order, which is only sound for deterministic upstreams (no `sample`,
-    * no nondeterministic source behind a task retry).
+    * Fault-tolerance tradeoff: `localCheckpoint` stores blocks on the
+    * EXECUTORS (MEMORY_AND_DISK) and severs lineage, so losing an
+    * executor mid-query fails the job instead of recomputing, and
+    * library callers without a per-query sweep accumulate a pinned copy
+    * per template call until they release it.
     *
     * Measured (r10, weightedQuantile on replicated lineitem, local[32],
     * 16g heap): at 6M rows the pin WINS (~5-6 s vs 6.3-7.3 s unpinned —
     * the saved second sort); at 60M rows it FLIPS (66 s vs 51 s) because
     * the pinned sorted copy exceeds the local storage pool and spills.
-    * Pinned stays the default for the correctness guarantee; set the
-    * conf false on deterministic sources under storage pressure. On a
-    * real cluster executor storage scales with the data, moving the
+    * On a real cluster executor storage scales with the data, moving the
     * flip point far right. */
-  private def pinnedRangeSort(df: DataFrame, order: Seq[Column]): DataFrame = {
-    val sorted =
-      df.repartitionByRange(order: _*).sortWithinPartitions(order: _*)
-    val pin = df.sparkSession.conf
-      .getOption("spark.graft.pinnedSort") match {
-      case None => true
-      case Some(v) => v.trim.toLowerCase match {
-        case "true"  => true
-        case "false" => false
-        case other => throw new IllegalArgumentException(
-          s"spark.graft.pinnedSort must be true or false, got '$other'")
-      }
-    }
-    if (pin) sorted.localCheckpoint()
-    else {
-      // the fallback silently trades the by-construction offset alignment
-      // for a determinism ASSUMPTION (both template passes must re-execute
-      // to identical partitioning and row order) — say so once per query,
-      // where a wrong-row-number investigation will find it (ADVICE r10)
-      System.err.println(
-        "[graft] spark.graft.pinnedSort=false: two-pass sort templates now " +
-          "RELY on deterministic re-execution of the range sort; do not use " +
-          "over sample()/nondeterministic sources (wrong offsets, no error)")
-      sorted
-    }
-  }
+  private def pinnedRangeSort(df: DataFrame, order: Seq[Column]): DataFrame =
+    df.repartitionByRange(order: _*).sortWithinPartitions(order: _*)
+      .localCheckpoint()
 
   /** Global 1-based row number in total sort order, WITHOUT a single-partition
-    * window: range-partition + local sort, count rows per partition, then add
-    * per-partition offsets computed from the (tiny) partition-count list.
-    * This is the TeraSort-rank formulation that survives 100TB — a global
-    * `row_number() OVER (ORDER BY ...)` would serialize through one task.
-    * Requires the sort key to be a total order (add a unique tiebreaker). */
-  def globalRowNumber(df: DataFrame, order: Seq[Column], rnCol: String = "rn"): DataFrame = {
-    val sorted = pinnedRangeSort(df, order)
-    val spark = df.sparkSession
-    // Both passes run on InternalRow (queryExecution.toRdd over the pinned
-    // blocks): the external-Row detour (`.rdd` + `createDataFrame`) paid
-    // THREE full per-row conversion passes per template call — Catalyst→Row
-    // for the counts pass, Catalyst→Row + Row→Catalyst around the offset
-    // map — all pure overhead at the scan grain (guide §4: no non-codegen
-    // row work in the hot path). Offsets and partition order are unchanged.
-    val counts = sorted.queryExecution.toRdd
-      .mapPartitionsWithIndex { case (i, it) => Iterator((i, it.size.toLong)) }
-      .collect()
-      .sortBy(_._1)
-    val offsets = counts.map(_._2).scanLeft(0L)(_ + _)
-    val schema = StructType(sorted.schema.fields :+ StructField(rnCol, LongType, nullable = false))
-    val withRn = sorted.queryExecution.toRdd.mapPartitionsWithIndex { case (i, it) =>
-      var rn = offsets(i)
-      // reused JoinedRow view: the scan node re-projects to UnsafeRow per
-      // row (RDDScanExec contract), so no per-row allocation is needed here
-      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      val extra = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
-      it.map { row => rn += 1; extra.update(0, rn)
-        joined(row, extra): org.apache.spark.sql.catalyst.InternalRow }
-    }
-    org.apache.spark.sql.graftbridge.SqlBridge.internalDf(spark, withRn, schema)
-  }
+    * window: the running count of [[globalCumSums]] (TeraSort-rank
+    * formulation — a global `row_number() OVER (ORDER BY ...)` would
+    * serialize through one task). Requires the sort key to be a total
+    * order (add a unique tiebreaker). */
+  def globalRowNumber(df: DataFrame, order: Seq[Column], rnCol: String = "rn"): DataFrame =
+    globalCumSums(df, order, Seq(lit(1L)), Seq(rnCol))
 
   /** Top-k by order — Spark plans per-partition top-k then a k-merge
     * (TakeOrderedAndProject), the scalable "sort + single reducer" of the
@@ -153,49 +95,21 @@ object SortOps {
     df.withColumn("split", label)
   }
 
-  /** Global exact cumulative sum in total sort order WITHOUT a
-    * single-partition window: range-partition + local sort, one long per
-    * partition collected to the driver, then a per-partition running sum
-    * seeded by its prefix offset — the same two-level shape as
-    * [[globalRowNumber]], so nothing serializes through one task at scale.
-    * `cumCol` is the inclusive prefix sum of `valueCol` (cast to long;
-    * nulls contribute 0 — the row keeps its place in the order, like
-    * SQL SUM's null handling). The order must be total (add a unique
-    * tiebreaker). */
-  def globalCumSum(df: DataFrame, order: Seq[Column], valueCol: Column,
-      cumCol: String = "cum"): DataFrame = {
-    val withV = df.withColumn("_gcs_v", coalesce(valueCol.cast("long"), lit(0L)))
-    val sorted = pinnedRangeSort(withV, order)
-    val vIdx = sorted.schema.fieldIndex("_gcs_v")
-    // InternalRow passes over the pinned blocks — see [[globalRowNumber]]
-    // for why the external-Row detour was three wasted conversion passes
-    val sums = sorted.queryExecution.toRdd
-      .mapPartitionsWithIndex { case (i, it) =>
-        var s = 0L; it.foreach(r => s += r.getLong(vIdx)); Iterator((i, s))
-      }
-      .collect()
-      .sortBy(_._1)
-    val offsets = sums.map(_._2).scanLeft(0L)(_ + _)
-    val schema = StructType(
-      sorted.schema.fields :+ StructField(cumCol, LongType, nullable = false))
-    val withCum = sorted.queryExecution.toRdd.mapPartitionsWithIndex { case (i, it) =>
-      var c = offsets(i)
-      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      val extra = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
-      it.map { row => c += row.getLong(vIdx); extra.update(0, c)
-        joined(row, extra): org.apache.spark.sql.catalyst.InternalRow }
-    }
-    org.apache.spark.sql.graftbridge.SqlBridge
-      .internalDf(df.sparkSession, withCum, schema).drop("_gcs_v")
-  }
-
-  /** [[globalCumSum]] generalized to SEVERAL value columns sharing ONE
-    * range-partitioned sort (e.g. the per-cohort cumulative counts a KS
-    * test walks in lockstep): each `valueCols(i)` gets its inclusive
-    * prefix sum as `cumCols(i)`. Same two-level shape — per-partition
-    * totals (one tiny row per partition) to the driver, running sums
-    * seeded by partition offsets — so nothing serializes through one
-    * task and the sort is paid once, not once per column. */
+  /** Global exact cumulative sums in total sort order WITHOUT a
+    * single-partition window — the one two-level prefix kernel (the
+    * reference's TotalOrderPartitioner + per-reducer pass): range-partition
+    * + local sort ([[pinnedRangeSort]]), per-partition totals (one tiny
+    * row per partition) collected to the driver, then a per-partition
+    * running sum seeded by its prefix offset, so nothing serializes
+    * through one task and the sort is paid once for every column. Each
+    * `valueCols(i)` (cast to long; nulls contribute 0 — the row keeps its
+    * place in the order, like SQL SUM's null handling) gets its inclusive
+    * prefix sum as `cumCols(i)`. The order must be total (add a unique
+    * tiebreaker).
+    *
+    * Both passes run on InternalRow (`queryExecution.toRdd` over the
+    * pinned blocks): an external-Row pass (`.rdd` + `createDataFrame`)
+    * would add three per-row conversions at the scan grain. */
   def globalCumSums(df: DataFrame, order: Seq[Column], valueCols: Seq[Column],
       cumCols: Seq[String]): DataFrame = {
     require(valueCols.nonEmpty && valueCols.size == cumCols.size,
@@ -207,7 +121,6 @@ object SortOps {
     }
     val sorted = pinnedRangeSort(withV, order)
     val vIdx = tmpNames.map(sorted.schema.fieldIndex)
-    // InternalRow passes over the pinned blocks — see [[globalRowNumber]]
     val sums = sorted.queryExecution.toRdd
       .mapPartitionsWithIndex { case (i, it) =>
         val s = new Array[Long](k)
@@ -273,7 +186,7 @@ object SortOps {
     val vIdx = sorted.schema.fieldIndex("_grm_v")
     val vType = sorted.schema(vIdx).dataType
     val gTypes = gIdx.map(sorted.schema(_).dataType)
-    // InternalRow passes over the pinned blocks (see [[globalRowNumber]]);
+    // InternalRow passes over the pinned blocks (see [[globalCumSums]]);
     // group keys surface as UTF8String/Long/… — content-equality types, so
     // the Seq comparison semantics are unchanged from the external-Row days
     def keyOf(r: org.apache.spark.sql.catalyst.InternalRow): Seq[Any] =

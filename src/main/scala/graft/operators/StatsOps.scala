@@ -275,7 +275,8 @@ object StatsOps {
     // prior-row count (min of S − t). Exact longs, same values.
     val cnt = keyed.groupBy(g :+ col("_x"): _*)
       .agg(count(lit(1)).as("_ties"))
-    val cum = SortOps.globalCumSum(cnt, g :+ col("_x"), col("_ties"), "_s")
+    val cum = SortOps.globalCumSums(cnt, g :+ col("_x"), Seq(col("_ties")),
+      Seq("_s"))
     val gBase = cum.groupBy(g: _*).agg(min(col("_s") - col("_ties")).as("_b"))
     val mr = cum.join(gBase.hint("shuffle_hash"), gNames.toSeq)
       .select(g ++ Seq(col("_x"),
@@ -608,7 +609,7 @@ object StatsOps {
     * x)` sorts each group in ONE task (the straggler the quantile
     * transform measured and eliminated). The running weight is instead
     * the range-partitioned two-level prefix sum of
-    * [[SortOps.globalCumSum]] over the (group, value) order —
+    * [[SortOps.globalCumSums]] over the (group, value) order —
     * intra-group parallel; a group's cumulative is the global one minus
     * the group's base offset. Weights carry as exact 1e-6-scaled longs
     * (DECIMAL(28,6) × 1e6 is integral), so the fold is
@@ -629,8 +630,8 @@ object StatsOps {
     // the min-x over crossing rows is invariant — no collapse needed
     val rows = keyed
       .withColumn("_wv_e6", (col("_w") * lit(1000000)).cast("long"))
-    val cum = SortOps.globalCumSum(rows, g :+ col("_x"),
-      col("_wv_e6"), "_gcw")
+    val cum = SortOps.globalCumSums(rows, g :+ col("_x"),
+      Seq(col("_wv_e6")), Seq("_gcw"))
     // weights are strictly positive, so the global cumsum is increasing
     // within a group and min(_gcw − _wv_e6) is the group's base offset
     val gBase = cum.groupBy(g: _*)
@@ -687,7 +688,8 @@ object StatsOps {
       // values as the row-grain row_number formulation.
       val cnt = keyed.select(gNames.map(col) :+ col(c).as("_v"): _*)
         .groupBy(g :+ col("_v"): _*).agg(count(lit(1)).as("_t"))
-      val cum = SortOps.globalCumSum(cnt, g :+ col("_v"), col("_t"), "_s")
+      val cum = SortOps.globalCumSums(cnt, g :+ col("_v"), Seq(col("_t")),
+        Seq("_s"))
       val gBase = cum.groupBy(g: _*).agg(min(col("_s") - col("_t")).as("_b"))
       cum.join(gBase.hint("shuffle_hash"), gNames.toSeq)
         .select(g ++ Seq(col("_v").as(c),
@@ -863,7 +865,7 @@ object StatsOps {
     * each group in ONE task, and the op measured ~linear decade factors
     * exactly that way (0.84 s → 2.5 s → 21.9 s at 1×/10×/100×). Instead:
     * one RANGE-partitioned total order over the VALUE-COLLAPSED
-    * (group, x) counts via [[SortOps.globalCumSum]] — intra-group
+    * (group, x) counts via [[SortOps.globalCumSums]] — intra-group
     * parallel, and the sort never holds the full table — then the block
     * min-rank and the group's base reconstruct `percent_rank`
     * arithmetically: `pr = (min_rn(g,x) − min_rn(g)) / (n_g − 1)`. */
@@ -885,7 +887,8 @@ object StatsOps {
     // join paid, but the ranked-row sort, its checkpoint, and one of the
     // two row-grain joins are gone.
     val cnt = keyed.groupBy(g :+ col("x"): _*).agg(count(lit(1)).as("_t"))
-    val cum = SortOps.globalCumSum(cnt, g :+ col("x"), col("_t"), "_s")
+    val cum = SortOps.globalCumSums(cnt, g :+ col("x"), Seq(col("_t")),
+      Seq("_s"))
     val gBase = cum.groupBy(g: _*)
       .agg(min(col("_s") - col("_t")).as("_b"), sum(col("_t")).as("_gn"))
     val pr = cum.join(gBase.hint("shuffle_hash"), gNames.toSeq)
@@ -1012,7 +1015,8 @@ object StatsOps {
     * [[graft.functions.TextFunctions.portableBucket]] convention).
     * Emits the sketch as a TABLE `(r, pos, cnt)` — at most depth×width
     * rows regardless of stream size, the persistable/broadcastable shape
-    * a 100 TB profile job ships to the driver or stores per shard.
+    * a 100 TB profile job ships to the driver or stores per shard. Null
+    * keys are dropped: a null has no bucket and no frequency to estimate.
     *
     * `weight` makes the sketch LINEAR: per-partition sketches merge by
     * counter addition ([[cmsMerge]]), and a CDC feed folds with
@@ -1021,12 +1025,15 @@ object StatsOps {
     * signed-delta contract as [[graft.operators.AggOps
     * .statsDeltaSigned]], extended to a sublinear summary). Scale: one
     * shuffle of depth×|stream| lightweight rows into ≤ depth×width
-    * groups; partial aggregation absorbs almost all of it map-side. */
+    * groups; partial aggregation absorbs almost all of it map-side: the
+    * shuffle is O(partitions × depth × width), not O(|stream|), and no
+    * per-key state exists anywhere. */
   def cmsBuild(df: DataFrame, keyCol: Column, depth: Int, width: Int,
       weight: Column = lit(1L)): DataFrame = {
     require(depth >= 1 && depth <= 8, s"depth must be in [1,8]: $depth")
     require(width >= 2, s"width must be >= 2: $width")
     df.select(keyCol.cast("string").as("_k"), weight.as("_w"))
+      .filter(col("_k").isNotNull)
       .select(col("_k"), col("_w"),
         explode(sequence(lit(0), lit(depth - 1))).as("r"))
       .groupBy(col("r"),
@@ -1053,12 +1060,14 @@ object StatsOps {
     * 0). The classic guarantee holds per key: estimate ≥ true count,
     * with overshoot ≤ ε·N at probability 1−δ for depth ≈ ln(1/δ),
     * width ≈ e/ε. The probe set is key-count-sized; the join against the
-    * ≤ depth×width sketch broadcasts. */
+    * ≤ depth×width sketch broadcasts. Null keys are dropped, as in
+    * [[cmsBuild]]. */
   def cmsEstimate(sketch: DataFrame, keys: DataFrame,
       keyCol: Column, depth: Int, width: Int): DataFrame = {
     require(depth >= 1 && depth <= 8, s"depth must be in [1,8]: $depth")
     require(width >= 2, s"width must be >= 2: $width")
-    keys.select(keyCol.cast("string").as("key")).distinct()
+    keys.select(keyCol.cast("string").as("key"))
+      .filter(col("key").isNotNull).distinct()
       .select(col("key"),
         explode(sequence(lit(0), lit(depth - 1))).as("r"))
       .withColumn("pos", graft.functions.TextFunctions.portableBucket(

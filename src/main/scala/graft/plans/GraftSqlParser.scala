@@ -292,9 +292,7 @@ final case class GraftReplaceWhereCommand(nameParts: Seq[String],
     }: _*)
     Seq(Row(TxLog.replaceWhere(session, g.dir,
       s"sqlrw_${System.nanoTime()}", aligned, expr(condSql),
-      autoStatsCols =
-        if (session.conf.getOption("spark.graft.autoStats")
-            .forall(_ != "false")) 8 else 0)))
+      autoStatsCols = TxLog.SqlAutoStatsCols)))
   }
 }
 

@@ -539,20 +539,13 @@ final case class GraftTable(qualified: String, dir: String, asOf: Int,
                       clustered, pcs)
                   } finally graft.core.Checkpoints.release(pinned)
                 case _ =>
-                  // stats-on-write (Delta's default): every SQL ingest
-                  // derives range stats for up to 8 numeric columns from
-                  // the written batch, so catalog tables prune from day
-                  // one without an ANALYZE; spark.graft.autoStats=false
-                  // opts out
-                  val autoCols =
-                    if (spark.conf.getOption("spark.graft.autoStats")
-                        .forall(_ != "false")) 8 else 0
+                  // stats-on-write (Delta's default)
                   if (overwrite || overwriteFlag)
                     TxLog.overwriteAll(spark, dir, data, batch,
-                      autoStatsCols = autoCols)
+                      autoStatsCols = TxLog.SqlAutoStatsCols)
                   else
                     TxLog.appendMapped(spark, dir, data, batch,
-                      autoStatsCols = autoCols)
+                      autoStatsCols = TxLog.SqlAutoStatsCols)
               }
             }
           }

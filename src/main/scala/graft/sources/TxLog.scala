@@ -394,29 +394,12 @@ object TxLog {
         checkSets = checkSets)
     }
 
-  private def readLogFile(dir: String, p: Path, what: String): String = {
-    val fs = fsOf(p)
-    try {
-      val in = fs.open(p)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 8192, false)
-        new String(bytes.toByteArray, StandardCharsets.UTF_8)
-      } finally in.close()
-    } catch {
-      case _: java.io.FileNotFoundException =>
-        throw new IllegalStateException(
-          s"txlog: missing $what of $dir")
-    }
-  }
-
   /** Stream a log file's lines through `f` WITHOUT materializing the
     * file as one String (VERDICT r14 item 1): at the million-file
-    * regime a checkpoint is ~100 MB of text, and the transient
-    * byte[]+String+linesIterator copies of [[readLogFile]] would triple
-    * the driver's replay footprint and stress the collector right when
-    * the live map is growing. Commit-sized manifests keep using
-    * [[readLogFile]] — for them the copy is noise. */
+    * regime a checkpoint is ~100 MB of text, and transient
+    * byte[]+String+linesIterator copies would triple the driver's replay
+    * footprint and stress the collector right when the live map is
+    * growing. Every log read goes through here. */
   private def logLines[T](dir: String, p: Path, what: String)(
       f: Iterator[String] => T): T = {
     val fs = fsOf(p)
@@ -575,7 +558,7 @@ object TxLog {
     manifestTsIn(dir, listLog(dir).toSet, v)
 
   /** [[manifestTs]] against one log listing, so a walk over every
-    * version ([[versionAt]], [[history]]) lists the log once. */
+    * version ([[versionAt]]) lists the log once. */
   private def manifestTsIn(dir: String, names: Set[String], v: Int): Long = {
     val p =
       if (names(f"v$v%08d.json")) manifest(dir, v)
@@ -686,7 +669,7 @@ object TxLog {
   /** [[columnStats]] for SEVERAL columns in one aggregation pass: the
     * comma-joined `col;min;max` segments (`a;0.0;9.0,b;3.0;7.0`) that
     * let [[readPruned]] skip files on ANY of the recorded dimensions —
-    * the stats half of [[optimizeZOrder]]. All-null columns drop their
+    * the stats half of [[optimizeZOrderN]]. All-null columns drop their
     * segment; None when every column is all-null. */
   def columnStatsMulti(df: DataFrame,
       columns: Seq[String]): Option[String] = {
@@ -1560,14 +1543,18 @@ object TxLog {
     }
   }
 
+  /** How many numeric columns every SQL ingest (catalog INSERT, REPLACE
+    * WHERE) derives range stats for on the write job, so catalog tables
+    * prune from day one without an ANALYZE. */
+  val SqlAutoStatsCols = 8
+
   /** STATS-ON-WRITE (Delta's default analogue): write `df` as a batch
     * and derive a manifest range blob for up to `n` of its numeric
     * columns on the write job itself ([[writeObserved]]), so the commit
     * prunes ([[readPruned]] / the scan-planning FileIndex) from day one
     * without an ANALYZE. An empty batch yields None: stats only ever ADD
-    * skipping. The SQL catalog passes n = 8 by default
-    * (`spark.graft.autoStats=false` opts out); API callers opt in per
-    * call. Returns (path, stats). */
+    * skipping. The SQL surface passes n = [[SqlAutoStatsCols]]; API
+    * callers opt in per call. Returns (path, stats). */
   private def writeAutoStats(df: DataFrame, dir: String, name: String,
       n: Int): (String, Option[String]) = {
     val numeric = if (n <= 0) Nil else df.schema.fields
@@ -1618,11 +1605,11 @@ object TxLog {
     import spark.implicits._
     val versions = listLog(dir).collect { case ManifestName(d) => d.toInt }.sorted
     versions.toSeq.map { v =>
-      // one open per manifest: the commit time comes from the text in
-      // hand ([[manifestTs]]'s header rule, mtime for headerless ones)
-      val text = readLogFile(dir, manifest(dir, v), s"manifest v$v")
+      // one streamed pass per manifest takes the counts and the commit
+      // time ([[manifestTs]]'s header rule, mtime for headerless ones)
       var (adds, removes, dvSet, dvClear, schema) = (0L, 0L, 0L, 0L, false)
-      text.linesIterator.foreach { line =>
+      var ts: Option[Long] = None
+      logLines(dir, manifest(dir, v), s"manifest v$v")(_.foreach { line =>
         line.split("\t", 3) match {
           case Array("add", _*)       => adds += 1
           case Array("remove", _*)    => removes += 1
@@ -1630,11 +1617,12 @@ object TxLog {
           case Array("dv", _*)        => dvSet += 1
           case Array("colmap", _*)    => schema = true
           case Array("coltype", _*)   => schema = true
+          case Array("meta", "ts", t) if ts.isEmpty => ts = Some(t.toLong)
           case _                      =>
         }
-      }
-      val ts = metaTsOf(text.linesIterator).getOrElse(mtimeOf(manifest(dir, v)))
-      (v, ts, adds, removes, dvSet, dvClear, schema)
+      })
+      (v, ts.getOrElse(mtimeOf(manifest(dir, v))), adds, removes, dvSet,
+        dvClear, schema)
     }.toDF("version", "ts_millis", "n_added", "n_removed",
       "n_dv_bound", "n_dv_cleared", "schema_change")
   }
@@ -2464,13 +2452,17 @@ object TxLog {
       basedOnDvs = Some(dvSnap))
   }
 
-  /** OPTIMIZE … ZORDER BY — 2-D layout optimization composed with
-    * manifest data skipping (public precedent: Delta's OPTIMIZE ZORDER;
-    * the z-value expression is [[graft.functions.ZOrder.zValue]]):
-    * rewrite the live set into `targetFiles` files ordered along a
-    * z-curve over (`xCol`, `yCol`), each committed WITH multi-column
-    * manifest stats, so [[readPruned]] range queries on EITHER dimension
-    * skip whole files — the property a single-column sort cannot give.
+  /** OPTIMIZE … ZORDER BY (a, b, c, …) — multi-dimensional layout
+    * optimization composed with manifest data skipping (public precedent:
+    * Delta's OPTIMIZE ZORDER, whose verb takes a column list): rewrite the
+    * live set into `targetFiles` files ordered along a z-curve over
+    * `cols` ([[graft.functions.ZOrder.zValueN]]), each committed WITH
+    * [[columnStatsMulti]] bounds on ALL k columns, so [[readPruned]] range
+    * queries on ANY one of them skip whole files — the property a
+    * single-column sort cannot give. More dimensions trade
+    * per-dimension tightness for coverage (each file's k-orthotope side
+    * grows as targetFiles^(1/k)) — the standard z-order dimensioning
+    * caveat; 2–4 columns is the practical band.
     *
     * Dimensions are first normalized to their `ranks`-quantile RANK
     * (computed over the current snapshot) before interleaving — raw
@@ -2486,21 +2478,6 @@ object TxLog {
     * older versions are untouched). Returns the commit version, 0 when
     * the table is empty. Use a fresh `name` per run (writeBatch
     * errors on an existing dir, by design). */
-  def optimizeZOrder(spark: SparkSession, dir: String, name: String,
-      xCol: String, yCol: String, targetFiles: Int,
-      ranks: Int = 16): Int =
-    optimizeZOrderN(spark, dir, name, Seq(xCol, yCol), targetFiles, ranks)
-
-  /** [[optimizeZOrder]] over an ARBITRARY dimension list — the full
-    * `OPTIMIZE … ZORDER BY (a, b, c, …)` surface (Delta's verb takes a
-    * column list for exactly this reason): each dimension is
-    * rank-normalized, the k rank streams interleave via
-    * [[graft.functions.ZOrder.zValueN]], and every output file commits
-    * with [[columnStatsMulti]] bounds on ALL k columns, so
-    * [[readPruned]] skips files on any one of them. More dimensions
-    * trade per-dimension tightness for coverage (each file's
-    * k-orthotope side grows as targetFiles^(1/k)) — the standard
-    * z-order dimensioning caveat; 2–4 columns is the practical band. */
   def optimizeZOrderN(spark: SparkSession, dir: String, name: String,
       cols: Seq[String], targetFiles: Int, ranks: Int = 16): Int = {
     import org.apache.spark.sql.functions._
@@ -2950,7 +2927,7 @@ object TxLog {
     * tenant's rows smeared across thousands of files). The trade is read
     * amplification (coordinate columns + one anti-join per scan of a
     * bound file), paid until a rewrite verb MATERIALIZES the vector:
-    * [[optimize]] / [[optimizeIncremental]] / [[optimizeZOrder]] read
+    * [[optimize]] / [[optimizeIncremental]] / [[optimizeZOrderN]] read
     * through the mask and retire the sidecar with the files, so the
     * standard maintenance loop amortizes deletes to zero read cost.
     *

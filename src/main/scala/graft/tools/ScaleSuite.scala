@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.functions._
 
 import graft.core.Graft
-import graft.operators.{DedupOps, SimilarityOps, StatsOps}
+import graft.operators.{DedupOps, SimilarityOps}
 import graft.sources.TxLog
 import graft.streaming.{ProbeSink, TxLogChangeStream}
 
@@ -21,7 +21,7 @@ import graft.streaming.{ProbeSink, TxLogChangeStream}
   * }}}
   *
   * `points` is a comma-separated list of sizes on the scenario's own axis
-  * (dirs, files, leaves, writers, factors or k; three scenarios have no
+  * (dirs, files, leaves, writers, factors or k; two scenarios have no
   * axis and take none), `-` for the scenario's default sweep; `repeat`
   * (default 3) is the min-of-N count for
   * every timing. Input tables come from `$SPARK_GRAFT_SF_DIR` (default
@@ -66,7 +66,6 @@ object ScaleSuite {
     "listing" -> Scenario("dirs", Seq(1024, 4096, 16384), listing),
     "manifest" -> Scenario("files", Seq(65536, 262144, 1048576), manifest),
     "multi_writer" -> Scenario("writers", Seq(2, 4, 8), multiWriter),
-    "pinned_sort" -> Scenario("", Nil, pinnedSort),
     "pq_recall" -> Scenario("k", Seq(8, 64), pqRecall),
     "replace_where" -> Scenario("files", Seq(16, 64, 256), replaceWhere),
     "row_verbs" -> Scenario("", Nil, rowVerbs),
@@ -344,43 +343,6 @@ object ScaleSuite {
     }
 
   private val CommitsPerWriter = 50
-
-  /** Whether pinning the two-level templates' range sort (one
-    * `localCheckpoint` both passes read) saves the second sort execution:
-    * spearman (two midrank maps) and weightedQuantile (cumulative sums)
-    * on lineitem, under `spark.graft.pinnedSort` true and false, with the
-    * Spark job count of one execution as the mechanism check (unpinned
-    * re-executes the sort per pass). The two arms of a query interleave
-    * ([[Ctx.interleaved]]). Run it on 10x data (`target/scale10`), where
-    * the sort dominates. */
-  private def pinnedSort(c: Ctx, points: Seq[Int]): Unit = {
-    val spark = c.spark
-    val li = Graft.table(spark, c.sf, "lineitem")
-    spark.range(1000000).selectExpr("sum(id)")
-      .write.format("noop").mode("overwrite").save()
-    // one execution: (seconds, Spark jobs)
-    def run(pinned: Boolean, df: => DataFrame): (Double, Int) =
-      c.withSqlConf("spark.graft.pinnedSort", pinned.toString) {
-        val r = c.jobsOf(c.timed(df.write.format("noop").mode("overwrite").save()))
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        System.gc()
-        r
-      }
-    def contrast(query: String)(df: => DataFrame): Unit = {
-      val (on, off) = c.interleaved(run(true, df), run(false, df))
-      for ((pinned, runs) <- Seq(true -> on, false -> off))
-        c.emit("query" -> query, "pinned" -> pinned,
-          "min" -> round(runs.map(_._1).min, 3),
-          "all" -> runs.map(r => round(r._1, 3)),
-          "jobs" -> runs.map(_._2).distinct)
-    }
-    contrast("spearman")(StatsOps.spearman(li, Seq(col("l_returnflag")),
-      col("l_quantity"), col("l_extendedprice")))
-    contrast("weighted_quantile")(StatsOps.weightedQuantile(li,
-      Seq(col("l_returnflag")), col("l_extendedprice"), col("l_quantity"),
-      q = 0.5))
-  }
 
   /** Recall@5 of PQ top-k with codebooks of size k under the two seeding
     * rules, the `k` lowest ids (id-correlated: on a corpus whose ingest

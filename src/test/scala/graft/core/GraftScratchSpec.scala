@@ -2,23 +2,16 @@ package graft.core
 
 import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
+import graft.TestSpark
 
 /** Where gate side files go: one root per dataset, keyed by the data
   * dir's canonical path, under `java.io.tmpdir`. Every dir the spec
-  * makes is empty, so `deleteOnExit` (children first) removes them. */
+  * makes lives under a [[TestSpark.tmpDir]], except the scratch roots,
+  * which stay empty, so `deleteOnExit` removes them. */
 class GraftScratchSpec extends AnyFunSuite {
 
-  private def temp(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    p
-  }
-
-  private def dataDir(parent: Path): Path = {
-    val d = Files.createDirectories(parent.resolve("sf0.01"))
-    d.toFile.deleteOnExit()
-    d
-  }
+  private def dataDir(parent: Path): Path =
+    Files.createDirectories(parent.resolve("sf0.01"))
 
   private def root(dataDir: String): Path = {
     val r = Paths.get(Graft.scratch(dataDir, "x")).getParent
@@ -27,18 +20,17 @@ class GraftScratchSpec extends AnyFunSuite {
   }
 
   test("same basename in different parents maps to different roots") {
-    val a = dataDir(temp("graft-scratch-a"))
-    val b = dataDir(temp("graft-scratch-b"))
+    val a = dataDir(TestSpark.tmpDir("graft-scratch-a"))
+    val b = dataDir(TestSpark.tmpDir("graft-scratch-b"))
     assert(root(a.toString) != root(b.toString))
     assert(Graft.scratch(a.toString, "derby") != Graft.scratch(b.toString, "derby"))
   }
 
   test("a relative path or a symlink to the same dir maps to the same root") {
-    val d = dataDir(temp("graft-scratch-same"))
+    val d = dataDir(TestSpark.tmpDir("graft-scratch-same"))
     val relative = Paths.get("").toAbsolutePath.relativize(d)
     assert(!relative.isAbsolute)
-    val link = Files.createSymbolicLink(temp("graft-scratch-link").resolve("sf0.01"), d)
-    link.toFile.deleteOnExit()
+    val link = Files.createSymbolicLink(TestSpark.tmpDir("graft-scratch-link").resolve("sf0.01"), d)
     assert(root(relative.toString) == root(d.toString))
     assert(root(link.toString) == root(d.toString))
     assert(Graft.scratch(link.toString, "streamsrc") ==
@@ -46,7 +38,7 @@ class GraftScratchSpec extends AnyFunSuite {
   }
 
   test("the root sits under java.io.tmpdir and exists") {
-    val d = dataDir(temp("graft-scratch-tmp"))
+    val d = dataDir(TestSpark.tmpDir("graft-scratch-tmp"))
     val r = root(d.toString)
     val tmp = Paths.get(System.getProperty("java.io.tmpdir")).toAbsolutePath
     assert(r.getParent == tmp)
@@ -55,7 +47,7 @@ class GraftScratchSpec extends AnyFunSuite {
   }
 
   test("name is a child of the root") {
-    val d = dataDir(temp("graft-scratch-child")).toString
+    val d = dataDir(TestSpark.tmpDir("graft-scratch-child")).toString
     val p = Paths.get(Graft.scratch(d, "txlog_merge"))
     assert(p.getFileName.toString == "txlog_merge")
     assert(p.getParent == root(d))

@@ -12,12 +12,12 @@ class RoundFourOpsSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  // ------------------------------------------------------------ globalCumSum
+  // ------------------------------------------------------------ globalCumSums
 
   test("globalCumSum matches a window prefix sum regardless of partitioning") {
     val df = (1 to 500).map(i => (i.toLong, (i % 7 + 1).toLong))
       .toDF("id", "v").repartition(13) // scrambled input partitioning
-    val got = SortOps.globalCumSum(df, Seq(col("id")), col("v"), "cum")
+    val got = SortOps.globalCumSums(df, Seq(col("id")), Seq(col("v")), Seq("cum"))
       .select("id", "cum").as[(Long, Long)].collect().sortBy(_._1)
     var run = 0L
     val want = (1 to 500).map { i => run += (i % 7 + 1); (i.toLong, run) }
@@ -28,8 +28,8 @@ class RoundFourOpsSpec extends AnyFunSuite {
     val df = Seq((1L, 5L, 10L), (2L, 5L, 20L), (3L, 9L, 30L))
       .toDF("id", "q", "v")
     // order: q desc, id asc -> rows 3, 1, 2 -> cums 30, 40, 60
-    val got = SortOps.globalCumSum(df, Seq(col("q").desc, col("id")),
-        col("v"), "cum")
+    val got = SortOps.globalCumSums(df, Seq(col("q").desc, col("id")),
+        Seq(col("v")), Seq("cum"))
       .select("id", "cum").as[(Long, Long)].collect().toMap
     assert(got == Map(3L -> 30L, 1L -> 40L, 2L -> 60L))
   }
@@ -133,12 +133,12 @@ class RoundFourOpsSpec extends AnyFunSuite {
     }
     val rows = for (x <- 0 to 40; y <- 0 to 40) yield (x.toLong, y.toLong)
     val got = rows.toDF("x", "y")
-      .select(col("x"), col("y"), ZOrder.zValue(col("x"), col("y"), 6).as("z"))
+      .select(col("x"), col("y"), ZOrder.zValueN(Seq(col("x"), col("y")), 6).as("z"))
       .as[(Long, Long, Long)].collect()
     got.foreach { case (x, y, z) => assert(z == ref(x, y, 6), s"($x,$y)") }
     // wrap-around: out-of-range inputs use value mod 2^bits
     val big = Seq((100L, 3L)).toDF("x", "y")
-      .select(ZOrder.zValue(col("x"), col("y"), 6).as("z")).as[Long].head()
+      .select(ZOrder.zValueN(Seq(col("x"), col("y")), 6).as("z")).as[Long].head()
     assert(big == ref(100, 3, 6))
   }
 
@@ -287,7 +287,8 @@ class RoundFourOpsSpec extends AnyFunSuite {
   test("empty inputs: cumsum, packing, budget, caps, shards all yield empty") {
     val empty = spark.emptyDataFrame
       .withColumn("id", lit(1L)).withColumn("v", lit(1L)).limit(0)
-    assert(SortOps.globalCumSum(empty, Seq(col("id")), col("v")).count() == 0)
+    assert(SortOps.globalCumSums(empty, Seq(col("id")), Seq(col("v")),
+      Seq("cum")).count() == 0)
     assert(CorpusOps.packSequences(empty, col("id"), col("v"), 8).count() == 0)
     assert(CorpusOps.tokenBudgetSelect(empty, col("id"), col("v"), col("v"),
       10L).count() == 0)
@@ -340,7 +341,7 @@ class RoundFourOpsSpec extends AnyFunSuite {
   test("globalCumSum treats null values as 0 instead of crashing") {
     val df = Seq((1L, Some(5L)), (2L, None), (3L, Some(7L)))
       .toDF("id", "v")
-    val got = SortOps.globalCumSum(df, Seq(col("id")), col("v"), "cum")
+    val got = SortOps.globalCumSums(df, Seq(col("id")), Seq(col("v")), Seq("cum"))
       .select("id", "cum").as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 5L, 2L -> 5L, 3L -> 12L))
   }
@@ -402,7 +403,7 @@ class RoundFourOpsSpec extends AnyFunSuite {
   // ------------------------------------------------------ partition pruning
 
   test("partition-column filter prunes to one directory at plan time") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_prune_spec").toString
+    val dir = TestSpark.tmpDir("graft_prune_spec").toString
     (1 to 300).map(i => (i.toLong, s"t${i % 3}", i * 1.0))
       .toDF("id", "kind", "v")
       .write.mode("overwrite").partitionBy("kind").parquet(dir)
@@ -417,15 +418,8 @@ class RoundFourOpsSpec extends AnyFunSuite {
     assert(filtered.count() == 100)
   }
 
-  test("zValueN generalizes zValue: 2-D bit parity, 3-D hand values") {
+  test("zValueN: 3-D hand values and the SQL twin") {
     import graft.functions.ZOrder
-    val df = Seq((5L, 9L, 3L), (0L, 0L, 0L), (15L, 1L, 7L), (2L, 13L, 11L))
-      .toDF("x", "y", "w")
-    val parity = df.select(
-      (ZOrder.zValueN(Seq(col("x"), col("y")), 4) ===
-        ZOrder.zValue(col("x"), col("y"), 4)).as("same"))
-      .as[Boolean].collect()
-    assert(parity.forall(identity), "zValueN(Seq(x,y)) must bit-equal zValue")
     // 3-D by hand, bits=2, positions i*3+d:
     // (x=1,y=2,w=3): x0=1->bit0, x1=0; y0=0, y1=1->bit4; w0=1->bit2, w1=1->bit5
     // => 1 + 4? no: bits set {0, 4, 2, 5} = 1+16+4+32 = 53

@@ -88,7 +88,7 @@ class RoundSevenOpsSpec extends AnyFunSuite {
   }
 
   test("Har archive: every entry random-accesses back byte-identical; unknown name is None") {
-    val base = java.nio.file.Files.createTempDirectory("graft_har_spec").toString
+    val base = TestSpark.tmpDir("graft_har_spec").toString
     val src = s"$base/src"
     val arch = s"$base/arc"
     val payloads = Map(
@@ -303,9 +303,9 @@ class RoundSevenOpsSpec extends AnyFunSuite {
       .toDF("k")
     val keys = df.distinct()
     // narrow sketch: collisions guaranteed (32 keys into depth=1, width=8)
-    val narrow = AggOps.cmsCounters(df, col("k"), "s", depth = 1, width = 8)
+    val narrow = StatsOps.cmsBuild(df, col("k"), depth = 1, width = 8)
     assert(narrow.count() <= 8, "counter cells must be bounded by depth*width")
-    val estN = AggOps.cmsEstimates(narrow, keys, col("k"), "s", 1, 8)
+    val estN = StatsOps.cmsEstimate(narrow, keys, col("k"), 1, 8)
       .as[(String, Long)].collect().toMap
     val exact = df.groupBy("k").count().as[(String, Long)].collect().toMap
     exact.foreach { case (k, n) =>
@@ -314,14 +314,14 @@ class RoundSevenOpsSpec extends AnyFunSuite {
     assert(exact.exists { case (k, n) => estN(k) > n },
       "32 keys in 8 cells must collide somewhere")
     // wide sketch: depth 4 x width 4096 makes all 32 keys collision-free
-    val wide = AggOps.cmsCounters(df, col("k"), "s", depth = 4, width = 4096)
-    val estW = AggOps.cmsEstimates(wide, keys, col("k"), "s", 4, 4096)
+    val wide = StatsOps.cmsBuild(df, col("k"), depth = 4, width = 4096)
+    val estW = StatsOps.cmsEstimate(wide, keys, col("k"), 4, 4096)
       .as[(String, Long)].collect().toMap
     assert(estW === exact, "wide sketch estimates must be exact here")
     // unseen key probes empty cells -> estimate 0 (or a collision overcount,
     // but with width 4096 the cells are empty)
-    val unseen = AggOps.cmsEstimates(wide, Seq("zzz").toDF("k"), col("k"),
-      "s", 4, 4096).as[(String, Long)].collect().toMap
+    val unseen = StatsOps.cmsEstimate(wide, Seq("zzz").toDF("k"), col("k"),
+      4, 4096).as[(String, Long)].collect().toMap
     assert(unseen("zzz") === 0L)
   }
 

@@ -91,13 +91,16 @@ class RoundThreeOpsSpec extends AnyFunSuite {
   }
 
   test("namedSinks splits one pass into disjoint named outputs") {
-    val base = java.nio.file.Files.createTempDirectory("graft-named").toString
+    val base = TestSpark.tmpDir("graft-named").toString
     val df = Seq((1, "x"), (2, "y"), (3, "x")).toDF("id", "tag")
     graft.core.Graft.namedSinks(df, base,
       Map("xs" -> (col("tag") === "x"), "ys" -> (col("tag") === "y")))
     assert(spark.read.parquet(s"$base/xs").count() == 2)
     assert(spark.read.parquet(s"$base/ys")
       .select("id").as[Int].collect().toSeq == Seq(2))
+    val marker = java.nio.file.Paths.get(base, "_GRAFT_MULTI_SUCCESS")
+    assert(java.nio.file.Files.readAllLines(marker).toArray.toSeq ==
+      Seq("xs", "ys"), "the commit marker must land naming every output")
   }
 
   test("native hamming_distance counts differing positions + length delta") {
@@ -134,7 +137,7 @@ class RoundThreeOpsSpec extends AnyFunSuite {
   }
 
   test("xmlRecords extracts begin..end tag spans across line boundaries") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-xml")
+    val dir = TestSpark.tmpDir("graft-xml")
     java.nio.file.Files.write(dir.resolve("part.txt"),
       "<rec>\n <v>1</v>\n</rec>\njunk between\n<rec><v>2</v></rec>\n<other>no</other>"
         .getBytes("UTF-8"))

@@ -188,7 +188,7 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("filters and projections reach the parquet scan (pushdown + pruning)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pushdown").toString
+    val dir = TestSpark.tmpDir("graft-pushdown").toString
     (1 to 1000).map(i => (i.toLong, s"v$i", i * 2.0, s"pad$i"))
       .toDF("k", "name", "score", "padding")
       .write.mode("overwrite").parquet(dir)
@@ -381,10 +381,10 @@ class ScaleSpec extends AnyFunSuite {
     // probe by broadcast (a sort-merge would shuffle the probe side on a
     // 256-cell key — wrong at every scale)
     val kdf = (1 to 1000).map(i => s"k${i % 40}").toDF("k")
-    val counters = AggOps.cmsCounters(kdf, col("k"), "s", 4, 64)
+    val counters = StatsOps.cmsBuild(kdf, col("k"), 4, 64)
     assert(nExchanges(counters.queryExecution.executedPlan.toString) === 1,
-      "cmsCounters shuffle budget is 1 (the d*w-bounded grid)")
-    val estPlan = AggOps.cmsEstimates(counters, kdf, col("k"), "s", 4, 64)
+      "cmsBuild shuffle budget is 1 (the d*w-bounded grid)")
+    val estPlan = StatsOps.cmsEstimate(counters, kdf, col("k"), 4, 64)
       .queryExecution.executedPlan.toString
     assert(estPlan.contains("BroadcastHashJoin") &&
       !estPlan.contains("SortMergeJoin"),
@@ -671,8 +671,6 @@ class ScaleSpec extends AnyFunSuite {
     val templates = Seq(
       "globalRowNumber" -> SortOps.globalRowNumber(df,
         Seq(col("g"), col("x"), col("id")), "rn"),
-      "globalCumSum" -> SortOps.globalCumSum(df,
-        Seq(col("g"), col("x"), col("id")), col("x"), "cum"),
       "globalCumSums" -> SortOps.globalCumSums(df,
         Seq(col("g"), col("x"), col("id")), Seq(lit(1L), col("x")),
         Seq("c1", "c2")),
@@ -691,26 +689,5 @@ class ScaleSpec extends AnyFunSuite {
     templates.foreach { case (_, out) => graft.core.Checkpoints.releaseLineage(out) }
     val left = sc.getPersistentRDDs.keySet.intersect(added)
     assert(left.isEmpty, s"releaseLineage left pinned RDDs: $left")
-  }
-
-  test("spark.graft.pinnedSort=false falls back to unpinned sorts, same answers") {
-    // the reliability-sensitive escape hatch (r10): no checkpoint blocks
-    // pinned, lineage recomputes on failure — and on a deterministic
-    // source the two-level answers are unchanged
-    val sc = spark.sparkContext
-    val df = (1L to 4000L).map(i => (i % 3, (i * 69621L) % 991, i))
-      .toDF("g", "x", "id")
-    val order = Seq(col("g"), col("x"), col("id"))
-    val pinned = SortOps.globalRowNumber(df, order, "rn")
-      .select("id", "rn").as[(Long, Long)].collect().toMap
-    val before = sc.getPersistentRDDs.keySet
-    spark.conf.set("spark.graft.pinnedSort", "false")
-    try {
-      val out = SortOps.globalRowNumber(df, order, "rn")
-      assert(out.select("id", "rn").as[(Long, Long)].collect().toMap
-        === pinned, "unpinned fallback must produce identical row numbers")
-      assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
-        "unpinned mode must not pin checkpoint blocks")
-    } finally spark.conf.unset("spark.graft.pinnedSort")
   }
 }

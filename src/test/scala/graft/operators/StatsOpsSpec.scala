@@ -132,6 +132,18 @@ class StatsOpsSpec extends AnyFunSuite {
       "absent" -> 0L))
   }
 
+  test("cmsBuild/cmsEstimate drop null keys") {
+    val toks = Seq(Some("a"), None, Some("a"), None, None).toDF("tok")
+    val sk = StatsOps.cmsBuild(toks, col("tok"), depth = 2, width = 64)
+    // a null key has no bucket: each sketch row counts only the two "a"s
+    val perRow = sk.groupBy("r").agg(sum("cnt").cast("long"))
+      .as[(Int, Long)].collect().toMap
+    assert(perRow === Map(0 -> 2L, 1 -> 2L))
+    val est = StatsOps.cmsEstimate(sk, toks, col("tok"), depth = 2,
+      width = 64).as[(String, Long)].collect().toSeq
+    assert(est === Seq(("a", 2L)), "a null probe key yields no estimate row")
+  }
+
   test("cms linearity: a signed retraction delta folds to the from-scratch grid") {
     val before = Seq("a", "a", "a", "b", "b", "c").toDF("tok")
       .withColumn("sign", lit(1))

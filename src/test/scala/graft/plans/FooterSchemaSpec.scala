@@ -16,7 +16,7 @@ class FooterSchemaSpec extends AnyFunSuite {
   private val sf = s"${sys.props("user.home")}/testdata/sf0.01"
 
   private def freshDir(): String = {
-    val d = java.nio.file.Files.createTempDirectory("footer").toFile
+    val d = TestSpark.tmpDir("footer").toFile
     d.delete()
     d.getAbsolutePath
   }

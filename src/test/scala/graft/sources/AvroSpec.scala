@@ -10,7 +10,7 @@ class AvroSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("writeAvro/readAvro round-trip typed columns including nulls and bytes") {
-    val base = java.nio.file.Files.createTempDirectory("graft-avro").toString
+    val base = TestSpark.tmpDir("graft-avro").toString
     val df = spark.createDataFrame(Seq(
       (1L, "alpha", 10, 1.5, true, Array[Byte](1, 2, 3)),
       (2L, "beta", 20, -2.25, false, Array[Byte]()),
@@ -34,7 +34,7 @@ class AvroSpec extends AnyFunSuite {
   }
 
   test("timestamp-micros and date logical types round-trip exactly") {
-    val base = java.nio.file.Files.createTempDirectory("graft-avro-lt").toString
+    val base = TestSpark.tmpDir("graft-avro-lt").toString
     val ts1 = java.sql.Timestamp.valueOf("2024-03-01 12:34:56.123456")
     val ts0 = java.sql.Timestamp.valueOf("1969-12-31 23:59:59.5") // pre-epoch
     val d1 = java.sql.Date.valueOf("2024-03-01")

@@ -14,13 +14,12 @@ class GraftCatalogSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private val wh = java.nio.file.Files
-    .createTempDirectory("graft-cat-wh").toString
+  private val wh = TestSpark.tmpDir("graft-cat-wh").toString
   spark.conf.set("spark.sql.catalog.cat", classOf[GraftCatalog].getName)
   spark.conf.set("spark.sql.catalog.cat.warehouse", wh)
 
   private def freshDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-cat-tbl").toString
+    TestSpark.tmpDir("graft-cat-tbl").toString
 
   test("CREATE TABLE ... USING graft LOCATION mounts an existing txlog table") {
     val dir = freshDir()
@@ -730,7 +729,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     spark.sql("DROP TABLE cat.po.t")
   }
 
-  test("stats-on-write: plain INSERTs prune; the conf opts out") {
+  test("stats-on-write: plain INSERTs and INSERT OVERWRITE prune") {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS cat.as")
     spark.sql("DROP TABLE IF EXISTS cat.as.t")
     spark.sql("CREATE TABLE cat.as.t (id BIGINT, v DOUBLE) USING graft")
@@ -753,17 +752,6 @@ class GraftCatalogSpec extends AnyFunSuite {
       "SELECT * FROM cat.as.t WHERE id <= 10"))
     assert(lo >= 1 && lo * 2 <= all2,
       s"the overwrite batch alone must plan, got $lo of $all2")
-    // the opt-out writes stat-less batches that never prune
-    spark.conf.set("spark.graft.autoStats", "false")
-    try {
-      spark.sql("DROP TABLE IF EXISTS cat.as.off")
-      spark.sql("CREATE TABLE cat.as.off (id BIGINT) USING graft")
-      spark.sql("INSERT INTO cat.as.off VALUES (1)")
-      spark.sql("INSERT INTO cat.as.off VALUES (100)")
-      assert(Graft.plannedFiles(spark.sql(
-        "SELECT * FROM cat.as.off WHERE id >= 100")) === 2)
-      spark.sql("DROP TABLE cat.as.off")
-    } finally spark.conf.unset("spark.graft.autoStats")
     spark.sql("DROP TABLE cat.as.t")
   }
 

@@ -22,7 +22,7 @@ class GraftFsSpec extends AnyFunSuite {
 
   test("round-trip: write file://, read graftfs:// — identical rows") {
     GraftFileSystem.register(spark)
-    val out = java.nio.file.Files.createTempDirectory("graft_fs_scheme_spec")
+    val out = TestSpark.tmpDir("graft_fs_scheme_spec")
       .resolve("out").toString
     val df = (1L to 100L).toDF("id").withColumn("sq",
       org.apache.spark.sql.functions.col("id") * org.apache.spark.sql.functions.col("id"))
@@ -34,7 +34,7 @@ class GraftFsSpec extends AnyFunSuite {
 
   test("writes go through the scheme too") {
     GraftFileSystem.register(spark)
-    val out = GraftFileSystem.uri(java.nio.file.Files.createTempDirectory(
+    val out = GraftFileSystem.uri(TestSpark.tmpDir(
       "graft_fs_scheme_write").resolve("out").toString)
     (1L to 10L).toDF("id").write.mode("overwrite").parquet(out)
     assert(spark.read.parquet(out).count() == 10)

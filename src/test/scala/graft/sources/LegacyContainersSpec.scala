@@ -14,7 +14,7 @@ class LegacyContainersSpec extends AnyFunSuite {
 
   test("readMapFile scans MapFile and BloomMapFile dirs") {
     import org.apache.hadoop.io.{BloomMapFile, MapFile, Text}
-    val base = java.nio.file.Files.createTempDirectory("graft-legacy").toString
+    val base = TestSpark.tmpDir("graft-legacy").toString
     val mfDir = new org.apache.hadoop.fs.Path(s"$base/mf")
     val w = new MapFile.Writer(conf, mfDir,
       MapFile.Writer.keyClass(classOf[Text]),
@@ -38,7 +38,7 @@ class LegacyContainersSpec extends AnyFunSuite {
 
   test("readTFile scans multiple TFiles as parallel whole-file tasks") {
     import org.apache.hadoop.io.file.tfile.TFile
-    val base = java.nio.file.Files.createTempDirectory("graft-tfile").toString
+    val base = TestSpark.tmpDir("graft-tfile").toString
     val dir = new org.apache.hadoop.fs.Path(base)
     val fs = dir.getFileSystem(conf)
     kvs.grouped(25).zipWithIndex.foreach { case (part, i) =>
@@ -59,7 +59,7 @@ class LegacyContainersSpec extends AnyFunSuite {
 
   test("readTFile streams a large container (lazy, survives early limit)") {
     import org.apache.hadoop.io.file.tfile.TFile
-    val base = java.nio.file.Files.createTempDirectory("graft-tfile-big").toString
+    val base = TestSpark.tmpDir("graft-tfile-big").toString
     val dir = new org.apache.hadoop.fs.Path(base)
     val fs = dir.getFileSystem(conf)
     val os = fs.create(new org.apache.hadoop.fs.Path(dir, "big.tfile"))
@@ -83,7 +83,7 @@ class LegacyContainersSpec extends AnyFunSuite {
   test("readSequence and readMapFile decode typed Writable K/V") {
     import org.apache.hadoop.io.{BytesWritable, IntWritable, LongWritable,
       MapFile, SequenceFile, Text}
-    val base = java.nio.file.Files.createTempDirectory("graft-typed").toString
+    val base = TestSpark.tmpDir("graft-typed").toString
     // SequenceFile: IntWritable keys, Text values (the TestJoinDatamerge shape)
     val sf = new org.apache.hadoop.fs.Path(s"$base/ints.seq")
     val w = SequenceFile.createWriter(conf,
@@ -127,7 +127,7 @@ class LegacyContainersSpec extends AnyFunSuite {
 
   test("writeMapFile: engine-written containers satisfy the GENUINE Hadoop reader") {
     import org.apache.hadoop.io.{MapFile, Text}
-    val base = java.nio.file.Files.createTempDirectory("graft-mfw").toString
+    val base = TestSpark.tmpDir("graft-mfw").toString
     val df = (1 to 200).map(i => (f"k$i%04d", s"v$i")).toDF("key", "value")
       .repartition(5) // scrambled input: the writer must range-sort it
     LegacyContainers.writeMapFile(df, s"$base/out", bloom = true)

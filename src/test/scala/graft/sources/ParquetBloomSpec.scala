@@ -31,7 +31,7 @@ class ParquetBloomSpec extends AnyFunSuite {
   }
 
   test("bloom-enabled column records a filter; others do not") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloom").toString
+    val dir = TestSpark.tmpDir("graft-bloom").toString
     Seq.tabulate(1000)(i => (i.toLong, s"k$i"))
       .toDF("id", "name")
       .coalesce(1)

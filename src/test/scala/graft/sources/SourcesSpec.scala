@@ -11,7 +11,7 @@ class SourcesSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmpDir(): String =
-    Files.createTempDirectory("graft-test").toString
+    TestSpark.tmpDir("graft-test").toString
 
   test("string-range predicates split a JDBC read disjointly and cover NULLs") {
     System.setProperty("derby.stream.error.file", s"${tmpDir()}/derby.log")

@@ -11,7 +11,7 @@ class TxLogSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshDir(): String = {
-    val d = java.nio.file.Files.createTempDirectory("txlog").toFile
+    val d = TestSpark.tmpDir("txlog").toFile
     d.delete()
     d.getAbsolutePath
   }
@@ -1696,7 +1696,7 @@ class TxLogSpec extends AnyFunSuite {
       yield (x * 1000L, y.toLong, 1L))
       .toDF("x", "y", "v")
     TxLog.commit(dir, Seq(TxLog.writeBatch(grid, dir, "g")))
-    val v = TxLog.optimizeZOrder(spark, dir, "z", "x", "y",
+    val v = TxLog.optimizeZOrderN(spark, dir, "z", Seq("x", "y"),
       targetFiles = 4)
     assert(v === 2)
     val entries = TxLog.snapshot(dir).entries
@@ -2392,7 +2392,7 @@ class TxLogSpec extends AnyFunSuite {
     assert(logOpensOf(TxLog.history(spark, dir)) === 5)
     assert(TxLog.read(spark, dir).as[(Long, Double)].collect().sorted.toSeq ===
       Seq((1L, 1.0), (2L, 20.0), (3L, 3.0), (9L, 9.0)))
-    val wh = java.nio.file.Files.createTempDirectory("txlog-cat").toString
+    val wh = TestSpark.tmpDir("txlog-cat").toString
     spark.conf.set("spark.sql.catalog.txcount",
       classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.txcount.warehouse", wh)

@@ -16,7 +16,7 @@ class GraftChangeSourceSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    TestSpark.tmpDir(prefix).toString
 
   /** Drain the table's pending commits through the source with
     * AvailableNow, collecting every (id, v, sign) row per batch. */

@@ -11,8 +11,7 @@ class TxLogChangeStreamSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshDir(): String = {
-    val f = java.nio.file.Files
-      .createTempDirectory("graft_cdcstream_").toFile
+    val f = TestSpark.tmpDir("graft_cdcstream_").toFile
     f.delete()
     f.getAbsolutePath
   }

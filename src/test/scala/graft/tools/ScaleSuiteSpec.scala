@@ -47,7 +47,7 @@ class ScaleSuiteSpec extends AnyFunSuite {
   test("an unknown scenario fails with the list of scenarios") {
     val e = intercept[IllegalArgumentException](
       ScaleSuite.run(spark, "nope", Nil, repeat = 1))
-    Seq("listing", "manifest", "multi_writer", "pinned_sort", "pq_recall",
+    Seq("listing", "manifest", "multi_writer", "pq_recall",
       "replace_where", "row_verbs", "scan_prune", "sigstore", "sink",
       "subscription").foreach(n => assert(e.getMessage.contains(n), n))
   }
